@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every declared query on SPARK_GRAFT_SF_DIR, writes
   * the FULL per-query JSON (all walls + diag) to target/bench.json, and
@@ -13,9 +12,8 @@ import org.apache.spark.sql.SparkSession
   * list plus the slowest queries by wall; the file is the artifact of
   * record for the full surface.
   *
-  * local[32] with 32 shuffle partitions (matching cores — the 200 default
-  * over-partitions a single node); AQE on for runtime coalesce/skew
-  * handling, exactly the posture a real cluster run would use.
+  * Runs on [[GraftSession]]: local[SPARK_GRAFT_CPUS] (default: the
+  * JVM's available processors; the official posture is 32).
   *
   * Timing methodology (storm-proof, self-verifying):
   * this host suffers multi-minute vCPU-migration storms (CPU steal) that
@@ -275,66 +273,14 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val nCpus = cpus.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Shuffle-writer selection (r20 optimization round, measured):
-      // with shuffle.partitions = cores (32) every shuffle sits under
-      // the bypass-merge writer's default threshold (200), and that
-      // writer creates M x R partition files per shuffle and
-      // re-concatenates them — jstack sampling showed shuffle-write
-      // file I/O dominating task run time (run >> cpu across the md5
-      // family; OPTIMIZATION_r20.md §shuffle-writer). Forcing the
-      // sort-based writer (ONE file + index per map task) measured
-      // -20..-33% on shuffle-heavy queries at sf0.1. At production
-      // partition counts (> 200) bypass never engages, so this selects
-      // exactly the writer a 100 TB run uses; env-overridable so the
-      // A/B stays reproducible.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "2"))
-      // AQE coalesce floor (r21 optimization round, measured): AQE's
-      // partition coalescing targets the cluster parallelism
-      // (parallelismFirst=true, the default) but never builds a
-      // partition smaller than minPartitionSize (default 1m) — and at
-      // this SF most post-shuffle stages carry only a few MB, so the
-      // 1m floor overrides the parallelism target and serializes
-      // merge/join/verify stages onto 2-6 tasks (StageProfile:
-      // q_approx_distinct's distinct-merge ran 1.2 task-CPU-s on 2
-      // tasks). Lowering the floor to 64k lets those stages spread to
-      // the core count. Interleaved same-JVM A/B (ConfAB, alternating
-      // arm order, min of 5-6): 11 of 12 comparisons favored 64k,
-      // ratios 1.1-2.1x. At production scale post-shuffle partitions
-      // are tens of MB and the floor never binds — decisions are
-      // identical to the default — so this only makes the bench engage
-      // the cores a production stage would. Env-overridable for A/B.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val nCpus = GraftSession.cpus
+    val spark = GraftSession(nCpus)
     val clock = new TaskClock
     spark.sparkContext.addSparkListener(clock)
-    // warm-up actions so JVM/codegen startup isn't billed to the first
-    // query: a scan plus a small decimal groupBy-agg (compiles the
-    // hash-agg + decimal codegen paths the first real queries use)
-    spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-    spark.read.parquet(s"$sfDir/region.parquet")
-      .groupBy("r_regionkey")
-      .agg(org.apache.spark.sql.functions.sum(
-        org.apache.spark.sql.functions.col("r_regionkey").cast("decimal(27,6)")))
-      .count()
+    GraftSession.warmUp(spark, sfDir)
 
     def runOne(d: graft.queries.QueryDef): Rep = {
-      // each rep is billed standalone: no cross-query/rep cache reuse.
-      // Checkpoint-backed results (the dedup pipelines) live as persisted
-      // RDDs outside the cacheManager — drop those blocks too.
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      GraftSession.clearCaches(spark)
       val (run0, cpu0, gc0, wait0, nt0) = clock.settledSnapshot()
       val (bad0, tot0) = cpuStat()
       val t0 = System.nanoTime()

@@ -24,8 +24,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * composed plan: two regexp passes over a 2x-spread copy of the text,
   * a ~chars-sized `split` array, two `zip_with` slice arrays, and one
   * allocated string per trigram — the measured cost center of the
-  * scoring pass (AbLangId probe: feature construction, not hashing,
-  * dominated). The hash calls are the composed path's own
+  * scoring pass (feature construction, not hashing, dominated: SCALE.md
+  * "Round-18 addition: trained language ID A/B"). The hash calls are
+  * the composed path's own
   * ([[Md5Hash.hash64Bytes]] over identical bytes; `XXH64` seed-42 +
   * chained-7 sign), accumulated into the same integral ±1 slots and the
   * same ascending-index norm fold, so outputs are byte-identical by

@@ -53,7 +53,8 @@ object LangIdTrained {
   /** The 64 languages (class index = position — alphabetical by code)
     * with 10 high-frequency function words each: the seeded synthetic
     * corpus [[syntheticCorpus]] draws from and the label set the model
-    * predicts. Widened 32 -> 64 in r20 after the ArgmaxKBench curve
+    * predicts. Widened 32 -> 64 in r20 after the K-scaling curve
+    * (SCALE.md "Round-20 addition: the fused-argmax K-scaling curve")
     * showed the fused scorer LINEAR in K with no knee through 128
     * (marginal 0.24 -> 0.43 us/row at K=32 -> 64, dim 64). 64 = 2^6 so
     * the class of `doc_id` is exact integer arithmetic on both engines
@@ -270,7 +271,8 @@ object LangIdTrained {
     * kernel ([[graft.functions.CharTrigramEmbed]]): byte-identical to
     * the composed [[withFeaturesReference]] chain it replaced, minus
     * the 2x-spread regex passes and per-trigram string allocations that
-    * dominated the scoring cost (AbLangId probe). */
+    * dominated the scoring cost (SCALE.md "Round-18 addition: trained
+    * language ID A/B"). */
   def withFeatures(df: DataFrame, textCol: String, dim: Int = 64,
       outCol: String = "feats"): DataFrame =
     df.withColumn(outCol,

@@ -560,7 +560,8 @@ object RelationalQueries {
         // partitioned and sorted on the key) computes them for every row:
         //  - EXISTS l2 with s2 <> me    ⇔ the order has >= 2 distinct
         //    suppliers (my own supplier is in the set; the inner join
-        //    drops no lineitem rows — every l_orderkey has its order);
+        //    drops no lineitem rows — every l_orderkey has its order,
+        //    asserted per SF by SchemaCanarySpec);
         //  - NOT EXISTS late l3, s3 <> me ⇔ the order's LATE-supplier
         //    set is exactly {me} — and an l1 row is itself late, so
         //    that is |late set| == 1.

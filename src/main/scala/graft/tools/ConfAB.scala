@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Storm-proof interleaved A/B of a RUNTIME SQL conf: for each rep, runs
   * every named query once under arm A (stock) and once under arm B (the
@@ -24,27 +24,16 @@ object ConfAB {
         }
       }
     require(overlay.nonEmpty, "SPARK_GRAFT_CONF must carry the B-arm confs")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "2"))
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
-    spark.read.parquet(s"$sfDir/lineitem.parquet").count() // warm-up
-    val stock: Map[String, String] =
-      overlay.map { case (k, _) => (k, spark.conf.get(k)) }.toMap
+    GraftSession.warmUp(spark, sfDir)
+    // arm A's values; None = the key has no value, so arm A unsets it
+    val stock: Map[String, Option[String]] =
+      overlay.map { case (k, _) => (k, spark.conf.getOption(k)) }.toMap
     val qs = graft.SparkEntry.defs.map(d => d.name -> d.fn).toMap
 
     def run(n: String): Double = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      GraftSession.clearCaches(spark)
       val t0 = System.nanoTime()
       qs(n)(spark, sfDir).write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
@@ -56,7 +45,9 @@ object ConfAB {
     // the warmer caches of running second
     for (r <- 1 to reps; n <- names) {
       def runA(): Unit = {
-        overlay.foreach { case (k, _) => spark.conf.set(k, stock(k)) }
+        overlay.foreach { case (k, _) =>
+          stock(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
+        }
         a(n) = run(n) :: a.getOrElse(n, Nil)
       }
       def runB(): Unit = {

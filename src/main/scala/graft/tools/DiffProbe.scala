@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.operators.{Dedup, TextAnalysis}
 import graft.queries.{Differential, Tables}
 
@@ -135,14 +136,7 @@ object DiffProbe {
         if (args.length > 1) args.drop(1).toSeq
         else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
           "/root/testdata/sf0.1")
-      val spark = SparkSession.builder()
-        .master("local[16]")
-        .config("spark.sql.shuffle.partitions", 16)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.ansi.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = GraftSession()
       dsirSweep(spark, dirs)
       spark.stop()
       return
@@ -152,28 +146,15 @@ object DiffProbe {
         if (args.length > 1) args.drop(1).toSeq
         else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
           "/root/testdata/sf0.1")
-      val spark = SparkSession.builder()
-        .master("local[16]")
-        .config("spark.sql.shuffle.partitions", 16)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        // the engine posture (Verify/Bench): a 0/0 jaccard on a tiny
-        // subsample must read NULL, not kill the sweep
-        .config("spark.sql.ansi.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      // the engine posture (ANSI off): a 0/0 jaccard on a tiny
+      // subsample must read NULL, not kill the sweep
+      val spark = GraftSession()
       simhashSweep(spark, dirs)
       spark.stop()
       return
     }
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val docs = Tables.documents(spark, dir)
 
     println(s"== minhash ($dir)")

@@ -78,12 +78,7 @@ object GenLangIdPinned {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     val out = render(trainPinned(spark))
     val path = java.nio.file.Paths.get(
       "src/main/scala/graft/operators/LangIdPinned.scala")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Physical-plan audit: prints `.explain("formatted")` for the named
   * queries (default: a scale-critical selection) and flags patterns that
   * do not survive a 100x scale-up — cartesian products, single-partition
@@ -24,13 +22,7 @@ object PlanAudit {
       if (args.length > 1) args.tail.toSeq
       else Seq("cb_groupby_chained", "cb_map_2d", "q_events_first",
         "q_dedup_minhash", "q_dedup_cosine", "q3_shipping", "q5_region_revenue")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     // audit the BENCH surface (QueryDef.fn): the q_*_xx certificate
     // plans (verifyFn) carry deliberate scalar-assembly NL joins and are

@@ -3,7 +3,8 @@ package graft.tools
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+
+import graft.GraftSession
 
 /** Per-stage wall/CPU breakdown for declared queries — the empirical
   * half of the optimization loop (spark_optimization_guide §1.1) when
@@ -25,37 +26,15 @@ object StageProfile {
     val dir = args(0)
     val reps = args(1).toInt.max(1)
     val names = args.drop(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // match Bench's shuffle-writer selection (see Bench.scala)
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "2"))
-      // match Bench's AQE coalesce floor (see Bench.scala)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // the Bench warm-up pair, so rep 1 is not billed JVM/codegen startup
-    spark.read.parquet(s"$dir/lineitem.parquet").count()
-    spark.read.parquet(s"$dir/region.parquet").groupBy("r_regionkey")
-      .agg(org.apache.spark.sql.functions.sum(
-        org.apache.spark.sql.functions.col("r_regionkey").cast("decimal(27,6)")))
-      .count()
+    val spark = GraftSession()
+    GraftSession.warmUp(spark, dir)
 
     val defs = graft.SparkEntry.defs.filter(d => names.contains(d.name))
     for (name <- names; d <- defs.find(_.name == name)) {
       var bestSec = Double.MaxValue
       var bestStages: Seq[(Int, St)] = Nil
       for (_ <- 1 to reps) {
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
+        GraftSession.clearCaches(spark)
         val stages = TrieMap.empty[Int, St]
         val listener = new SparkListener {
           override def onStageCompleted(

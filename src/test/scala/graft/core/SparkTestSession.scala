@@ -2,20 +2,10 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local SparkSession for the whole test run. */
+/** One shared local[4] SparkSession for the whole test run, on the
+  * bench configuration ([[graft.GraftSession]]). */
 object SparkTestSession {
-  lazy val get: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val get: SparkSession = graft.GraftSession(4)
 
   /** Pid-keyed scratch path for test fixtures: a concurrent or orphaned
     * test JVM sharing the machine cannot clobber this run's files (the

@@ -204,6 +204,23 @@ class SchemaCanarySpec extends AnyFunSuite {
           "delta selection went vacuous")
     }
 
+    test(s"[$sf] every lineitem row has its order (q21 foreign-key " +
+        "contract)") {
+      import org.apache.spark.sql.functions._
+      // q21's window rewrite counts an order's distinct suppliers over
+      // the lineitem⋈orders INNER join, while its oracle's EXISTS l2
+      // reads raw lineitem: the two agree only if that join drops no
+      // lineitem row, i.e. l_orderkey is a foreign key into orders
+      val orphans = Tables.lineitem(spark, dir).select("l_orderkey")
+        .join(Tables.orders(spark, dir).select("o_orderkey"),
+          col("l_orderkey") === col("o_orderkey"), "left_anti")
+        .count()
+      assert(orphans == 0,
+        s"$orphans lineitem rows have no order — q21's window rewrite " +
+          "(EXISTS / NOT EXISTS as per-order supplier-set sizes over the " +
+          "lineitem⋈orders join) no longer matches its oracle")
+    }
+
     test(s"[$sf] every engine-read column keeps its pinned type " +
         "(all tables)") {
       val drift = for {
