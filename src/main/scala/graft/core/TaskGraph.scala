@@ -437,6 +437,13 @@ final case class TaskGraph(
     mapFrame(df, names.map(n => n -> n).toMap, indexCol = None)
   }
 
+  /** The single node-values merge (reference `NodeValues.merge`,
+    * node_values.py:54-117): every `DimGroup` enters the catalog here,
+    * whether from a `map*` call or from a graph spliced in by [[setItem]].
+    * Re-mapped source nodes follow the re-map rules (no-op, replace or
+    * raise) and keep their old dim names; a new dim named like an
+    * existing map or groupby dim must carry the same labels.
+    */
   private def addGroup(group0: DimGroup): TaskGraph = {
     // Re-map detection runs BEFORE dim-collision validation so an
     // identical re-map with the same explicit dim name is a no-op, not a
@@ -514,52 +521,14 @@ final case class TaskGraph(
     // values are identical — the dims become SHARED and descendants align
     // on them (reference node_values.py:79-90: same index name requires
     // equal index values). Conflicting labels raise.
+    val strict = TaskGraph.strictValidation(group.df)
     group.dims.filterNot(remapDims.contains).foreach { dm =>
-      // Only touch a group's frame when a collision actually exists AND
-      // its positional labels are free to materialize: constructing the
-      // positional frame of a file-backed group is a full-scan Spark job
-      // (ZippedWithIndexRDD computes partition offsets at CONSTRUCTION
-      // time) that labelsCompatible's metadata-scale guard would then
-      // discard anyway — fact-scale label sets defer to join semantics.
-      def safeLabels(g: DimGroup): Option[DataFrame] =
-        if (g.positionalDim.isEmpty || TaskGraph.isLocalPlan(g.df))
-          Some(g.frame(needPositional = true).select(dm).distinct())
-        else None
-      val collidingGroups =
-        gs.filter(og => og.valueCols.nonEmpty && og.dims.contains(dm))
-      val collidesGroupby = groupbyDims.contains(dm)
-      if (collidingGroups.nonEmpty || collidesGroupby) {
-        val strict = TaskGraph.strictValidation(group.df)
-        // strict-mode fallback labels: built even for file-backed
-        // positional groups (accepts the zipWithIndex construction job)
-        def allLabels(g: DimGroup): DataFrame =
-          g.frame(needPositional = true).select(dm).distinct()
-        safeLabels(group) match {
-          case Some(newLabels) =>
-            collidingGroups.foreach { og =>
-              safeLabels(og) match {
-                case Some(oldLabels) =>
-                  if (!TaskGraph.labelsCompatible(oldLabels, newLabels))
-                    throw new GraftException(
-                      s"""Conflicting index values for index name "$dm"""")
-                case None if strict =>
-                  TaskGraph.requireSameLength(dm, allLabels(og), newLabels)
-                case None => ()
-              }
-            }
-            if (collidesGroupby &&
-                !TaskGraph.labelsCompatible(indices(dm), newLabels))
-              throw new GraftException(
-                s"""Conflicting index values for index name "$dm"""")
-          case None if strict =>
-            val newLabels = allLabels(group)
-            collidingGroups.foreach(og =>
-              TaskGraph.requireSameLength(dm, allLabels(og), newLabels))
-            if (collidesGroupby)
-              TaskGraph.requireSameLength(dm, indices(dm), newLabels)
-          case None => ()
-        }
-      }
+      val newLabels = TaskGraph.DimLabels(group, dm)
+      gs.filter(og => og.valueCols.nonEmpty && og.dims.contains(dm)).foreach(og =>
+        TaskGraph.requireSameLabels(dm, TaskGraph.DimLabels(og, dm), newLabels, strict))
+      if (groupbyDims.contains(dm))
+        TaskGraph.requireSameLabels(dm,
+          new TaskGraph.DimLabels(free = true, indices(dm)), newLabels, strict)
     }
     if (freshCols.isEmpty) return copy(dag = d, groups = gs.filter(_.valueCols.nonEmpty))
     copy(dag = d, groups = gs.filter(_.valueCols.nonEmpty) :+ group.copy(valueCols = freshCols))
@@ -746,8 +715,10 @@ final case class TaskGraph(
 
   /** Branch replace/compose: splice `other` in at `key`, renaming `other`'s
     * unique sink to `key` (reference graph.py:480-537). Intersecting nodes
-    * must have identical predecessors and attrs; node values merge with the
-    * renamed sink's values preserved; mapped-on-unmapped raises.
+    * must have identical predecessors and attrs; mapped-on-unmapped raises.
+    * `other`'s node values merge through [[addGroup]], the same merge `map`
+    * uses (node_values.py:54-117), so re-maps and label conflicts behave
+    * exactly as in `map`; the renamed sink's values are preserved.
     */
   def setItem(key: String, other: TaskGraph): TaskGraph = {
     val sink = other.dag.uniqueSink
@@ -802,24 +773,12 @@ final case class TaskGraph(
       if (og.dims != newDims)
         throw new GraftException(
           s"Node '$key' has already been mapped with different indices")
-      // eager label validation only when the positional frame is free to
-      // build (no positional dim, or in-memory) — file-backed positional
-      // labels defer to join semantics, as in addGroup; strict mode adds
-      // the length guard on the deferred pairs
+      // the key's labels must match the incoming ones (shared label check)
+      val strict = TaskGraph.strictValidation(og.df)
       og.dims.foreach { dm =>
-        val ogSafe = og.positionalDim.isEmpty || TaskGraph.isLocalPlan(og.df)
-        val otherSafe = other.groups.find(_.dims.contains(dm)).forall(g =>
-          g.positionalDim.isEmpty || TaskGraph.isLocalPlan(g.df))
-        if (ogSafe && otherSafe) {
-          if (!TaskGraph.labelsCompatible(
-              og.frame(needPositional = true).select(dm).distinct(),
-              other.indices(dm)))
-            throw new GraftException(
-              s"""Conflicting index values for index name "$dm"""")
-        } else if (TaskGraph.strictValidation(og.df))
-          TaskGraph.requireSameLength(dm,
-            og.frame(needPositional = true).select(dm).distinct(),
-            other.indices(dm))
+        val incoming = other.groups.find(_.dims.contains(dm)).fold(
+          new TaskGraph.DimLabels(free = true, other.indices(dm)))(TaskGraph.DimLabels(_, dm))
+        TaskGraph.requireSameLabels(dm, TaskGraph.DimLabels(og, dm), incoming, strict)
       }
       merged = merged.copy(groups = merged.groups
         .map(g => if (g eq og) g.copy(valueCols = g.valueCols - key) else g)
@@ -829,67 +788,9 @@ final case class TaskGraph(
     // reduce spec the key had on the base side.
     if (renamedGroups.exists(_.valueCols.contains(key)))
       merged = merged.copy(reduces = merged.reduces - key)
-    renamedGroups.foreach { g =>
-      var fresh = g.valueCols
-      g.valueCols.foreach { case (n, _) =>
-        if (merged.isMapped(n)) {
-          val old = merged.groups(merged.mappedNode(n))
-          if (old.dims.size != g.dims.size)
-            throw new GraftException(s"Node '$n' has already been mapped")
-          // metadata-scale guard, as in addGroup: eager equality only for
-          // in-memory tables; file-backed re-maps take replace semantics
-          val bothLocal =
-            TaskGraph.isLocalPlan(old.df) && TaskGraph.isLocalPlan(g.df)
-          val labelsMatch = !bothLocal ||
-            old.dims.zip(g.dims).forall { case (od, nd) =>
-              TaskGraph.sameData(old.labelFrame(od).toDF("l"), g.labelFrame(nd).toDF("l"))
-            }
-          if (!labelsMatch)
-            throw new GraftException(
-              s"Node '$n' has already been mapped with different indices")
-          if (!bothLocal && TaskGraph.strictValidation(g.df))
-            old.dims.zip(g.dims).foreach { case (od, nd) =>
-              TaskGraph.requireSameLength(od,
-                old.labelFrame(od), g.labelFrame(nd))
-            }
-          val valuesMatch = bothLocal && TaskGraph.sameData(
-            old.df.select(col(old.valueCols(n)).as("v")),
-            g.df.select(col(g.valueCols(n)).as("v")))
-          if (valuesMatch) fresh -= n // identical: no-op
-          else merged = merged.copy(groups = merged.groups // replace: incoming wins
-            .map(og => if (og eq old) og.copy(valueCols = og.valueCols - n) else og)
-            .filter(_.valueCols.nonEmpty))
-          // (reference merge semantics, node_values_test.py:148-159:
-          // re-adding an existing node with different values on identical
-          // labels REPLACES the value, it does not raise)
-        }
-      }
-      if (fresh.nonEmpty) {
-        // shared-dim label consistency across graphs (node_values.py:79-90);
-        // positional frames only built when free (see addGroup)
-        def safeLabels(dg: DimGroup, dim: String): Option[DataFrame] =
-          if (dg.positionalDim.isEmpty || TaskGraph.isLocalPlan(dg.df))
-            Some(dg.frame(needPositional = true).select(dim).distinct())
-          else None
-        g.dims.foreach { dim =>
-          merged.groups.filter(og => (og ne g) && og.dims.contains(dim)).foreach { og =>
-            (safeLabels(og, dim), safeLabels(g, dim)) match {
-              case (Some(a), Some(b)) if !TaskGraph.labelsCompatible(a, b) =>
-                throw new GraftException(
-                  s"""Conflicting index values for index name "$dim"""")
-              case (Some(_), Some(_)) => ()
-              case _ if TaskGraph.strictValidation(g.df) =>
-                // at least one side is file-backed: strict length guard
-                TaskGraph.requireSameLength(dim,
-                  og.frame(needPositional = true).select(dim).distinct(),
-                  g.frame(needPositional = true).select(dim).distinct())
-              case _ => ()
-            }
-          }
-        }
-        merged = merged.copy(groups = merged.groups :+ g.copy(valueCols = fresh))
-      }
-    }
+    // every incoming group merges through addGroup, the one node-values
+    // merge that map uses too (node_values.py:54-117)
+    merged = renamedGroups.foldLeft(merged)(_.addGroup(_))
     // the key's OLD reduce spec dies unconditionally: the spliced graph's
     // sink is the key's new definition, whatever its kind — keeping a
     // stale spec would make frameOf (which consults reduces before DAG
@@ -1029,14 +930,12 @@ final case class TaskGraph(
           val joinNeedPos = needPredPos || keyJoinDims.exists(isPositionalDim)
           val predFrame = frameOf(spec.pred, joinNeedPos, memo)
           val kf = frameOf(k, joinNeedPos, memo)
+          // joinDims holds at least the consumed dim: GroupbyTaskGraph.reduce
+          // consumes the key's first dim, reduceImpl requires the pred to
+          // carry it, and joinNeedPos materializes it on both sides
           val joinDims = keyJoinDims
             .filter(d => predFrame.columns.contains(d) && kf.columns.contains(d))
-          if (joinDims.nonEmpty) dimJoin(predFrame, kf, joinDims)
-          else {
-            val shared = predFrame.columns.intersect(kf.columns).toSeq
-            require(shared.nonEmpty, s"groupby key '$k' shares no dim with '${spec.pred}'")
-            predFrame.join(kf, shared)
-          }
+          dimJoin(predFrame, kf, joinDims)
         }
     }
   }
@@ -1180,6 +1079,36 @@ object TaskGraph {
       throw new GraftException(
         s"""Conflicting index lengths for index name "$dim" ($ca vs $cb)""")
   }
+
+  /** One side of a shared-dim label check: the distinct labels of a dim,
+    * built on first use, and whether building them is free. A file-backed
+    * positional dim's labels are not: they need a zipWithIndex job at
+    * construction time (ZippedWithIndexRDD computes partition offsets
+    * eagerly), which labelsCompatible's metadata-scale guard would then
+    * discard anyway.
+    */
+  private final class DimLabels(val free: Boolean, build: => DataFrame) {
+    lazy val frame: DataFrame = build
+  }
+
+  private object DimLabels {
+    def apply(g: DimGroup, dim: String): DimLabels =
+      new DimLabels(g.positionalDim.isEmpty || isLocalPlan(g.df),
+        g.frame(needPositional = true).select(dim).distinct())
+  }
+
+  /** The shared-dim label check (reference node_values.py:79-90): two label
+    * sets claimed to describe `dim` are compared eagerly when both are free
+    * to build (labelsCompatible then still skips fact-scale sets), only by
+    * length in strict mode, and otherwise left to the dim join's
+    * relational semantics.
+    */
+  private def requireSameLabels(dim: String, a: DimLabels, b: DimLabels,
+      strict: Boolean): Unit =
+    if (a.free && b.free) {
+      if (!labelsCompatible(a.frame, b.frame))
+        throw new GraftException(s"""Conflicting index values for index name "$dim"""")
+    } else if (strict) requireSameLength(dim, a.frame, b.frame)
 
   /** Unit-carrying coordinate encoding (reference ScippDataArrayAdapter:
     * a coord with a unit yields `(value, unit)` tuple labels,

@@ -1,11 +1,30 @@
 package graft.core
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local[4] SparkSession for the whole test run, on the
   * bench configuration ([[graft.GraftSession]]). */
 object SparkTestSession {
   lazy val get: SparkSession = graft.GraftSession(4)
+
+  /** Runs `body` and returns its result with the Spark jobs it started,
+    * one entry per job (the job's stage names) — for asserting that plan
+    * construction runs no job, or no more than a pinned count.
+    */
+  def jobsStartedBy[A](body: => A): (A, Seq[String]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(jobStart: SparkListenerJobStart): Unit =
+        seen.add(jobStart.stageInfos.map(_.name).mkString("; "))
+    }
+    get.sparkContext.addSparkListener(listener)
+    try {
+      val result = body
+      Thread.sleep(300) // listener bus is async; give events time to land
+      (result, seen.toArray(Array.empty[String]).toSeq)
+    } finally get.sparkContext.removeSparkListener(listener)
+  }
 
   /** Pid-keyed scratch path for test fixtures: a concurrent or orphaned
     * test JVM sharing the machine cannot clobber this run's files (the

@@ -844,6 +844,38 @@ class TaskGraphSpec extends AnyFunSuite {
     assert(merged.result("d").collect()(0).getAs[Long]("d") == 4L)
   }
 
+  test("setItem re-map of a zipped node keeps the siblings' dim, as map does") {
+    // a is re-mapped onto a dim with another name: like mapFrame, the
+    // merge keeps a on its old dim, so c(a, b) stays a 2-row zip
+    val g = TaskGraph.fromEdges("a" -> "c", "b" -> "c", "a" -> "k")
+      .mapSeqs(Map("a" -> Seq(1, 2), "b" -> Seq(3, 4)))
+    val spliced = g.setItem("k",
+      TaskGraph.chain("a", "y").mapFrame(Seq(5, 6).toDF("a"), dimName = "zz"))
+    assert(spliced.dimsOf("c") == Vector("dim_0"))
+    val rows = spliced.result("c").collect()
+      .map(r => (r.getAs[Int]("a"), r.getAs[Int]("b"))).sorted.toSeq
+    assert(rows == Seq((5, 3), (6, 4)), s"zip became a cross product: $rows")
+  }
+
+  test("setItem raises on a groupby-dim label conflict, as map does") {
+    val g = TaskGraph(Dag.empty)
+      .mapSeqs(Map("x" -> Seq(1, 2, 3), "k" -> Seq("x", "y", "x")))
+      .groupby("k").reduce(key = "x", name = "s", attrs = Map("func" -> "sum"))
+      .withExpr("w", Seq("s"), "s")
+      .withExpr("z", Seq("s"), "s + 1")
+    // the groupby dim k has labels x, y; the incoming table labels it x, y, z
+    val df = Seq(("x", 10), ("y", 20), ("z", 30)).toDF("k", "u")
+    val e1 = intercept[GraftException] {
+      g.mapFrame(df, Map("u" -> "u"), indexCol = Some("k"), dimName = "k")
+    }
+    val e2 = intercept[GraftException] {
+      g.setItem("w", TaskGraph.chain("u", "v")
+        .mapFrame(df, Map("u" -> "u"), indexCol = Some("k"), dimName = "k"))
+    }
+    assert(e1.getMessage.contains("Conflicting index values"))
+    assert(e2.getMessage.contains("Conflicting index values"))
+  }
+
   test("shared dim name across groups requires identical labels") {
     val d1 = Seq((1, 10), (2, 20)).toDF("k", "v")
     val d2 = Seq((1, 7), (2, 8)).toDF("k", "w")

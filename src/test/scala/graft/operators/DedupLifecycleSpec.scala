@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -176,29 +175,19 @@ class DedupLifecycleSpec extends AnyFunSuite {
     // footer-reading job, which is input setup, not plan construction
     val (d, e) = (docs, emb)
     d.schema; e.schema
-    @volatile var jobs = 0
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(jobStart: SparkListenerJobStart): Unit = {
-        jobs += 1
-        seen.add(jobStart.stageInfos.map(_.name).mkString("; "))
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val scope = new Dedup.CacheScope
-      val cosine = Dedup.cosineNearDupsPlan(scope, e, "vec_id", "embedding",
+    val scope = new Dedup.CacheScope
+    val ((cosine, minhash), jobs) = SparkTestSession.jobsStartedBy {
+      (Dedup.cosineNearDupsPlan(scope, e, "vec_id", "embedding",
         dim = 64, threshold = 0.4, planesPerTable = 4, tables = 8,
-        maxBucket = 256, seed = 42L)
-      val minhash = Dedup.minhashNearDupsPlan(scope, d, "doc_id", "text",
-        threshold = 0.5, bands = 8, rows = 4, k = 3, maxBucket = 64)
-      Thread.sleep(300) // listener bus is async; give events time to land
-      assert(jobs == 0,
-        s"plan construction ran $jobs job(s) — must be fully lazy: " +
-          seen.toArray.mkString(" | "))
-      // the plans do execute when acted on
-      assert(cosine.count() >= 0 && minhash.count() >= 0)
-      scope.release()
-    } finally spark.sparkContext.removeSparkListener(listener)
+        maxBucket = 256, seed = 42L),
+       Dedup.minhashNearDupsPlan(scope, d, "doc_id", "text",
+        threshold = 0.5, bands = 8, rows = 4, k = 3, maxBucket = 64))
+    }
+    assert(jobs.isEmpty,
+      s"plan construction ran ${jobs.size} job(s) — must be fully lazy: " +
+        jobs.mkString(" | "))
+    // the plans do execute when acted on
+    assert(cosine.count() >= 0 && minhash.count() >= 0)
+    scope.release()
   }
 }
