@@ -816,16 +816,19 @@ final case class TaskGraph(
 
   /** The expansion frame of a node: a lazy DataFrame with one label column
     * per dim of the node (named after the dim) plus the node's value column
-    * (named after the node) — plus any co-grouped sibling columns that
-    * arrive free. This replaces the reference's driver-side Cartesian clone
-    * expansion (graph.py:367-424): the expansion is *declared* relationally
-    * and Catalyst plans it, so it never materializes on the driver and
-    * scales to arbitrarily large dims.
+    * (named after the node) — plus any co-grouped sibling or ancestor
+    * columns that arrive free. This replaces the reference's driver-side
+    * Cartesian clone expansion (graph.py:367-424): the expansion is
+    * *declared* relationally and Catalyst plans it, so it never
+    * materializes on the driver and scales to arbitrarily large dims.
     *
-    * Co-grouped predecessors are read from their shared `DimGroup` in one
-    * scan (no self-joins on row identity); independent dims combine via
-    * crossJoin (the reference's chained-map cross product,
-    * graph_test.py:382-402); shared dims via equi-join on the dim label.
+    * One discipline builds every frame: mapped, reduce and bare nodes have
+    * frames of their own; a derived node is a COLUMN over the one join of
+    * its nearest such ancestors ([[derivedFrame]], [[joinInputs]]). A
+    * diamond is therefore a projection of its source's frame, and the plan
+    * grows linearly with the DAG; joins remain only where dims differ —
+    * independent dims cross (the reference's chained-map cross product,
+    * graph_test.py:382-402), shared dims equi-join on the dim label.
     */
   def result(node: String, needPositional: Boolean = false): DataFrame = {
     require(dag.contains(node), s"unknown node '$node'")
@@ -837,126 +840,103 @@ final case class TaskGraph(
   private def isPositionalDim(d: String): Boolean =
     groups.exists(g => g.dims.contains(d) && !g.labelCols.contains(d))
 
+  /** A plain node computed from its predecessors (not mapped, not a reduce,
+    * not a bare input). */
+  private def isDerived(n: String): Boolean =
+    !isMapped(n) && !reduces.contains(n) && dag.predecessors(n).nonEmpty
+
   private def frameOf(n: String, needPos: Boolean,
       memo: scala.collection.mutable.Map[(String, Boolean), DataFrame]): DataFrame =
     memo.getOrElseUpdate((n, needPos), {
       if (isMapped(n)) groups(mappedNode(n)).frame(needPos)
       else reduces.get(n) match {
         case Some(spec) => reduceFrame(n, spec, needPos, memo)
+        case None if isDerived(n) => derivedFrame(n, needPos, memo)
         case None =>
-          val preds = dag.predecessors(n)
-          if (preds.isEmpty) {
-            val spark = groups.headOption.map(_.df.sparkSession)
-              .getOrElse(SparkSession.active)
-            spark.range(1).select(lit(null).cast("string").as(n))
-          } else {
-            val base = mergePredFrames(preds, needPos, memo)
-            val attrs = dag.attrs.getOrElse(n, Map.empty)
-            attrs.get("expr") match {
-              case Some(e) => base.withColumn(n, expr(e))
-              case None if preds.size == 1 && base.columns.contains(preds.head) =>
-                base.withColumn(n, col(preds.head))
-              case None =>
-                base.withColumn(n, struct(preds.filter(base.columns.contains).map(col): _*))
-            }
-          }
+          val spark = groups.headOption.map(_.df.sparkSession)
+            .getOrElse(SparkSession.active)
+          spark.range(1).select(lit(null).cast("string").as(n))
       }
     })
 
-  /** Join predecessor frames on their SHARED DIMS — the row identity. A
-    * pred whose column is already present came along with a co-grouped
-    * sibling (skip — no self-join); preds sharing dims equi-join
-    * (null-safe) on the dim label columns; disjoint dims crossJoin (the
-    * reference's chained-map cross product).
-    *
-    * Joining on dims, not on arbitrary shared columns, matches the
-    * reference's strictly per-index expansion (graph.py:367-424): two
-    * branches of a diamond (a->b, a->c, {b,c}->d) both carry ancestor
-    * value column 'a', and joining on 'a' would cross-match duplicate
-    * values (and silently drop nulls). Instead the duplicated ancestor
-    * columns are dropped from the right side (identical by construction)
-    * and the join keys on the dim labels alone; a positional dim shared by
-    * two predecessors has its label column materialized to serve as the
-    * key.
+  /** A derived node's frame: its nearest non-derived ancestors (mapped,
+    * reduce or bare nodes) joined once by [[joinInputs]], then one column
+    * per derived node on the way, in topological order. Derived nodes never
+    * join frames of their own, so co-dimensional branches (a diamond
+    * a->b, a->c, {b,c}->d) stay one row per copy of `a` — joining on a
+    * shared value column would cross-match duplicate values, and joining
+    * the branches' frames on the dim label would cross-match duplicate
+    * labels.
     */
-  private def mergePredFrames(preds: Seq[String], needPos: Boolean,
+  private def derivedFrame(n: String, needPos: Boolean,
       memo: scala.collection.mutable.Map[(String, Boolean), DataFrame]): DataFrame = {
-    val occurrences = preds.flatMap(p => dimsOf(p).distinct)
-    val sharedDims = occurrences.groupBy(identity).collect {
-      case (d, occ) if occ.size > 1 => d
-    }.toSet
-    val mergeNeedPos = needPos || sharedDims.exists(isPositionalDim)
-    var acc: DataFrame = null
-    var accDims = Set.empty[String]
-    preds.foreach { p =>
-      if (acc == null) {
-        acc = frameOf(p, mergeNeedPos, memo)
-        accDims = dimsOf(p).toSet
-      } else if (!acc.columns.contains(p)) {
-        val f = frameOf(p, mergeNeedPos, memo)
-        val joinDims = accDims.intersect(dimsOf(p).toSet).toSeq.sorted
-        acc = dimJoin(acc, f, joinDims)
-        accDims ++= dimsOf(p)
-      }
+    val upstream = scala.collection.mutable.Set.empty[String]
+    def visit(m: String): Unit =
+      if (upstream.add(m) && isDerived(m)) dag.predecessors(m).foreach(visit)
+    visit(n)
+    val (derived, inputs) = dag.topologicalOrder.filter(upstream).partition(isDerived)
+    derived.foldLeft(joinInputs(inputs, needPos, memo)) { (f, d) =>
+      val preds = dag.predecessors(d)
+      f.withColumn(d, dag.attrs.getOrElse(d, Map.empty).get("expr") match {
+        case Some(e) => expr(e)
+        case None if preds.size == 1 => col(preds.head)
+        case None => struct(preds.map(col): _*)
+      })
     }
-    acc
+  }
+
+  /** The one join of the expansion: the frames of `inputs`, joined once
+    * with [[dimJoin]] on the dims they share. An input whose column an
+    * earlier frame already carries (a co-grouped sibling, or a node inside
+    * a derived frame) is skipped, not self-joined, so the joined frames
+    * carry disjoint node columns. Positional labels are materialized only
+    * when the caller observes them or two joined inputs share a positional
+    * dim, whose labels then serve as the join key. A node column named
+    * like a dim of another input would collide with that dim's label
+    * column: a co-grouped bystander is dropped, an input itself raises.
+    */
+  private def joinInputs(inputs: Seq[String], needPos: Boolean,
+      memo: scala.collection.mutable.Map[(String, Boolean), DataFrame]): DataFrame = {
+    def carried(p: String): Set[String] =
+      frameOf(p, needPos, memo).columns.toSet -- dimsOf(p)
+    val joined = inputs.foldLeft(Vector.empty[String])((js, p) =>
+      if (js.exists(carried(_).contains(p))) js else js :+ p)
+    val dimUses = joined.flatMap(dimsOf(_).distinct)
+    def shadowed(p: String): Set[String] = carried(p).filter(dimUses.contains)
+    joined.flatMap(shadowed).find(inputs.contains).foreach(c => throw new GraftException(
+      s"Node '$c' is named like a dim of a node it joins with; rename the node or the dim"))
+    val pos = needPos || dimUses.diff(dimUses.distinct).exists(isPositionalDim)
+    joined.map { p =>
+      val f = frameOf(p, pos, memo)
+      if (shadowed(p).isEmpty) f else f.drop(shadowed(p).toSeq: _*)
+    }.reduce(dimJoin)
   }
 
   /** The reduce node's INPUT frame: the predecessor expansion, with the
     * groupby key column attached when not co-grouped. One row per
     * consumed pred copy — also the edge set of the fan-in (each input row
-    * feeds exactly one output group).
+    * feeds exactly one output group). Positional dims that survive the
+    * reduce are observed as group keys, so their labels are materialized.
     */
   private def reduceInput(n: String, spec: ReduceSpec, needPos: Boolean,
-      memo: scala.collection.mutable.Map[(String, Boolean), DataFrame]): DataFrame = {
-    // Positional dims that survive the reduce are observed as group keys:
-    // their labels must be materialized in the predecessor frame.
-    val needPredPos = needPos || dimsOf(n).exists(isPositionalDim)
-    val predFrame0 = frameOf(spec.pred, needPredPos, memo)
-    spec.groupKey match {
-      case None => predFrame0
-      case Some(k) =>
-        // Group labels = values of key node k. The key column is already in
-        // the frame when co-grouped (the common case): single-scan groupBy,
-        // no join — a map-side-combinable hash aggregation, and the
-        // positional labels stay UNmaterialized (this branch must not pay
-        // zipWithIndex or lose the pruned parquet scan).
-        if (predFrame0.columns.contains(k)) predFrame0
-        else {
-          // not co-grouped: the key attaches via a join on the shared
-          // dims, whose label columns must exist on BOTH sides — only
-          // here may positional materialization be forced
-          val keyJoinDims = dimsOf(k).intersect(dimsOf(spec.pred))
-          val joinNeedPos = needPredPos || keyJoinDims.exists(isPositionalDim)
-          val predFrame = frameOf(spec.pred, joinNeedPos, memo)
-          val kf = frameOf(k, joinNeedPos, memo)
-          // joinDims holds at least the consumed dim: GroupbyTaskGraph.reduce
-          // consumes the key's first dim, reduceImpl requires the pred to
-          // carry it, and joinNeedPos materializes it on both sides
-          val joinDims = keyJoinDims
-            .filter(d => predFrame.columns.contains(d) && kf.columns.contains(d))
-          dimJoin(predFrame, kf, joinDims)
-        }
-    }
-  }
+      memo: scala.collection.mutable.Map[(String, Boolean), DataFrame]): DataFrame =
+    joinInputs(spec.pred +: spec.groupKey.toSeq,
+      needPos || dimsOf(n).exists(isPositionalDim), memo)
 
-  /** Null-safe equi-join on dim label columns: duplicated non-key columns
-    * on the right are dropped first (identical ancestors by construction),
-    * right-side keys are renamed to avoid self-join ambiguity, and a null
-    * label aligns with itself. The one join discipline of the expansion
-    * engine, shared by predecessor merging and key attachment.
+  /** Null-safe equi-join on the columns two frames share — under
+    * [[joinInputs]], exactly the label columns of their shared dims — or a
+    * crossJoin when they share none (the reference's chained-map cross
+    * product). Right-side keys are renamed to avoid self-join ambiguity,
+    * and a null label aligns with itself.
     */
-  private def dimJoin(left: DataFrame, right: DataFrame,
-      joinDims: Seq[String]): DataFrame = {
-    val dupCols = right.columns.filter(c =>
-      left.columns.contains(c) && !joinDims.contains(c))
-    val fd = right.drop(dupCols.toIndexedSeq: _*)
-    if (joinDims.isEmpty) left.crossJoin(fd)
+  private def dimJoin(left: DataFrame, right: DataFrame): DataFrame = {
+    val joinDims = left.columns.intersect(right.columns).toSeq
+    if (joinDims.isEmpty) left.crossJoin(right)
     else {
-      val renamed = joinDims.foldLeft(fd)((d0, d) =>
+      val renamed = joinDims.foldLeft(right)((d0, d) =>
         d0.withColumnRenamed(d, "__jk_" + d))
       val cond = joinDims.map(d => col(d) <=> col("__jk_" + d)).reduce(_ && _)
-      left.join(renamed, cond).drop(joinDims.map("__jk_" + _).toIndexedSeq: _*)
+      left.join(renamed, cond).drop(joinDims.map("__jk_" + _): _*)
     }
   }
 

@@ -6,7 +6,7 @@ import org.scalacheck.Prop
 import org.scalacheck.Prop.forAll
 
 /** Differential fuzz of TaskGraph materialization: random small programs
-  * of map / reduce / groupby / slice / branch-surgery ops run against
+  * of map / reduce / groupby / slice / derive / branch-surgery ops run against
   * BOTH the relational engine (taskTable/edgeTable — dim joins, groupBys
   * and pruning planned by Catalyst) and a deliberately naive driver-side
   * interpreter that expands every node copy with nested loops straight
@@ -255,6 +255,12 @@ class TaskGraphFuzzSpec extends Properties("TaskGraphFuzz") {
         reduces = m1.reduces - key)
     }
 
+    /** The nearest mapped, reduce or bare ancestors a plain node over
+      * `ps` is computed from. */
+    def inputsOf(ps: Vector[String]): Set[String] = ps.toSet.flatMap { (p: String) =>
+      if (mapped(p) || reduces.contains(p) || preds(p).isEmpty) Set(p) else inputsOf(preds(p))
+    }
+
     /** setItem of an UNMAPPED 2-chain (fresh -> key): the fuzz's splice
       * flavor — old definition and exclusive ancestors die, the fresh
       * bare source becomes the key's only pred.
@@ -409,6 +415,21 @@ class TaskGraphFuzzSpec extends Properties("TaskGraphFuzz") {
       true
     }
 
+    def opDerive(): Boolean = {
+      // a plain node over 2-3 existing nodes: diamonds, crosses of groups,
+      // frames of reduces and bare sources — but no input named like a
+      // dim of the new node (a groupby key beside its own groupby dim),
+      // which the engine rejects
+      val picks = rnd.shuffle(m.nodeList).take(2 + rnd.nextInt(2))
+      val dims = picks.flatMap(m.dimsOf).toSet
+      if (picks.size < 2 || m.inputsOf(picks).exists(dims)) return false
+      val name = freshName("dd")
+      log ++= s"derive:${picks.mkString(",")}->$name "
+      g = g.withNode(name, picks)
+      m = m.copy(nodeList = m.nodeList :+ name, edges = m.edges ++ picks.map(_ -> name))
+      true
+    }
+
     def opResplice(): Boolean = {
       // identity splice: setItem(n, getItem(n)) must be a semantic no-op.
       // Derived nodes exercise the branch-replace path; MAPPED SOURCES
@@ -430,6 +451,7 @@ class TaskGraphFuzzSpec extends Properties("TaskGraphFuzz") {
       opReduce _, opReduce _, opReduce _,
       opGroupby _, opGroupby _,
       opSlice _, opSlice _,
+      opDerive _, opDerive _,
       opGetItem _, opDelItem _, opSetChain _, opResplice _)
 
     val steps = 3 + rnd.nextInt(4)
@@ -482,7 +504,7 @@ class TaskGraphFuzzSpec extends Properties("TaskGraphFuzz") {
       // generator covers the whole vocabulary (a silently-trivial
       // generator would show up as one dominant class here)
       val kinds = Vector("map", "reduce-all", "reduce-index", "reduce-axis",
-        "groupby", "slice", "getItem", "delItem", "setChain", "resplice")
+        "groupby", "slice", "derive", "getItem", "delItem", "setChain", "resplice")
         .filter(k => log.contains(k + ":")).mkString("+")
       Prop.collect(kinds)(Prop(taskOk && edgeOk) :| s"seed=$seed prog=$log")
     }

@@ -921,4 +921,100 @@ class TaskGraphSpec extends AnyFunSuite {
       remap(g3, "u")
     } finally spark.conf.unset("spark.graft.strictValidation")
   }
+
+  // --- one join discipline: plan size linear in the DAG ------------------
+
+  /** (logical plan nodes, Join nodes) of a result frame. */
+  private def planSize(df: org.apache.spark.sql.DataFrame): (Int, Int) = {
+    val plan = df.queryExecution.logical
+    (plan.collect { case n => n }.size,
+      plan.collect { case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }.size)
+  }
+
+  private def mappedX(rows: Int): TaskGraph =
+    TaskGraph(Dag.empty).mapFrame((0 until rows).map(i => (1000L + i, i.toLong)).toDF("id", "x"),
+      Map("x" -> "x"), indexCol = Some("id"), dimName = "i")
+
+  test("a ladder of 12 diamonds plans no join and at most 2 logical nodes per DAG node") {
+    val k = 12
+    val g = (1 to k).foldLeft(mappedX(1000)) { (g, s) =>
+      val prev = if (s == 1) "x" else s"j${s - 1}"
+      g.withExpr(s"l$s", Seq(prev), s"$prev + $s")
+        .withExpr(s"r$s", Seq(prev), s"$prev - $s")
+        .withExpr(s"j$s", Seq(s"l$s", s"r$s"), s"l$s + r$s")
+    }
+    val f = g.result(s"j$k")
+    val (nodes, joins) = planSize(f)
+    assert(joins == 0, s"$joins joins")
+    assert(nodes <= 2 * g.dag.nodes.size, s"$nodes logical nodes for ${g.dag.nodes.size} DAG nodes")
+    // j_s = 2 * j_{s-1}: x = 3 at id 1003 gives 3 * 2^k
+    assert(f.filter("i = 1003").select(s"j$k").as[Long].collect().toSeq == Seq(3L << k))
+  }
+
+  test("a fan-in of width 16 plans no join") {
+    val ys = (1 to 16).map(m => s"y$m")
+    val g = ys.foldLeft(mappedX(10))((g, y) => g.withExpr(y, Seq("x"), s"x + 1"))
+      .withExpr("z", ys, ys.mkString(" + "))
+    assert(planSize(g.result("z"))._2 == 0)
+    assert(g.result("z").filter("i = 1002").select("z").as[Long].collect().toSeq == Seq(48L))
+  }
+
+  test("two groups on a shared dim keep exactly one join") {
+    val g = mappedX(10)
+      .mapFrame((0 until 10).map(i => (1000L + i, 10L * i)).toDF("id", "y"),
+        Map("y" -> "y"), indexCol = Some("id"), dimName = "i")
+      .withExpr("z", Seq("x", "y"), "x + y")
+    assert(planSize(g.result("z"))._2 == 1)
+    assert(g.result("z").count() == 10)
+  }
+
+  test("a node over co-grouped file-backed columns starts no positional-label job") {
+    // two files, two partitions: zipWithIndex would run a job for the
+    // partition offsets if the positional labels were materialized
+    val dir = SparkTestSession.tmpPath("cogrouped_positional")
+    Seq((1, 10), (2, 20), (3, 30), (4, 40)).toDF("a", "b").repartition(2)
+      .write.mode("overwrite").parquet(dir)
+    val g = TaskGraph(Dag.fromEdges("a" -> "c", "b" -> "c").addNode("c", Map("expr" -> "a + b")))
+      .mapFrame(spark.read.parquet(dir))
+    assert(g.dimsOf("c") == Vector("dim_0"))
+    val (f, jobs) = SparkTestSession.jobsStartedBy(g.result("c"))
+    assert(jobs.isEmpty, jobs.mkString(" | "))
+    assert(f.select("c").as[Int].collect().sorted.toSeq == Seq(11, 22, 33, 44))
+  }
+
+  test("a node joined with a groupby dim of its own name raises instead of hiding it") {
+    val g = TaskGraph(Dag.empty)
+      .mapSeqs(Map("n1" -> Seq(1, 1, 2), "n2" -> Seq(10, 20, 30)))
+      .groupby("n1").reduce(key = "n2", name = "rr")
+      .withNode("u", Seq("rr", "n1"))
+    assert(g.dimsOf("u") == Vector("dim_0", "n1"))
+    val e = intercept[GraftException](g.result("u"))
+    assert(e.getMessage.contains("'n1'"))
+    intercept[GraftException](g.taskTable())
+  }
+
+  test("a co-grouped sibling named like a groupby dim yields to the dim's labels") {
+    // u over n2 and rr: n2's frame also carries n1's values, which must
+    // not stand in for (or join on) the groupby dim n1 of rr
+    val g = TaskGraph(Dag.empty)
+      .mapSeqs(Map("n1" -> Seq(1, 1, 2), "n2" -> Seq(10, 20, 40)))
+      .groupby("n1").reduce(key = "n2", name = "rr", attrs = Map("func" -> "sum"))
+      .withNode("u", Seq("n2", "rr"))
+    val rows = g.result("u", needPositional = true)
+      .select($"dim_0", $"n1", $"u.n2", $"u.rr").as[(Long, Int, Int, Long)].collect()
+    assert(rows.map(r => (r._1, r._2)).distinct.length == 6)
+    assert(rows.forall(r => r._4 == (if (r._2 == 1) 30L else 40L)))
+  }
+
+  test("a diamond over duplicate labels has as many copies as the chain") {
+    val dag = Dag.fromEdges("a" -> "b", "a" -> "c", "b" -> "d", "c" -> "d")
+      .addNode("b", Map("expr" -> "a + 1"))
+      .addNode("c", Map("expr" -> "a - 1"))
+      .addNode("d", Map("expr" -> "b * c"))
+    val g = TaskGraph(dag).mapFrame(Seq(("k1", 5), ("k1", 7)).toDF("idx", "v"),
+      Map("a" -> "v"), indexCol = Some("idx"), dimName = "x")
+    assert(g.result("b").count() == 2)
+    assert(g.result("d").count() == g.result("b").count())
+    assert(g.result("d").select("d").as[Int].collect().sorted.toSeq == Seq(24, 48))
+  }
 }
