@@ -33,10 +33,6 @@ final case class Dag(
   def contains(n: String): Boolean = nodes.contains(n)
 
   def predecessors(n: String): Vector[String] = parentsOf(n)
-  def successors(n: String): Vector[String] = childrenOf(n)
-
-  /** Source nodes: no incoming edges. */
-  def sourceNodes: Vector[String] = nodeList.filter(parentsOf(_).isEmpty)
 
   /** Sink nodes: no outgoing edges. */
   def sinkNodes: Vector[String] = nodeList.filter(childrenOf(_).isEmpty)
@@ -67,10 +63,6 @@ final case class Dag(
     go(n)
     seen.toSet
   }
-
-  /** Descendants of all of `roots` (reference graph.py:127-135). */
-  def descendantsOfAll(roots: Iterable[String]): Set[String] =
-    roots.flatMap(descendants).toSet
 
   def addNode(n: String, a: Map[String, String] = Map.empty): Dag =
     if (contains(n)) copy(attrs = attrs + (n -> (attrs.getOrElse(n, Map.empty) ++ a)))

@@ -471,22 +471,25 @@ final case class TaskGraph(
           if (old.dims.size != group0.dims.size)
             throw new GraftException(s"Node '$n' has already been mapped")
           // Eager label/value equality only for metadata-scale (in-memory)
-          // tables — the reference's whole universe. A file-backed re-map
-          // skips the eager compare (it would be a full scan at graph-build
-          // time) and takes deterministic replace semantics.
+          // tables within sameData's row bound — the reference's whole
+          // universe. A file-backed or over-bound re-map skips the eager
+          // compare (it would be a full scan at graph-build time) and takes
+          // deterministic replace semantics; None marks that deferral.
           val bothLocal =
             TaskGraph.isLocalPlan(old.df) && TaskGraph.isLocalPlan(group0.df)
-          val labelsMatch = !bothLocal ||
-            old.dims.zip(group0.dims).forall { case (od, nd) =>
+          // (the first dim whose compare is not Some(true) decides)
+          val labelsMatch: Option[Boolean] =
+            if (!bothLocal) None
+            else old.dims.zip(group0.dims).iterator.map { case (od, nd) =>
               TaskGraph.sameData(
                 old.labelFrame(od).toDF("l"), group0.labelFrame(nd).toDF("l"))
-            }
-          if (!labelsMatch)
+            }.find(!_.contains(true)).getOrElse(Some(true))
+          if (labelsMatch.contains(false))
             throw new GraftException(
               s"Node '$n' has already been mapped with different indices")
-          // strict mode: a file-backed re-map still gets a length guard
+          // strict mode: a deferred re-map still gets a length guard
           // (full equality stays deferred — see strictValidation)
-          if (!bothLocal && TaskGraph.strictValidation(group0.df))
+          if (labelsMatch.isEmpty && TaskGraph.strictValidation(group0.df))
             old.dims.zip(group0.dims).foreach { case (od, nd) =>
               TaskGraph.requireSameLength(od,
                 old.labelFrame(od), group0.labelFrame(nd))
@@ -497,9 +500,9 @@ final case class TaskGraph(
           renameTo = Some(old.dims)
           remapDims ++= old.dims
           remapDims ++= group0.dims
-          val valuesMatch = bothLocal && TaskGraph.sameData(
+          val valuesMatch = labelsMatch.isDefined && TaskGraph.sameData(
             old.df.select(col(old.valueCols(n)).as("v")),
-            group0.df.select(col(group0.valueCols(n)).as("v")))
+            group0.df.select(col(group0.valueCols(n)).as("v"))).contains(true)
           if (valuesMatch) freshCols -= n // no-op
           else gs = gs.map(og => // replace: new mapping wins
             if (og.valueCols.contains(n)) og.copy(valueCols = og.valueCols - n)
@@ -1133,18 +1136,19 @@ object TaskGraph {
 
   /** Semantic data equality for re-map validation: plan-level `sameResult`
     * first (free), then a bounded collect compare. Parameter tables are
-    * metadata-scale; this is never applied to fact-scale data.
+    * metadata-scale; this is never applied to fact-scale data. None when
+    * `a` has more than `maxRows` rows: too large to compare eagerly, so
+    * the caller defers as it does for a file-backed table.
     */
-  def sameData(a: DataFrame, b: DataFrame, maxRows: Int = 100000): Boolean = {
-    if (a.queryExecution.analyzed.sameResult(b.queryExecution.analyzed)) return true
+  def sameData(a: DataFrame, b: DataFrame, maxRows: Int = 100000): Option[Boolean] = {
+    if (a.queryExecution.analyzed.sameResult(b.queryExecution.analyzed)) return Some(true)
     if (a.schema.fields.map(_.dataType).toSeq != b.schema.fields.map(_.dataType).toSeq)
-      return false
+      return Some(false)
     val aRows = a.limit(maxRows + 1).collect()
-    if (aRows.length > maxRows)
-      throw new GraftException("parameter table too large for value-equality validation")
+    if (aRows.length > maxRows) return None
     val bRows = b.limit(maxRows + 1).collect()
-    aRows.map(_.toSeq.map(String.valueOf).mkString("\u0001")).sorted.toSeq ==
-      bRows.map(_.toSeq.map(String.valueOf).mkString("\u0001")).sorted.toSeq
+    Some(aRows.map(_.toSeq.map(String.valueOf).mkString("\u0001")).sorted.toSeq ==
+      bRows.map(_.toSeq.map(String.valueOf).mkString("\u0001")).sorted.toSeq)
   }
 
   /** Best-effort bounded equality for SHARED-DIM label validation. The
@@ -1169,8 +1173,7 @@ object TaskGraph {
         n == "LocalRelation" || n == "OneRowRelation" || n == "Range"
       }
     if (!metadataScale(a) || !metadataScale(b)) return true
-    try sameData(a, b, maxRows)
-    catch { case _: GraftException => true }
+    sameData(a, b, maxRows).getOrElse(true)
   }
 
   def sparkTypeOf(s: Seq[Any]): org.apache.spark.sql.types.DataType = {

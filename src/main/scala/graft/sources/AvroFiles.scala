@@ -1,6 +1,7 @@
 package graft.sources
 
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 import org.apache.avro.{LogicalTypes, Schema => ASchema}
 import org.apache.avro.generic.{GenericData, GenericRecord}
@@ -37,19 +38,9 @@ import org.apache.spark.sql.types._
   * partitions, not your cluster), one `binaryFile` row = one read task's
   * work, member decode is a per-partition flatMap with zero shuffles.
   *
-  * Commit protocol (task-level temp + rename): each attempt streams to
-  * a unique `part-<pid>.avro.tmp-<uuid>` and renames to the final
-  * `part-<pid>.avro` only AFTER a successful container close — so a
-  * task that dies mid-write leaves only a temp file that [[read]]'s
-  * `*.avro` glob never sees (no silent prefix-truncation), a
-  * speculative duplicate attempt never interleaves bytes into the
-  * final name (each attempt owns its uuid temp; FIRST rename wins and
-  * the loser deletes its temp — never delete-then-rename, which would
-  * let a dying straggler remove a committed part), and sequential
-  * retries stay idempotent (a retry's rename loses to the equivalent
-  * container the earlier attempt committed; stale finals from PREVIOUS
-  * jobs are removed by the pre-job cleanup). Stale temp files from
-  * dead attempts are swept by the pre-job cleanup too.
+  * Commit protocol: [[FileSink]] — each attempt streams to a
+  * `part-<pid>.avro.tmp-<uuid>` temp that [[read]]'s `*.avro` glob never
+  * sees, renamed to `part-<pid>.avro` only after the container closed.
   */
 object AvroFiles {
 
@@ -175,14 +166,8 @@ object AvroFiles {
   }
 
   /** Distributed OCF writer: each task writes `part-<partition>.avro`
-    * under `outDir` (deflate-coded). Same Hadoop-FS sink discipline as
-    * [[TarShards.writeShards]]: scheme resolved from the path, the
-    * driver's Hadoop conf ships via its Writable round-trip; commit via
-    * the temp+rename protocol on the object scaladoc. */
+    * under `outDir` (deflate-coded), committed through [[FileSink]]. */
   def write(df: DataFrame, outDir: String): Unit = {
-    val spark = df.sparkSession
-    import org.apache.hadoop.conf.Configuration
-    import org.apache.hadoop.fs.Path
     val schema = df.schema
     val schemaJson = avroSchemaJson(schema)
     // fail fast ON THE DRIVER for both unsupported types (avroType
@@ -191,87 +176,41 @@ object AvroFiles {
     // without this parse a name like "n-chars" (or one with a quote)
     // would surface as a distributed task failure after job launch
     new ASchema.Parser().parse(schemaJson)
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val out = new Path(outDir)
-    val fs = out.getFileSystem(hadoopConf)
-    fs.mkdirs(out)
-    Option(fs.globStatus(new Path(out, "*.avro")))
-      .foreach(_.foreach(s => fs.delete(s.getPath, false)))
-    // sweep temp files abandoned by dead attempts of a previous job
-    Option(fs.globStatus(new Path(out, "*.avro.tmp-*")))
-      .foreach(_.foreach(s => fs.delete(s.getPath, false)))
-    val confBytes = {
-      val baos = new java.io.ByteArrayOutputStream()
-      val dos = new java.io.DataOutputStream(baos)
-      hadoopConf.write(dos); dos.close(); baos.toByteArray
-    }
-    val outUri = fs.makeQualified(out).toString
     val n = schema.length
-    df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
-      // InternalRow -> GenericRecord without a driver round-trip
-      val avroSchema = new ASchema.Parser().parse(schemaJson)
-      val convs = schema.fields.zipWithIndex.map { case (f, i) =>
-        writeConv(f.dataType, unwrap(avroSchema.getFields.get(i).schema()))
-      }
-      val conf = new Configuration(false)
-      conf.readFields(new java.io.DataInputStream(
-        new java.io.ByteArrayInputStream(confBytes)))
-      val p = new Path(outUri, f"part-$pid%05d.avro")
-      // unique per-ATTEMPT temp: concurrent speculative attempts each
-      // own their temp file, and only a fully-closed container is ever
-      // renamed to the final *.avro name the read glob sees
-      val tmp = new Path(outUri,
-        f"part-$pid%05d.avro.tmp-${java.util.UUID.randomUUID()}")
-      val pfs = p.getFileSystem(conf)
-      val os = pfs.create(tmp, true)
-      val writer = new org.apache.avro.file.DataFileWriter(
-        new org.apache.avro.generic.GenericDatumWriter[
-          GenericRecord](avroSchema))
-      writer.setCodec(org.apache.avro.file.CodecFactory.deflateCodec(6))
-      writer.create(avroSchema, os)
-      var count = 0L
-      var committed = false
-      try {
-        rows.foreach { ir =>
-          val rec = new GenericData.Record(avroSchema)
-          var i = 0
-          while (i < n) {
-            rec.put(i, if (ir.isNullAt(i)) null else convs(i)(ir, i))
-            i += 1
+    FileSink(df.sparkSession, outDir, "*.avro", ".avro.tmp-")
+      .writeParts(df.queryExecution.toRdd, "avro") { (rows, os) =>
+        // InternalRow -> GenericRecord without a driver round-trip
+        val avroSchema = new ASchema.Parser().parse(schemaJson)
+        val convs = schema.fields.zipWithIndex.map { case (f, i) =>
+          writeConv(f.dataType, unwrap(avroSchema.getFields.get(i).schema()))
+        }
+        Using.resource(new org.apache.avro.file.DataFileWriter(
+            new org.apache.avro.generic.GenericDatumWriter[
+              GenericRecord](avroSchema))) { writer =>
+          writer.setCodec(org.apache.avro.file.CodecFactory.deflateCodec(6))
+          writer.create(avroSchema, os)
+          var count = 0L
+          rows.foreach { ir =>
+            val rec = new GenericData.Record(avroSchema)
+            var i = 0
+            while (i < n) {
+              rec.put(i, if (ir.isNullAt(i)) null else convs(i)(ir, i))
+              i += 1
+            }
+            writer.append(rec)
+            count += 1
           }
-          writer.append(rec)
-          count += 1
-        }
-        writer.close() // closes the FS stream too; container now complete
-        // commit: rename FIRST, never delete-then-rename — the pre-job
-        // cleanup already removed stale finals, so within this job an
-        // existing final part can only be a sibling attempt's COMPLETE
-        // equivalent container; a delete-then-rename would open a window
-        // where a straggler deletes the committed part and dies before
-        // renaming its own temp (silent partition loss). A failed rename
-        // with the final present = the sibling won; drop our temp.
-        if (!pfs.rename(tmp, p)) {
-          if (pfs.exists(p)) pfs.delete(tmp, false)
-          else throw new java.io.IOException(
-            s"AvroFiles.write: rename $tmp -> $p failed")
-        }
-        committed = true
-      } finally {
-        if (!committed) {
-          try writer.close() catch { case _: Throwable => () }
-          try pfs.delete(tmp, false) catch { case _: Throwable => () }
-        }
+          count
+        } // the close completes the container
       }
-      Iterator.single(count)
-    }.count() // materialize the write
-    ()
   }
 
   /** Relax nullability at EVERY level: quarantine rows and by-name
     * misses (top-level or nested) are null by construction, and one
     * non-nullable flag anywhere would make the row encoder throw on
-    * exactly the hostile input the quarantine exists to absorb. */
-  private def relax(dt: DataType): DataType = dt match {
+    * exactly the hostile input the quarantine exists to absorb. The
+    * [[ProtoFiles]] reader shares it. */
+  private[sources] def relax(dt: DataType): DataType = dt match {
     case st: StructType => StructType(st.fields.map(f =>
       f.copy(dataType = relax(f.dataType), nullable = true)))
     case ArrayType(et, _) => ArrayType(relax(et), containsNull = true)

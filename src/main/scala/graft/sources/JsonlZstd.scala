@@ -1,5 +1,7 @@
 package graft.sources
 
+import scala.util.Using
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -13,7 +15,7 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *
   * Same posture as [[TarShards]]/[[AvroFiles]]/[[ProtoFiles]]/
   * [[WarcFiles]]: distributed write through the Hadoop FS API with the
-  * temp+rename task commit, read via `binaryFile` + a per-file walk,
+  * [[FileSink]] task commit, read via `binaryFile` + a per-file walk,
   * malformed tails QUARANTINED instead of failing the task (lines
   * decoded before the corruption point are kept).
   *
@@ -56,73 +58,31 @@ object JsonlZstd {
 
   /** Distributed writer: every column of `df` becomes a JSON field (in
     * column order) of one object per row; each task writes
-    * `part-<pid>.jsonl.zst` (or plain `.jsonl` with `zstd = false`)
-    * under the rename-first task commit. Temp names carry no ".jsonl"
-    * substring so the read glob can never surface a dead attempt's
-    * partial file (the WarcFiles `.wtmp-` lesson). */
+    * `part-<pid>.jsonl.zst` (or plain `.jsonl` with `zstd = false`),
+    * committed through [[FileSink]]. The temp marker `.jzt-` carries no
+    * ".jsonl", so the read glob never surfaces a dead attempt's file. */
   def write(df: DataFrame, outDir: String, zstd: Boolean = true,
       level: Int = 3): Unit = {
-    val spark = df.sparkSession
-    import org.apache.hadoop.conf.Configuration
-    import org.apache.hadoop.fs.Path
     require(df.columns.nonEmpty, "JsonlZstd.write: no columns")
     val lines = df.select(
       to_json(struct(df.columns.map(col).toIndexedSeq: _*)).as("line"))
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val out = new Path(outDir)
-    val fs = out.getFileSystem(hadoopConf)
-    fs.mkdirs(out)
-    val ext = if (zstd) "jsonl.zst" else "jsonl"
-    Option(fs.globStatus(new Path(out, "*.jsonl*")))
-      .foreach(_.foreach(s => fs.delete(s.getPath, false)))
-    Option(fs.globStatus(new Path(out, "*.jzt-*")))
-      .foreach(_.foreach(s => fs.delete(s.getPath, false)))
-    val confBytes = {
-      val baos = new java.io.ByteArrayOutputStream()
-      val dos = new java.io.DataOutputStream(baos)
-      hadoopConf.write(dos); dos.close(); baos.toByteArray
-    }
-    val outUri = fs.makeQualified(out).toString
-    val lvl = level
-    lines.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
-      val conf = new Configuration(false)
-      conf.readFields(new java.io.DataInputStream(
-        new java.io.ByteArrayInputStream(confBytes)))
-      val p = new Path(outUri, f"part-$pid%05d.$ext")
-      val tmp = new Path(outUri,
-        f"part-$pid%05d.jzt-${java.util.UUID.randomUUID()}")
-      val pfs = p.getFileSystem(conf)
-      val fileOs =
-        new java.io.BufferedOutputStream(pfs.create(tmp, true), 1 << 16)
-      val os: java.io.OutputStream =
-        if (ext == "jsonl.zst")
-          new com.github.luben.zstd.ZstdOutputStream(fileOs, lvl)
-        else fileOs
-      var count = 0L
-      var committed = false
-      try {
-        rows.foreach { ir =>
-          // to_json of a non-null struct is never null
-          os.write(ir.getUTF8String(0).getBytes)
-          os.write('\n')
-          count += 1
-        }
-        os.close() // closes the zstd frame AND the file stream
-        if (!pfs.rename(tmp, p)) {
-          if (pfs.exists(p)) pfs.delete(tmp, false)
-          else throw new java.io.IOException(
-            s"JsonlZstd.write: rename $tmp -> $p failed")
-        }
-        committed = true
-      } finally {
-        if (!committed) {
-          try os.close() catch { case _: Throwable => () }
-          try pfs.delete(tmp, false) catch { case _: Throwable => () }
+    FileSink(df.sparkSession, outDir, "*.jsonl*", ".jzt-")
+      .writeParts(lines.queryExecution.toRdd,
+          if (zstd) "jsonl.zst" else "jsonl") { (rows, fileOs) =>
+        // the close ends the zstd frame
+        Using.resource(if (zstd)
+            new com.github.luben.zstd.ZstdOutputStream(fileOs, level)
+          else fileOs) { os =>
+          var count = 0L
+          rows.foreach { ir =>
+            // to_json of a non-null struct is never null
+            os.write(ir.getUTF8String(0).getBytes)
+            os.write('\n')
+            count += 1
+          }
+          count
         }
       }
-      Iterator.single(count)
-    }.count()
-    ()
   }
 
   /** LAZY decode of one file's bytes into `(line, error)` rows — one

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types._
   * protobuf wire format (no codegen, no descriptor dependency — varint /
   * fixed64 / length-delimited / fixed32 wire types only). Same posture
   * as [[TarShards]]/[[AvroFiles]]: distributed write through the Hadoop
-  * FS API with the temp+rename task commit, read via `binaryFile` + a
+  * FS API with the [[FileSink]] task commit, read via `binaryFile` + a
   * per-file walk, per-file quarantine instead of task failure.
   *
   * Schema mapping (field NUMBER = 1 + position in the caller's struct —
@@ -163,41 +163,14 @@ object ProtoFiles {
   }
 
   /** Distributed delimited-stream writer: each task streams
-    * `[varint len][message]` records to `part-<pid>.pb` via the
-    * temp+rename commit protocol (see [[AvroFiles.write]]'s scaladoc —
-    * identical discipline). */
+    * `[varint len][message]` records to `part-<pid>.pb`, committed
+    * through [[FileSink]]. */
   def write(df: DataFrame, outDir: String): Unit = {
-    val spark = df.sparkSession
-    import org.apache.hadoop.conf.Configuration
-    import org.apache.hadoop.fs.Path
     val schema = df.schema
     schema.fields.foreach(f => validate(f.dataType)) // driver fail-fast
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val out = new Path(outDir)
-    val fs = out.getFileSystem(hadoopConf)
-    fs.mkdirs(out)
-    Option(fs.globStatus(new Path(out, "*.pb")))
-      .foreach(_.foreach(s => fs.delete(s.getPath, false)))
-    Option(fs.globStatus(new Path(out, "*.pb.tmp-*")))
-      .foreach(_.foreach(s => fs.delete(s.getPath, false)))
-    val confBytes = {
-      val baos = new java.io.ByteArrayOutputStream()
-      val dos = new java.io.DataOutputStream(baos)
-      hadoopConf.write(dos); dos.close(); baos.toByteArray
-    }
-    val outUri = fs.makeQualified(out).toString
-    df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
-      val conf = new Configuration(false)
-      conf.readFields(new java.io.DataInputStream(
-        new java.io.ByteArrayInputStream(confBytes)))
-      val p = new Path(outUri, f"part-$pid%05d.pb")
-      val tmp = new Path(outUri,
-        f"part-$pid%05d.pb.tmp-${java.util.UUID.randomUUID()}")
-      val pfs = p.getFileSystem(conf)
-      val os = new java.io.BufferedOutputStream(pfs.create(tmp, true), 1 << 16)
-      var count = 0L
-      var committed = false
-      try {
+    FileSink(df.sparkSession, outDir, "*.pb", ".pb.tmp-")
+      .writeParts(df.queryExecution.toRdd, "pb") { (rows, os) =>
+        var count = 0L
         rows.foreach { ir =>
           val o = new Out
           writeMessage(o, schema, ir)
@@ -206,24 +179,8 @@ object ProtoFiles {
           os.write(frame.toBytes); os.write(o.toBytes)
           count += 1
         }
-        os.close()
-        // rename-first commit (see AvroFiles.write: delete-then-rename
-        // loses a committed part when a straggler dies mid-window)
-        if (!pfs.rename(tmp, p)) {
-          if (pfs.exists(p)) pfs.delete(tmp, false)
-          else throw new java.io.IOException(
-            s"ProtoFiles.write: rename $tmp -> $p failed")
-        }
-        committed = true
-      } finally {
-        if (!committed) {
-          try os.close() catch { case _: Throwable => () }
-          try pfs.delete(tmp, false) catch { case _: Throwable => () }
-        }
+        count
       }
-      Iterator.single(count)
-    }.count()
-    ()
   }
 
   private final class In(b: Array[Byte], var pos: Int, val limit: Int) {
@@ -350,25 +307,14 @@ object ProtoFiles {
     Row.fromSeq(vals.toSeq)
   }
 
-  /** nullability/containsNull relaxed at every level — missing fields
-    * read NULL by construction (the [[AvroFiles.read]] rule) */
-  private def relax(dt: DataType): DataType = dt match {
-    case st: StructType => StructType(st.fields.map(f =>
-      f.copy(dataType = relax(f.dataType), nullable = true)))
-    case ArrayType(et, _) => ArrayType(relax(et), containsNull = true)
-    case other => other
-  }
-
   /** Read every `*.pb` delimited stream under `path` into `schema` + an
     * `error` column: records decoded before a corruption point are kept,
     * the corrupt tail yields ONE quarantine row. */
   def read(spark: SparkSession, path: String, schema: StructType): DataFrame = {
     schema.fields.foreach(f => validate(f.dataType))
-    val out = StructType(schema.fields.map(f =>
-      f.copy(dataType = relax(f.dataType), nullable = true)) :+
-      StructField("error", StringType, nullable = true))
-    val relaxed = StructType(schema.fields.map(f =>
-      f.copy(dataType = relax(f.dataType), nullable = true)))
+    // missing fields read NULL by construction (the AvroFiles.read rule)
+    val relaxed = AvroFiles.relax(schema).asInstanceOf[StructType]
+    val out = relaxed.add("error", StringType)
     val rdd = spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.pb").load(path)
       .select(col("path"), col("content"))

@@ -141,33 +141,15 @@ object TarShards {
     * `<shard>.tar` under `outDir` with its members in name order — the
     * packaging side of the WebDataset layout. One shuffle keyed on the
     * shard id; shard payloads are task-local (size your shards, not your
-    * cluster). The sink is the Hadoop FS API resolved from `outDir`'s
-    * scheme, so the same code writes local `file:` paths in tests and
-    * HDFS/object-store paths on a cluster; `create(overwrite = true)`
-    * keeps task retries idempotent. The driver's Hadoop configuration is
-    * shipped to executors via `Configuration`'s own Writable round-trip
-    * (it is not Java-serializable).
+    * cluster). Each shard is committed through [[FileSink]] (temp marker
+    * `.tar.tmp-`, which [[members]]' `*.tar` glob never matches), so a
+    * task that dies mid-write leaves no truncated shard behind.
     */
   def writeShards(df: DataFrame, shardCol: String, memberCol: String,
       bytesCol: String, outDir: String): Unit = {
     val spark = df.sparkSession
     import spark.implicits._
-    import org.apache.hadoop.conf.Configuration
-    import org.apache.hadoop.fs.Path
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val out = new Path(outDir)
-    val fs = out.getFileSystem(hadoopConf)
-    fs.mkdirs(out)
-    Option(fs.globStatus(new Path(out, "*.tar")))
-      .foreach(_.foreach(s => fs.delete(s.getPath, false)))
-    val confBytes = {
-      val baos = new java.io.ByteArrayOutputStream()
-      val dos = new java.io.DataOutputStream(baos)
-      hadoopConf.write(dos); dos.close(); baos.toByteArray
-    }
-    // qualified URI (scheme + authority pinned by the driver's FS) so the
-    // executor-side resolve cannot fall back to its local default FS
-    val outUri = fs.makeQualified(out).toString
+    val sink = FileSink(spark, outDir, "*.tar", ".tar.tmp-")
     df.select(col(shardCol).cast("string"), col(memberCol).cast("string"),
         col(bytesCol).cast("binary"))
       .as[(String, String, Array[Byte])]
@@ -177,22 +159,18 @@ object TarShards {
         // file literally called "null.tar", and null member/bytes rows
         // would otherwise surface as an opaque executor NPE mid-write
         require(shard != null, "null shard id (cast produced NULL)")
-        val entries = rows.map { r =>
-          require(r._2 != null && r._3 != null,
-            s"shard '$shard': member with null name or bytes (member=${r._2})")
-          (r._2, r._3)
-        }.toSeq.sortBy(_._1)
-        shard -> buildTar(entries)
+        sink.commit(shard, "tar") { os =>
+          val entries = rows.map { r =>
+            require(r._2 != null && r._3 != null,
+              s"shard '$shard': member with null name or bytes (member=${r._2})")
+            (r._2, r._3)
+          }.toSeq.sortBy(_._1)
+          os.write(buildTar(entries))
+          entries.size.toLong
+        }
       }
-      .foreach { kv: (String, Array[Byte]) =>
-        val conf = new Configuration(false)
-        conf.readFields(new java.io.DataInputStream(
-          new java.io.ByteArrayInputStream(confBytes)))
-        val p = new Path(outUri, s"${kv._1}.tar")
-        val tfs = p.getFileSystem(conf)
-        val os = tfs.create(p, true)
-        try os.write(kv._2) finally os.close()
-      }
+      .count()
+    ()
   }
 
   /** All members of every `*.tar` under `path`:

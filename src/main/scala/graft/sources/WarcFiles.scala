@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * same container with `WARC-Type: conversion` records.
   *
   * Same posture as the tar/avro/proto sources: distributed write via
-  * the Hadoop FS API with the temp+rename task commit, read via
+  * the Hadoop FS API with the [[FileSink]] task commit, read via
   * `binaryFile` + a per-file walk, malformed tails quarantined (records
   * parsed before the corruption point are kept). Header names are
   * case-insensitive on read (the spec's rule); only the headers the
@@ -53,14 +53,12 @@ object WarcFiles {
     * (string — e.g. "response"/"conversion"), `date` (string, the
     * ISO-8601 `WARC-Date` value; kept opaque so the caller controls
     * the clock), `payload` (binary). Each task writes
-    * `part-<pid>.warc.gz` (or `.warc` with `gzip = false`) under the
-    * temp+rename commit protocol ([[AvroFiles.write]]'s discipline).
+    * `part-<pid>.warc.gz` (or `.warc` with `gzip = false`), committed
+    * through [[FileSink]]; the temp marker `.wtmp-` carries no ".warc",
+    * so read's `*.warc*` glob never surfaces a dead attempt's file.
     * In gzip mode each record is its OWN gzip member (Common Crawl
     * layout). */
   def write(df: DataFrame, outDir: String, gzip: Boolean = true): Unit = {
-    val spark = df.sparkSession
-    import org.apache.hadoop.conf.Configuration
-    import org.apache.hadoop.fs.Path
     val need = Seq("url", "rtype", "date", "payload")
     val missing = need.filterNot(df.columns.contains)
     require(missing.isEmpty,
@@ -68,38 +66,10 @@ object WarcFiles {
     val proj = df.select(col("url").cast("string"),
       col("rtype").cast("string"), col("date").cast("string"),
       col("payload").cast("binary"))
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val out = new Path(outDir)
-    val fs = out.getFileSystem(hadoopConf)
-    fs.mkdirs(out)
-    val ext = if (gzip) "warc.gz" else "warc"
-    Option(fs.globStatus(new Path(out, "*.warc*")))
-      .foreach(_.foreach(s => fs.delete(s.getPath, false)))
-    // temp names contain NO ".warc" substring (read's `*.warc*` glob
-    // must never see an orphaned temp as data) — sweep them separately
-    Option(fs.globStatus(new Path(out, "*.wtmp-*")))
-      .foreach(_.foreach(s => fs.delete(s.getPath, false)))
-    val confBytes = {
-      val baos = new java.io.ByteArrayOutputStream()
-      val dos = new java.io.DataOutputStream(baos)
-      hadoopConf.write(dos); dos.close(); baos.toByteArray
-    }
-    val outUri = fs.makeQualified(out).toString
-    proj.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
-      val conf = new Configuration(false)
-      conf.readFields(new java.io.DataInputStream(
-        new java.io.ByteArrayInputStream(confBytes)))
-      val p = new Path(outUri, f"part-$pid%05d.$ext")
-      // ".wtmp-", not ".$ext.tmp-": a temp name containing ".warc"
-      // would match read's glob and surface a dead attempt's partial
-      // file as data (review finding r16)
-      val tmp = new Path(outUri,
-        f"part-$pid%05d.wtmp-${java.util.UUID.randomUUID()}")
-      val pfs = p.getFileSystem(conf)
-      val os = new java.io.BufferedOutputStream(pfs.create(tmp, true), 1 << 16)
-      var count = 0L
-      var committed = false
-      try {
+    FileSink(df.sparkSession, outDir, "*.warc*", ".wtmp-")
+      .writeParts(proj.queryExecution.toRdd,
+          if (gzip) "warc.gz" else "warc") { (rows, os) =>
+        var count = 0L
         rows.foreach { ir =>
           val url = checkedHeaderValue("url",
             if (ir.isNullAt(0)) "" else ir.getUTF8String(0).toString)
@@ -136,24 +106,8 @@ object WarcFiles {
           } else os.write(rec.toByteArray)
           count += 1
         }
-        os.close()
-        // rename-first commit (see AvroFiles.write: delete-then-rename
-        // loses a committed part when a straggler dies mid-window)
-        if (!pfs.rename(tmp, p)) {
-          if (pfs.exists(p)) pfs.delete(tmp, false)
-          else throw new java.io.IOException(
-            s"WarcFiles.write: rename $tmp -> $p failed")
-        }
-        committed = true
-      } finally {
-        if (!committed) {
-          try os.close() catch { case _: Throwable => () }
-          try pfs.delete(tmp, false) catch { case _: Throwable => () }
-        }
+        count
       }
-      Iterator.single(count)
-    }.count()
-    ()
   }
 
   /** Strict multi-member gunzip. The JDK's `GZIPInputStream` treats a

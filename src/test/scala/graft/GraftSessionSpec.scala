@@ -10,7 +10,9 @@ import graft.core.SparkTestSession
 
 /** One session configuration: the settings Bench's walls were measured
   * under are pinned on the session [[GraftSession]] returns, and no other
-  * source file may build a session of its own. */
+  * source file may build a session of its own. Likewise one commit
+  * protocol: only [[graft.sources.FileSink]] renames task output or ships
+  * the Hadoop configuration to tasks. */
 class GraftSessionSpec extends AnyFunSuite {
 
   test("GraftSession carries the bench settings") {
@@ -31,20 +33,42 @@ class GraftSessionSpec extends AnyFunSuite {
     }
   }
 
-  test("GraftSession is the only place a SparkSession is built") {
-    val needle = "SparkSession" + ".builder"
-    val roots = Seq("src/main/scala", "src/test/scala").map(Paths.get(_))
-    roots.foreach(r => assert(Files.isDirectory(r), s"missing $r"))
-    val offenders = roots.flatMap { r =>
+  /** The `.scala` files under `roots`, other than `owner`, whose text
+    * contains any of `needles`. */
+  private def scalaFilesContaining(roots: Seq[String], owner: String,
+      needles: Seq[String]): Seq[Path] = {
+    val dirs = roots.map(Paths.get(_))
+    dirs.foreach(r => assert(Files.isDirectory(r), s"missing $r"))
+    dirs.flatMap { r =>
       val walk = Files.walk(r)
       try walk.iterator.asScala.toList finally walk.close()
     }.filter { p: Path =>
-      p.toString.endsWith(".scala") &&
-        p.getFileName.toString != "GraftSession.scala" &&
-        new String(Files.readAllBytes(p), "UTF-8").contains(needle)
+      p.toString.endsWith(".scala") && p.getFileName.toString != owner && {
+        val text = new String(Files.readAllBytes(p), "UTF-8")
+        needles.exists(text.contains)
+      }
     }
+  }
+
+  test("GraftSession is the only place a SparkSession is built") {
+    val needle = "SparkSession" + ".builder"
+    val offenders = scalaFilesContaining(
+      Seq("src/main/scala", "src/test/scala"), "GraftSession.scala",
+      Seq(needle))
     assert(offenders.isEmpty,
       s"build the session with graft.GraftSession, not $needle: " +
         offenders.mkString(", "))
+  }
+
+  test("FileSink is the only task-commit protocol in the main sources") {
+    // a Hadoop FS rename, or shipping a Hadoop Configuration to tasks
+    // (its Writable round-trip, or Spark's serializable wrappers of it)
+    val needles = Seq(".rename(", "readFields(", "SerializableConfiguration",
+      "SerializableWritable")
+    val offenders = scalaFilesContaining(Seq("src/main/scala"),
+      "FileSink.scala", needles)
+    assert(offenders.isEmpty,
+      "commit files through graft.sources.FileSink, not a copy of its " +
+        s"protocol: ${offenders.mkString(", ")}")
   }
 }

@@ -84,6 +84,19 @@ class TaskGraphSpec extends AnyFunSuite {
     assert(got == Seq(7, 8, 9)) // new mapping wins
   }
 
+  test("re-map past the eager-compare row bound replaces instead of raising") {
+    // 100,001 labels is one past sameData's bound: the re-map takes the
+    // file-backed rule (no eager compare, then replace)
+    val n = 100001
+    val g = TaskGraph.chain("a", "b").mapSeqs(Map("a" -> (0 until n)))
+    val g2 = g.mapSeqs(Map("a" -> (0 until n).map(_ + 1)))
+    val got = g2.result("b").agg(
+      org.apache.spark.sql.functions.count("b"),
+      org.apache.spark.sql.functions.min("b"),
+      org.apache.spark.sql.functions.max("b")).head()
+    assert((got.getLong(0), got.getInt(1), got.getInt(2)) == ((n.toLong, 1, n)))
+  }
+
   test("reduce with unmapped sibling keeps it shared — graph_test.py:465-474") {
     // a mapped, s unmapped; both feed c: s stays ONE shared node wired to
     // every copy of c

@@ -150,7 +150,7 @@ class SourcesSpec extends AnyFunSuite {
       .toMap
     assert(back == Map("0001.txt" -> "alpha", "0002.txt" -> "beta",
       "0003.txt" -> "y" * 700))
-    // re-write over existing shards stays idempotent (overwrite = true)
+    // a re-write over existing shards replaces them (the pre-job sweep)
     TarShards.writeShards(df.filter($"shard" === "s0"), "shard", "member",
       "bytes", outUri)
     assert(tars() == Set("s0.tar"),
