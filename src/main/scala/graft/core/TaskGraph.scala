@@ -3,6 +3,7 @@ package graft.core
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Error type for graph-construction-time validation failures.
@@ -93,14 +94,16 @@ final case class DimGroup(
     * appearance in row order — exact reference parity (array/iloc
     * semantics: a pandas index [30, 10, 20] has 30 at position 0), with
     * duplicate labels sharing their first position and rows of other
-    * dims in an N-D tidy frame never counted as positions. For a labeled
-    * FILE-BACKED dim, physical row order across partitions carries no
-    * meaning, so position falls back to rank among the distinct labels
-    * in ascending order — the stable, scale-safe semantics; the ranking
-    * runs over the dim-table-sized distinct label set via distributed
-    * sort + zipWithIndex (never a single-partition window over
-    * fact-scale data) and the kept labels semi-join back broadcast. The
-    * positional dim uses true array order via zipWithIndex.
+    * dims in an N-D tidy frame never counted as positions. The rows are
+    * filtered on the driver into a new in-memory table with the same
+    * schema (column metadata such as units included), so the slice plans
+    * no join. For a labeled FILE-BACKED dim, physical row order across
+    * partitions carries no meaning, so position falls back to rank among
+    * the distinct labels in ascending order — the stable, scale-safe
+    * semantics; the ranking runs over the dim-table-sized distinct label
+    * set via distributed sort + zipWithIndex (never a single-partition
+    * window over fact-scale data) and the kept labels semi-join back
+    * broadcast. The positional dim uses true array order via zipWithIndex.
     */
   def sliceByPosition(dim: String, lo: Int, hi: Int): DimGroup = {
     require(dims.contains(dim), s"dim '$dim' not in group")
@@ -112,17 +115,14 @@ final case class DimGroup(
         // explicit (the dim is now label-backed by the old positions).
         copy(df = sliced, labelCols = labelCols + (dim -> pc))
       case Some(lc) if TaskGraph.isLocalPlan(df) =>
-        // in-memory: first-appearance order, computed driver-side (the
-        // table is metadata-scale by definition of LocalRelation)
-        val ordered = df.select(col(lc)).collect().map(_.get(0)).distinct
-        val keptVals = ordered.slice(lo, hi)
-        val spark = df.sparkSession
-        val schema = StructType(Seq(
-          StructField("__lbl", df.select(col(lc)).schema.head.dataType)))
-        val kept = spark.createDataFrame(
-          java.util.Arrays.asList(keptVals.map(v => Row(v)): _*), schema)
-        // null-safe: a null label is a real label and must match itself
-        copy(df = df.join(broadcast(kept), col(lc) <=> col("__lbl"), "left_semi"))
+        // in-memory: the table is metadata-scale by definition of
+        // LocalRelation; a null label is a real label and keeps its rows
+        val rows = df.collect()
+        val at = df.schema.fieldIndex(lc)
+        val keys = rows.map(r => TaskGraph.labelKey(r.get(at)))
+        val kept = keys.distinct.slice(lo, hi).toSet
+        val sliced = rows.zip(keys).collect { case (r, k) if kept(k) => r }
+        copy(df = df.sparkSession.createDataFrame(java.util.Arrays.asList(sliced: _*), df.schema))
       case Some(lc) =>
         val distinctLabels = df.select(col(lc).as("__lbl")).distinct()
         val spark = df.sparkSession
@@ -281,10 +281,17 @@ final case class TaskGraph(
   /** Distinct labels of a dim, as a single-column DataFrame named after the
     * dim. Stays lazy — label sets can be fact-table-sized.
     */
-  def indices(dim: String): DataFrame =
+  def indices(dim: String): DataFrame = labelsOf(dim).distinct()
+
+  /** The labels of a dim, duplicates kept: the frame of the first group
+    * holding it, else the groupby key node's values. Over in-memory tables
+    * this plan folds to a LocalRelation, which the shared-dim label check
+    * collects without a Spark job (a distinct would not fold).
+    */
+  private def labelsOf(dim: String): DataFrame =
     groups.find(_.dims.contains(dim)) match {
-      case Some(g) => g.frame(needPositional = true).select(dim).distinct()
-      case None if groupbyDims.contains(dim) => result(dim).select(dim).distinct()
+      case Some(g) => g.frame(needPositional = true).select(dim)
+      case None if groupbyDims.contains(dim) => result(dim).select(dim)
       case None => throw new GraftException(s"unknown dim '$dim'")
     }
 
@@ -531,7 +538,7 @@ final case class TaskGraph(
         TaskGraph.requireSameLabels(dm, TaskGraph.DimLabels(og, dm), newLabels, strict))
       if (groupbyDims.contains(dm))
         TaskGraph.requireSameLabels(dm,
-          new TaskGraph.DimLabels(free = true, indices(dm)), newLabels, strict)
+          new TaskGraph.DimLabels(free = true, labelsOf(dm)), newLabels, strict)
     }
     if (freshCols.isEmpty) return copy(dag = d, groups = gs.filter(_.valueCols.nonEmpty))
     copy(dag = d, groups = gs.filter(_.valueCols.nonEmpty) :+ group.copy(valueCols = freshCols))
@@ -780,7 +787,7 @@ final case class TaskGraph(
       val strict = TaskGraph.strictValidation(og.df)
       og.dims.foreach { dm =>
         val incoming = other.groups.find(_.dims.contains(dm)).fold(
-          new TaskGraph.DimLabels(free = true, other.indices(dm)))(TaskGraph.DimLabels(_, dm))
+          new TaskGraph.DimLabels(free = true, other.labelsOf(dm)))(TaskGraph.DimLabels(_, dm))
         TaskGraph.requireSameLabels(dm, TaskGraph.DimLabels(og, dm), incoming, strict)
       }
       merged = merged.copy(groups = merged.groups
@@ -1063,12 +1070,12 @@ object TaskGraph {
         s"""Conflicting index lengths for index name "$dim" ($ca vs $cb)""")
   }
 
-  /** One side of a shared-dim label check: the distinct labels of a dim,
-    * built on first use, and whether building them is free. A file-backed
-    * positional dim's labels are not: they need a zipWithIndex job at
-    * construction time (ZippedWithIndexRDD computes partition offsets
-    * eagerly), which labelsCompatible's metadata-scale guard would then
-    * discard anyway.
+  /** One side of a shared-dim label check: the labels of a dim (duplicates
+    * kept; [[labelsCompatible]] dedupes them), built on first use, and
+    * whether building them is free. A file-backed positional dim's labels
+    * are not: they need a zipWithIndex job at construction time
+    * (ZippedWithIndexRDD computes partition offsets eagerly), which
+    * labelsCompatible's metadata-scale guard would then discard anyway.
     */
   private final class DimLabels(val free: Boolean, build: => DataFrame) {
     lazy val frame: DataFrame = build
@@ -1077,14 +1084,15 @@ object TaskGraph {
   private object DimLabels {
     def apply(g: DimGroup, dim: String): DimLabels =
       new DimLabels(g.positionalDim.isEmpty || isLocalPlan(g.df),
-        g.frame(needPositional = true).select(dim).distinct())
+        g.frame(needPositional = true).select(dim))
   }
 
   /** The shared-dim label check (reference node_values.py:79-90): two label
-    * sets claimed to describe `dim` are compared eagerly when both are free
-    * to build (labelsCompatible then still skips fact-scale sets), only by
-    * length in strict mode, and otherwise left to the dim join's
-    * relational semantics.
+    * sets claimed to describe `dim` are compared eagerly as sets when both
+    * are free to build — on the driver, without a Spark job, when both are
+    * in-memory tables ([[labelsCompatible]], which still skips fact-scale
+    * and over-bound sets) — only by length in strict mode, and otherwise
+    * left to the dim join's relational semantics.
     */
   private def requireSameLabels(dim: String, a: DimLabels, b: DimLabels,
       strict: Boolean): Unit =
@@ -1135,31 +1143,65 @@ object TaskGraph {
     }
 
   /** Semantic data equality for re-map validation: plan-level `sameResult`
-    * first (free), then a bounded collect compare. Parameter tables are
-    * metadata-scale; this is never applied to fact-scale data. None when
-    * `a` has more than `maxRows` rows: too large to compare eagerly, so
-    * the caller defers as it does for a file-backed table.
+    * first (free), then a bounded collect compare of the rows as multisets
+    * of [[labelKey]]s. Parameter tables are metadata-scale; this is never
+    * applied to fact-scale data. None when `a` has more than `maxRows`
+    * rows: too large to compare eagerly, so the caller defers as it does
+    * for a file-backed table.
     */
   def sameData(a: DataFrame, b: DataFrame, maxRows: Int = 100000): Option[Boolean] = {
     if (a.queryExecution.analyzed.sameResult(b.queryExecution.analyzed)) return Some(true)
-    if (a.schema.fields.map(_.dataType).toSeq != b.schema.fields.map(_.dataType).toSeq)
-      return Some(false)
+    if (!sameTypes(a, b)) return Some(false)
     val aRows = a.limit(maxRows + 1).collect()
     if (aRows.length > maxRows) return None
     val bRows = b.limit(maxRows + 1).collect()
-    Some(aRows.map(_.toSeq.map(String.valueOf).mkString("\u0001")).sorted.toSeq ==
-      bRows.map(_.toSeq.map(String.valueOf).mkString("\u0001")).sorted.toSeq)
+    def counts(rows: Array[Row]) = rows.groupMapReduce(labelKey)(_ => 1)(_ + _)
+    Some(counts(aRows) == counts(bRows))
   }
 
-  /** Best-effort bounded equality for SHARED-DIM label validation. The
-    * reference validates index values eagerly in memory
+  private def sameTypes(a: DataFrame, b: DataFrame): Boolean =
+    a.schema.fields.map(_.dataType).toSeq == b.schema.fields.map(_.dataType).toSeq
+
+  /** A value's identity as a label, with the equality Spark's `distinct`
+    * and `<=>` use: byte arrays by content, -0.0 as 0.0, every NaN alike,
+    * rows, sequences and maps element-wise.
+    */
+  private[core] def labelKey(v: Any): Any = v match {
+    case b: Array[Byte] => b.toSeq
+    case d: Double => java.lang.Double.doubleToLongBits(if (d == 0.0) 0.0 else d)
+    case f: Float => java.lang.Float.floatToIntBits(if (f == 0.0f) 0.0f else f)
+    case r: Row => r.toSeq.map(labelKey)
+    case s: scala.collection.Seq[_] => s.map(labelKey)
+    case m: scala.collection.Map[_, _] => m.map { case (k, x) => labelKey(k) -> labelKey(x) }
+    case other => other
+  }
+
+  /** The distinct [[labelKey]]s of a one-column label frame; None past
+    * `maxRows` of them. A frame whose optimized plan folds to a
+    * LocalRelation (Catalyst folds Project/Filter/Limit over in-memory
+    * rows) is collected without a Spark job and deduped here; any other
+    * frame dedupes through Spark's `distinct`.
+    */
+  private def distinctLabels(df: DataFrame, maxRows: Int): Option[Set[Any]] = {
+    val rows = df.queryExecution.optimizedPlan match {
+      case _: LocalRelation => df.collect()
+      case _ => df.distinct().limit(maxRows + 1).collect()
+    }
+    val keys = rows.iterator.map(labelKey).toSet
+    if (keys.size > maxRows) None else Some(keys)
+  }
+
+  /** Best-effort bounded SET equality for shared-dim label validation.
+    * The reference validates index values eagerly in memory
     * (node_values.py:79-90); at 100 TB an eager distinct-and-compare of a
-    * fact-scale dim would be a full Spark job at graph-BUILD time, so
-    * label sets beyond the bound pass validation and any misalignment
+    * fact-scale dim would be a full Spark job at graph-BUILD time, so a
+    * file-backed label set passes validation, as does one whose `a` side
+    * has more than `maxRows` distinct labels (a `b` side past the bound
+    * cannot equal an `a` within it, so that raises). Any misalignment then
     * surfaces as the relational semantics of the dim join (mismatched
     * labels drop, as in an inner join). Metadata-scale dims — the
     * reference's whole universe — still get the eager reference-parity
-    * error.
+    * error. Duplicate labels compare as one.
     */
   def labelsCompatible(a: DataFrame, b: DataFrame, maxRows: Int = 100000): Boolean = {
     if (a.queryExecution.analyzed.sameResult(b.queryExecution.analyzed)) return true
@@ -1173,7 +1215,8 @@ object TaskGraph {
         n == "LocalRelation" || n == "OneRowRelation" || n == "Range"
       }
     if (!metadataScale(a) || !metadataScale(b)) return true
-    sameData(a, b, maxRows).getOrElse(true)
+    if (!sameTypes(a, b)) return false
+    distinctLabels(a, maxRows).forall(la => distinctLabels(b, maxRows).contains(la))
   }
 
   def sparkTypeOf(s: Seq[Any]): org.apache.spark.sql.types.DataType = {

@@ -508,8 +508,8 @@ class TaskGraphSpec extends AnyFunSuite {
   }
 
   test("positional slice with duplicate labels keeps all rows of kept labels") {
-    // positions index DISTINCT labels (engine semantics: rank in ascending
-    // label order); duplicate labels share a position
+    // positions index DISTINCT labels (in memory: order of first
+    // appearance); duplicate labels share a position
     val df = Seq(("x", 1), ("x", 2), ("y", 3)).toDF("idx", "v")
     val g = TaskGraph.chain("a", "b")
       .mapFrame(df, Map("a" -> "v"), indexCol = Some("idx"), dimName = "d")
@@ -1029,5 +1029,118 @@ class TaskGraphSpec extends AnyFunSuite {
     assert(g.result("b").count() == 2)
     assert(g.result("d").count() == g.result("b").count())
     assert(g.result("d").select("d").as[Int].collect().sorted.toSeq == Seq(24, 48))
+  }
+
+  // --- shared-dim label checks and labeled slices over in-memory tables ---
+
+  /** Two one-column-plus-label tables mapped onto the shared dim `s`. */
+  private def sharedDim(a: org.apache.spark.sql.DataFrame,
+      b: org.apache.spark.sql.DataFrame): TaskGraph =
+    TaskGraph.fromEdges("a" -> "c", "b" -> "c")
+      .mapFrame(a, Map("a" -> "v"), indexCol = Some("k"), dimName = "s")
+      .mapFrame(b, Map("b" -> "v"), indexCol = Some("k"), dimName = "s")
+
+  private def ids(from: Long, n: Int): org.apache.spark.sql.DataFrame =
+    (0 until n).map(i => (from + i, i.toLong)).toDF("k", "v")
+
+  test("a second in-memory table on a shared labeled dim starts no job") {
+    val (g, jobs) = SparkTestSession.jobsStartedBy(sharedDim(ids(1000, 100), ids(1000, 100)))
+    assert(jobs.isEmpty, jobs.mkString(" | "))
+    assert(g.result("c").count() == 100)
+    val (raised, conflictJobs) = SparkTestSession.jobsStartedBy(
+      scala.util.Try(sharedDim(ids(1000, 100), ids(1001, 100))))
+    assert(raised.failed.get.getMessage.contains("Conflicting index values"))
+    assert(conflictJobs.isEmpty, conflictJobs.mkString(" | "))
+  }
+
+  test("setItem onto a groupby dim over in-memory tables starts no job") {
+    val px = (0 until 100).map(i => (1000L + i, i.toLong, i % 10L)).toDF("id", "x", "g")
+    val pk = (0L until 10L).map(k => (k, 0L)).toDF("g", "a0")
+    val grouped = TaskGraph(Dag.empty)
+      .mapFrame(px, Map("x" -> "x", "g" -> "g"), Some("id"), "i")
+      .groupby("g").reduce(key = "x", name = "s", attrs = Map("func" -> "sum"))
+    val base = TaskGraph(Dag.fromEdges("a" -> "b").addNode("b", Map("expr" -> "a * 2")))
+      .mapFrame(pk, Map("a" -> "a0"), Some("g"), "g")
+    val (g, jobs) = SparkTestSession.jobsStartedBy(base.setItem("a", grouped.getItem("s")))
+    assert(jobs.isEmpty, jobs.mkString(" | "))
+    val got = g.result("b").select($"g", $"b").as[(Long, Long)].collect().toMap
+    // group k sums x = k, k + 10, ..., k + 90: 10k + 450
+    assert(got == (0L until 10L).map(k => k -> 2 * (10 * k + 450)).toMap)
+  }
+
+  test("a labeled in-memory byPosition plans no join and keeps null and duplicate labels") {
+    // first appearance: "b" at 0, null at 1, "a" at 2
+    val df = Seq((Some("b"), 1), (None, 2), (Some("b"), 3), (Some("a"), 4), (None, 5))
+      .toDF("idx", "v")
+    val g = TaskGraph.chain("a", "b")
+      .mapFrame(df, Map("a" -> "v"), indexCol = Some("idx"), dimName = "d")
+    def sliced(lo: Int, hi: Int) = g.byPosition("d", lo, hi).result("b")
+    assert(planSize(sliced(0, 2))._2 == 0)
+    assert(sliced(0, 2).select("b").as[Int].collect().sorted.toSeq == Seq(1, 2, 3, 5))
+    assert(sliced(2, 3).select("b").as[Int].collect().toSeq == Seq(4))
+    assert(sliced(3, 9).count() == 0)
+  }
+
+  test("a labeled in-memory byPosition keeps the label column's unit") {
+    import org.apache.spark.sql.functions.col
+    val df = Seq((1, 10.0), (2, 20.0), (3, 30.0)).toDF("t", "v")
+      .withColumn("coord", TaskGraph.unitCoord(col("t"), "s"))
+    val f = TaskGraph.chain("a", "b")
+      .mapFrame(df, Map("a" -> "v"), indexCol = Some("coord"), dimName = "time")
+      .byPosition("time", 1, 3).result("b")
+    assert(f.select("b").as[Double].collect().sorted.toSeq == Seq(20.0, 30.0))
+    assert(f.schema("time").metadata.getString("unit") == "s")
+  }
+
+  test("identical binary labels are one label: shared dim, re-map and byPosition") {
+    val a = Seq((Array[Byte](1, 2), 1)).toDF("k", "v")
+    val b = Seq((Array[Byte](1, 2), 2)).toDF("k", "v")
+    assert(sharedDim(a, b).result("c").count() == 1)
+    assertThrows[GraftException](sharedDim(a, Seq((Array[Byte](1, 3), 2)).toDF("k", "v")))
+    // a re-map onto equal byte labels replaces the values
+    val remapped = TaskGraph.chain("a", "b")
+      .mapFrame(a, Map("a" -> "v"), indexCol = Some("k"), dimName = "s")
+      .mapFrame(b, Map("a" -> "v"), indexCol = Some("k"), dimName = "s")
+    assert(remapped.result("b").select("b").as[Int].collect().toSeq == Seq(2))
+    // equal byte labels share one position: [1,2] at 0, [3] at 1
+    val dup = Seq((Array[Byte](1, 2), 1), (Array[Byte](1, 2), 2), (Array[Byte](3), 3))
+      .toDF("k", "v")
+    val g = TaskGraph.chain("a", "b")
+      .mapFrame(dup, Map("a" -> "v"), indexCol = Some("k"), dimName = "s")
+    assert(g.byPosition("s", 1, 2).result("b").select("b").as[Int].collect().toSeq == Seq(3))
+  }
+
+  test("shared-dim labels compare as sets: signed zeros, NaN and duplicates") {
+    val a = Seq((0.0, 1), (-0.0, 2), (Double.NaN, 3)).toDF("k", "v")
+    val b = Seq((0.0, 7), (Double.NaN, 8)).toDF("k", "v")
+    sharedDim(a, b)
+    sharedDim(b, a)
+    assertThrows[GraftException](sharedDim(a, Seq((0.0, 7), (1.0, 8)).toDF("k", "v")))
+    val dups = Seq((1, 1), (1, 2), (2, 3)).toDF("k", "v")
+    sharedDim(dups, Seq((1, 4), (2, 5), (2, 6)).toDF("k", "v"))
+    assertThrows[GraftException](sharedDim(dups, Seq((1, 4), (3, 5)).toDF("k", "v")))
+  }
+
+  test("a groupby dim whose labels do not fold in memory still raises on a conflict") {
+    // the key arrives through a join of two in-memory tables: metadata
+    // scale, but no LocalRelation, so the labels dedupe through Spark
+    val keys = Seq((1, "x"), (2, "y"), (3, "x")).toDF("id", "k")
+    val vals = Seq((1, 10), (2, 20), (3, 30)).toDF("id", "v")
+    val g = TaskGraph(Dag.empty)
+      .mapFrame(vals.join(keys, "id"), Map("x" -> "v", "k" -> "k"), Some("id"), "i")
+      .groupby("k").reduce(key = "x", name = "s", attrs = Map("func" -> "sum"))
+    def mapK(labels: String*) =
+      g.mapFrame(labels.map(l => (l, 1)).toDF("k", "u"), Map("u" -> "u"), Some("k"), "k")
+    val (_, jobs) = SparkTestSession.jobsStartedBy(mapK("x", "y"))
+    assert(jobs.nonEmpty, "the joined key frame folded to an in-memory table")
+    val e = intercept[GraftException](mapK("x", "z"))
+    assert(e.getMessage.contains("Conflicting index values"))
+  }
+
+  test("a shared dim past 100,000 distinct labels defers; below it, a mismatch raises") {
+    // the existing side past the bound: no eager compare
+    sharedDim(ids(0, 100001), ids(1, 100001))
+    // the existing side within it: the new side cannot be equal
+    assertThrows[GraftException](sharedDim(ids(0, 10), ids(0, 100001)))
   }
 }
