@@ -3,6 +3,8 @@ package graft.core
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -826,8 +828,12 @@ final case class TaskGraph(
 
   /** The expansion frame of a node: a lazy DataFrame with one label column
     * per dim of the node (named after the dim) plus the node's value column
-    * (named after the node) — plus any co-grouped sibling or ancestor
-    * columns that arrive free. This replaces the reference's driver-side
+    * (named after the node) — plus the value columns of its nearest mapped,
+    * reduce or bare ancestors and their co-grouped siblings, which arrive
+    * free. Derived intermediate columns do not: a derived node's frame
+    * drops each one after the last derived node that reads it
+    * ([[derivedFrame]]), so `result(d)` carries no column of a derived
+    * ancestor of `d`. This replaces the reference's driver-side
     * Cartesian clone expansion (graph.py:367-424): the expansion is
     * *declared* relationally and Catalyst plans it, so it never
     * materializes on the driver and scales to arbitrarily large dims.
@@ -870,13 +876,19 @@ final case class TaskGraph(
     })
 
   /** A derived node's frame: its nearest non-derived ancestors (mapped,
-    * reduce or bare nodes) joined once by [[joinInputs]], then one column
-    * per derived node on the way, in topological order. Derived nodes never
-    * join frames of their own, so co-dimensional branches (a diamond
-    * a->b, a->c, {b,c}->d) stay one row per copy of `a` — joining on a
-    * shared value column would cross-match duplicate values, and joining
-    * the branches' frames on the dim label would cross-match duplicate
-    * labels.
+    * reduce or bare nodes) joined once by [[joinInputs]], then one `select`
+    * per topological level of the derived nodes on the way. A node's level
+    * is its longest path from those inputs over the columns it reads (its
+    * preds and the names its expression references). Each level keeps the
+    * inputs' columns and the derived columns a later level still reads, so
+    * the frame leaves with the inputs' columns plus `n`: its width follows
+    * the DAG's width, not its depth, and an in-memory input folds each
+    * level at that width. Derived nodes never join frames of their own, so
+    * co-dimensional branches (a diamond a->b, a->c, {b,c}->d) stay one row
+    * per copy of `a` — joining on a shared value column would cross-match
+    * duplicate values, and joining the branches' frames on the dim label
+    * would cross-match duplicate labels. A derived node named like a dim
+    * raises: its column would replace that dim's labels.
     */
   private def derivedFrame(n: String, needPos: Boolean,
       memo: scala.collection.mutable.Map[(String, Boolean), DataFrame]): DataFrame = {
@@ -885,13 +897,34 @@ final case class TaskGraph(
       if (upstream.add(m) && isDerived(m)) dag.predecessors(m).foreach(visit)
     visit(n)
     val (derived, inputs) = dag.topologicalOrder.filter(upstream).partition(isDerived)
-    derived.foldLeft(joinInputs(inputs, needPos, memo)) { (f, d) =>
-      val preds = dag.predecessors(d)
-      f.withColumn(d, dag.attrs.getOrElse(d, Map.empty).get("expr") match {
-        case Some(e) => expr(e)
-        case None if preds.size == 1 => col(preds.head)
-        case None => struct(preds.map(col): _*)
-      })
+    derived.find(dimsOf(n).contains).foreach(d => throw new GraftException(
+      s"Node '$d' is named like a dim of its inputs; rename the node or the dim"))
+    val exprOf = derived.flatMap(d => dag.attrs.getOrElse(d, Map.empty).get("expr").map(d -> _)).toMap
+    // an expression may name any column, as Spark resolves it: case-insensitively
+    val named = derived.groupBy(_.toLowerCase)
+    def reads(d: String): Seq[String] = dag.predecessors(d) ++ exprOf.get(d).toSeq.flatMap(e =>
+      CatalystSqlParser.parseExpression(e).collect { case a: UnresolvedAttribute => a.nameParts }
+        .flatten.flatMap(p => named.getOrElse(p.toLowerCase, Nil)))
+    // a read resolves only against a column added by an earlier level, so
+    // only reads earlier in topological order (the ones with a level) count
+    val level = scala.collection.mutable.Map.empty[String, Int]
+    val lastRead = scala.collection.mutable.Map(n -> Int.MaxValue)
+    derived.foreach { d =>
+      val rs = reads(d).filter(level.contains)
+      level(d) = 1 + rs.map(level).foldLeft(0)(math.max)
+      rs.foreach(r => lastRead(r) = math.max(lastRead.getOrElse(r, 0), level(d)))
+    }
+    derived.groupBy(level).toSeq.sortBy(_._1).foldLeft(joinInputs(inputs, needPos, memo)) {
+      case (f, (l, ds)) =>
+        val kept = f.columns.filter(c => !level.contains(c) || lastRead(c) > l)
+        f.select(kept.map(c => col("`" + c.replace("`", "``") + "`")) ++ ds.map { d =>
+          val preds = dag.predecessors(d)
+          (exprOf.get(d) match {
+            case Some(e) => expr(e)
+            case None if preds.size == 1 => col(preds.head)
+            case None => struct(preds.map(col): _*)
+          }).as(d)
+        }: _*)
     }
   }
 

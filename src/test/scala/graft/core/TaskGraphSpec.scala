@@ -948,14 +948,26 @@ class TaskGraphSpec extends AnyFunSuite {
     TaskGraph(Dag.empty).mapFrame((0 until rows).map(i => (1000L + i, i.toLong)).toDF("id", "x"),
       Map("x" -> "x"), indexCol = Some("id"), dimName = "i")
 
-  test("a ladder of 12 diamonds plans no join and at most 2 logical nodes per DAG node") {
-    val k = 12
-    val g = (1 to k).foldLeft(mappedX(1000)) { (g, s) =>
+  /** k diamonds over `mappedX(rows)`: l_s = j_{s-1} + s, r_s = j_{s-1} - s,
+    * j_s = l_s + r_s = 2 j_{s-1}, with j_0 = x. */
+  private def ladder(k: Int, rows: Int): TaskGraph =
+    (1 to k).foldLeft(mappedX(rows)) { (g, s) =>
       val prev = if (s == 1) "x" else s"j${s - 1}"
       g.withExpr(s"l$s", Seq(prev), s"$prev + $s")
         .withExpr(s"r$s", Seq(prev), s"$prev - $s")
         .withExpr(s"j$s", Seq(s"l$s", s"r$s"), s"l$s + r$s")
     }
+
+  /** `width` derived nodes y_m = x + 1 over `mappedX(10)`, summed by z. */
+  private def fanIn(width: Int): TaskGraph = {
+    val ys = (1 to width).map(m => s"y$m")
+    ys.foldLeft(mappedX(10))((g, y) => g.withExpr(y, Seq("x"), s"x + 1"))
+      .withExpr("z", ys, ys.mkString(" + "))
+  }
+
+  test("a ladder of 12 diamonds plans no join and at most 2 logical nodes per DAG node") {
+    val k = 12
+    val g = ladder(k, 1000)
     val f = g.result(s"j$k")
     val (nodes, joins) = planSize(f)
     assert(joins == 0, s"$joins joins")
@@ -965,9 +977,7 @@ class TaskGraphSpec extends AnyFunSuite {
   }
 
   test("a fan-in of width 16 plans no join") {
-    val ys = (1 to 16).map(m => s"y$m")
-    val g = ys.foldLeft(mappedX(10))((g, y) => g.withExpr(y, Seq("x"), s"x + 1"))
-      .withExpr("z", ys, ys.mkString(" + "))
+    val g = fanIn(16)
     assert(planSize(g.result("z"))._2 == 0)
     assert(g.result("z").filter("i = 1002").select("z").as[Long].collect().toSeq == Seq(48L))
   }
@@ -1029,6 +1039,92 @@ class TaskGraphSpec extends AnyFunSuite {
     assert(g.result("b").count() == 2)
     assert(g.result("d").count() == g.result("b").count())
     assert(g.result("d").select("d").as[Int].collect().sorted.toSeq == Seq(24, 48))
+  }
+
+  // --- derived frames: one select per level over live columns -----------
+
+  /** (Project nodes, summed Project widths) of a frame's analyzed plan. */
+  private def projects(df: org.apache.spark.sql.DataFrame): (Int, Int) = {
+    val ps = df.queryExecution.analyzed.collect {
+      case p: org.apache.spark.sql.catalyst.plans.logical.Project => p.projectList.size
+    }
+    (ps.size, ps.sum)
+  }
+
+  test("a ladder of 24 diamonds projects at most 8 columns per diamond") {
+    val k = 24
+    val f = ladder(k, 10).result(s"j$k")
+    val width = projects(f)._2
+    assert(width <= 8 * k, s"summed Project width $width for k = $k")
+    assert(f.filter("i = 1003").select(s"j$k").as[Long].collect().toSeq == Seq(3L << k))
+  }
+
+  test("a fan-in of width 16 builds at most one Project per level") {
+    val g = fanIn(16)
+    val built = projects(g.result("z"))._1 - projects(g.result("x"))._1
+    assert(built <= 2, s"$built Projects over the input frame")
+  }
+
+  test("a reduce over a derived pred joins no co-grouped groupby key") {
+    val df = (0 until 12).map(i => (1000L + i, i.toLong, i % 3L)).toDF("id", "x", "k")
+    val g = TaskGraph(Dag.empty)
+      .mapFrame(df, Map("x" -> "x", "k" -> "k"), Some("id"), "i")
+      .withExpr("y1", Seq("x"), "x * 2")
+      .withExpr("y", Seq("y1"), "y1 + 1")
+      .groupby("k").reduce(key = "y", name = "s", attrs = Map("func" -> "sum"))
+    val f = g.result("s")
+    assert(planSize(f)._2 == 0)
+    // group k holds x = k, k + 3, k + 6, k + 9: sum of 2x + 1 is 8k + 40
+    assert(f.select($"k", $"s").as[(Long, Long)].collect().toMap ==
+      (0L until 3L).map(k => k -> (8 * k + 40)).toMap)
+  }
+
+  test("taskTable and edgeTable of a ladder list every copy and edge of every level") {
+    val k = 4
+    val g = ladder(k, 3)
+    val xs = 0L until 3L
+    def at(x: Long) = Map("i" -> (1000L + x).toString)
+    val copies = xs.flatMap { x =>
+      ("x", at(x), x.toString) +: (1 to k).flatMap { s =>
+        val prev = x << (s - 1)
+        Seq(("l" + s, at(x), (prev + s).toString), ("r" + s, at(x), (prev - s).toString),
+          ("j" + s, at(x), (2 * prev).toString))
+      }
+    }
+    val tasks = g.taskTable().collect().toSeq.map(r => (r.getAs[String]("node"),
+      r.getAs[Map[String, String]]("index"), r.getAs[String]("value")))
+    assert(tasks.sortBy(_.toString) == copies.sortBy(_.toString))
+    val edges = xs.flatMap { x =>
+      (1 to k).flatMap { s =>
+        val prev = if (s == 1) "x" else s"j${s - 1}"
+        Seq(prev -> s"l$s", prev -> s"r$s", s"l$s" -> s"j$s", s"r$s" -> s"j$s")
+      }.map { case (p, c) => (p, at(x), c, at(x)) }
+    }
+    val got = g.edgeTable().collect().toSeq.map(r => (r.getAs[String]("src"),
+      r.getAs[Map[String, String]]("src_index"), r.getAs[String]("dst"),
+      r.getAs[Map[String, String]]("dst_index")))
+    assert(got.sortBy(_.toString) == edges.sortBy(_.toString))
+  }
+
+  test("an expression may read a derived ancestor it does not declare") {
+    val g = mappedX(3)
+      .withExpr("a", Seq("x"), "x + 1")
+      .withExpr("b", Seq("a"), "a * 10")
+      .withExpr("c", Seq("b"), "b + a")
+      .withExpr("d", Seq("c"), "c + B")
+    assert(g.result("c").select($"i", $"c").as[(Long, Long)].collect().toMap ==
+      Map(1000L -> 11L, 1001L -> 22L, 1002L -> 33L))
+    assert(g.result("d").select($"i", $"d").as[(Long, Long)].collect().toMap ==
+      Map(1000L -> 21L, 1001L -> 42L, 1002L -> 63L))
+  }
+
+  test("a derived node named like a dim raises instead of replacing its labels") {
+    val g = TaskGraph(Dag.empty)
+      .mapFrame(Seq((10L, 1L), (20L, 2L)).toDF("id", "x"), Map("x" -> "x"),
+        indexCol = Some("id"), dimName = "i")
+      .withExpr("i", Seq("x"), "x + 100")
+    val e = intercept[GraftException](g.result("i"))
+    assert(e.getMessage.contains("'i'"))
   }
 
   // --- shared-dim label checks and labeled slices over in-memory tables ---
