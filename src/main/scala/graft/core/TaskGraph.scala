@@ -5,8 +5,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, OneRowRelation, Range => RangeRelation}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
+import TaskGraph.colOf
 
 /** Error type for graph-construction-time validation failures.
   *
@@ -45,6 +47,13 @@ final case class DimGroup(
 
   def positionalDim: Option[String] = dims.find(d => !labelCols.contains(d))
 
+  /** Every leaf of df's plan is in-memory rows. Only such a table is
+    * collected whole, by [[withPositions]] and [[sliceByPosition]]: their
+    * collects have no row bound, so a range does not qualify here, while
+    * the bounded construction-time label checks admit it. */
+  private lazy val inMemoryRows: Boolean =
+    df.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])
+
   /** df extended with the positional-label column for the positional dim.
     * An in-memory (LocalRelation) param table gets positions driver-side
     * and STAYS a LocalRelation — eligible for eager label validation and
@@ -57,8 +66,7 @@ final case class DimGroup(
     case Some(d) =>
       val spark = df.sparkSession
       val schema = df.schema.add(TaskGraph.posCol(d), LongType, nullable = false)
-      val isLocal = TaskGraph.isLocalPlan(df)
-      if (isLocal) {
+      if (inMemoryRows) {
         val rows = df.collect().zipWithIndex.map {
           case (r, i) => Row.fromSeq(r.toSeq :+ i.toLong)
         }
@@ -75,18 +83,19 @@ final case class DimGroup(
   def frame(needPositional: Boolean): DataFrame = {
     val base = if (needPositional && positionalDim.isDefined) withPositions else df
     val dimCols = dims.flatMap { d =>
-      if (labelCols.contains(d)) Some(col(labelCols(d)).as(d))
-      else if (needPositional) Some(col(TaskGraph.posCol(d)).as(d))
+      if (labelCols.contains(d)) Some(colOf(labelCols(d)).as(d))
+      else if (needPositional) Some(colOf(TaskGraph.posCol(d)).as(d))
       else None
     }
-    val nodeCols = valueCols.toSeq.sortBy(_._1).map { case (n, c) => col(c).as(n) }
+    val nodeCols = valueCols.toSeq.sortBy(_._1).map { case (n, c) => colOf(c).as(n) }
     base.select(dimCols ++ nodeCols: _*)
   }
 
-  /** Labels of one dim, in array order (for re-map validation). */
-  def labelFrame(dim: String): DataFrame =
-    (if (labelCols.contains(dim)) df.select(col(labelCols(dim)).as(dim))
-     else withPositions.select(col(TaskGraph.posCol(dim)).as(dim)))
+  /** Labels of one dim, in array order, duplicates kept (for label checks). */
+  def labelFrame(dim: String): DataFrame = labelCols.get(dim) match {
+    case Some(lc) => df.select(colOf(lc).as(dim))
+    case None => withPositions.select(colOf(TaskGraph.posCol(dim)).as(dim))
+  }
 
   /** Positional slice [lo, hi) of `dim` (reference graph.py:154-178).
     * Labels follow the slice — the original labels survive
@@ -112,11 +121,11 @@ final case class DimGroup(
     labelCols.get(dim) match {
       case None =>
         val pc = TaskGraph.posCol(dim)
-        val sliced = withPositions.filter(col(pc) >= lo && col(pc) < hi)
+        val sliced = withPositions.filter(colOf(pc) >= lo && colOf(pc) < hi)
         // The dim keeps its original positional labels; they become
         // explicit (the dim is now label-backed by the old positions).
         copy(df = sliced, labelCols = labelCols + (dim -> pc))
-      case Some(lc) if TaskGraph.isLocalPlan(df) =>
+      case Some(lc) if inMemoryRows =>
         // in-memory: the table is metadata-scale by definition of
         // LocalRelation; a null label is a real label and keeps its rows
         val rows = df.collect()
@@ -126,9 +135,8 @@ final case class DimGroup(
         val sliced = rows.zip(keys).collect { case (r, k) if kept(k) => r }
         copy(df = df.sparkSession.createDataFrame(java.util.Arrays.asList(sliced: _*), df.schema))
       case Some(lc) =>
-        val distinctLabels = df.select(col(lc).as("__lbl")).distinct()
         val spark = df.sparkSession
-        val sorted = distinctLabels.orderBy("__lbl")
+        val sorted = df.select(colOf(lc).as("__lbl")).distinct().orderBy("__lbl")
         val schema = sorted.schema.add("__rank", LongType, nullable = false)
         val ranked = spark.createDataFrame(
           sorted.rdd.zipWithIndex().map { case (r, i) =>
@@ -137,7 +145,7 @@ final case class DimGroup(
         val kept = ranked
           .filter(col("__rank") >= lo && col("__rank") < hi)
           .drop("__rank")
-        copy(df = df.join(broadcast(kept), col(lc) <=> col("__lbl"), "left_semi"))
+        copy(df = df.join(broadcast(kept), colOf(lc) <=> col("__lbl"), "left_semi"))
     }
   }
 
@@ -156,10 +164,10 @@ final case class DimGroup(
   def selLabel(dim: String, label: Any): DimGroup = {
     require(dims.contains(dim), s"dim '$dim' not in group")
     labelCols.get(dim) match {
-      case Some(lc) => copy(df = df.filter(col(lc) === labelLit(label)))
+      case Some(lc) => copy(df = df.filter(colOf(lc) === labelLit(label)))
       case None =>
         val pc = TaskGraph.posCol(dim)
-        copy(df = withPositions.filter(col(pc) === lit(label)),
+        copy(df = withPositions.filter(colOf(pc) === lit(label)),
           labelCols = labelCols + (dim -> pc))
     }
   }
@@ -179,11 +187,11 @@ final case class DimGroup(
         if (lu != hu)
           throw new GraftException(
             s"loc bounds must share one unit, got '$lu' and '$hu'")
-        copy(df = df.filter(col(lc).getField("unit") === lit(lu) &&
-          col(lc).getField("value") >= lit(lv) &&
-          col(lc).getField("value") < lit(hv)))
+        copy(df = df.filter(colOf(lc).getField("unit") === lit(lu) &&
+          colOf(lc).getField("value") >= lit(lv) &&
+          colOf(lc).getField("value") < lit(hv)))
       case _ =>
-        copy(df = df.filter(col(lc) >= labelLit(lo) && col(lc) < labelLit(hi)))
+        copy(df = df.filter(colOf(lc) >= labelLit(lo) && colOf(lc) < labelLit(hi)))
     }
   }
 }
@@ -283,18 +291,16 @@ final case class TaskGraph(
   /** Distinct labels of a dim, as a single-column DataFrame named after the
     * dim. Stays lazy — label sets can be fact-table-sized.
     */
-  def indices(dim: String): DataFrame = labelsOf(dim).distinct()
+  def indices(dim: String): DataFrame = labelGroup(dim).labelFrame(dim).distinct()
 
-  /** The labels of a dim, duplicates kept: the frame of the first group
-    * holding it, else the groupby key node's values. Over in-memory tables
-    * this plan folds to a LocalRelation, which the shared-dim label check
-    * collects without a Spark job (a distinct would not fold).
+  /** The group a dim's labels come from: the first group holding the dim,
+    * else, for a groupby dim, a one-dim view of its key node's frame, whose
+    * values are the labels.
     */
-  private def labelsOf(dim: String): DataFrame =
-    groups.find(_.dims.contains(dim)) match {
-      case Some(g) => g.frame(needPositional = true).select(dim)
-      case None if groupbyDims.contains(dim) => result(dim).select(dim)
-      case None => throw new GraftException(s"unknown dim '$dim'")
+  private def labelGroup(dim: String): DimGroup =
+    groups.find(_.dims.contains(dim)).getOrElse {
+      if (!groupbyDims.contains(dim)) throw new GraftException(s"unknown dim '$dim'")
+      DimGroup(Vector(dim), result(dim), Map.empty, Map(dim -> dim))
     }
 
   // ------------------------------------------------------------------- map
@@ -359,14 +365,18 @@ final case class TaskGraph(
     *    VALUE, not an extra dim — the reference sequence adapter does not
     *    descend into nested plain lists (graph_test.py:132-139); N-D
     *    ingestion is the EXPLICIT ndarray-equivalent path,
-    *    [[mapNestedSeqs]] / [[mapND]].
+    *    [[mapNestedSeqs]] / [[mapND]]. Any other value raises, naming
+    *    its node.
     */
   def map(values: Any)(implicit spark: SparkSession): TaskGraph = values match {
     case df: DataFrame => mapFrame(df)
     case m: Map[_, _] =>
-      val named = m.asInstanceOf[Map[String, Any]]
-      require(named.nonEmpty, "empty map")
-      mapSeqs(named.map { case (k, v) => k -> v.asInstanceOf[Seq[Any]] })
+      require(m.nonEmpty, "empty map")
+      mapSeqs(m.map {
+        case (k: String, v: Seq[_]) => k -> v
+        case (k, v) => throw new GraftException(s"cannot map node '$k' to a value of type " +
+          s"${Option(v).fold("null")(_.getClass.getName)}: map takes a Map[String, Seq]")
+      })
     case other =>
       throw new GraftException(s"cannot map value of type ${other.getClass.getName}")
   }
@@ -449,9 +459,14 @@ final case class TaskGraph(
   /** The single node-values merge (reference `NodeValues.merge`,
     * node_values.py:54-117): every `DimGroup` enters the catalog here,
     * whether from a `map*` call or from a graph spliced in by [[setItem]].
-    * Re-mapped source nodes follow the re-map rules (no-op, replace or
-    * raise) and keep their old dim names; a new dim named like an
-    * existing map or groupby dim must carry the same labels.
+    * A re-mapped source node keeps its old dim names, and its labels, then
+    * its values, pick the rule: other labels raise, the same labels with
+    * other values replace, the same labels and values are a no-op. A new
+    * dim named like an existing map or groupby dim must carry the same
+    * labels, compared as sets. Every check is [[TaskGraph.labelsMatch]]:
+    * in-memory inputs are compared here; other inputs defer to the dim
+    * join (with a length check under `spark.graft.strictValidation`), and
+    * a deferred re-map replaces.
     */
   private def addGroup(group0: DimGroup): TaskGraph = {
     // Re-map detection runs BEFORE dim-collision validation so an
@@ -474,44 +489,27 @@ final case class TaskGraph(
         // same call may already have replaced the pre-call group — a
         // lookup via the pre-call catalog would miss it)
         gs.find(_.valueCols.contains(n)).foreach { old =>
-          // Re-map rules (reference node_values.py:54-93): same labels and
-          // values -> no-op; same labels, new values -> replace; different
-          // labels -> error. Dim names may differ when auto-generated.
+          // Dim names may differ when auto-generated. Every dim pair is
+          // checked, so each deferred one gets its strict-mode length check.
           if (old.dims.size != group0.dims.size)
             throw new GraftException(s"Node '$n' has already been mapped")
-          // Eager label/value equality only for metadata-scale (in-memory)
-          // tables within sameData's row bound — the reference's whole
-          // universe. A file-backed or over-bound re-map skips the eager
-          // compare (it would be a full scan at graph-build time) and takes
-          // deterministic replace semantics; None marks that deferral.
-          val bothLocal =
-            TaskGraph.isLocalPlan(old.df) && TaskGraph.isLocalPlan(group0.df)
-          // (the first dim whose compare is not Some(true) decides)
-          val labelsMatch: Option[Boolean] =
-            if (!bothLocal) None
-            else old.dims.zip(group0.dims).iterator.map { case (od, nd) =>
-              TaskGraph.sameData(
-                old.labelFrame(od).toDF("l"), group0.labelFrame(nd).toDF("l"))
-            }.find(!_.contains(true)).getOrElse(Some(true))
-          if (labelsMatch.contains(false))
+          val labels = old.dims.zip(group0.dims).map { case (od, nd) =>
+            TaskGraph.labelsMatch(old, od, group0, nd, asSets = false)
+          }
+          if (labels.contains(Some(false)))
             throw new GraftException(
               s"Node '$n' has already been mapped with different indices")
-          // strict mode: a deferred re-map still gets a length guard
-          // (full equality stays deferred — see strictValidation)
-          if (labelsMatch.isEmpty && TaskGraph.strictValidation(group0.df))
-            old.dims.zip(group0.dims).foreach { case (od, nd) =>
-              TaskGraph.requireSameLength(od,
-                old.labelFrame(od), group0.labelFrame(nd))
-            }
           if (renameTo.exists(_ != old.dims))
             throw new GraftException(
               "Nodes re-mapped in one call belong to groups with different dims")
           renameTo = Some(old.dims)
           remapDims ++= old.dims
           remapDims ++= group0.dims
-          val valuesMatch = labelsMatch.isDefined && TaskGraph.sameData(
-            old.df.select(col(old.valueCols(n)).as("v")),
-            group0.df.select(col(group0.valueCols(n)).as("v"))).contains(true)
+          // values compare beside their labels: a permutation is new values
+          val valuesMatch = labels.forall(_.contains(true)) && TaskGraph.sameData(
+            old.frame(needPositional = true).select((old.dims :+ n).map(colOf): _*),
+            group0.frame(needPositional = true).select((group0.dims :+ n).map(colOf): _*)
+          ).contains(true)
           if (valuesMatch) freshCols -= n // no-op
           else gs = gs.map(og => // replace: new mapping wins
             if (og.valueCols.contains(n)) og.copy(valueCols = og.valueCols - n)
@@ -533,14 +531,10 @@ final case class TaskGraph(
     // values are identical — the dims become SHARED and descendants align
     // on them (reference node_values.py:79-90: same index name requires
     // equal index values). Conflicting labels raise.
-    val strict = TaskGraph.strictValidation(group.df)
     group.dims.filterNot(remapDims.contains).foreach { dm =>
-      val newLabels = TaskGraph.DimLabels(group, dm)
-      gs.filter(og => og.valueCols.nonEmpty && og.dims.contains(dm)).foreach(og =>
-        TaskGraph.requireSameLabels(dm, TaskGraph.DimLabels(og, dm), newLabels, strict))
-      if (groupbyDims.contains(dm))
-        TaskGraph.requireSameLabels(dm,
-          new TaskGraph.DimLabels(free = true, labelsOf(dm)), newLabels, strict)
+      val holders = gs.filter(og => og.valueCols.nonEmpty && og.dims.contains(dm)) ++
+        Option.when(groupbyDims.contains(dm))(labelGroup(dm))
+      holders.foreach(TaskGraph.requireSameLabels(dm, _, group))
     }
     if (freshCols.isEmpty) return copy(dag = d, groups = gs.filter(_.valueCols.nonEmpty))
     copy(dag = d, groups = gs.filter(_.valueCols.nonEmpty) :+ group.copy(valueCols = freshCols))
@@ -786,12 +780,7 @@ final case class TaskGraph(
         throw new GraftException(
           s"Node '$key' has already been mapped with different indices")
       // the key's labels must match the incoming ones (shared label check)
-      val strict = TaskGraph.strictValidation(og.df)
-      og.dims.foreach { dm =>
-        val incoming = other.groups.find(_.dims.contains(dm)).fold(
-          new TaskGraph.DimLabels(free = true, other.labelsOf(dm)))(TaskGraph.DimLabels(_, dm))
-        TaskGraph.requireSameLabels(dm, TaskGraph.DimLabels(og, dm), incoming, strict)
-      }
+      og.dims.foreach(dm => TaskGraph.requireSameLabels(dm, og, other.labelGroup(dm)))
       merged = merged.copy(groups = merged.groups
         .map(g => if (g eq og) g.copy(valueCols = g.valueCols - key) else g)
         .filter(_.valueCols.nonEmpty))
@@ -917,12 +906,12 @@ final case class TaskGraph(
     derived.groupBy(level).toSeq.sortBy(_._1).foldLeft(joinInputs(inputs, needPos, memo)) {
       case (f, (l, ds)) =>
         val kept = f.columns.filter(c => !level.contains(c) || lastRead(c) > l)
-        f.select(kept.map(c => col("`" + c.replace("`", "``") + "`")) ++ ds.map { d =>
+        f.select(kept.map(colOf) ++ ds.map { d =>
           val preds = dag.predecessors(d)
           (exprOf.get(d) match {
             case Some(e) => expr(e)
-            case None if preds.size == 1 => col(preds.head)
-            case None => struct(preds.map(col): _*)
+            case None if preds.size == 1 => colOf(preds.head)
+            case None => struct(preds.map(colOf): _*)
           }).as(d)
         }: _*)
     }
@@ -978,7 +967,7 @@ final case class TaskGraph(
     else {
       val renamed = joinDims.foldLeft(right)((d0, d) =>
         d0.withColumnRenamed(d, "__jk_" + d))
-      val cond = joinDims.map(d => col(d) <=> col("__jk_" + d)).reduce(_ && _)
+      val cond = joinDims.map(d => colOf(d) <=> colOf("__jk_" + d)).reduce(_ && _)
       left.join(renamed, cond).drop(joinDims.map("__jk_" + _): _*)
     }
   }
@@ -988,9 +977,9 @@ final case class TaskGraph(
     val keptDims = dimsOf(n)
     val input = reduceInput(n, spec, needPos, memo)
     val attrs = dag.attrs.getOrElse(n, Map.empty)
-    val aggExpr: Column = TaskGraph.aggFor(attrs, col(spec.pred)).as(n)
+    val aggExpr: Column = TaskGraph.aggFor(attrs, colOf(spec.pred)).as(n)
     if (keptDims.isEmpty) input.agg(aggExpr)
-    else input.groupBy(keptDims.map(col): _*).agg(aggExpr)
+    else input.groupBy(keptDims.map(colOf): _*).agg(aggExpr)
   }
 
   /** Materialized task table: one row per node copy, with the node name,
@@ -1003,7 +992,7 @@ final case class TaskGraph(
     val frames = dag.topologicalOrder.map { n =>
       val f = result(n, needPositional = true)
       f.select(lit(n).as("node"), indexMapOf(dimsOf(n)).as("index"),
-        col(n).cast("string").as(valueAttr))
+        colOf(n).cast("string").as(valueAttr))
     }
     frames.reduce(_.unionByName(_))
   }
@@ -1012,7 +1001,7 @@ final case class TaskGraph(
     if (dims.isEmpty) expr("map()").cast("map<string,string>")
     else map_from_arrays(
       array(dims.map(lit(_)): _*),
-      array(dims.map(d => col(d).cast("string")): _*))
+      array(dims.map(d => colOf(d).cast("string")): _*))
 
   /** Materialized edge table: one row per edge between node COPIES — the
     * edge-set parity of the reference's `to_networkx()` (clone expansion
@@ -1040,7 +1029,7 @@ final case class TaskGraph(
       // dedupe on the scalar label columns (set ops reject MAP columns),
       // then assemble the index maps
       val labelCols = (dimsOf(p) ++ dimsOf(c)).distinct
-      frame.select(labelCols.map(col): _*).distinct()
+      frame.select(labelCols.map(colOf): _*).distinct()
         .select(
           lit(p).as("src"), indexMapOf(dimsOf(p)).as("src_index"),
           lit(c).as("dst"), indexMapOf(dimsOf(c)).as("dst_index"))
@@ -1068,13 +1057,9 @@ object TaskGraph {
 
   def posCol(dim: String): String = "__pos_" + dim
 
-  /** Every leaf of the plan is an in-memory relation (driver-side data —
-    * the reference's whole universe). Such frames may be collected,
-    * window-ranked, and eagerly validated without scale concerns.
-    */
-  def isLocalPlan(df: DataFrame): Boolean =
-    df.queryExecution.analyzed.collectLeaves()
-      .forall(_.getClass.getSimpleName == "LocalRelation")
+  /** The column of a node or dim name: quoted, so a dot is part of the
+    * name, not a struct field access. */
+  private[core] def colOf(name: String): Column = col("`" + name.replace("`", "``") + "`")
 
   /** Opt-in strict shape validation
     * (`spark.conf.set("spark.graft.strictValidation", "true")`): the
@@ -1083,56 +1068,62 @@ object TaskGraph {
     * 100 TB, but it turns a dim-length mismatch (which the reference
     * raises on eagerly) into silent row drops at execution time. Strict
     * mode adds a cheap eager LENGTH guard on exactly those deferred
-    * paths: colliding or re-mapped dims must have equal label counts or
-    * the call raises. Costs one count() job per checked dim (plus the
-    * positional zipWithIndex pass for positional file-backed dims).
+    * paths: re-mapped dims must have equal label counts, and colliding
+    * dims equal counts of distinct labels, or the call raises. Costs one
+    * count() job per checked dim (plus the positional zipWithIndex pass
+    * for positional file-backed dims).
     */
   def strictValidation(df: DataFrame): Boolean =
     df.sparkSession.conf.getOption("spark.graft.strictValidation")
       .exists(_.equalsIgnoreCase("true"))
 
-  /** Strict-mode guard: two label sets claimed to describe the same dim
-    * must at least AGREE IN LENGTH (full equality would be a fact-scale
-    * join; length catches the shape mismatches that silently shrink
-    * results through inner-join alignment).
+  /** The row bound of every construction-time compare. */
+  private val maxEagerRows = 100000
+
+  /** The gate of every construction-time label check: every leaf of the
+    * plan is driver-side data (in-memory rows, one row or a range — the
+    * reference's whole universe). Comparing a file-backed frame while the
+    * graph is built would be a fact-scale Spark job, so its checks defer.
     */
-  private[core] def requireSameLength(dim: String, a: DataFrame, b: DataFrame): Unit = {
-    val (ca, cb) = (a.count(), b.count())
-    if (ca != cb)
-      throw new GraftException(
-        s"""Conflicting index lengths for index name "$dim" ($ca vs $cb)""")
+  private def isLocalPlan(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectLeaves().forall {
+      case _: LocalRelation | _: OneRowRelation | _: RangeRelation => true
+      case _ => false
+    }
+
+  /** The one construction-time label check (reference node_values.py:54-93):
+    * do group `a`'s dim `ad` and group `b`'s dim `bd` carry the same labels,
+    * as multisets ([[sameData]], a re-map) or as sets ([[labelsCompatible]],
+    * a shared dim)? The [[isLocalPlan]] gate runs on both groups' source
+    * frames before any label frame is built, as a file-backed positional
+    * dim's labels would cost a zipWithIndex job. None when the check
+    * defers, at the gate or past the compare's row bound: the dim join's
+    * relational semantics then align the labels, and under
+    * [[strictValidation]] the label counts (distinct counts for sets) must
+    * at least agree.
+    */
+  private def labelsMatch(a: DimGroup, ad: String, b: DimGroup, bd: String,
+      asSets: Boolean): Option[Boolean] = {
+    val verdict =
+      if (!isLocalPlan(a.df) || !isLocalPlan(b.df)) None
+      else if (asSets) labelsCompatible(a.labelFrame(ad), b.labelFrame(bd))
+      else sameData(a.labelFrame(ad), b.labelFrame(bd))
+    if (verdict.isEmpty && strictValidation(a.df)) {
+      def count(g: DimGroup, d: String) =
+        (if (asSets) g.labelFrame(d).distinct() else g.labelFrame(d)).count()
+      val (ca, cb) = (count(a, ad), count(b, bd))
+      if (ca != cb)
+        throw new GraftException(
+          s"""Conflicting index lengths for index name "$ad" ($ca vs $cb)""")
+    }
+    verdict
   }
 
-  /** One side of a shared-dim label check: the labels of a dim (duplicates
-    * kept; [[labelsCompatible]] dedupes them), built on first use, and
-    * whether building them is free. A file-backed positional dim's labels
-    * are not: they need a zipWithIndex job at construction time
-    * (ZippedWithIndexRDD computes partition offsets eagerly), which
-    * labelsCompatible's metadata-scale guard would then discard anyway.
-    */
-  private final class DimLabels(val free: Boolean, build: => DataFrame) {
-    lazy val frame: DataFrame = build
-  }
-
-  private object DimLabels {
-    def apply(g: DimGroup, dim: String): DimLabels =
-      new DimLabels(g.positionalDim.isEmpty || isLocalPlan(g.df),
-        g.frame(needPositional = true).select(dim))
-  }
-
-  /** The shared-dim label check (reference node_values.py:79-90): two label
-    * sets claimed to describe `dim` are compared eagerly as sets when both
-    * are free to build — on the driver, without a Spark job, when both are
-    * in-memory tables ([[labelsCompatible]], which still skips fact-scale
-    * and over-bound sets) — only by length in strict mode, and otherwise
-    * left to the dim join's relational semantics.
-    */
-  private def requireSameLabels(dim: String, a: DimLabels, b: DimLabels,
-      strict: Boolean): Unit =
-    if (a.free && b.free) {
-      if (!labelsCompatible(a.frame, b.frame))
-        throw new GraftException(s"""Conflicting index values for index name "$dim"""")
-    } else if (strict) requireSameLength(dim, a.frame, b.frame)
+  /** The shared-dim rule (reference node_values.py:79-90): two groups
+    * holding `dim` carry the same set of labels, or the call raises. */
+  private def requireSameLabels(dim: String, a: DimGroup, b: DimGroup): Unit =
+    if (labelsMatch(a, dim, b, dim, asSets = true).contains(false))
+      throw new GraftException(s"""Conflicting index values for index name "$dim"""")
 
   /** Unit-carrying coordinate encoding (reference ScippDataArrayAdapter:
     * a coord with a unit yields `(value, unit)` tuple labels,
@@ -1175,25 +1166,40 @@ object TaskGraph {
       case other => call_function(other, c)
     }
 
-  /** Semantic data equality for re-map validation: plan-level `sameResult`
-    * first (free), then a bounded collect compare of the rows as multisets
-    * of [[labelKey]]s. Parameter tables are metadata-scale; this is never
-    * applied to fact-scale data. None when `a` has more than `maxRows`
-    * rows: too large to compare eagerly, so the caller defers as it does
-    * for a file-backed table.
+  /** The one construction-time compare: `a`'s and `b`'s rows as
+    * [[labelKey]]s, judged on the driver by `same`. Plans with the same
+    * result are equal without a collect, and frames of other column types
+    * differ. Otherwise each side collects at most [[maxEagerRows]] + 1
+    * rows (a plan folding to in-memory rows collects without a job); an
+    * `a` past the bound is too large to compare while the graph is built
+    * (None), and `b` reaches `same` cut at the bound.
     */
-  def sameData(a: DataFrame, b: DataFrame, maxRows: Int = 100000): Option[Boolean] = {
+  private def compareRows(a: DataFrame, b: DataFrame)(
+      same: (Seq[Any], Seq[Any]) => Option[Boolean]): Option[Boolean] = {
     if (a.queryExecution.analyzed.sameResult(b.queryExecution.analyzed)) return Some(true)
-    if (!sameTypes(a, b)) return Some(false)
-    val aRows = a.limit(maxRows + 1).collect()
-    if (aRows.length > maxRows) return None
-    val bRows = b.limit(maxRows + 1).collect()
-    def counts(rows: Array[Row]) = rows.groupMapReduce(labelKey)(_ => 1)(_ + _)
-    Some(counts(aRows) == counts(bRows))
+    if (a.schema.map(_.dataType) != b.schema.map(_.dataType)) return Some(false)
+    def keys(df: DataFrame) = df.limit(maxEagerRows + 1).collect().toSeq.map(labelKey)
+    val ka = keys(a)
+    if (ka.size > maxEagerRows) None else same(ka, keys(b))
   }
 
-  private def sameTypes(a: DataFrame, b: DataFrame): Boolean =
-    a.schema.fields.map(_.dataType).toSeq == b.schema.fields.map(_.dataType).toSeq
+  /** Re-map equality: the same rows as multisets (a cut `b` has more rows
+    * than `a`, so it differs). */
+  private def sameData(a: DataFrame, b: DataFrame): Option[Boolean] =
+    compareRows(a, b) { (ka, kb) =>
+      def counts(ks: Seq[Any]) = ks.groupMapReduce(identity)(_ => 1)(_ + _)
+      Some(counts(ka) == counts(kb))
+    }
+
+  /** Shared-dim equality: the same labels as sets, duplicates compared
+    * as one. A cut `b` raises on a label `a` lacks and otherwise defers. */
+  private def labelsCompatible(a: DataFrame, b: DataFrame): Option[Boolean] =
+    compareRows(a, b) { (ka, kb) =>
+      val (sa, sb) = (ka.toSet, kb.toSet)
+      if (!sb.subsetOf(sa)) Some(false)
+      else if (kb.size > maxEagerRows) None
+      else Some(sa == sb)
+    }
 
   /** A value's identity as a label, with the equality Spark's `distinct`
     * and `<=>` use: byte arrays by content, -0.0 as 0.0, every NaN alike,
@@ -1209,61 +1215,17 @@ object TaskGraph {
     case other => other
   }
 
-  /** The distinct [[labelKey]]s of a one-column label frame; None past
-    * `maxRows` of them. A frame whose optimized plan folds to a
-    * LocalRelation (Catalyst folds Project/Filter/Limit over in-memory
-    * rows) is collected without a Spark job and deduped here; any other
-    * frame dedupes through Spark's `distinct`.
+  /** The Spark type of a sequence's values, taken from its first non-null
+    * one (StringType when there is none). A nested sequence under the
+    * SEQUENCE adapter is a value, not an extra dim (reference
+    * graph_test.py:132-139): an array typed by its elements' elements.
     */
-  private def distinctLabels(df: DataFrame, maxRows: Int): Option[Set[Any]] = {
-    val rows = df.queryExecution.optimizedPlan match {
-      case _: LocalRelation => df.collect()
-      case _ => df.distinct().limit(maxRows + 1).collect()
-    }
-    val keys = rows.iterator.map(labelKey).toSet
-    if (keys.size > maxRows) None else Some(keys)
-  }
-
-  /** Best-effort bounded SET equality for shared-dim label validation.
-    * The reference validates index values eagerly in memory
-    * (node_values.py:79-90); at 100 TB an eager distinct-and-compare of a
-    * fact-scale dim would be a full Spark job at graph-BUILD time, so a
-    * file-backed label set passes validation, as does one whose `a` side
-    * has more than `maxRows` distinct labels (a `b` side past the bound
-    * cannot equal an `a` within it, so that raises). Any misalignment then
-    * surfaces as the relational semantics of the dim join (mismatched
-    * labels drop, as in an inner join). Metadata-scale dims — the
-    * reference's whole universe — still get the eager reference-parity
-    * error. Duplicate labels compare as one.
-    */
-  def labelsCompatible(a: DataFrame, b: DataFrame, maxRows: Int = 100000): Boolean = {
-    if (a.queryExecution.analyzed.sameResult(b.queryExecution.analyzed)) return true
-    // Eager validation only when every leaf is an in-memory relation (the
-    // reference's whole universe is driver-side arrays). A file-backed dim
-    // is fact-scale: collecting it at graph-build time is the wrong cost
-    // model, so validation defers to the dim join's relational semantics.
-    def metadataScale(df: DataFrame): Boolean =
-      df.queryExecution.analyzed.collectLeaves().forall { leaf =>
-        val n = leaf.getClass.getSimpleName
-        n == "LocalRelation" || n == "OneRowRelation" || n == "Range"
-      }
-    if (!metadataScale(a) || !metadataScale(b)) return true
-    if (!sameTypes(a, b)) return false
-    distinctLabels(a, maxRows).forall(la => distinctLabels(b, maxRows).contains(la))
-  }
-
-  def sparkTypeOf(s: Seq[Any]): org.apache.spark.sql.types.DataType = {
-    import org.apache.spark.sql.types._
-    s.headOption match {
-      case Some(_: Int) => IntegerType
-      case Some(_: Long) => LongType
-      case Some(_: Double) => DoubleType
-      case Some(_: String) => StringType
-      case Some(_: Boolean) => BooleanType
-      // a nested sequence under the SEQUENCE adapter is a value, not an
-      // extra dim (reference graph_test.py:132-139)
-      case Some(inner: Seq[_]) => ArrayType(sparkTypeOf(inner.asInstanceOf[Seq[Any]]))
-      case _ => StringType
-    }
+  def sparkTypeOf(s: Seq[Any]): DataType = s.find(_ != null) match {
+    case Some(_: Seq[_]) => ArrayType(sparkTypeOf(s.flatMap {
+      case inner: Seq[_] => inner
+      case _ => Nil
+    }))
+    case Some(v) => Literal(v).dataType
+    case None => StringType
   }
 }

@@ -299,7 +299,7 @@ class TaskGraphFuzzSpec extends Properties("TaskGraphFuzz") {
 
     def opMap(): Boolean = {
       val srcs = m.nodeList.filter(n => m.preds(n).isEmpty && !m.mapped(n))
-      val cands = if (rnd.nextInt(4) == 0) srcs :+ freshName("mm") else srcs
+      val cands = if (rnd.nextInt(4) == 0) srcs :+ freshName("m.m") else srcs
       val dimName = s"dim_${m.indexNames.size}"
       if (cands.isEmpty || usedDims(dimName)) return false
       val picks = rnd.shuffle(cands).take(1 + rnd.nextInt(2))

@@ -1239,4 +1239,121 @@ class TaskGraphSpec extends AnyFunSuite {
     // the existing side within it: the new side cannot be equal
     assertThrows[GraftException](sharedDim(ids(0, 10), ids(0, 100001)))
   }
+
+  // --- one label-check rule: every check over every input kind -----------
+
+  test("label checks by input kind: re-map and shared dim, same and other labels") {
+    import org.apache.spark.sql.DataFrame
+    val same: Seq[Long] = 0L until 4L
+    val other: Seq[Long] = 1L until 6L // another length and other values
+    def inMemory(ks: Seq[Long]): DataFrame = ks.map(k => (k, 10 * k)).toDF("k", "v")
+    val files = Seq(same, other).map { ks =>
+      val path = SparkTestSession.tmpPath(s"label_matrix_${ks.head}_${ks.size}")
+      inMemory(ks).write.mode("overwrite").parquet(path)
+      ks -> path
+    }.toMap
+    val kinds: Seq[(String, Seq[Long] => DataFrame, Option[String])] = Seq(
+      ("in-memory", inMemory, Some("k")),
+      ("in-memory join", ks => ks.toDF("k").join(inMemory(ks), "k"), Some("k")),
+      ("range", ks => spark.range(ks.head, ks.last + 1)
+        .select($"id".as("k"), ($"id" * 10).as("v")), Some("k")),
+      ("labeled parquet", ks => spark.read.parquet(files(ks)), Some("k")),
+      ("positional parquet", ks => spark.read.parquet(files(ks)), None))
+    // (kind, check) -> (raises, Spark jobs the checked call starts). Every
+    // driver-side kind is compared at the call, re-map and shared dim
+    // alike; a join or a range collects its labels through Spark jobs,
+    // in-memory rows fold without one. Parquet defers to the dim join.
+    val want = Map(
+      ("in-memory", "re-map same") -> (false, 0),
+      ("in-memory", "re-map other") -> (true, 0),
+      ("in-memory", "shared same") -> (false, 0),
+      ("in-memory", "shared other") -> (true, 0),
+      ("in-memory join", "re-map same") -> (false, 0),
+      ("in-memory join", "re-map other") -> (true, 4),
+      ("in-memory join", "shared same") -> (false, 0),
+      ("in-memory join", "shared other") -> (true, 4),
+      ("range", "re-map same") -> (false, 0),
+      ("range", "re-map other") -> (true, 2),
+      ("range", "shared same") -> (false, 0),
+      ("range", "shared other") -> (true, 2),
+      ("labeled parquet", "re-map same") -> (false, 0),
+      ("labeled parquet", "re-map other") -> (false, 0),
+      ("labeled parquet", "shared same") -> (false, 0),
+      ("labeled parquet", "shared other") -> (false, 0),
+      ("positional parquet", "re-map same") -> (false, 0),
+      ("positional parquet", "re-map other") -> (false, 0),
+      ("positional parquet", "shared same") -> (false, 0),
+      ("positional parquet", "shared other") -> (false, 0))
+    val got = for {
+      (kind, table, idx) <- kinds
+      (check, base, node) <- Seq(
+        ("re-map", TaskGraph.chain("a", "b"), "a"),
+        ("shared", TaskGraph.fromEdges("a" -> "c", "b" -> "c"), "b"))
+      (labels, ks) <- Seq("same" -> same, "other" -> other)
+    } yield {
+      val g = base.mapFrame(table(same), Map("a" -> "v"), idx, "s")
+      val df = table(ks)
+      val (r, jobs) = SparkTestSession.jobsStartedBy(
+        scala.util.Try(g.mapFrame(df, Map(node -> "v"), idx, "s")))
+      r.failed.foreach(e => assert(e.isInstanceOf[GraftException], e.toString))
+      (kind, s"$check $labels") -> ((r.isFailure, jobs.size))
+    }
+    val diff = got.filter { case (k, v) => want(k) != v }
+    assert(diff.isEmpty, diff.map { case (k, v) => s"$k got $v want ${want(k)}" }.mkString("\n"))
+  }
+
+  // --- names, value types and re-map values -------------------------------
+
+  test("node and dim names with dots are names: derive, reduce, groupby, task and edge tables") {
+    val g = TaskGraph.fromEdges("a.b" -> "c")
+      .mapSeqs(Map("a.b" -> Seq(1, 2, 3), "k.k" -> Seq("p", "q", "p")))
+      .groupby("k.k").reduce(key = "a.b", name = "s.s", attrs = Map("func" -> "sum"))
+      .reduce(key = "a.b", name = "t", attrs = Map("func" -> "sum"))
+    assert(g.result("c").select("c").as[Int].collect().sorted.toSeq == Seq(1, 2, 3))
+    assert(g.result("t").select("t").as[Long].collect().toSeq == Seq(6L))
+    assert(g.result("s.s").select("`k.k`", "`s.s`").as[(String, Long)].collect().toMap ==
+      Map("p" -> 4L, "q" -> 2L))
+    val tasks = g.taskTable().collect()
+      .map(r => (r.getString(0), r.getAs[Map[String, String]](1), r.getString(2))).toSet
+    assert(tasks.filter(_._1 != "a.b").filter(_._1 != "k.k") == Set(
+      ("c", Map("dim_0" -> "0"), "1"), ("c", Map("dim_0" -> "1"), "2"),
+      ("c", Map("dim_0" -> "2"), "3"), ("t", Map.empty[String, String], "6"),
+      ("s.s", Map("k.k" -> "p"), "4"), ("s.s", Map("k.k" -> "q"), "2")))
+    assert(tasks.count(_._1 == "k.k") == 3)
+    val intoGroups = g.edgeTable().collect()
+      .map(r => (r.getString(0), r.getAs[Map[String, String]](1), r.getString(2),
+        r.getAs[Map[String, String]](3)))
+      .filter(_._3 == "s.s").toSet
+    assert(intoGroups == Set("a.b", "k.k").flatMap(src => Seq(0 -> "p", 1 -> "q", 2 -> "p").map {
+      case (i, k) => (src, Map("dim_0" -> i.toString), "s.s", Map("k.k" -> k))
+    }))
+  }
+
+  test("map of a value that is not a Seq raises naming the node") {
+    val g = TaskGraph.chain("a", "b")
+    Seq[Any](5, Array(1, 2)).foreach { v =>
+      val e = intercept[GraftException](g.map(Map("a" -> v)))
+      assert(e.getMessage.contains("'a'"), e.getMessage)
+    }
+  }
+
+  test("mapSeqs types a sequence by its first non-null value") {
+    import org.apache.spark.sql.types._
+    val f = TaskGraph(Dag.empty).mapSeqs(Map(
+      "f" -> Seq(1.5f, 2.5f), "s" -> Seq(1.toShort, 2.toShort),
+      "n" -> Seq(null, 2), "a" -> Seq(Seq(), Seq(1L, 2L)))).result("f")
+    assert(Seq("f", "s", "n", "a").map(f.schema(_).dataType) ==
+      Seq(FloatType, ShortType, IntegerType, ArrayType(LongType)))
+    val row = f.orderBy(org.apache.spark.sql.functions.col("f")).collect().toSeq
+      .map(r => (r.getAs[Float]("f"), r.getAs[Short]("s"), Option(r.getAs[Any]("n")),
+        r.getAs[Seq[Long]]("a")))
+    assert(row == Seq((1.5f, 1.toShort, None, Seq.empty[Long]), (2.5f, 2.toShort, Some(2), Seq(1L, 2L))))
+  }
+
+  test("a re-map of the same values in another order replaces them") {
+    val g = TaskGraph.chain("a", "b").mapSeqs(Map("a" -> Seq(1, 2, 3)))
+      .mapSeqs(Map("a" -> Seq(3, 2, 1)))
+    assert(g.result("b", needPositional = true).select("dim_0", "b").as[(Long, Int)]
+      .collect().sorted.toSeq == Seq((0L, 3), (1L, 2), (2L, 1)))
+  }
 }
