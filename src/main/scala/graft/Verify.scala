@@ -58,9 +58,9 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         failed(name) = sanitize(String.valueOf(e.getMessage).take(500))
       }
-      // release checkpoint-backed results (dedup pipelines) between
-      // queries so a 60-query run doesn't accumulate executor blocks
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      // bill each query standalone, as the bench does: drop cached plans
+      // (session-owned lazy persists) and snapshot blocks between queries
+      GraftSession.clearCaches(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

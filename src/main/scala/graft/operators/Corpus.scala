@@ -340,11 +340,11 @@ object Corpus {
     // serial latency. `carryCols` ride the token frame through to the
     // output (scrubComposite threads its codepoint counts through here
     // instead of paying a join back onto the cut snapshot).
-    val toks = ScaleOps.spreadCpu(docs.select(col(idCol).as("id") +:
+    val toks = Staging.persist(
+      ScaleOps.spreadCpu(docs.select(col(idCol).as("id") +:
           col(textCol).as("__txt") +: carryCols.map(col): _*))
-      .select(col("id") +: spanTokens(col("__txt")).as("__t") +:
-        carryCols.map(col): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .select(col("id") +: spanTokens(col("__txt")).as("__t") +:
+          carryCols.map(col): _*))
     // 1-based n-gram start positions (repeatedSpans' convention). In xx
     // mode the span TEXT never leaves the scan stage: the key column is
     // hashed inside the same projection that materializes the n-gram.
@@ -929,14 +929,14 @@ object Corpus {
     // whose wall IS serial-job latency. The walk input is spread
     // (guarded) so the fused hash pass engages every core instead of
     // serializing behind the small-SF scan's one split.
-    val walked = ScaleOps.spreadCpu(base).as[(Long, String)]
+    val scope = new Staging.Scope
+    val walked = scope.persist(ScaleOps.spreadCpu(base).as[(Long, String)]
       .flatMap { case (id, text) =>
         censusWalk(text, w, cd, ad, g, sl).map { case (k, a, b, p) =>
           (id, k, a, b, p)
         }
       }
-      .toDF("id", "kind", "a", "b", "payload")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .toDF("id", "kind", "a", "b", "payload"))
     val key =
       if (md5Mode) graft.functions.Md5Hashes.md5Hash64(col("payload"))
       else xxhash64(col("payload"))
@@ -957,9 +957,8 @@ object Corpus {
     val dup = chunks.groupBy("ck")
       .agg(count_distinct(col("id")).as("__nd"))
       .filter(col("__nd") >= 2).select("ck")
-    val chunkSpans = chunks.join(dup, Seq("ck"))
-      .select("id", "s", "e")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val chunkSpans = scope.persist(chunks.join(dup, Seq("ck"))
+      .select("id", "s", "e"))
     val anchors = walked.filter(col("kind") === 1)
       .select(col("id"), col("a").as("s0"), col("payload").as("seed"))
     // the hot-region cut: seed fully inside a removed chunk span. The
@@ -987,13 +986,10 @@ object Corpus {
     // staged: TWO consumers (the token-domain mask and the final count
     // join) — unstaged, the entire codepoint pipeline (walk, census,
     // candidates, extension, island cut) re-executes per consumer.
-    // Once the snapshot exists, the walk census and the duplicated-chunk
-    // spans are fully consumed — release their blocks here (the r20
-    // verdict's unpersist-after-seal item) instead of leaving them to
-    // the ContextCleaner in a long-lived session.
-    val cut1 = Dedup.stage(cutSpans(base, chunkSpans.unionByName(repSpans)))
-    chunkSpans.unpersist(blocking = false)
-    walked.unpersist(blocking = false)
+    // The seal releases the walk census and the duplicated-chunk spans
+    // once the snapshot exists (or the cut fails) instead of leaving them
+    // to the ContextCleaner in a long-lived session.
+    val cut1 = scope.seal(cutSpans(base, chunkSpans.unionByName(repSpans)))
     // the codepoint counts ride THROUGH the token-domain mask
     // (carryCols) instead of joining back onto the cut snapshot — one
     // exchange pair and one join fewer in the tail (r21)

@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.storage.StorageLevel
 
 /** Deduplication operators for training-data pipelines, exact and
   * approximate, all designed shuffle-minimal and skew-bounded:
@@ -35,123 +33,13 @@ import org.apache.spark.storage.StorageLevel
   * star pairs against the bucket minimum — linear in the bucket size, and
   * sufficient for connected-component style duplicate clustering.
   *
-  * Cache lifecycle: each pipeline invocation persists its intermediates in
-  * a private [[CacheScope]], materializes its result once
-  * (`localCheckpoint`) and releases every intermediate before returning —
-  * a long-lived session accumulates no stranded cache blocks. The returned
-  * frame is checkpoint-backed (computed, reusable, lineage-free); release
-  * its own blocks with [[free]] when finished (otherwise the
-  * ContextCleaner reclaims them on GC).
+  * Cache lifecycle: every pipeline persists and seals through a
+  * [[Staging.Scope]]; release a returned frame with [[Staging.free]].
   *
   * All hashing is `xxhash64` with fixed integer seeds (plane matrices use a
   * fixed-seed JDK RNG) — fully deterministic across runs and cluster sizes.
   */
 object Dedup {
-
-  /** Persisted intermediates of ONE pipeline invocation. `sealResult`
-    * materializes the result via eager `localCheckpoint` (every persisted
-    * intermediate is therefore computed exactly once while still cached)
-    * and then unpersists the intermediates — handles are kept to the
-    * exact persisted frames because unpersisting a projection of a cached
-    * plan is a no-op.
-    */
-  private[graft] final class CacheScope {
-    private val handles = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def persist(df: DataFrame): DataFrame = {
-      handles += df
-      df.persist(StorageLevel.MEMORY_AND_DISK)
-    }
-    def sealResult(result: DataFrame): DataFrame =
-      // release in finally: a failed materialization (task OOM, corrupt
-      // input) must not strand the already-cached intermediates
-      try stage(result) finally release()
-    /** Unpersist every tracked intermediate without materializing anything
-      * (for callers of the lazy `*Plan` builders managing their own
-      * terminal action).
-      */
-    def release(): Unit = {
-      handles.foreach(_.unpersist(blocking = false))
-      handles.clear()
-    }
-  }
-
-  /** Session conf switch for reliable checkpoints. When set, every
-    * composite that materializes a lineage-free intermediate or result
-    * ([[CacheScope.sealResult]] behind all the LSH pipelines, [[clusters]]'
-    * iteration snapshots, [[stage]] callers like the text-embed staging)
-    * checkpoints INTO THAT DIRECTORY instead of executor-local blocks —
-    * the posture for multi-hour production runs where losing an executor
-    * must not restart the whole pipeline. One switch, all composites.
-    */
-  val CheckpointDirKey = "spark.graft.checkpointDir"
-
-  /** Materialize `df` lineage-free: reliable `checkpoint` when
-    * [[CheckpointDirKey]] is set in the session conf, executor-local
-    * `localCheckpoint` otherwise (the single-session fast path). Same plan
-    * shape either way — only the snapshot's durability changes.
-    */
-  def stage(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    spark.conf.getOption(CheckpointDirKey).filter(_.nonEmpty) match {
-      case Some(d) =>
-        val sc = spark.sparkContext
-        // setCheckpointDir mints a fresh UUID subdir per call — only
-        // repoint when the current dir isn't already under the configured
-        // root, so repeated stages share one directory. "Under" is a real
-        // ancestor test (same scheme/authority + path-segment prefix), NOT
-        // a substring match: an unrelated dir that merely CONTAINS the
-        // root path as a substring (or a file:/ dir vs an hdfs:// root)
-        // must not suppress the repoint, or the durability the conf
-        // switch promises is silently void.
-        if (!sc.getCheckpointDir.exists(isUnderRoot(_, d, sc.hadoopConfiguration)))
-          sc.setCheckpointDir(d)
-        df.checkpoint(eager = true)
-      case None => df.localCheckpoint(eager = true)
-    }
-  }
-
-  /** true iff `current` is `root` or a descendant of it. Both sides are
-    * QUALIFIED against the Hadoop conf first (a bare local root like
-    * `/tmp/ck` must match the `file:/tmp/ck/<uuid>` dir setCheckpointDir
-    * reports), then compared as URIs: scheme and authority must agree
-    * and the paths must match on whole segments. Any resolution failure
-    * answers false — repointing is the safe direction. */
-  private[operators] def isUnderRoot(current: String, root: String,
-      conf: org.apache.hadoop.conf.Configuration): Boolean =
-    try {
-      def qualify(s: String): java.net.URI = {
-        val p = new org.apache.hadoop.fs.Path(s)
-        val fs = p.getFileSystem(conf)
-        p.makeQualified(fs.getUri, fs.getWorkingDirectory).toUri
-      }
-      val cu = qualify(current)
-      val ru = qualify(root)
-      def norm(s: String): String = Option(s).getOrElse("").stripSuffix("/")
-      Option(cu.getScheme).getOrElse("") == Option(ru.getScheme).getOrElse("") &&
-        Option(cu.getAuthority).getOrElse("") == Option(ru.getAuthority).getOrElse("") && {
-          val cp = norm(cu.getPath)
-          val rp = norm(ru.getPath)
-          cp == rp || cp.startsWith(rp + "/")
-        }
-    } catch { case _: Exception => false }
-
-  /** Release the executor blocks behind a frame returned by the LSH
-    * pipelines or [[clusters]] (checkpoint-backed). The frame must not be
-    * used afterwards. Reliable-checkpoint files (when [[CheckpointDirKey]]
-    * was set) live on disk, not in blocks — those are deleted here too.
-    */
-  def free(result: DataFrame): Unit = {
-    val files = Bridge.checkpointFiles(result)
-    Bridge.unpersistCheckpoint(result)
-    if (files.nonEmpty) {
-      val conf = result.sparkSession.sparkContext.hadoopConfiguration
-      files.foreach { f =>
-        val p = new org.apache.hadoop.fs.Path(f)
-        try p.getFileSystem(conf).delete(p, true)
-        catch { case _: java.io.IOException => () }
-      }
-    }
-  }
 
   /** Exact dedup: keep the minimum id per identical key, shuffling only a
     * 16-byte hash key (plus one exemplar of the key text per partition via
@@ -281,15 +169,6 @@ object Dedup {
   def jaccard(textA: Column, textB: Column, k: Int = 3): Column =
     jaccardOfHashes(shingleHashes(textA, k), shingleHashes(textB, k))
 
-  /** Widen a narrow input (e.g. one small parquet file = one split) to the
-    * cluster parallelism before per-row-heavy projections; already-wide
-    * inputs pass through untouched (no gratuitous shuffle at real scale).
-    */
-  private def widen(df: DataFrame): DataFrame = {
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < par) df.repartition(par) else df
-  }
-
   /** Intra-bucket candidate pairs with hot-bucket bounding. Input must have
     * columns (`id`, bandCol, bucketCol). Buckets of size <= maxBucket emit
     * all C(n,2) intra-bucket pairs; larger buckets (boilerplate content at
@@ -299,7 +178,7 @@ object Dedup {
     * only.
     */
   private[operators] def boundedPairs(
-      scope: CacheScope,
+      scope: Staging.Scope,
       banded0: DataFrame, bandCol: String, bucketCol: String, maxBucket: Int
   ): DataFrame = {
     // bucket stats (size, min id) via a KEYED window over (band, bucket):
@@ -331,10 +210,10 @@ object Dedup {
     * self-join and the verify stage reuse it without recomputation).
     */
   private def minhashPrepared(
-      scope: CacheScope,
+      scope: Staging.Scope,
       df: DataFrame, idCol: String, textCol: String, h: Int, k: Int
   ): DataFrame =
-    scope.persist(widen(df)
+    scope.persist(ScaleOps.spreadCpu(df)
       .select(col(idCol).as("id"), shingleHashes(col(textCol), k).as("sh"))
       .withColumn("sig", minhashFromHashes(col("sh"), h)))
 
@@ -354,9 +233,9 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String,
       bands: Int = 8, rows: Int = 4, k: Int = 3, maxBucket: Int = 64
   ): DataFrame = {
-    val scope = new CacheScope
+    val scope = new Staging.Scope
     val prepared = minhashPrepared(scope, df, idCol, textCol, bands * rows, k)
-    scope.sealResult(
+    scope.seal(
       boundedPairs(scope, bandFrame(prepared, bands, rows), "band", "bucket",
         maxBucket))
   }
@@ -380,7 +259,7 @@ object Dedup {
     * at test scale the single-scan default is faster. Identical output.
     */
   private[graft] def minhashNearDupsPlan(
-      scope: CacheScope,
+      scope: Staging.Scope,
       df: DataFrame, idCol: String, textCol: String, threshold: Double,
       bands: Int, rows: Int, k: Int, maxBucket: Int,
       rescanVerify: Boolean = false
@@ -390,7 +269,8 @@ object Dedup {
       if (rescanVerify) {
         // signatures only — the shingle array is a per-row transient
         // inside the native kernel's input expression, never cached
-        val sigs = scope.persist(widen(df).select(col(idCol).as("id"),
+        val sigs = scope.persist(ScaleOps.spreadCpu(df).select(
+          col(idCol).as("id"),
           minhashFromHashes(shingleHashes(col(textCol), k), h).as("sig")))
         (sigs, null: DataFrame)
       } else {
@@ -412,7 +292,8 @@ object Dedup {
         // the join is a build-side-small hash semi-join
         val candIds = cands.select(col("id_a").as("id"))
           .union(cands.select(col("id_b").as("id"))).distinct()
-        scope.persist(widen(df).select(col(idCol).as("id"), col(textCol))
+        scope.persist(ScaleOps.spreadCpu(df)
+          .select(col(idCol).as("id"), col(textCol))
           .join(candIds, Seq("id"), "left_semi")
           .select(col("id"), shingleHashes(col(textCol), k).as("sh")))
       }
@@ -435,8 +316,8 @@ object Dedup {
       bands: Int = 8, rows: Int = 4, k: Int = 3, maxBucket: Int = 64,
       rescanVerify: Boolean = false
   ): DataFrame = {
-    val scope = new CacheScope
-    scope.sealResult(minhashNearDupsPlan(scope, df, idCol, textCol, threshold,
+    val scope = new Staging.Scope
+    scope.seal(minhashNearDupsPlan(scope, df, idCol, textCol, threshold,
       bands, rows, k, maxBucket, rescanVerify))
   }
 
@@ -456,7 +337,7 @@ object Dedup {
     */
   def minhashIndex(df: DataFrame, idCol: String, textCol: String,
       bands: Int = 8, rows: Int = 4, k: Int = 3): DataFrame =
-    widen(df)
+    ScaleOps.spreadCpu(df)
       .select(col(idCol).as("id"), shingleHashes(col(textCol), k).as("sh"))
       .withColumn("sig", minhashFromHashes(col("sh"), bands * rows))
 
@@ -486,7 +367,7 @@ object Dedup {
       idCol: String, textCol: String, threshold: Double,
       bands: Int = 8, rows: Int = 4, k: Int = 3, maxBucket: Int = 64
   ): DataFrame = {
-    val scope = new CacheScope
+    val scope = new Staging.Scope
     val newPrep = minhashPrepared(scope, newDocs, idCol, textCol,
       bands * rows, k)
     incrementalFrom(scope, index, newPrep, threshold, bands, rows, maxBucket,
@@ -502,7 +383,7 @@ object Dedup {
     * never shuffled).
     */
   private def incrementalFrom(
-      scope: CacheScope, index: DataFrame, newPrep: DataFrame,
+      scope: Staging.Scope, index: DataFrame, newPrep: DataFrame,
       threshold: Double, bands: Int, rows: Int, maxBucket: Int,
       bandFn: (DataFrame, Int, Int) => DataFrame
   ): DataFrame = {
@@ -527,7 +408,7 @@ object Dedup {
       .union(newPrep.select(col("id"), col("sh")))
     val shA = sh.select(col("id").as("id_a"), col("sh").as("__sh_a"))
     val shB = sh.select(col("id").as("id_b"), col("sh").as("__sh_b"))
-    scope.sealResult(cands.join(shA, "id_a").join(shB, "id_b")
+    scope.seal(cands.join(shA, "id_a").join(shB, "id_b")
       .withColumn("jaccard", jaccardOfHashes(col("__sh_a"), col("__sh_b")))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard"))
@@ -562,7 +443,7 @@ object Dedup {
     */
   def minhashIndexMd5(df: DataFrame, idCol: String, textCol: String,
       bands: Int = 8, rows: Int = 4, k: Int = 3): DataFrame =
-    widen(df)
+    ScaleOps.spreadCpu(df)
       .select(col(idCol).as("id"),
         graft.functions.Md5Hashes.md5ShingleHashes(col(textCol), k)
           .as("__h64"))
@@ -597,7 +478,7 @@ object Dedup {
     val h = bands * rows
     def half(x: Column, off: Int): Column =
       conv(substring(x, off, 8), 16, 10).cast("long")
-    widen(df)
+    ScaleOps.spreadCpu(df)
       .select(col(idCol).as("id"),
         transform(shingles(coalesce(col(textCol), lit("")), k),
           s => md5(s.cast("binary"))).as("__hx"))
@@ -622,7 +503,7 @@ object Dedup {
     * multi-referenced — here `__h64` feeds BOTH `sh` and `sig`, so
     * CollapseProject cannot inline the kernel per consumer — and a
     * caller that drops `sh` must do so ABOVE a materialization barrier
-    * ([[stage]] / persist), or column pruning re-enables the inline
+    * ([[Staging.snapshot]] / persist), or column pruning re-enables the inline
     * and the kernel re-runs once per signature position.
     */
   private[graft] def minhashSigMd5Frame(df: DataFrame, textCol: String,
@@ -634,7 +515,7 @@ object Dedup {
       .select(keep ++ md5ShSig(col("__h64"), h): _*)
   }
 
-  private def md5Prepared(scope: CacheScope, df: DataFrame,
+  private def md5Prepared(scope: Staging.Scope, df: DataFrame,
       idCol: String, textCol: String, bands: Int, rows: Int, k: Int): DataFrame =
     scope.persist(minhashIndexMd5(df, idCol, textCol, bands, rows, k))
 
@@ -659,13 +540,13 @@ object Dedup {
   def minhashNearDupsMd5(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, bands: Int = 8, rows: Int = 4, k: Int = 3,
       maxBucket: Int = 64): DataFrame = {
-    val scope = new CacheScope
+    val scope = new Staging.Scope
     val prepared = md5Prepared(scope, df, idCol, textCol, bands, rows, k)
     val cands = boundedPairs(scope, bandFrameMd5(prepared, bands, rows),
       "band", "bucket", maxBucket)
     val shA = prepared.select(col("id").as("id_a"), col("sh").as("__sh_a"))
     val shB = prepared.select(col("id").as("id_b"), col("sh").as("__sh_b"))
-    scope.sealResult(cands.join(shA, "id_a").join(shB, "id_b")
+    scope.seal(cands.join(shA, "id_a").join(shB, "id_b")
       .withColumn("jaccard", jaccardOfHashes(col("__sh_a"), col("__sh_b")))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard"))
@@ -678,7 +559,7 @@ object Dedup {
       idCol: String, textCol: String, threshold: Double,
       bands: Int = 8, rows: Int = 4, k: Int = 3, maxBucket: Int = 64
   ): DataFrame = {
-    val scope = new CacheScope
+    val scope = new Staging.Scope
     val newPrep = md5Prepared(scope, newDocs, idCol, textCol, bands, rows, k)
     incrementalFrom(scope, index, newPrep, threshold, bands, rows, maxBucket,
       bandFrameMd5)
@@ -694,89 +575,38 @@ object Dedup {
     * diameter, which for near-dup clusters (cliques and stars from
     * [[boundedPairs]]) is 1-2, so the default cap is generous.
     *
-    * Every iteration ends in an eager `localCheckpoint`: persist alone
+    * Every iteration ends in an eager [[Staging.snapshot]]: persist alone
     * caches DATA but not LINEAGE — `updated` references `labels` twice,
     * so without truncation the logical plan doubles per iteration and
     * Catalyst re-analyzes a 2^i-leaf plan at iteration i (a driver-side
     * blowup on deep components long before any executor works hard). The
-    * checkpoint cuts each iteration's plan to a constant-size LogicalRDD
-    * leaf and the previous iteration's blocks are released explicitly.
-    * (Local checkpoints trade fault tolerance for speed; a multi-day run
-    * on a real cluster would use reliable `checkpoint(dir)` at the same
-    * plan shape.)
+    * snapshot cuts each iteration's plan to a constant-size LogicalRDD
+    * leaf and the previous iteration's snapshot is released explicitly.
+    * With [[Staging.CheckpointDirKey]] set the snapshots are reliable
+    * checkpoints (same plan shape): superseded ones are deleted from the
+    * directory as the algorithm advances, and the FINAL labels snapshot
+    * backs the returned frame.
     *
     * Returns (id, rep): every endpoint id with its cluster's minimum id.
-    * The result is checkpoint-materialized; release with [[free]].
-    *
-    * `checkpointDir`: when set, iterations use RELIABLE checkpoints into
-    * that directory instead of executor-local ones — the posture for
-    * multi-hour production runs where losing an executor mid-algorithm
-    * must not restart the whole propagation. Same plan shape either way.
-    * Superseded iteration snapshots are deleted from the directory as the
-    * algorithm advances; the FINAL labels snapshot stays (it backs the
-    * returned frame — remove it with the directory when done). The
-    * session's previous checkpoint directory is restored on exit.
+    * The result is snapshot-backed; release with [[Staging.free]].
     */
   def clusters(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
-      maxIter: Int = 10, checkpointDir: Option[String] = None): DataFrame = {
-    val sc = pairs.sparkSession.sparkContext
-    // the explicit argument wins; otherwise the session-wide switch
-    // (spark.graft.checkpointDir) flips this composite with the rest
-    val ckDir = checkpointDir.orElse(
-      pairs.sparkSession.conf.getOption(CheckpointDirKey).filter(_.nonEmpty))
-    // setCheckpointDir is session-global: repoint only when the current
-    // dir isn't already under our root (stage()'s rule — an
-    // unconditional set would mint a fresh UUID subdir per invocation),
-    // remember whether WE moved it, and restore the previous ROOT on
-    // exit. The restore targets the PARENT of the reported dir:
-    // getCheckpointDir returns root/<uuid> (every set mints a new uuid
-    // subdir), so re-setting the reported dir itself would nest
-    // root/<uuidA>/<uuidB> one level deeper per call instead of
-    // restoring. (If none was set before, ours remains — the API cannot
-    // unset it.)
-    val prevCheckpointDir = sc.getCheckpointDir
-    val repointed = ckDir.exists { d =>
-      val need =
-        !sc.getCheckpointDir.exists(isUnderRoot(_, d, sc.hadoopConfiguration))
-      if (need) sc.setCheckpointDir(d)
-      need
-    }
-    def snap(df: DataFrame): DataFrame =
-      if (ckDir.isDefined) df.checkpoint(eager = true)
-      else df.localCheckpoint(eager = true)
-    // release a superseded iteration snapshot: executor blocks for local
-    // checkpoints, the snapshot FILES for reliable ones (rdd.unpersist is
-    // a no-op there and the cleaner's cleanCheckpoints is off by default,
-    // so without explicit deletion disk grows by |labels| per iteration)
-    def releaseSnap(df: DataFrame): Unit =
-      if (ckDir.isDefined) {
-        Bridge.checkpointFiles(df).foreach { f =>
-          try {
-            val p = new org.apache.hadoop.fs.Path(f)
-            p.getFileSystem(sc.hadoopConfiguration).delete(p, true)
-          } catch { case _: Exception => () }
-        }
-      } else Bridge.unpersistCheckpoint(df)
+      maxIter: Int = 10): DataFrame = {
+    val scope = new Staging.Scope
     // both directions from ONE evaluation of the (potentially expensive
     // LSH) pairs plan — a union of two projections would compute it twice
-    val edges = pairs.select(explode(array(
+    val edges = scope.persist(pairs.select(explode(array(
         struct(col(idA).as("src"), col(idB).as("dst")),
         struct(col(idB).as("src"), col(idA).as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .select(col("e.src").as("src"), col("e.dst").as("dst")))
     var labels: DataFrame = null
-    // tracks whether the CURRENT `labels` snapshot was already released
-    // (only the non-convergence path releases before throwing); the catch
-    // clause keys on this, not the exception type — a Spark-internal
-    // IllegalStateException mid-iteration must still release
-    var labelsReleased = false
     try {
       // init folds the FIRST propagation round into the id-discovery
       // aggregation: rep0 = min(self, direct neighbors). Identical to
       // (identity labels + one iteration) but saves a full checkpoint +
       // join + convergence-count round — on near-dup graphs (stars and
       // cliques of diameter 1-2) that is a third to half of all rounds.
-      labels = snap(edges.groupBy(col("src").as("id"))
+      labels = Staging.snapshot(edges.groupBy(col("src").as("id"))
         .agg(min(col("dst")).as("__nmin"))
         .select(col("id"), least(col("id"), col("__nmin")).as("rep")))
       var it = 0
@@ -787,38 +617,29 @@ object Dedup {
           .groupBy(col("src").as("id"))
           .agg(min("nrep").as("nmin"))
         // carry the previous rep through the update so the convergence
-        // check is a filter over the checkpointed frame, not another join
-        val updated = snap(labels.join(neighborMin, Seq("id"), "left")
-          .select(col("id"),
+        // check is a filter over the snapshot, not another join
+        val updated = Staging.snapshot(
+          labels.join(neighborMin, Seq("id"), "left").select(col("id"),
             least(col("rep"), coalesce(col("nmin"), col("rep"))).as("rep"),
             col("rep").as("__old")))
         val changed = updated.filter(col("rep") =!= col("__old")).count()
-        releaseSnap(labels)
+        Staging.free(labels)
         labels = updated.drop("__old")
         converged = changed == 0
         it += 1
       }
-      if (!converged) {
-        releaseSnap(labels)
-        labelsReleased = true
+      if (!converged)
         throw new IllegalStateException(
           s"duplicate clustering did not converge in $maxIter iterations " +
             "(component diameter exceeds maxIter); raise maxIter")
-      }
       labels
     } catch {
-      // a failed iteration must not strand the current snapshot (the
-      // edges unpersist and dir restore run in the finally below)
+      // neither non-convergence nor a failed iteration may strand the
+      // current snapshot (the edges are released in the finally below)
       case e: Throwable =>
-        if (labels != null && !labelsReleased) releaseSnap(labels)
+        if (labels != null) Staging.free(labels)
         throw e
-    } finally {
-      edges.unpersist()
-      if (repointed) prevCheckpointDir.foreach { d =>
-        val parent = new org.apache.hadoop.fs.Path(d).getParent
-        if (parent != null) sc.setCheckpointDir(parent.toString)
-      }
-    }
+    } finally scope.release()
   }
 
   /** Seeded xxhash64 of each whitespace token — the once-per-row input to
@@ -859,15 +680,15 @@ object Dedup {
   def simhashCandidates(
       df: DataFrame, idCol: String, textCol: String, maxBucket: Int = 64
   ): DataFrame = {
-    val scope = new CacheScope
-    scope.sealResult(simhashCandidatesPlan(scope, df, idCol, textCol, maxBucket))
+    val scope = new Staging.Scope
+    scope.seal(simhashCandidatesPlan(scope, df, idCol, textCol, maxBucket))
   }
 
   /** Lazy plan form of [[simhashCandidates]] (see [[minhashNearDupsPlan]]
     * for the contract).
     */
   private[graft] def simhashCandidatesPlan(
-      scope: CacheScope,
+      scope: Staging.Scope,
       df: DataFrame, idCol: String, textCol: String, maxBucket: Int
   ): DataFrame =
     simhashPairsFrom(scope, df, idCol, tokenHashes(col(textCol)), maxBucket)
@@ -881,10 +702,10 @@ object Dedup {
     * by construction.
     */
   private def simhashPairsFrom(
-      scope: CacheScope, df: DataFrame, idCol: String,
+      scope: Staging.Scope, df: DataFrame, idCol: String,
       tokenHashesExpr: Column, maxBucket: Int
   ): DataFrame =
-    hammingPairsFromSigs(scope, widen(df)
+    hammingPairsFromSigs(scope, ScaleOps.spreadCpu(df)
       .select(col(idCol).as("id"), tokenHashesExpr.as("__th"))
       .select(col("id"), simhashFromHashes(col("__th")).as("sig")), maxBucket)
 
@@ -898,7 +719,7 @@ object Dedup {
     * the perceptual image-hash near-dup ([[Multimodal.imageDHash]]).
     */
   private[operators] def hammingPairsFromSigs(
-      scope: CacheScope, sigs0: DataFrame, maxBucket: Int
+      scope: Staging.Scope, sigs0: DataFrame, maxBucket: Int
   ): DataFrame = {
     val prepared = scope.persist(sigs0)
     val banded = prepared
@@ -923,9 +744,9 @@ object Dedup {
     */
   def hammingCandidates(df: DataFrame, idCol: String, sigCol: String,
       maxBucket: Int = 64): DataFrame = {
-    val scope = new CacheScope
-    scope.sealResult(hammingPairsFromSigs(scope,
-      widen(df).select(col(idCol).as("id"), col(sigCol).as("sig")),
+    val scope = new Staging.Scope
+    scope.seal(hammingPairsFromSigs(scope,
+      ScaleOps.spreadCpu(df).select(col(idCol).as("id"), col(sigCol).as("sig")),
       maxBucket))
   }
 
@@ -955,8 +776,8 @@ object Dedup {
     */
   def simhashCandidatesMd5(df: DataFrame, idCol: String, textCol: String,
       maxBucket: Int = 64): DataFrame = {
-    val scope = new CacheScope
-    scope.sealResult(simhashCandidatesMd5Plan(scope, df, idCol, textCol,
+    val scope = new Staging.Scope
+    scope.seal(simhashCandidatesMd5Plan(scope, df, idCol, textCol,
       maxBucket))
   }
 
@@ -964,7 +785,7 @@ object Dedup {
     * [[minhashNearDupsPlan]] for the contract).
     */
   private[graft] def simhashCandidatesMd5Plan(
-      scope: CacheScope,
+      scope: Staging.Scope,
       df: DataFrame, idCol: String, textCol: String, maxBucket: Int
   ): DataFrame =
     // SINCE ROUND 12 this is literally the production pipeline with the
@@ -992,7 +813,7 @@ object Dedup {
     * Same token hash + vote kernel as [[simhashCandidatesMd5]].
     */
   def simhashSigsMd5(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    widen(df).select(col(idCol).as("id"),
+    ScaleOps.spreadCpu(df).select(col(idCol).as("id"),
       simhashFromHashes(transform(
         split(trim(lower(coalesce(col(textCol), lit("")))), "\\s+"),
         t => graft.functions.Md5Hashes.md5Hash64(t))).as("sig"))
@@ -1014,8 +835,8 @@ object Dedup {
       threshold: Double, planesPerTable: Int = 4, tables: Int = 8,
       maxBucket: Int = 256, seed: Long = 42L
   ): DataFrame = {
-    val scope = new CacheScope
-    scope.sealResult(cosineNearDupsPlan(scope, df, idCol, vecCol, dim,
+    val scope = new Staging.Scope
+    scope.seal(cosineNearDupsPlan(scope, df, idCol, vecCol, dim,
       threshold, planesPerTable, tables, maxBucket, seed))
   }
 
@@ -1024,14 +845,15 @@ object Dedup {
     * never probed from the data.
     */
   private[graft] def cosineNearDupsPlan(
-      scope: CacheScope,
+      scope: Staging.Scope,
       df: DataFrame, idCol: String, vecCol: String, dim: Int,
       threshold: Double, planesPerTable: Int, tables: Int,
       maxBucket: Int, seed: Long
   ): DataFrame = {
     val planes = graft.functions.LshExpressions.planeMatrix(
       dim, planesPerTable * tables, seed)
-    val prepared = widen(df).select(col(idCol).as("id"), col(vecCol).as("vec"))
+    val prepared = ScaleOps.spreadCpu(df)
+      .select(col(idCol).as("id"), col(vecCol).as("vec"))
     // all `tables` bucket codes from ONE native codegen'd pass over the
     // vector (see [[graft.functions.HyperplaneBuckets]]) — bit-identical
     // to the transform/zip_with/aggregate formulation it replaced, minus
@@ -1079,8 +901,8 @@ object Dedup {
       iters: Int = 5, maxSample: Int = 2000,
       sampleOrderCol: Option[String] = None
   ): DataFrame = {
-    val scope = new CacheScope
-    scope.sealResult(semanticNearDupsPlan(scope, df, idCol, vecCol, k,
+    val scope = new Staging.Scope
+    scope.seal(semanticNearDupsPlan(scope, df, idCol, vecCol, k,
       threshold, maxCell, iters, maxSample, sampleOrderCol))
   }
 
@@ -1093,7 +915,7 @@ object Dedup {
     * centroids.
     */
   private[graft] def semanticNearDupsPlan(
-      scope: CacheScope,
+      scope: Staging.Scope,
       df: DataFrame, idCol: String, vecCol: String,
       k: Int, threshold: Double, maxCell: Int, iters: Int, maxSample: Int,
       sampleOrderCol: Option[String] = None
@@ -1111,7 +933,8 @@ object Dedup {
     val statsW = Window.partitionBy("cell")
     val celled = scope.persist(
       Similarity.assignCells(
-          widen(df).select(col(idCol).as("id"), col(vecCol).as("vec")),
+          ScaleOps.spreadCpu(df)
+            .select(col(idCol).as("id"), col(vecCol).as("vec")),
           "vec", centroids)
         // per-vector norm rides the persisted frame: the within-cell
         // verify then pays one dot per pair, not three (same exact

@@ -132,7 +132,7 @@ object Dsir {
       alpha: Double): DataFrame = {
     require(buckets > 0, s"buckets must be positive, got $buckets")
     require(alpha > 0, s"alpha must be positive, got $alpha")
-    val fc = Dedup.stage(counts)
+    val fc = Staging.snapshot(counts)
     val bt = fc.groupBy("b").agg(
       sum(when(col("tgt"), col("c")).otherwise(lit(0L))).as("ct"),
       sum(when(!col("tgt"), col("c")).otherwise(lit(0L))).as("cr"))

@@ -198,9 +198,9 @@ object ScaleOps {
     * straddle a range boundary and make the within/across-partition
     * ordering disagree.
     *
-    * The ranged frame is STAGED (eager `localCheckpoint` into executor
-    * blocks) before the two phases read it, for two reasons that both
-    * bite at scale:
+    * The ranged frame is STAGED (an eager executor-local
+    * [[Staging.snapshot]]) before the two phases read it, for two
+    * reasons that both bite at scale:
     *   - the window pass and the offsets pass would otherwise each
     *     recompute the ENTIRE upstream plan (in the curation composite
     *     that upstream is the full quality->langid->dedup pipeline — two
@@ -211,12 +211,13 @@ object ScaleOps {
     *     materialization makes the partitioning the two phases agree on
     *     physical, not coincidental.
     *
-    * Deliberately NOT routed through [[Dedup.stage]]'s reliable-checkpoint
-    * switch: the staged frame is internal to this call, so nothing could
-    * ever `free()` reliable files — a long-lived session would leak one
-    * snapshot per invocation. Executor blocks are reclaimed by the
-    * ContextCleaner (and `unpersist` sweeps in Bench/Verify); losing an
-    * executor mid-query fails the query, which simply retries.
+    * The snapshot is `local = true`, deliberately outside the
+    * reliable-checkpoint switch: the staged frame is internal to this
+    * call, so nothing could ever [[Staging.free]] reliable files — a
+    * long-lived session would leak one snapshot per invocation. Executor
+    * blocks are reclaimed by the ContextCleaner (and
+    * `graft.GraftSession.clearCaches`); losing an executor mid-query
+    * fails the query, which simply retries.
     *
     * The staged frame carries ALL of `df`'s columns (the result contract
     * is input-plus-`outCol`, so every column must flow through the window
@@ -235,9 +236,8 @@ object ScaleOps {
       .filter(df.columns.contains)).distinct
     require(reserved.isEmpty,
       s"input must not already contain ${reserved.mkString(", ")}")
-    val ranged = df.repartitionByRange(col(orderCol))
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(eager = true)
+    val ranged = Staging.snapshot(df.repartitionByRange(col(orderCol))
+      .withColumn("__pid", spark_partition_id()), local = true)
     val w = Window.partitionBy("__pid").orderBy(orderCol)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val local = ranged.withColumn("__run", sum(col(valueCol)).over(w))

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Staging
 
 /** One-row differential certificates for the production xxhash64 pipelines
   * (the q_*_xx rows).
@@ -192,21 +193,20 @@ object Differential {
     // simhash kernel would otherwise run once per side), and `all` —
     // the exhaustive nested-loop scan, the certificate's dominant cost
     // — feeds both the n_close_pairs count and the __nm recount join
-    // (unpersisted, the full O(n^2) pass executed twice). `persist`,
-    // NOT the eager stage(): certificate construction must stay
+    // (unpersisted, the full O(n^2) pass executed twice).
+    // `Staging.persist`, NOT the eager `Staging.snapshot`: certificate
+    // construction must stay
     // job-free so the scale guard raises at EXECUTION (the pinned
     // guard contract in DifferentialSpec). The cached blocks are
     // certificate-bounded by the guard cap and dropped with the
     // session's cache (there is no post-result seal point in a
     // one-row certificate to unpersist from).
-    val gsigs = guardInput(sigs, g)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val gsigs = Staging.persist(guardInput(sigs, g))
     val a = gsigs.select(col("id").as("id_a"), col("sig").as("__sa"))
     val b = gsigs.select(col("id").as("id_b"), col("sig").as("__sb"))
-    val all = a.join(b, col("id_a") < col("id_b") &&
+    val all = Staging.persist(a.join(b, col("id_a") < col("id_b") &&
         bit_count(col("__sa").bitwiseXOR(col("__sb"))) <= maxHamming)
-      .select("id_a", "id_b")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select("id_a", "id_b"))
     val banded = bandedPairs.select("id_a", "id_b").distinct()
     n(all, "n_close_pairs")
       .crossJoin(n(banded, "__nb"))

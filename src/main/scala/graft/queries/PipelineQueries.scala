@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.Exact._
-import graft.operators.{AsOfJoin, Dedup, Similarity, TextAnalysis}
+import graft.operators.{AsOfJoin, Dedup, Similarity, Staging, TextAnalysis}
 
 /** The [ext] LLM-data-pipeline and event-stream surface: text analysis,
   * deduplication, similarity search, multimodal plumbing, event windows,
@@ -630,7 +630,7 @@ object PipelineQueries {
         // staged (r20 optimization round): the md5-chain planted corpus
         // feeds the pair table, the exactRepeats truth AND the
         // detection chain — as a bare plan it re-synthesized per branch
-        val corpus = graft.operators.Dedup.stage(
+        val corpus = Staging.snapshot(
           Tables.documents(s, dir).select("doc_id")
           .selectExpr("doc_id", "doc_id div 4 AS g",
             "CAST(doc_id % 4 AS INT) AS role")
@@ -741,7 +741,7 @@ object PipelineQueries {
         // feeds FOUR branches (pair table, exactRepeats truth, the
         // scrub composite, and through it the residual census) — as a
         // bare plan the synthesis CTE re-executed per branch
-        val corpus = graft.operators.Dedup.stage(
+        val corpus = Staging.snapshot(
           Tables.documents(s, dir).select("doc_id")
           .selectExpr("doc_id", "doc_id div 2 AS g",
             "CAST(doc_id % 2 AS INT) AS role")
@@ -1282,7 +1282,7 @@ object PipelineQueries {
         // build and the anti-join left side — stage it once or the whole
         // subtree re-computes per consumer (the minhash stage's persist
         // only covers the index built FROM it)
-        val exact = Dedup.stage(Dedup.exactKeepBest(english, "text",
+        val exact = Staging.snapshot(Dedup.exactKeepBest(english, "text",
           Seq(col("doc_id").asc)))
         val pairs = Dedup.minhashNearDupsMd5(exact, "doc_id", "text",
           threshold = 0.5)
@@ -1310,12 +1310,12 @@ object PipelineQueries {
         // bigram features: this corpus has a ~31-token vocabulary, so
         // unigram bags overlap for EVERY pair (median cosine 0.6);
         // bigrams re-expand the space (median 0.05, near-dups > 0.9).
-        // The embedding stage materializes ONCE (eager checkpoint — local
+        // The embedding stage materializes ONCE (Staging.snapshot — local
         // blocks, or reliable files when spark.graft.checkpointDir is
         // set) before the LSH pipeline fans out into its self-join
         // branches — concurrent cache-fill races would otherwise
         // recompute the two-shuffle embedding per branch
-        val emb = Dedup.stage(graft.operators.TextAnalysis.hashEmbedMd5(
+        val emb = Staging.snapshot(graft.operators.TextAnalysis.hashEmbedMd5(
           Tables.documents(s, dir), "doc_id", "text", dim = 256, n = 2))
         Dedup.cosineNearDups(emb, "doc_id", "vec", dim = 256,
           threshold = 0.6)
@@ -1336,7 +1336,7 @@ object PipelineQueries {
     // shared plan end to end).
     QueryDef("q_embed_neardup_xx",
       (s, dir) => {
-        val emb = Dedup.stage(graft.operators.TextAnalysis.hashEmbed(
+        val emb = Staging.snapshot(graft.operators.TextAnalysis.hashEmbed(
           Tables.documents(s, dir), "doc_id", "text", dim = 256, n = 2))
         Dedup.cosineNearDups(emb, "doc_id", "vec", dim = 256,
           threshold = 0.6)
@@ -1348,9 +1348,9 @@ object PipelineQueries {
         threshold = 0.6), minTokens = 2)),
       verifyFn = Some((s, dir) => {
         val docs = Tables.documents(s, dir)
-        val embXx = Dedup.stage(graft.operators.TextAnalysis.hashEmbed(
+        val embXx = Staging.snapshot(graft.operators.TextAnalysis.hashEmbed(
           docs, "doc_id", "text", dim = 256, n = 2))
-        val embMd5 = Dedup.stage(graft.operators.TextAnalysis.hashEmbedMd5(
+        val embMd5 = Staging.snapshot(graft.operators.TextAnalysis.hashEmbedMd5(
           docs, "doc_id", "text", dim = 256, n = 2))
         Differential.pairCertificate(docs, "doc_id", "text",
           Dedup.cosineNearDups(embXx, "doc_id", "vec", dim = 256,
@@ -1763,13 +1763,14 @@ object PipelineQueries {
     QueryDef("q_sketch_distinct",
       (s, dir) => {
         val ev = Tables.events(s, dir)
-        // eager checkpoint: both output levels (per-type estimates and
-        // the ALL rollup) read the MATERIALIZED sketches — without it the
-        // union's two branches each rescan events and rebuild every
-        // sketch; the checkpointed frame is sketch-sized (KBs per type)
-        val perType = ev.groupBy("event_type")
-          .agg(hll_sketch_agg(col("user_id")).as("sk"))
-          .localCheckpoint(true)
+        // eager executor-local snapshot: both output levels (per-type
+        // estimates and the ALL rollup) read the MATERIALIZED sketches —
+        // without it the union's two branches each rescan events and
+        // rebuild every sketch; the snapshot is sketch-sized (KBs per
+        // type) and internal to this plan, so no caller could free a
+        // reliable one
+        val perType = Staging.snapshot(ev.groupBy("event_type")
+          .agg(hll_sketch_agg(col("user_id")).as("sk")), local = true)
         val exact = ev.groupBy("event_type")
           .agg(countDistinct(col("user_id")).as("n_exact"))
           .unionByName(ev.agg(lit("ALL").as("event_type"),
@@ -2415,7 +2416,7 @@ object PipelineQueries {
         // the spread sits INSIDE the eager stage (downstream reuse reads
         // the snapshot): the langid argmax kernel + tokenize + explode
         // ran serialized behind the 1-split scan (r21)
-        val toks = Dedup.stage(
+        val toks = Staging.snapshot(
           graft.operators.LangIdTrained.withLangPinned(
               graft.operators.ScaleOps.spreadCpu(
                 Tables.documents(s, dir).select(col("doc_id"), col("text"))),
@@ -3840,7 +3841,7 @@ object PipelineQueries {
         // consumer. Eager staging is consistent with this query's
         // existing construction shape (QC.train already collects its
         // sample at build time, the semanticNearDupsPlan precedent).
-        val prepared = graft.operators.Dedup.stage(QC.withFeatures(
+        val prepared = Staging.snapshot(QC.withFeatures(
           TA.gopherRules(Tables.documents(s, dir), col("text"), cfg), "text")
           .select(col("doc_id"), col("text"), col("feats"),
             when(col("quality_pass"), 1.0d).otherwise(0.0d).as("y")))

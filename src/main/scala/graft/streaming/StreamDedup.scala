@@ -82,11 +82,11 @@ object StreamDedup {
         "through an eager checkpoint); live streams use the xxhash64 kernels")
     val sigd =
       if (md5Mode)
-        // the stage() barrier materializes (doc_id, ts, sh, sig) ONCE:
+        // the Staging.snapshot barrier materializes (doc_id, ts, sh, sig) ONCE:
         // below it, `sh` keeps the md5-half arrays multi-referenced so
         // the conversions aren't inlined per position; above it, dropping
         // sh and fanning out per band can't re-trigger any recompute
-        graft.operators.Dedup.stage(
+        graft.operators.Staging.snapshot(
           graft.operators.Dedup.minhashSigMd5Frame(
             docs.select(col(idCol).cast("long").as("doc_id"),
               col(tsCol).as("ts"), col(textCol)),

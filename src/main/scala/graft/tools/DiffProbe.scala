@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.GraftSession
-import graft.operators.{Dedup, TextAnalysis}
+import graft.operators.{Dedup, Staging, TextAnalysis}
 import graft.queries.{Differential, Tables}
 
 /** Prints the measured xx-vs-md5 agreement stats behind the q_*_xx
@@ -172,9 +172,9 @@ object DiffProbe {
       .show(false)
 
     println("== embed")
-    val embXx = Dedup.stage(TextAnalysis.hashEmbed(
+    val embXx = Staging.snapshot(TextAnalysis.hashEmbed(
       docs, "doc_id", "text", dim = 256, n = 2))
-    val embMd5 = Dedup.stage(TextAnalysis.hashEmbedMd5(
+    val embMd5 = Staging.snapshot(TextAnalysis.hashEmbedMd5(
       docs, "doc_id", "text", dim = 256, n = 2))
     Differential.pairStats(docs, "doc_id", "text",
       Dedup.cosineNearDups(embXx, "doc_id", "vec", dim = 256, threshold = 0.6),

@@ -8,7 +8,7 @@ package graft.tools
   *   sbt "runMain graft.tools.PlanAudit [sfDir] [query ...]"
   *
   * Note: auditing is not always plan-only. Queries through eager
-  * staging (`Dedup.stage` / `ScaleOps.prefixSum`'s localCheckpoint —
+  * staging (`Staging.snapshot`, also inside `ScaleOps.prefixSum` —
   * e.g. q_seq_pack, q_curation_pipeline, q_text_embed_neardup,
   * q_text_topterms) EXECUTE their staged upstream at plan-construction
   * time, and the executed plan then shows a LogicalRDD scan where the
@@ -34,8 +34,8 @@ object PlanAudit {
     // plan is just a LogicalRDD scan), so the audit substitutes the lazy
     // *Plan builders — the dataflow that actually runs at scale.
     def lazyDedup(n: String): Option[org.apache.spark.sql.DataFrame] = {
-      import graft.operators.Dedup
-      lazy val scope = new Dedup.CacheScope
+      import graft.operators.{Dedup, Staging}
+      lazy val scope = new Staging.Scope
       lazy val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       lazy val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       n match {

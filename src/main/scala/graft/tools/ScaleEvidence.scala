@@ -23,7 +23,7 @@ object ScaleEvidence {
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     docs.count(); emb.count() // warm up
 
-    import graft.operators.{Dedup, Similarity, TextAnalysis}
+    import graft.operators.{Dedup, Similarity, Staging, TextAnalysis}
     // FIXED 500-doc delta for the incremental path (ids remapped far away
     // from both the base and generated stores): the claim to prove is
     // near-flat time in the STORE size when only the store grows — the
@@ -134,7 +134,7 @@ object ScaleEvidence {
       // once, then banded hyperplane LSH with the maxBucket star-cap
       "text_embed_cosine" -> (() =>
         Dedup.cosineNearDups(
-          Dedup.stage(TextAnalysis.hashEmbed(docs, "doc_id", "text",
+          Staging.snapshot(TextAnalysis.hashEmbed(docs, "doc_id", "text",
             dim = 256, n = 2)),
           "doc_id", "vec", dim = 256, threshold = 0.6).count()),
       // the full five-stage curation composite (q_curation_pipeline's
@@ -405,9 +405,7 @@ object ScaleEvidence {
     val rows = Array.fill(ops2.size)(0L)
     val shuf = Array.fill(ops2.size)(0L)
     for (_ <- 1 to 3; i <- ops2.indices) {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      graft.GraftSession.clearCaches(spark)
       Thread.sleep(200) // settle the listener bus before the baseline read
       val s0 = shuffleBytes.get()
       val t0 = System.nanoTime()

@@ -12,7 +12,8 @@ import graft.core.SparkTestSession
   * under are pinned on the session [[GraftSession]] returns, and no other
   * source file may build a session of its own. Likewise one commit
   * protocol: only [[graft.sources.FileSink]] renames task output or ships
-  * the Hadoop configuration to tasks. */
+  * the Hadoop configuration to tasks; and one staging module: only
+  * [[graft.operators.Staging]] persists, caches or checkpoints. */
 class GraftSessionSpec extends AnyFunSuite {
 
   test("GraftSession carries the bench settings") {
@@ -34,9 +35,10 @@ class GraftSessionSpec extends AnyFunSuite {
   }
 
   /** The `.scala` files under `roots`, other than `owner`, whose text
-    * contains any of `needles`. */
+    * contains any of `needles` once every `allowed` spelling is removed
+    * from it. */
   private def scalaFilesContaining(roots: Seq[String], owner: String,
-      needles: Seq[String]): Seq[Path] = {
+      needles: Seq[String], allowed: Seq[String] = Nil): Seq[Path] = {
     val dirs = roots.map(Paths.get(_))
     dirs.foreach(r => assert(Files.isDirectory(r), s"missing $r"))
     dirs.flatMap { r =>
@@ -44,7 +46,8 @@ class GraftSessionSpec extends AnyFunSuite {
       try walk.iterator.asScala.toList finally walk.close()
     }.filter { p: Path =>
       p.toString.endsWith(".scala") && p.getFileName.toString != owner && {
-        val text = new String(Files.readAllBytes(p), "UTF-8")
+        val text = allowed.foldLeft(
+          new String(Files.readAllBytes(p), "UTF-8"))(_.replace(_, ""))
         needles.exists(text.contains)
       }
     }
@@ -70,5 +73,18 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       "commit files through graft.sources.FileSink, not a copy of its " +
         s"protocol: ${offenders.mkString(", ")}")
+  }
+
+  test("Staging is the only place the main sources persist or checkpoint") {
+    // Spark's own calls; a Staging.Scope's `scope.persist(` and
+    // `Staging.persist(` are the module's API, not copies of it
+    val needles = Seq(".persist(", ".cache()", ".checkpoint(",
+      "localCheckpoint(", "StorageLevel")
+    val offenders = scalaFilesContaining(Seq("src/main/scala"),
+      "Staging.scala", needles,
+      allowed = Seq("scope.persist(", "Staging.persist("))
+    assert(offenders.isEmpty,
+      "stage through graft.operators.Staging, not a persist or checkpoint " +
+        s"of your own: ${offenders.mkString(", ")}")
   }
 }

@@ -12,7 +12,9 @@ import graft.core.SparkTestSession
   *  - `clusters` truncates iteration lineage (constant-size plans however
   *    deep the component — the round-2 finding was a plan that doubled
   *    per iteration);
-  *  - the lazy `*Plan` builders run NO job at construction time.
+  *  - the lazy `*Plan` functions run NO job at construction time;
+  *  - snapshots no caller can free stay executor-local under the
+  *    reliable-checkpoint switch.
   */
 class DedupLifecycleSpec extends AnyFunSuite {
 
@@ -45,7 +47,7 @@ class DedupLifecycleSpec extends AnyFunSuite {
       val before = spark.sparkContext.getPersistentRDDs.size
       assert(before <= 1, s"$name stranded $before persisted RDDs")
       // ...and free() releases it
-      Dedup.free(result)
+      Staging.free(result)
       assert(spark.sparkContext.getPersistentRDDs.isEmpty,
         s"$name: free() did not release the result blocks")
     }
@@ -59,7 +61,7 @@ class DedupLifecycleSpec extends AnyFunSuite {
     assert(spark.sharedState.cacheManager.isEmpty, "clusters left cached plans")
     assert(spark.sparkContext.getPersistentRDDs.size <= 1,
       "clusters stranded intermediate blocks")
-    Dedup.free(labels)
+    Staging.free(labels)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
 
@@ -72,7 +74,7 @@ class DedupLifecycleSpec extends AnyFunSuite {
     def planSize(pairs: Seq[(Long, Long)]): Int = {
       val labels = Dedup.clusters(pairs.toDF("id_a", "id_b"), maxIter = 20)
       val n = labels.queryExecution.analyzed.collect { case p => p }.size
-      Dedup.free(labels)
+      Staging.free(labels)
       n
     }
     val deep = planSize((0L until 15L).map(i => (i, i + 1)))
@@ -89,26 +91,68 @@ class DedupLifecycleSpec extends AnyFunSuite {
     assert(got == (0L to 15L).map(_ -> 0L).toMap)
   }
 
+  /** `rdd-*` snapshot directories anywhere under `root`. */
+  private def rddDirs(root: java.io.File): Int = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (!f.exists) Seq.empty
+      else Option(f.listFiles).map(_.toSeq).getOrElse(Seq.empty)
+        .flatMap(c => c +: walk(c))
+    walk(root).count(f => f.isDirectory && f.getName.startsWith("rdd-"))
+  }
+
   test("clusters with a reliable checkpoint dir yields identical labels " +
       "and deletes superseded snapshots") {
     val ckptDir = SparkTestSession.tmpPath("clusters_ckpt")
     val dirFile = new java.io.File(ckptDir)
-    def rddDirs(): Int = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (!f.exists) Seq.empty
-        else Option(f.listFiles).map(_.toSeq).getOrElse(Seq.empty)
-          .flatMap(c => c +: walk(c))
-      walk(dirFile).count(f => f.isDirectory && f.getName.startsWith("rdd-"))
-    }
     org.apache.commons.io.FileUtils.deleteQuietly(dirFile)
     val pairs = (0L until 10L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val got = Dedup.clusters(pairs, maxIter = 15,
-      checkpointDir = Some(ckptDir))
+    spark.conf.set(Staging.CheckpointDirKey, ckptDir)
+    val got = try Dedup.clusters(pairs, maxIter = 15)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    finally spark.conf.unset(Staging.CheckpointDirKey)
     assert(got == (0L to 10L).map(_ -> 0L).toMap)
     // ~11 iterations ran; only the FINAL labels snapshot may remain
-    assert(rddDirs() <= 1,
-      s"reliable-mode iteration snapshots leaked: ${rddDirs()} rdd dirs")
+    assert(rddDirs(dirFile) <= 1,
+      s"reliable-mode iteration snapshots leaked: ${rddDirs(dirFile)} rdd dirs")
+  }
+
+  test("snapshots internal to a lazy plan stay executor-local under " +
+      "spark.graft.checkpointDir: prefixSum and q_sketch_distinct") {
+    val ckptDir = SparkTestSession.tmpPath("local_only_ckpt")
+    val dirFile = new java.io.File(ckptDir)
+    org.apache.commons.io.FileUtils.deleteQuietly(dirFile)
+    val vals = (0L until 200L).map(i => (i, i % 7)).toDF("id", "v")
+    spark.conf.set(Staging.CheckpointDirKey, ckptDir)
+    try {
+      assert(ScaleOps.prefixSum(vals, "id", "v").count() == 200)
+      assert(graft.SparkEntry.queries("q_sketch_distinct")(spark, dir)
+        .count() > 0)
+    } finally spark.conf.unset(Staging.CheckpointDirKey)
+    // no caller can free a snapshot inside these plans: reliable files
+    // there would outlive every query
+    assert(rddDirs(dirFile) == 0,
+      s"internal snapshots wrote ${rddDirs(dirFile)} rdd dirs under $ckptDir")
+  }
+
+  test("scrubComposite releases its walk and chunk-span frames at the cut, " +
+      "also when the cut fails") {
+    clearAll()
+    val out = Corpus.scrubComposite(docs, "doc_id", "text")
+    // the one cached plan left is maskRepeatedSpans' session-owned token
+    // frame, which the caller's action fills (`numCachedEntries` is
+    // sql-private in Scala, public in the bytecode)
+    val cm = spark.sharedState.cacheManager
+    assert(cm.getClass.getMethod("numCachedEntries").invoke(cm) == 1,
+      "scrubComposite left its walk or chunk-span frames cached")
+    assert(out.count() > 0)
+    clearAll()
+    // a checkpoint dir on a file system that does not exist fails the
+    // cut's snapshot after the walk and chunk spans are persisted
+    spark.conf.set(Staging.CheckpointDirKey, "nosuchfs://nowhere/ck")
+    try intercept[Exception](Corpus.scrubComposite(docs, "doc_id", "text"))
+    finally spark.conf.unset(Staging.CheckpointDirKey)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "a failed cut stranded the walk or chunk-span frames")
   }
 
   test("spark.graft.checkpointDir flips every composite to reliable " +
@@ -123,9 +167,9 @@ class DedupLifecycleSpec extends AnyFunSuite {
       threshold = 0.5)
     val localSem = Dedup.semanticNearDups(emb, "vec_id", "embedding", k = 4)
     val (wantMinhash, wantSem) = (pairsOf(localMinhash), pairsOf(localSem))
-    Dedup.free(localMinhash); Dedup.free(localSem)
+    Staging.free(localMinhash); Staging.free(localSem)
     assert(!dirFile.exists, "local mode must not touch the checkpoint dir")
-    spark.conf.set(Dedup.CheckpointDirKey, ckptDir)
+    spark.conf.set(Staging.CheckpointDirKey, ckptDir)
     try {
       val relMinhash = Dedup.minhashNearDups(docs, "doc_id", "text",
         threshold = 0.5)
@@ -139,13 +183,13 @@ class DedupLifecycleSpec extends AnyFunSuite {
       assert(files.nonEmpty && files.forall(_.contains("scope_ckpt")),
         s"expected reliable checkpoint files under $ckptDir, got $files")
       // free() must delete the reliable snapshot, not just drop blocks
-      Dedup.free(relMinhash); Dedup.free(relSem)
+      Staging.free(relMinhash); Staging.free(relSem)
       val conf = spark.sparkContext.hadoopConfiguration
       files.foreach { f =>
         val p = new org.apache.hadoop.fs.Path(f)
         assert(!p.getFileSystem(conf).exists(p), s"free() leaked $f")
       }
-    } finally spark.conf.unset(Dedup.CheckpointDirKey)
+    } finally spark.conf.unset(Staging.CheckpointDirKey)
   }
 
   test("rescanVerify (memory-lean) variant emits exactly the default pairs") {
@@ -175,7 +219,7 @@ class DedupLifecycleSpec extends AnyFunSuite {
     // footer-reading job, which is input setup, not plan construction
     val (d, e) = (docs, emb)
     d.schema; e.schema
-    val scope = new Dedup.CacheScope
+    val scope = new Staging.Scope
     val ((cosine, minhash), jobs) = SparkTestSession.jobsStartedBy {
       (Dedup.cosineNearDupsPlan(scope, e, "vec_id", "embedding",
         dim = 64, threshold = 0.4, planesPerTable = 4, tables = 8,

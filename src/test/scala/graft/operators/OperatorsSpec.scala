@@ -770,14 +770,14 @@ class OperatorsSpec extends AnyFunSuite {
   test("checkpoint-root ancestor test: real prefix semantics, not substring") {
     val conf = spark.sparkContext.hadoopConfiguration
     // a bare local root matches the file:-qualified dir Spark reports
-    assert(Dedup.isUnderRoot("file:/tmp/ck/uuid-1", "/tmp/ck", conf))
-    assert(Dedup.isUnderRoot("/tmp/ck/uuid-1", "/tmp/ck", conf))
-    assert(Dedup.isUnderRoot("/tmp/ck", "/tmp/ck", conf))
+    assert(Staging.isUnderRoot("file:/tmp/ck/uuid-1", "/tmp/ck", conf))
+    assert(Staging.isUnderRoot("/tmp/ck/uuid-1", "/tmp/ck", conf))
+    assert(Staging.isUnderRoot("/tmp/ck", "/tmp/ck", conf))
     // substring false-positives must NOT suppress the repoint
-    assert(!Dedup.isUnderRoot("file:/tmp/x/ck-old/uuid", "/tmp/ck", conf))
-    assert(!Dedup.isUnderRoot("file:/other/tmp/ck/uuid", "/tmp/ck", conf))
+    assert(!Staging.isUnderRoot("file:/tmp/x/ck-old/uuid", "/tmp/ck", conf))
+    assert(!Staging.isUnderRoot("file:/other/tmp/ck/uuid", "/tmp/ck", conf))
     // scheme/authority mismatches repoint (the durable-dir promise)
-    assert(!Dedup.isUnderRoot("file:/ck/uuid", "hdfs://nn/ck", conf))
+    assert(!Staging.isUnderRoot("file:/ck/uuid", "hdfs://nn/ck", conf))
   }
 
   test("scrubPii redacts emails and URLs, leaves clean text untouched") {
@@ -1806,7 +1806,7 @@ class OperatorsSpec extends AnyFunSuite {
     assert(spark.sharedState.cacheManager.isEmpty, "cached plans left behind")
     assert(spark.sparkContext.getPersistentRDDs.size <= 1,
       "stranded intermediate blocks")
-    Dedup.free(pairs)
+    Staging.free(pairs)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
 

@@ -207,7 +207,7 @@ class ScaleOpsSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString)
     assert(seqCols == Set("doc_id", "n_tokens", "__pid"),
       s"q_seq_pack staged frame carries unexpected columns: $seqCols")
-    // the composite's plan also holds the minhash sealResult checkpoint
+    // the composite's plan also holds the minhash seal snapshot
     // (scalar pair columns — fine); the guard is that NO checkpoint in
     // the plan carries document text, and the prefixSum staging is there
     val curCols = stagedCols(

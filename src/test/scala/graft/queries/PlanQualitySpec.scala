@@ -262,7 +262,7 @@ class PlanQualitySpec extends AnyFunSuite {
     // nested-loop join or a single-partition exchange here.
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-    val scope = new graft.operators.Dedup.CacheScope
+    val scope = new graft.operators.Staging.Scope
     try {
       val plans = Seq(
         "minhash" -> graft.operators.Dedup.minhashNearDupsPlan(scope, docs,
@@ -480,7 +480,7 @@ class PlanQualitySpec extends AnyFunSuite {
     // that was 3x the verify FLOPs across millions of capped candidates.
     // The declared query seals through an eager checkpoint (its plan is
     // a LogicalRDD), so gate the LAZY plan builder the query runs.
-    val scope = new graft.operators.Dedup.CacheScope
+    val scope = new graft.operators.Staging.Scope
     val plan = try graft.operators.Dedup.cosineNearDupsPlan(scope,
         spark.read.parquet(s"$dir/embeddings.parquet"),
         "vec_id", "embedding", dim = 64, threshold = 0.4,
