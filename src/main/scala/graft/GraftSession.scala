@@ -62,8 +62,8 @@ object GraftSession {
     * timed query: a scan plus a small decimal groupBy-agg (compiles the
     * hash-agg + decimal codegen paths the first real queries use). */
   def warmUp(spark: SparkSession, sfDir: String): Unit = {
-    spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-    spark.read.parquet(s"$sfDir/region.parquet")
+    graft.queries.Tables.lineitem(spark, sfDir).count()
+    graft.queries.Tables.region(spark, sfDir)
       .groupBy("r_regionkey")
       .agg(sum(col("r_regionkey").cast("decimal(27,6)")))
       .count()

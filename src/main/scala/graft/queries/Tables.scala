@@ -1,11 +1,54 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
-/** Readers for the driver-generated parquet tables (TESTDATA.md). */
+/** Readers for the generated parquet test tables (TESTDATA.md).
+  *
+  * Every table's schema is declared here, never inferred: a parquet read
+  * without a schema starts a Spark job (the footer scan) the moment the
+  * DataFrame is built, so each query would run one job per table before
+  * its action. With the declaration, building a query over these tables
+  * touches no data. The declaration is the files' own column order and
+  * types; `SchemaCanarySpec` compares it with the schema Spark infers
+  * from the files at every SF directory, so a regenerated table that
+  * drifts fails there with the column named. There is no fallback to
+  * inference: a file whose types no longer match fails at read (for
+  * example a UTC-adjusted TIMESTAMP where TIMESTAMP_NTZ is declared),
+  * and an undeclared table name raises.
+  */
 object Tables {
+  /** The ten testdata schemas. Timestamps are TIMESTAMP_NTZ (the files
+    * store micros with isAdjustedToUTC=false); every field is nullable,
+    * as Spark reads any parquet column. */
+  val schemas: Map[String, StructType] = Map(
+    "region" -> "r_regionkey INT, r_name STRING",
+    "nation" -> "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer" -> ("c_custkey BIGINT, c_name STRING, c_nationkey INT, " +
+      "c_acctbal DOUBLE, c_mktsegment STRING"),
+    "supplier" -> ("s_suppkey BIGINT, s_name STRING, s_nationkey INT, " +
+      "s_acctbal DOUBLE"),
+    "part" -> ("p_partkey BIGINT, p_name STRING, p_brand STRING, " +
+      "p_type STRING, p_size INT, p_retailprice DOUBLE"),
+    "orders" -> ("o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, " +
+      "o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"),
+    "lineitem" -> ("l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, " +
+      "l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE, " +
+      "l_discount DOUBLE, l_tax DOUBLE, l_returnflag STRING, " +
+      "l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"),
+    "events" -> ("event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, " +
+      "event_type STRING, value DOUBLE, props STRING"),
+    "documents" -> ("doc_id BIGINT, text STRING, lang STRING, " +
+      "source STRING, n_chars BIGINT"),
+    "embeddings" -> "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"
+  ).map { case (name, ddl) => name -> StructType.fromDDL(ddl) }
+
+  def schema(name: String): StructType = schemas.getOrElse(name,
+    throw new IllegalArgumentException(s"unknown testdata table '$name' " +
+      s"(declared: ${schemas.keys.toSeq.sorted.mkString(", ")})"))
+
   def read(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    s.read.schema(schema(name)).parquet(s"$dir/$name.parquet")
 
   /** Scratch directory for queries exercising a write-then-read path:
     * rooted at java.io.tmpdir (SPARK_GRAFT_TMP overrides), never a
@@ -28,8 +71,9 @@ object Tables {
   def part(s: SparkSession, dir: String): DataFrame = read(s, dir, "part")
   def nation(s: SparkSession, dir: String): DataFrame = read(s, dir, "nation")
   def region(s: SparkSession, dir: String): DataFrame = read(s, dir, "region")
-  /** Normalize an events frame's `ts` to a plain TimestampType whatever
-    * the parquet file stored — the single ingestion point shared by the
+  /** Normalize an events frame's `ts` to a plain TimestampType (the
+    * declared testdata type is TIMESTAMP_NTZ; frames built elsewhere may
+    * carry other types) — the single ingestion point shared by the
     * batch reader and the streaming source, so the two cannot diverge.
     * Drift history: the driver's generator has produced both
     * TIMESTAMP(NANOS) and TIMESTAMP_MICROS with isAdjustedToUTC=false

@@ -12,21 +12,21 @@ import graft.functions.Exact
   */
 object EventStreams {
 
-  /** The on-disk schema of events.parquet, read from the file footer (one
-    * driver-side batch-read of metadata) rather than hard-coded: the
-    * streaming source must declare a schema up front, and the driver's
-    * generator has changed the physical `ts` type between rounds
-    * (TIMESTAMP(NANOS) -> TIMESTAMP_MICROS/NTZ). Deriving it from the file
-    * keeps the stream reader in lockstep with whatever is actually there.
+  /** The on-disk schema of events.parquet: the declaration the batch
+    * reader uses too ([[graft.queries.Tables.schemas]]), so building a
+    * stream reads no file and the two readers cannot disagree on a type.
+    * The generator has changed the physical `ts` type before
+    * (TIMESTAMP(NANOS) -> TIMESTAMP_MICROS/NTZ); `SchemaCanarySpec`
+    * compares the declaration with the file's inferred schema, so such a
+    * regen fails there by name.
     */
-  def sourceSchema(spark: SparkSession, dir: String): StructType =
-    spark.read.option("pathGlobFilter", "events.parquet").parquet(dir).schema
+  val sourceSchema: StructType = graft.queries.Tables.schema("events")
 
   /** Streaming source over the events parquet file (the file-stream source
     * requires a directory path, so the table file is selected by glob).
     */
   def readStream(spark: SparkSession, dir: String): DataFrame =
-    normalize(spark.readStream.schema(sourceSchema(spark, dir))
+    normalize(spark.readStream.schema(sourceSchema)
       .option("pathGlobFilter", "events.parquet").parquet(dir))
 
   /** `ts` -> TimestampType via the SAME rule as the batch reader

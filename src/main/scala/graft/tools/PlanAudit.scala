@@ -36,8 +36,8 @@ object PlanAudit {
     def lazyDedup(n: String): Option[org.apache.spark.sql.DataFrame] = {
       import graft.operators.{Dedup, Staging}
       lazy val scope = new Staging.Scope
-      lazy val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      lazy val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      lazy val docs = graft.queries.Tables.documents(spark, sfDir)
+      lazy val emb = graft.queries.Tables.embeddings(spark, sfDir)
       n match {
         case "q_dedup_minhash" => Some(Dedup.minhashNearDupsPlan(
           scope, docs, "doc_id", "text", 0.5, 8, 4, 3, 64))

@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
+import graft.queries.Tables
 
 /** Linearity evidence for the dedup/ANN family: run the bucketed
   * pipelines on a data dir and print one JSON line per operator with
@@ -19,8 +20,8 @@ object ScaleEvidence {
     val label = args.lift(1).getOrElse(dir)
     val spark = graft.GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+    val docs = Tables.documents(spark, dir)
+    val emb = Tables.embeddings(spark, dir)
     docs.count(); emb.count() // warm up
 
     import graft.operators.{Dedup, Similarity, Staging, TextAnalysis}

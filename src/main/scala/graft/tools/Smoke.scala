@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import graft.core.TaskGraph
+import graft.queries.Tables
 
 /** End-to-end smoke driver: exercises the TaskGraph public API against the
   * real parquet test tables and prints results + the physical plan of the
@@ -13,7 +14,7 @@ object Smoke {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     implicit val spark: SparkSession = graft.GraftSession()
 
-    val lineitem = spark.read.parquet(s"$sfDir/lineitem.parquet")
+    val lineitem = Tables.lineitem(spark, sfDir)
 
     // SURVEY §7.2 minimum slice: lineitem_row -> revenue -> total
     val g = TaskGraph.chain("l_extendedprice", "revenue")
@@ -44,14 +45,14 @@ object Smoke {
 
     println("== task table sample ==")
     TaskGraph.chain("a", "b")
-      .mapFrame(spark.read.parquet(s"$sfDir/region.parquet"),
+      .mapFrame(Tables.region(spark, sfDir),
         Map("a" -> "r_name"), indexCol = Some("r_regionkey"), dimName = "rk")
       .reduce(key = "b", name = "all_regions")
       .taskTable().show(20, false)
 
     println("== edge table sample (groupby wiring) ==")
     TaskGraph(graft.core.Dag.empty)
-      .mapFrame(spark.read.parquet(s"$sfDir/nation.parquet"),
+      .mapFrame(Tables.nation(spark, sfDir),
         Map("n_name" -> "n_name", "rkey" -> "n_regionkey"),
         indexCol = Some("n_nationkey"), dimName = "nk")
       .groupby("rkey")
@@ -59,8 +60,8 @@ object Smoke {
       .edgeTable().show(8, false)
 
     println("== chained groupby via splice (order revenue by priority) ==")
-    val li2 = spark.read.parquet(s"$sfDir/lineitem.parquet")
-    val ord = spark.read.parquet(s"$sfDir/orders.parquet")
+    val li2 = Tables.lineitem(spark, sfDir)
+    val ord = Tables.orders(spark, sfDir)
     val g1 = TaskGraph(graft.core.Dag.chain("price", "rev")
         .addNode("rev", Map("expr" -> "CAST(price AS DECIMAL(27,6))")))
       .mapFrame(li2, Map("price" -> "l_extendedprice", "param1" -> "l_orderkey"))

@@ -38,7 +38,7 @@ object StreamStateScale {
     val safe = label.replaceAll("[^A-Za-z0-9]", "_")
     val base = s"target/stream_scale/$safe"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-    val docs0 = spark.read.parquet(s"$dir/documents.parquet")
+    val docs0 = graft.queries.Tables.documents(spark, dir)
     val minId = docs0.agg(min("doc_id")).head().getLong(0)
     val t0 = 1700000000L
     val sliced = docs0

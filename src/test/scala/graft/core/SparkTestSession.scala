@@ -21,7 +21,7 @@ object SparkTestSession {
     get.sparkContext.addSparkListener(listener)
     try {
       val result = body
-      Thread.sleep(300) // listener bus is async; give events time to land
+      org.apache.spark.graftbridge.ListenerBus.drain(get.sparkContext)
       (result, seen.toArray(Array.empty[String]).toSeq)
     } finally get.sparkContext.removeSparkListener(listener)
   }

@@ -9,10 +9,12 @@ import graft.core.SparkTestSession
   * between rounds and has already changed physical types once
   * (`events.ts` went from TIMESTAMP(NANOS) to TIMESTAMP_MICROS/NTZ, which
   * silently broke eight tests and two queries spread across the tree).
-  * This spec is the single loud tripwire: it asserts the NORMALIZED
-  * ingestion schema every query builds on, at every SF directory present,
-  * so the next type drift fails here with a type name in the message
-  * instead of as scattered wrong-answer diffs.
+  * This spec is the single loud tripwire. At every SF directory present
+  * it compares the schema Spark infers from each file with the one
+  * `Tables` declares (and every query reads with), exactly, and asserts
+  * the NORMALIZED events schema, so the next type drift fails here with
+  * the column and type in the message instead of as scattered
+  * wrong-answer diffs or read errors.
   */
 class SchemaCanarySpec extends AnyFunSuite {
 
@@ -26,6 +28,12 @@ class SchemaCanarySpec extends AnyFunSuite {
 
   test("at least one testdata SF directory exists") {
     assert(sfDirs.nonEmpty, s"no sf* dirs under $root")
+  }
+
+  test("Tables.read raises on an undeclared table name") {
+    val e = intercept[IllegalArgumentException](
+      Tables.read(spark, "unused", "no_such_table"))
+    assert(e.getMessage.contains("no_such_table"))
   }
 
   private def typeOf(df: org.apache.spark.sql.DataFrame, col: String): DataType =
@@ -57,9 +65,9 @@ class SchemaCanarySpec extends AnyFunSuite {
 
     test(s"[$sf] events: normalized ts is TIMESTAMP (tz-aware), keys are Long") {
       val ev = Tables.events(spark, dir)
-      // THE canary: whatever the file stores (nanos-Long, NTZ micros, ...),
-      // Tables.normalizeTs must deliver a plain TimestampType — every
-      // unix_millis/unix_micros/window consumer depends on it
+      // the file's ts is declared TIMESTAMP_NTZ; Tables.normalizeTs must
+      // deliver a plain TimestampType — every unix_millis/unix_micros/
+      // window consumer depends on it
       assert(typeOf(ev, "ts") == TimestampType,
         s"events.ts normalized to ${typeOf(ev, "ts")} — ingestion stopped " +
           "normalizing; check Tables.normalizeTs vs the parquet footer")
@@ -67,9 +75,8 @@ class SchemaCanarySpec extends AnyFunSuite {
       assert(typeOf(ev, "user_id") == LongType)
       assert(typeOf(ev, "event_type") == StringType)
       assert(typeOf(ev, "value") == DoubleType)
-      // and the streaming source derives the SAME normalized schema
-      val streamSchema = graft.streaming.EventStreams
-        .sourceSchema(spark, dir)
+      // and the streaming source's declared schema normalizes the same way
+      val streamSchema = graft.streaming.EventStreams.sourceSchema
       val normalized = Tables.normalizeTs(
         spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
           streamSchema)).schema
@@ -221,54 +228,24 @@ class SchemaCanarySpec extends AnyFunSuite {
           "lineitem⋈orders join) no longer matches its oracle")
     }
 
-    test(s"[$sf] every engine-read column keeps its pinned type " +
-        "(all tables)") {
+    test(s"[$sf] every table's inferred schema equals its declaration " +
+        "in Tables") {
+      // inferred from the file footers on purpose: Tables.read returns
+      // the declaration itself, so checking its schema would pass by
+      // construction whatever the files hold
+      val files = Option(new java.io.File(dir).list).getOrElse(Array.empty)
+        .filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet")).toSet
+      assert(files == Tables.schemas.keySet,
+        s"tables on disk ${files.toSeq.sorted.mkString(", ")} vs declared " +
+          Tables.schemas.keys.toSeq.sorted.mkString(", "))
       val drift = for {
-        (table, cols) <- pinned.toSeq.sortBy(_._1)
-        df = Tables.read(spark, dir, table)
-        (name, want) <- cols
-        got = scala.util.Try(typeOf(df, name)).toOption
-        if !got.contains(want)
-      } yield s"$table.$name: ${got.getOrElse("MISSING")}, want $want"
-      assert(drift.isEmpty, s"testdata type drift:\n${drift.mkString("\n")}")
-      // date columns separately (either timestamp flavor accepted)
-      for ((t, c) <- Seq(("orders", "o_orderdate"), ("lineitem", "l_shipdate"))) {
-        val got = typeOf(Tables.read(spark, dir, t), c)
-        assert(tsish(got), s"$t.$c is $got, want a timestamp type")
-      }
+        (table, declared) <- Tables.schemas.toSeq.sortBy(_._1)
+        inferred = spark.read.parquet(s"$dir/$table.parquet").schema
+        (got, want) <- inferred.fields.toSeq.map(Option(_))
+          .zipAll(declared.fields.toSeq.map(Option(_)), None, None)
+        if got != want
+      } yield s"$table: file ${got.getOrElse("-")}, declared ${want.getOrElse("-")}"
+      assert(drift.isEmpty, s"testdata schema drift:\n${drift.mkString("\n")}")
     }
   }
-
-  // Every column the engine reads, exactly typed, per table: a regen
-  // that retypes ANY of these fails one named test with the offending
-  // (table, column, type) instead of as scattered oracle diffs.
-  // Date-ish columns may arrive TIMESTAMP or TIMESTAMP_NTZ (the driver
-  // has emitted both); everything downstream treats them uniformly.
-  private def tsish(t: DataType): Boolean =
-    t == TimestampType || t == TimestampNTZType
-
-  private val pinned: Map[String, Seq[(String, DataType)]] = Map(
-      "region" -> Seq("r_regionkey" -> IntegerType, "r_name" -> StringType),
-      "nation" -> Seq("n_nationkey" -> IntegerType, "n_name" -> StringType,
-        "n_regionkey" -> IntegerType),
-      "customer" -> Seq("c_custkey" -> LongType, "c_name" -> StringType,
-        "c_nationkey" -> IntegerType, "c_acctbal" -> DoubleType,
-        "c_mktsegment" -> StringType),
-      "supplier" -> Seq("s_suppkey" -> LongType, "s_name" -> StringType,
-        "s_nationkey" -> IntegerType, "s_acctbal" -> DoubleType),
-      "part" -> Seq("p_partkey" -> LongType, "p_name" -> StringType,
-        "p_brand" -> StringType, "p_type" -> StringType,
-        "p_size" -> IntegerType, "p_retailprice" -> DoubleType),
-      "orders" -> Seq("o_orderkey" -> LongType, "o_custkey" -> LongType,
-        "o_orderstatus" -> StringType, "o_totalprice" -> DoubleType,
-        "o_orderpriority" -> StringType),
-      "lineitem" -> Seq("l_orderkey" -> LongType, "l_partkey" -> LongType,
-        "l_suppkey" -> LongType, "l_linenumber" -> IntegerType,
-        "l_quantity" -> DoubleType, "l_extendedprice" -> DoubleType,
-        "l_discount" -> DoubleType, "l_tax" -> DoubleType,
-        "l_returnflag" -> StringType, "l_linestatus" -> StringType),
-      "documents" -> Seq("doc_id" -> LongType, "text" -> StringType,
-        "lang" -> StringType, "source" -> StringType, "n_chars" -> LongType),
-      "embeddings" -> Seq("vec_id" -> LongType, "label" -> IntegerType)
-    )
 }
