@@ -38,7 +38,7 @@ object GraftFunctions {
   }
 
   val functions: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
-    ("graft_dot", "dot product of two array<double> columns",
+    ("graft_dot", "dot product of two array<float> or array<double> columns",
       (args: Seq[Expression]) => DotProduct(args(0), args(1))),
     ("graft_simhash", "64-bit SimHash of an array<long> of token hashes",
       (args: Seq[Expression]) => SimHash64(args(0))),

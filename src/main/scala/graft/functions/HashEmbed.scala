@@ -101,81 +101,15 @@ case class HashEmbedVector(child: Expression, dim: Int,
 
   override def dataType: DataType = ArrayType(FloatType, containsNull = false)
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    if (n > 1) HashEmbedVector.evalNgram(arr, dim, n, md5Mode)
-    else {
-      val acc = new Array[Double](dim)
-      val num = arr.numElements()
-      var i = 0
-      while (i < num) {
-        if (!arr.isNullAt(i)) {
-          val t = arr.getUTF8String(i)
-          if (t.numBytes() > 0) {
-            if (md5Mode) {
-              val h = Md5Hash.hash64(t)
-              acc(((h >>> 32) % dim).toInt) +=
-                (if ((h & 1L) == 0L) 1.0 else -1.0)
-            } else {
-              val h1 = XXH64.hashUTF8String(t, 42L)
-              val idx = (((h1 % dim) + dim) % dim).toInt
-              acc(idx) += (if ((XXH64.hashInt(7, h1) & 1L) == 0L) 1.0 else -1.0)
-            }
-          }
-        }
-        i += 1
-      }
-      HashEmbedVector.normPack(acc, dim)
-    }
-  }
+  override def nullSafeEval(input: Any): Any =
+    HashEmbedVector.compute(input.asInstanceOf[ArrayData], dim, n, md5Mode)
 
+  // one call into the compiled kernel for both modes: the loops stay
+  // JIT-hot however often Spark recompiles the stage around them
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    if (n > 1)
-      // the fused n-gram mode runs as ONE call into the compiled helper
-      // (tight JVM loops over a shared joined-byte buffer) — the row
-      // stays inside whole-stage codegen, unlike the former
-      // zip_with/concat feature construction whose CodegenFallback
-      // lambdas re-evaluated the tokenization per reference
-      nullSafeCodeGen(ctx, ev, in =>
-        s"${ev.value} = graft.functions.HashEmbedVector.evalNgram(" +
-          s"$in, $dim, $n, $md5Mode);")
-    else nullSafeCodeGen(ctx, ev, in => {
-      val xxh = classOf[XXH64].getName
-      val uad = classOf[UnsafeArrayData].getName
-      val (n, i, j, acc, t, h1, ss, nrm, out) = (ctx.freshName("n"),
-        ctx.freshName("i"), ctx.freshName("j"), ctx.freshName("acc"),
-        ctx.freshName("t"), ctx.freshName("h1"), ctx.freshName("ss"),
-        ctx.freshName("nrm"), ctx.freshName("out"))
-      val hashAndAdd =
-        if (md5Mode)
-          s"""long $h1 = graft.functions.Md5Hash.hash64($t);
-             |  $acc[(int) (($h1 >>> 32) % $dim)] +=
-             |    (($h1 & 1L) == 0L) ? 1.0 : -1.0;""".stripMargin
-        else
-          s"""long $h1 = $xxh.hashUTF8String($t, 42L);
-             |  $acc[(int) ((($h1 % $dim) + $dim) % $dim)] +=
-             |    (($xxh.hashInt(7, $h1) & 1L) == 0L) ? 1.0 : -1.0;""".stripMargin
-      s"""
-         |int $n = $in.numElements();
-         |double[] $acc = new double[$dim];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($in.isNullAt($i)) continue;
-         |  org.apache.spark.unsafe.types.UTF8String $t = $in.getUTF8String($i);
-         |  if ($t.numBytes() == 0) continue;
-         |  $hashAndAdd
-         |}
-         |double $ss = 0.0;
-         |for (int $j = 0; $j < $dim; $j++) { $ss += $acc[$j] * $acc[$j]; }
-         |double $nrm = Math.sqrt($ss);
-         |float[] $out = new float[$dim];
-         |if ($nrm != 0.0) {
-         |  for (int $j = 0; $j < $dim; $j++) {
-         |    $out[$j] = (float) ($acc[$j] / $nrm);
-         |  }
-         |}
-         |${ev.value} = $uad.fromPrimitiveArray($out);
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, in =>
+      s"${ev.value} = graft.functions.HashEmbedVector.compute(" +
+        s"$in, $dim, $n, $md5Mode);")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -218,8 +152,8 @@ object HashEmbedVector {
       Bridge.expression(coalesce(tokens, typedLit(Seq.empty[String]))), dim,
       md5Mode = md5Mode, n = n))
 
-  /** L2-normalize and pack — shared by both eval paths (same ascending
-    * fold and float cast as the inline codegen). */
+  /** L2-normalize and pack: the ascending-index double fold, then one
+    * float cast per slot. */
   private[functions] def normPack(acc: Array[Double], dim: Int): UnsafeArrayData = {
     var ss = 0.0
     var i = 0
@@ -233,8 +167,37 @@ object HashEmbedVector {
     UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  /** The fused n-gram accumulation (n >= 2), called from interpreted
-    * eval AND generated code. Window semantics replicate
+  /** The embedding of one token array: [[evalNgram]] for n >= 2, else
+    * one signed hash per non-empty token. Interpreted eval and generated
+    * code both call it. */
+  def compute(arr: ArrayData, dim: Int, n: Int,
+      md5Mode: Boolean): UnsafeArrayData =
+    if (n > 1) evalNgram(arr, dim, n, md5Mode)
+    else {
+      val acc = new Array[Double](dim)
+      val num = arr.numElements()
+      var i = 0
+      while (i < num) {
+        if (!arr.isNullAt(i)) {
+          val t = arr.getUTF8String(i)
+          if (t.numBytes() > 0) {
+            if (md5Mode) {
+              val h = Md5Hash.hash64(t)
+              acc(((h >>> 32) % dim).toInt) +=
+                (if ((h & 1L) == 0L) 1.0 else -1.0)
+            } else {
+              val h1 = XXH64.hashUTF8String(t, 42L)
+              val idx = (((h1 % dim) + dim) % dim).toInt
+              acc(idx) += (if ((XXH64.hashInt(7, h1) & 1L) == 0L) 1.0 else -1.0)
+            }
+          }
+        }
+        i += 1
+      }
+      normPack(acc, dim)
+    }
+
+  /** The fused n-gram accumulation (n >= 2). Window semantics replicate
     * `wordNgrams(text, n)` + the unigram kernel exactly:
     *  - fewer than n tokens -> no windows -> the all-zero vector;
     *  - a window containing a NULL token is skipped (concat null
@@ -242,7 +205,7 @@ object HashEmbedVector {
     *  - empty tokens participate (concat kept them; an n >= 2 window is
     *    never the empty feature because it carries n-1 separators).
     */
-  def evalNgram(arr: ArrayData, dim: Int, n: Int,
+  private def evalNgram(arr: ArrayData, dim: Int, n: Int,
       md5Mode: Boolean): UnsafeArrayData = {
     import org.apache.spark.unsafe.Platform
     val num = arr.numElements()

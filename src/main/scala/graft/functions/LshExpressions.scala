@@ -8,10 +8,17 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
-/** Native LSH signature kernels. Both replicate the exact bit-level
-  * semantics of the SQL formulations they replace (seeded `xxhash64`
-  * accumulation), so signatures — and therefore candidate sets and query
-  * outputs — are unchanged; only the evaluation strategy differs.
+/** Native LSH signature kernels. Each replicates the exact bit-level
+  * semantics of the SQL formulation it replaces (seeded `xxhash64`
+  * accumulation, primitive double folds), so signatures — and therefore
+  * candidate sets and query outputs — are unchanged; only the evaluation
+  * strategy differs.
+  *
+  * Every kernel is one compiled method, `compute` on its companion
+  * object: interpreted eval calls it, and generated code is that one call
+  * (plus the referenced matrices and a null flag). The loop is therefore
+  * compiled once by the JIT and stays hot however often Spark recompiles
+  * the whole-stage class around it.
   */
 
 /** MinHash signature: for each of `numHashes` seeds i, the minimum over
@@ -37,8 +44,22 @@ case class MinHashSignature(child: Expression, numHashes: Int)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    MinHashSignature.compute(input.asInstanceOf[ArrayData], numHashes)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, in =>
+      s"${ev.value} = graft.functions.MinHashSignature.compute($in, $numHashes);")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+
+  override def prettyName: String = "graft_minhash"
+}
+
+object MinHashSignature {
+  /** The `numHashes` minima of one shingle array. */
+  def compute(arr: ArrayData, numHashes: Int): UnsafeArrayData = {
     val mins = Array.fill(numHashes)(Long.MaxValue)
     var j = 0
     val n = arr.numElements()
@@ -58,34 +79,6 @@ case class MinHashSignature(child: Expression, numHashes: Int)
     }
     UnsafeArrayData.fromPrimitiveArray(mins)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, in => {
-      val xxh = classOf[XXH64].getName
-      val uad = classOf[UnsafeArrayData].getName
-      val (n, j, i, mins, base, hv) = (ctx.freshName("n"), ctx.freshName("j"),
-        ctx.freshName("i"), ctx.freshName("mins"), ctx.freshName("base"),
-        ctx.freshName("hv"))
-      s"""
-         |int $n = $in.numElements();
-         |long[] $mins = new long[$numHashes];
-         |java.util.Arrays.fill($mins, Long.MAX_VALUE);
-         |for (int $j = 0; $j < $n; $j++) {
-         |  if ($in.isNullAt($j)) continue;
-         |  long $base = $xxh.hashUTF8String($in.getUTF8String($j), 42L);
-         |  for (int $i = 0; $i < $numHashes; $i++) {
-         |    long $hv = $xxh.hashInt($i, $base);
-         |    if ($hv < $mins[$i]) $mins[$i] = $hv;
-         |  }
-         |}
-         |${ev.value} = $uad.fromPrimitiveArray($mins);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "graft_minhash"
 }
 
 /** MinHash signature from PRE-HASHED shingles (`array<long>` of
@@ -107,8 +100,22 @@ case class MinHashFromHashes(child: Expression, numHashes: Int)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    MinHashFromHashes.compute(input.asInstanceOf[ArrayData], numHashes)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, in =>
+      s"${ev.value} = graft.functions.MinHashFromHashes.compute($in, $numHashes);")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+
+  override def prettyName: String = "graft_minhash_from_hashes"
+}
+
+object MinHashFromHashes {
+  /** The `numHashes` minima of one array of pre-hashed shingles. */
+  def compute(arr: ArrayData, numHashes: Int): UnsafeArrayData = {
     val mins = Array.fill(numHashes)(Long.MaxValue)
     var j = 0
     val n = arr.numElements()
@@ -129,34 +136,6 @@ case class MinHashFromHashes(child: Expression, numHashes: Int)
     }
     UnsafeArrayData.fromPrimitiveArray(mins)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, in => {
-      val xxh = classOf[XXH64].getName
-      val uad = classOf[UnsafeArrayData].getName
-      val (n, j, i, mins, base, hv) = (ctx.freshName("n"), ctx.freshName("j"),
-        ctx.freshName("i"), ctx.freshName("mins"), ctx.freshName("base"),
-        ctx.freshName("hv"))
-      s"""
-         |int $n = $in.numElements();
-         |long[] $mins = new long[$numHashes];
-         |java.util.Arrays.fill($mins, Long.MAX_VALUE);
-         |for (int $j = 0; $j < $n; $j++) {
-         |  if ($in.isNullAt($j)) continue;
-         |  long $base = $in.getLong($j);
-         |  for (int $i = 0; $i < $numHashes; $i++) {
-         |    long $hv = $xxh.hashInt($i, $base);
-         |    if ($hv < $mins[$i]) $mins[$i] = $hv;
-         |  }
-         |}
-         |${ev.value} = $uad.fromPrimitiveArray($mins);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "graft_minhash_from_hashes"
 }
 
 /** Intersection size of two SORTED `array<long>` columns: a single
@@ -182,9 +161,23 @@ case class SortedIntersectCount(left: Expression, right: Expression)
 
   override def dataType: DataType = IntegerType
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
+  override def nullSafeEval(l: Any, r: Any): Any =
+    SortedIntersectCount.compute(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (l, r) =>
+      s"${ev.value} = graft.functions.SortedIntersectCount.compute($l, $r);")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+
+  override def prettyName: String = "graft_sorted_intersect_count"
+}
+
+object SortedIntersectCount {
+  /** The merge-pass intersection size of two sorted arrays. */
+  def compute(a: ArrayData, b: ArrayData): Int = {
     val (na, nb) = (a.numElements(), b.numElements())
     var i = 0; var j = 0; var c = 0
     while (i < na && j < nb) {
@@ -199,36 +192,6 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     }
     c
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, r) => {
-      val (na, nb, i, j, c, x, y) = (ctx.freshName("na"), ctx.freshName("nb"),
-        ctx.freshName("i"), ctx.freshName("j"), ctx.freshName("c"),
-        ctx.freshName("x"), ctx.freshName("y"))
-      s"""
-         |int $na = $l.numElements();
-         |int $nb = $r.numElements();
-         |int $i = 0; int $j = 0; int $c = 0;
-         |while ($i < $na && $j < $nb) {
-         |  if ($l.isNullAt($i)) { $i++; }
-         |  else if ($r.isNullAt($j)) { $j++; }
-         |  else {
-         |    long $x = $l.getLong($i);
-         |    long $y = $r.getLong($j);
-         |    if ($x == $y) { $c++; $i++; $j++; }
-         |    else if ($x < $y) { $i++; }
-         |    else { $j++; }
-         |  }
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "graft_sorted_intersect_count"
 }
 
 /** 64-bit SimHash from an `array<long>` of token hashes: bit b of the
@@ -246,8 +209,22 @@ case class SimHash64(child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = LongType
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    SimHash64.compute(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, in =>
+      s"${ev.value} = graft.functions.SimHash64.compute($in);")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+
+  override def prettyName: String = "graft_simhash"
+}
+
+object SimHash64 {
+  /** The 64-bit SimHash of one array of token hashes. */
+  def compute(arr: ArrayData): Long = {
     val votes = new Array[Int](64)
     var j = 0
     val n = arr.numElements()
@@ -268,34 +245,6 @@ case class SimHash64(child: Expression) extends UnaryExpression {
     while (b < 64) { if (votes(b) > 0) sig |= (1L << b); b += 1 }
     sig
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, in => {
-      val (n, j, b, b2, votes, h, sig) = (ctx.freshName("n"), ctx.freshName("j"),
-        ctx.freshName("b"), ctx.freshName("b2"), ctx.freshName("votes"),
-        ctx.freshName("h"), ctx.freshName("sig"))
-      s"""
-         |int $n = $in.numElements();
-         |int[] $votes = new int[64];
-         |for (int $j = 0; $j < $n; $j++) {
-         |  if ($in.isNullAt($j)) continue;
-         |  long $h = $in.getLong($j);
-         |  for (int $b = 0; $b < 64; $b++) {
-         |    $votes[$b] += ((($h >>> $b) & 1L) == 1L) ? 1 : -1;
-         |  }
-         |}
-         |long $sig = 0L;
-         |for (int $b2 = 0; $b2 < 64; $b2++) {
-         |  if ($votes[$b2] > 0) $sig |= (1L << $b2);
-         |}
-         |${ev.value} = $sig;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "graft_simhash"
 }
 
 /** Random-hyperplane LSH bucket codes for one embedding: the signs of the
@@ -329,10 +278,6 @@ case class HyperplaneBuckets(child: Expression,
   require(flatPlanes.length % nPlanes == 0,
     s"flat matrix (${flatPlanes.length}) not divisible by nPlanes ($nPlanes)")
 
-  private val dim = flatPlanes.length / nPlanes
-  private val nTables = nPlanes / planesPerTable
-  private def flat: Array[Double] = flatPlanes
-
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
     case t => TypeCheckResult.TypeCheckFailure(
@@ -342,38 +287,42 @@ case class HyperplaneBuckets(child: Expression,
   // lazy: touching child.dataType at construction time throws on a
   // not-yet-resolved child (the analyzer copies this node via
   // withNewChildInternal before resolution completes)
-  @transient private lazy val childIsFloat =
-    child.dataType match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    }
+  @transient private lazy val childIsFloat = DotProduct.isFloat(child.dataType)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val codes = new Array[Long](nTables)
-    var degenerate = v.numElements() != dim
-    if (!degenerate) {
-      var i = 0
-      while (i < dim && !degenerate) {
-        if (v.isNullAt(i)) degenerate = true
-        i += 1
-      }
-    }
-    if (!degenerate) {
-      val vec = new Array[Double](dim)
-      var i = 0
-      while (i < dim) {
-        vec(i) = if (childIsFloat) v.getFloat(i).toDouble else v.getDouble(i)
-        i += 1
-      }
+  override def nullSafeEval(input: Any): Any =
+    HyperplaneBuckets.compute(input.asInstanceOf[ArrayData], childIsFloat,
+      flatPlanes, nPlanes, planesPerTable)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, in => {
+      val planesRef = ctx.addReferenceObj("graftPlanes", flatPlanes, "double[]")
+      s"${ev.value} = graft.functions.HyperplaneBuckets.compute(" +
+        s"$in, $childIsFloat, $planesRef, $nPlanes, $planesPerTable);"
+    })
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+
+  override def prettyName: String = "graft_hyperplane_buckets"
+}
+
+object HyperplaneBuckets {
+  /** The table codes of one vector `v` (read as floats or doubles by
+    * `isFloat`) against the row-major `nPlanes x dim` matrix `planes`. */
+  def compute(v: ArrayData, isFloat: Boolean, planes: Array[Double],
+      nPlanes: Int, planesPerTable: Int): UnsafeArrayData = {
+    val dim = planes.length / nPlanes
+    val codes = new Array[Long](nPlanes / planesPerTable)
+    if (v.numElements() == dim && !DotProduct.anyNull(v, dim)) {
+      val vec = DotProduct.doubles(v, isFloat)
       var p = 0
       while (p < nPlanes) {
         var s = 0.0d
         var j = 0
         val off = p * dim
-        while (j < dim) { s += flat(off + j) * vec(j); j += 1 }
+        while (j < dim) { s += planes(off + j) * vec(j); j += 1 }
         val t = p / planesPerTable
         codes(t) = codes(t) * 2 + (if (s > 0) 1L else 0L)
         p += 1
@@ -381,46 +330,6 @@ case class HyperplaneBuckets(child: Expression,
     }
     UnsafeArrayData.fromPrimitiveArray(codes)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, in => {
-      val uad = classOf[UnsafeArrayData].getName
-      val planesRef = ctx.addReferenceObj("graftPlanes", flat, "double[]")
-      val (codes, degen, vec, i, p, j, s, off) = (ctx.freshName("codes"),
-        ctx.freshName("degen"), ctx.freshName("vec"), ctx.freshName("i"),
-        ctx.freshName("p"), ctx.freshName("j"), ctx.freshName("s"),
-        ctx.freshName("off"))
-      val getElem =
-        if (childIsFloat) s"(double) $in.getFloat($i)" else s"$in.getDouble($i)"
-      s"""
-         |long[] $codes = new long[$nTables];
-         |boolean $degen = $in.numElements() != $dim;
-         |if (!$degen) {
-         |  for (int $i = 0; $i < $dim; $i++) {
-         |    if ($in.isNullAt($i)) { $degen = true; break; }
-         |  }
-         |}
-         |if (!$degen) {
-         |  double[] $vec = new double[$dim];
-         |  for (int $i = 0; $i < $dim; $i++) { $vec[$i] = $getElem; }
-         |  for (int $p = 0; $p < $nPlanes; $p++) {
-         |    double $s = 0.0d;
-         |    int $off = $p * $dim;
-         |    for (int $j = 0; $j < $dim; $j++) {
-         |      $s += $planesRef[$off + $j] * $vec[$j];
-         |    }
-         |    $codes[$p / $planesPerTable] =
-         |      $codes[$p / $planesPerTable] * 2 + (($s > 0) ? 1L : 0L);
-         |  }
-         |}
-         |${ev.value} = $uad.fromPrimitiveArray($codes);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "graft_hyperplane_buckets"
 }
 
 /** Product-quantization encoder: for each of the `m` subspaces, the id of
@@ -441,7 +350,6 @@ case class PqEncode(child: Expression,
 
   private val m = codebooks.length
   private val dsub = codebooks.head.head.length
-  private val dim = m * dsub
   private val ksub = codebooks.map(_.length).max
   require(codebooks.forall(cb => cb.nonEmpty && cb.forall(_.length == dsub)),
     "ragged codebooks")
@@ -463,26 +371,45 @@ case class PqEncode(child: Expression,
       s"$prettyName requires array<float> or array<double>, got ${t.sql}")
   }
 
-  @transient private lazy val childIsFloat =
-    child.dataType match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    }
+  @transient private lazy val childIsFloat = DotProduct.isFloat(child.dataType)
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
 
   override def nullable: Boolean = true
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    if (v.numElements() != dim) return null
-    val vec = new Array[Double](dim)
-    var i = 0
-    while (i < dim) {
-      if (v.isNullAt(i)) return null
-      vec(i) = if (childIsFloat) v.getFloat(i).toDouble else v.getDouble(i)
-      i += 1
-    }
+  override def nullSafeEval(input: Any): Any =
+    PqEncode.compute(input.asInstanceOf[ArrayData], childIsFloat, flat,
+      counts, dsub)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, in => {
+      val cbRef = ctx.addReferenceObj("graftPqCodebooks", flat, "double[]")
+      val cntRef = ctx.addReferenceObj("graftPqCounts", counts, "int[]")
+      s"""
+         |${ev.value} = graft.functions.PqEncode.compute(
+         |  $in, $childIsFloat, $cbRef, $cntRef, $dsub);
+         |${ev.isNull} = ${ev.value} == null;
+       """.stripMargin
+    })
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+
+  override def prettyName: String = "graft_pq_encode"
+}
+
+object PqEncode {
+  /** The codeword ids of one vector `v` (read as floats or doubles by
+    * `isFloat`): `codebooks` is the flattened `[s][c][j]` matrix, padded
+    * to the largest subspace, and `counts(s)` the codewords subspace `s`
+    * really has. Null when `v` is not `m * dsub` wide or holds a null. */
+  def compute(v: ArrayData, isFloat: Boolean, codebooks: Array[Double],
+      counts: Array[Int], dsub: Int): UnsafeArrayData = {
+    val m = counts.length
+    val ksub = codebooks.length / (m * dsub)
+    val dim = m * dsub
+    if (v.numElements() != dim || DotProduct.anyNull(v, dim)) return null
+    val vec = DotProduct.doubles(v, isFloat)
     val codes = new Array[Int](m)
     var s = 0
     while (s < m) {
@@ -494,7 +421,7 @@ case class PqEncode(child: Expression,
         var j = 0
         val off = s * ksub * dsub + c * dsub
         while (j < dsub) {
-          val diff = vec(s * dsub + j) - flat(off + j)
+          val diff = vec(s * dsub + j) - codebooks(off + j)
           d += diff * diff
           j += 1
         }
@@ -506,56 +433,6 @@ case class PqEncode(child: Expression,
     }
     UnsafeArrayData.fromPrimitiveArray(codes)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, in => {
-      val uad = classOf[UnsafeArrayData].getName
-      val cbRef = ctx.addReferenceObj("graftPqCodebooks", flat, "double[]")
-      val cntRef = ctx.addReferenceObj("graftPqCounts", counts, "int[]")
-      val (vec, codes, bad, i, s, c, j, d, diff, best, bestD, off) =
-        (ctx.freshName("vec"), ctx.freshName("codes"), ctx.freshName("bad"),
-          ctx.freshName("i"), ctx.freshName("s"), ctx.freshName("c"),
-          ctx.freshName("j"), ctx.freshName("d"), ctx.freshName("diff"),
-          ctx.freshName("best"), ctx.freshName("bestD"), ctx.freshName("off"))
-      val getElem =
-        if (childIsFloat) s"(double) $in.getFloat($i)" else s"$in.getDouble($i)"
-      s"""
-         |boolean $bad = $in.numElements() != $dim;
-         |double[] $vec = null;
-         |if (!$bad) {
-         |  $vec = new double[$dim];
-         |  for (int $i = 0; $i < $dim; $i++) {
-         |    if ($in.isNullAt($i)) { $bad = true; break; }
-         |    $vec[$i] = $getElem;
-         |  }
-         |}
-         |if ($bad) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int[] $codes = new int[$m];
-         |  for (int $s = 0; $s < $m; $s++) {
-         |    int $best = 0;
-         |    double $bestD = Double.MAX_VALUE;
-         |    for (int $c = 0; $c < $cntRef[$s]; $c++) {
-         |      double $d = 0.0d;
-         |      int $off = $s * $ksub * $dsub + $c * $dsub;
-         |      for (int $j = 0; $j < $dsub; $j++) {
-         |        double $diff = $vec[$s * $dsub + $j] - $cbRef[$off + $j];
-         |        $d += $diff * $diff;
-         |      }
-         |      if ($d < $bestD) { $bestD = $d; $best = $c; }
-         |    }
-         |    $codes[$s] = $best;
-         |  }
-         |  ${ev.value} = $uad.fromPrimitiveArray($codes);
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "graft_pq_encode"
 }
 
 /** Nearest-centroid (IVF cell) assignment: the id of the centroid with the
@@ -618,74 +495,24 @@ case class NearestCentroid(child: Expression,
       s"$prettyName requires array<float> or array<double>, got ${t.sql}")
   }
 
-  @transient private lazy val childIsFloat =
-    child.dataType match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    }
+  @transient private lazy val childIsFloat = DotProduct.isFloat(child.dataType)
 
   override def dataType: DataType = IntegerType
   override def nullable: Boolean = true
 
   override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    if (v.numElements() != dim) return null
-    val vec = new Array[Double](dim)
-    var i = 0
-    while (i < dim) {
-      if (v.isNullAt(i)) return null
-      vec(i) = if (childIsFloat) v.getFloat(i).toDouble else v.getDouble(i)
-      if (vec(i).isNaN) return null
-      i += 1
-    }
-    var best = 0
-    var bestS = Double.NegativeInfinity
-    var c = 0
-    while (c < k) {
-      var s = 0.0d
-      val off = c * dim
-      var j = 0
-      while (j < dim) { s += flat(off + j) * vec(j); j += 1 }
-      if (s >= bestS) { bestS = s; best = c }
-      c += 1
-    }
-    best
+    val c = NearestCentroid.compute(input.asInstanceOf[ArrayData],
+      childIsFloat, flat, k)
+    if (c < 0) null else c
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, in => {
       val centsRef = ctx.addReferenceObj("graftCentroids", flat, "double[]")
-      val (vec, i, c, j, s, off, best, bestS, degen) = (ctx.freshName("vec"),
-        ctx.freshName("i"), ctx.freshName("c"), ctx.freshName("j"),
-        ctx.freshName("s"), ctx.freshName("off"), ctx.freshName("best"),
-        ctx.freshName("bestS"), ctx.freshName("degen"))
-      val getElem =
-        if (childIsFloat) s"(double) $in.getFloat($i)" else s"$in.getDouble($i)"
       s"""
-         |boolean $degen = $in.numElements() != $dim;
-         |double[] $vec = new double[$dim];
-         |if (!$degen) {
-         |  for (int $i = 0; $i < $dim; $i++) {
-         |    if ($in.isNullAt($i)) { $degen = true; break; }
-         |    $vec[$i] = $getElem;
-         |    if (Double.isNaN($vec[$i])) { $degen = true; break; }
-         |  }
-         |}
-         |if ($degen) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $best = 0;
-         |  double $bestS = Double.NEGATIVE_INFINITY;
-         |  for (int $c = 0; $c < $k; $c++) {
-         |    double $s = 0.0d;
-         |    int $off = $c * $dim;
-         |    for (int $j = 0; $j < $dim; $j++) {
-         |      $s += $centsRef[$off + $j] * $vec[$j];
-         |    }
-         |    if ($s >= $bestS) { $bestS = $s; $best = $c; }
-         |  }
-         |  ${ev.value} = $best;
-         |}
+         |${ev.value} = graft.functions.NearestCentroid.compute(
+         |  $in, $childIsFloat, $centsRef, $k);
+         |${ev.isNull} = ${ev.value} < 0;
        """.stripMargin
     })
 
@@ -693,6 +520,32 @@ case class NearestCentroid(child: Expression,
     copy(child = newChild)
 
   override def prettyName: String = "graft_nearest_centroid"
+}
+
+object NearestCentroid {
+  /** The cell of one vector `v` (read as floats or doubles by `isFloat`)
+    * among the `k` unit-normalized row-major centroids `unit`, or -1 (a
+    * NULL cell) when `v` is not `dim` wide or holds a null or a NaN. */
+  def compute(v: ArrayData, isFloat: Boolean, unit: Array[Double],
+      k: Int): Int = {
+    val dim = unit.length / k
+    if (v.numElements() != dim || DotProduct.anyNull(v, dim)) return -1
+    val vec = DotProduct.doubles(v, isFloat)
+    var i = 0
+    while (i < dim) { if (vec(i).isNaN) return -1; i += 1 }
+    var best = 0
+    var bestS = Double.NegativeInfinity
+    var c = 0
+    while (c < k) {
+      var s = 0.0d
+      val off = c * dim
+      var j = 0
+      while (j < dim) { s += unit(off + j) * vec(j); j += 1 }
+      if (s >= bestS) { bestS = s; best = c }
+      c += 1
+    }
+    best
+  }
 }
 
 object LshExpressions {

@@ -2,8 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
@@ -14,8 +13,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * expression: all K margins (`fold_j(w_cj * x_j) + b_c`, ascending-j
   * serial double fold — the exact arithmetic of
   * [[graft.operators.LangIdTrained.train]] and its SQL replay) plus the
-  * argmax, in a single codegen'd loop over a broadcast-referenced
-  * `double[K][dim]` weight matrix.
+  * argmax, in one compiled method ([[MulticlassArgmax.score]]) over a
+  * referenced `double[K][dim]` weight matrix. Interpreted eval and
+  * generated code both call it; `array<float>` features are read
+  * natively, without a boxing cast.
   *
   * Why an Expression and not K staged dot-product Columns: the staged
   * form is K separate 64-double LITERAL trees. The moment a consumer
@@ -24,9 +25,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * condition — re-inlining the feature kernel and all K dots per
   * reference — and at K=32 the re-expanded conditions exhaust multi-GB
   * heaps in janino before a single row moves. Here the weights live in
-  * one `ctx.addReferenceObj` matrix and the generated code is two `for`
-  * loops, CONSTANT size in K and dim: pushdown can copy it anywhere for
-  * free. This is the same composition-fails threshold that produced
+  * one `ctx.addReferenceObj` matrix and the generated code is one call,
+  * CONSTANT size in K and dim: pushdown can copy it anywhere for free.
+  * This is the same composition-fails threshold that produced
   * [[DotProduct]] and [[CharTrigramEmbed]].
   *
   * Output: `struct<lang_pred: string, margin_best: double>`.
@@ -38,7 +39,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 case class MulticlassArgmax(child: Expression,
     weights: Seq[Seq[Double]], biases: Seq[Double],
-    labels: Seq[String]) extends UnaryExpression {
+    labels: Seq[String]) extends UnaryExpression with ImplicitCastInputTypes {
 
   require(weights.nonEmpty && weights.length == biases.length &&
     weights.length == labels.length,
@@ -50,7 +51,6 @@ case class MulticlassArgmax(child: Expression,
   // CONTENT — Catalyst canonicalization / common-subexpression
   // elimination unify two structurally identical argmax columns (JVM
   // arrays compare by reference and would silently evaluate twice)
-  private val dim: Int = weights.head.length
   // converted once for the hot loops; referenced from both eval paths
   @transient private lazy val wArr: Array[Array[Double]] =
     weights.map(_.toArray).toArray
@@ -58,11 +58,11 @@ case class MulticlassArgmax(child: Expression,
   @transient private lazy val utf8Labels: Array[UTF8String] =
     labels.map(UTF8String.fromString).toArray
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires an array<double> input, got ${t.sql}")
-  }
+  override def inputTypes: Seq[DataType] =
+    Seq(DotProduct.vectorType(child.dataType))
+
+  // lazy: the child's type is known only once it is resolved
+  @transient private lazy val childIsFloat = DotProduct.isFloat(child.dataType)
 
   override def dataType: DataType = StructType(Seq(
     StructField("lang_pred", StringType),
@@ -70,25 +70,9 @@ case class MulticlassArgmax(child: Expression,
 
   override def nullable: Boolean = true
 
-  protected override def nullSafeEval(v: Any): Any = {
-    val x = v.asInstanceOf[ArrayData]
-    if (x.numElements() != dim) return null
-    var bi = -1
-    var bm = 0.0
-    var c = 0
-    while (c < wArr.length) {
-      val w = wArr(c)
-      var s = 0.0
-      var j = 0
-      while (j < dim) { s += w(j) * x.getDouble(j); j += 1 }
-      val m = s + bArr(c)
-      if (java.lang.Double.isNaN(m)) return null
-      if (bi < 0 || m > bm) { bi = c; bm = m }
-      c += 1
-    }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](utf8Labels(bi), bm))
-  }
+  protected override def nullSafeEval(v: Any): Any =
+    MulticlassArgmax.score(v.asInstanceOf[ArrayData], childIsFloat, wArr,
+      bArr, utf8Labels)
 
   override protected def doGenCode(ctx: CodegenContext,
       ev: ExprCode): ExprCode =
@@ -97,37 +81,10 @@ case class MulticlassArgmax(child: Expression,
       val bRef = ctx.addReferenceObj("amxBiases", bArr, "double[]")
       val lRef = ctx.addReferenceObj("amxLabels", utf8Labels,
         "org.apache.spark.unsafe.types.UTF8String[]")
-      val bi = ctx.freshName("bi")
-      val bm = ctx.freshName("bm")
-      val c = ctx.freshName("c")
-      val s = ctx.freshName("s")
-      val j = ctx.freshName("j")
-      val m = ctx.freshName("m")
-      val nan = ctx.freshName("nan")
       s"""
-         |if ($x.numElements() != $dim) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $bi = -1;
-         |  double $bm = 0.0;
-         |  boolean $nan = false;
-         |  for (int $c = 0; $c < ${weights.length}; $c++) {
-         |    double $s = 0.0;
-         |    for (int $j = 0; $j < $dim; $j++) {
-         |      $s += $wRef[$c][$j] * $x.getDouble($j);
-         |    }
-         |    double $m = $s + $bRef[$c];
-         |    if (Double.isNaN($m)) { $nan = true; break; }
-         |    if ($bi < 0 || $m > $bm) { $bi = $c; $bm = $m; }
-         |  }
-         |  if ($nan) {
-         |    ${ev.isNull} = true;
-         |  } else {
-         |    ${ev.value} =
-         |      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-         |        new Object[] { $lRef[$bi], Double.valueOf($bm) });
-         |  }
-         |}
+         |${ev.value} = graft.functions.MulticlassArgmax.score(
+         |  $x, $childIsFloat, $wRef, $bRef, $lRef);
+         |${ev.isNull} = ${ev.value} == null;
        """.stripMargin
     })
 
@@ -138,11 +95,36 @@ case class MulticlassArgmax(child: Expression,
 }
 
 object MulticlassArgmax {
-  /** Column entry point; float vectors cast here (the expression is
-    * strict about its input type). */
+  /** Column entry point: `array<float>` and `array<double>` vectors are
+    * read as they are, any other numeric array is cast to `array<double>`. */
   def argmax(vec: Column, weights: Seq[Seq[Double]], biases: Seq[Double],
       labels: Seq[String]): Column =
-    Bridge.column(MulticlassArgmax(
-      Bridge.expression(vec.cast("array<double>")),
+    Bridge.column(MulticlassArgmax(Bridge.expression(vec),
       weights.map(_.toVector).toVector, biases.toVector, labels.toVector))
+
+  /** The `struct<lang_pred, margin_best>` of one vector `x` (read as
+    * floats or doubles by `isFloat`) against the `K x dim` model `w`, `b`:
+    * each margin is the ascending-j double fold of `w(c)(j) * x(j)` plus
+    * `b(c)`; strict `>` keeps the first class reaching the maximum. Null
+    * when `x` is not `dim` wide or a margin is NaN. */
+  def score(x: ArrayData, isFloat: Boolean, w: Array[Array[Double]],
+      b: Array[Double], labels: Array[UTF8String]): InternalRow = {
+    val dim = w(0).length
+    if (x.numElements() != dim) return null
+    val v = DotProduct.doubles(x, isFloat)
+    var bi = -1
+    var bm = 0.0
+    var c = 0
+    while (c < w.length) {
+      val wc = w(c)
+      var s = 0.0
+      var j = 0
+      while (j < dim) { s += wc(j) * v(j); j += 1 }
+      val m = s + b(c)
+      if (java.lang.Double.isNaN(m)) return null
+      if (bi < 0 || m > bm) { bi = c; bm = m }
+      c += 1
+    }
+    new GenericInternalRow(Array[Any](labels(bi), bm))
+  }
 }

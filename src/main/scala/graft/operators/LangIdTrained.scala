@@ -423,10 +423,10 @@ object LangIdTrained {
     * portable.
     *
     * All K margins + the argmax evaluate inside ONE fused Catalyst
-    * expression ([[graft.functions.MulticlassArgmax]] — two generated
-    * `for` loops over a referenced weight matrix, constant code size in
-    * K). The r18 form — K staged dot-product Columns + a when-chain —
-    * scaled to K=16 but not 32: a downstream FILTER on `lang_pred`
+    * expression ([[graft.functions.MulticlassArgmax]] — generated code
+    * is one call into its compiled scoring method over a referenced
+    * weight matrix, constant code size in K). The r18 form — K staged
+    * dot-product Columns + a when-chain — scaled to K=16 but not 32: a downstream FILTER on `lang_pred`
     * (the curation-gate shape) pushes the predicate through the staged
     * projections, re-inlining the feature kernel and every margin
     * literal tree per reference, and janino exhausts multi-GB heaps on

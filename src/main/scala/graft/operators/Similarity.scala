@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -15,7 +16,7 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Dot product of two array<float/double> columns: a native codegen'd
+  /** Dot product of two array<float/double> columns: a native
     * Catalyst expression (see [[graft.functions.DotProduct]]) — ascending-
     * index summation, bit-identical to the previous zip_with/aggregate
     * left-fold, minus the per-row intermediate array and boxing.
@@ -700,9 +701,12 @@ object Similarity {
     * whole max|x| reduction into the per-element lambda, and the
     * quantizer silently becomes O(dim^2) per row (measured: 3.5x the
     * query wall at 10x). A store read gives the scorer plain attribute
-    * columns — one O(dim) pass, the point of int8. */
+    * columns — one O(dim) pass, the point of int8. Returns the schema
+    * written, so the store reads back without a schema-inference job. */
   def writeQuantized(df: DataFrame, idCol: String, vecCol: String,
-      path: String): Unit =
-    quantizeInt8(df, idCol, vecCol)
-      .write.mode("overwrite").parquet(path)
+      path: String): StructType = {
+    val q = quantizeInt8(df, idCol, vecCol)
+    q.write.mode("overwrite").parquet(path)
+    q.schema
+  }
 }

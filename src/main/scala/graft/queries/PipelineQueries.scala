@@ -2937,9 +2937,9 @@ object PipelineQueries {
         // (Similarity.writeQuantized's scaladoc: a live quantizer frame
         // under the scorer collapses into an O(dim^2)-per-row lambda)
         val store = Tables.scratchPath("int8_store", dir)
-        Similarity.writeQuantized(emb, "vec_id", "embedding", store)
+        val written = Similarity.writeQuantized(emb, "vec_id", "embedding", store)
         val topQ = Similarity.topKQuantized(
-          s.read.parquet(store), "vec_id", fixedQueryVector, 10)
+          Tables.readWritten(s, store, written), "vec_id", fixedQueryVector, 10)
           .select(col("vec_id"), round(col("cosine"), 6).as("cosine_q_r"))
         val exact = Similarity.topK(emb, "vec_id", "embedding",
           fixedQueryVector, 10).select(col("vec_id"))
@@ -2964,14 +2964,15 @@ object PipelineQueries {
         val cents = Similarity.trainCentroids(emb, "embedding", k = 8,
           sampleOrderCol = Some("vec_id"))
         val store = Tables.scratchPath("int8_ivf", dir)
-        Similarity.quantizeInt8(emb, "vec_id", "embedding")
+        val cells = Similarity.quantizeInt8(emb, "vec_id", "embedding")
           .join(Similarity.assignCells(emb, "embedding", cents)
             .select("vec_id", "cell"), "vec_id")
-          .write.mode("overwrite").partitionBy("cell").parquet(store)
+        cells.write.mode("overwrite").partitionBy("cell").parquet(store)
         val probed = Similarity.probeCells(cents, fixedQueryVector,
           nprobe = 4)
         Similarity.topKQuantized(
-          s.read.parquet(store).filter(col("cell").isin(probed: _*)),
+          Tables.readWritten(s, store, cells.schema, "cell")
+            .filter(col("cell").isin(probed: _*)),
           "vec_id", fixedQueryVector, 10)
           .select(col("vec_id"), round(col("cosine"), 6).as("cosine_q_r"))
       },
@@ -2988,8 +2989,8 @@ object PipelineQueries {
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
         val store = Tables.scratchPath("int8_store_rr", dir)
-        Similarity.writeQuantized(emb, "vec_id", "embedding", store)
-        val cands = Similarity.topKQuantized(s.read.parquet(store),
+        val written = Similarity.writeQuantized(emb, "vec_id", "embedding", store)
+        val cands = Similarity.topKQuantized(Tables.readWritten(s, store, written),
           "vec_id", fixedQueryVector, 50).select("vec_id")
         Similarity.topK(emb.join(broadcast(cands), "vec_id"),
             "vec_id", "embedding", fixedQueryVector, 10)

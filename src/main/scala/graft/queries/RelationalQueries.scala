@@ -780,11 +780,10 @@ object RelationalQueries {
     QueryDef("q_time_layout",
       (s, dir) => {
         val path = Tables.scratchPath("q_time_layout", dir)
-        graft.operators.ScaleOps.writeTimePartitioned(
-          Tables.lineitem(s, dir).select("l_orderkey", "l_shipdate",
-            "l_extendedprice", "l_discount"),
-          "l_shipdate", path)
-        s.read.parquet(path)
+        val rows = Tables.lineitem(s, dir).select("l_orderkey", "l_shipdate",
+          "l_extendedprice", "l_discount")
+        graft.operators.ScaleOps.writeTimePartitioned(rows, "l_shipdate", path)
+        Tables.readWritten(s, path, rows.schema)
           .filter(col("part_key") === "1997-03")
           .groupBy(date_format(col("l_shipdate"), "yyyy-MM-dd").as("ship_day"))
           .agg(count(lit(1)).as("n"),

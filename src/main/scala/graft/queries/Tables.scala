@@ -50,6 +50,16 @@ object Tables {
   def read(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.schema(schema(name)).parquet(s"$dir/$name.parquet")
 
+  /** Reads back the parquet a query wrote at `path` from a frame of
+    * schema `written`, without the footer-scan job an inferred read
+    * starts: the data columns are declared, and the partition columns
+    * `partCols` keep the type partition discovery gives them.
+    * `SchemaCanarySpec` compares each such read with the inferred one. */
+  def readWritten(s: SparkSession, path: String, written: StructType,
+      partCols: String*): DataFrame =
+    s.read.schema(StructType(written.filterNot(f => partCols.contains(f.name))))
+      .parquet(path)
+
   /** Scratch directory for queries exercising a write-then-read path:
     * rooted at java.io.tmpdir (SPARK_GRAFT_TMP overrides), never a
     * hardcoded checkout location, and keyed by (query, SF dir, pid) —

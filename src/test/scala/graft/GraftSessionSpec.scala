@@ -12,8 +12,10 @@ import graft.core.SparkTestSession
   * under are pinned on the session [[GraftSession]] returns, and no other
   * source file may build a session of its own. Likewise one commit
   * protocol: only [[graft.sources.FileSink]] renames task output or ships
-  * the Hadoop configuration to tasks; and one staging module: only
-  * [[graft.operators.Staging]] persists, caches or checkpoints. */
+  * the Hadoop configuration to tasks; one staging module: only
+  * [[graft.operators.Staging]] persists, caches or checkpoints; and one
+  * implementation per graft kernel: generated code calls the compiled
+  * method interpreted eval uses, and inlines no loop of its own. */
 class GraftSessionSpec extends AnyFunSuite {
 
   test("GraftSession carries the bench settings") {
@@ -86,5 +88,28 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       "stage through graft.operators.Staging, not a persist or checkpoint " +
         s"of your own: ${offenders.mkString(", ")}")
+  }
+
+  test("no doGenCode in graft.functions inlines a loop") {
+    // a doGenCode method runs from its `def` line to the next non-blank
+    // line indented no deeper than that line
+    val walk = Files.walk(Paths.get("src/main/scala/graft/functions"))
+    val files = try walk.iterator.asScala.toList.filter(_.toString.endsWith(".scala"))
+      finally walk.close()
+    def indent(l: String) = l.takeWhile(_ == ' ').length
+    val offenders = files.flatMap { p =>
+      val lines = Files.readAllLines(p).asScala.toIndexedSeq
+      lines.indices.filter(i => lines(i).contains("def doGenCode")).flatMap { i =>
+        val body = lines(i) +: lines.drop(i + 1).takeWhile(l =>
+          l.trim.isEmpty || indent(l) > indent(lines(i)))
+        if (body.exists(l => l.contains("for (") || l.contains("while (")))
+          Some(s"${p.getFileName}:${i + 1}")
+        else None
+      }
+    }
+    assert(files.nonEmpty)
+    assert(offenders.isEmpty,
+      "call the kernel's compiled method from doGenCode instead of " +
+        s"templating its loop: ${offenders.mkString(", ")}")
   }
 }

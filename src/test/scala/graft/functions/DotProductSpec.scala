@@ -1,7 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Cast
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.SparkTestSession
 
@@ -44,6 +46,65 @@ class DotProductSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getDouble(1))).toMap
     assert(rows(1L) == 11.0)
     assert(rows(2L) == null)
+  }
+
+  test("array<float> reaches the kernel natively: no Cast under graft_dot in the plan") {
+    val df = Seq((1L, Seq(1.0f, 2.0f), Seq(3.0, 4.0))).toDF("id", "a", "b")
+    val out = df.select($"id", DotProduct.dot($"a", $"b").as("d"))
+    val dots = out.queryExecution.analyzed.expressions.flatMap(_.collect {
+      case d: DotProduct => d })
+    assert(dots.length == 1)
+    assert(dots.head.children.forall(!_.isInstanceOf[Cast]),
+      s"array<float> must reach the kernel uncast: ${dots.head}")
+    assert(out.collect().head.getDouble(1) == 11.0)
+  }
+
+  test("float x float, float x double, double x double and array<int>: " +
+    "codegen == interpreted == driver fold; wrong width and null array -> null") {
+    val rnd = new scala.util.Random(3)
+    def floats(n: Int) = Seq.fill(n)(rnd.nextGaussian().toFloat)
+    def doubles(n: Int) = Seq.fill(n)(rnd.nextGaussian())
+    def ints(n: Int) = Seq.fill(n)(rnd.nextInt(21) - 10)
+    // (id, f1, f2, d1, d2, i1); row 30 has a wrong width in every pair
+    // tested below, row 31 a null left array
+    val rows = (0 until 30).map(i =>
+      Row(i.toLong, floats(16), floats(16), doubles(16), doubles(16), ints(16))) ++
+      Seq(Row(30L, floats(16), floats(15), doubles(16), doubles(14), ints(17)),
+        Row(31L, null, floats(16), null, doubles(16), null))
+    val schema = StructType(Seq(StructField("id", LongType)) ++
+      Seq("f1" -> FloatType, "f2" -> FloatType, "d1" -> DoubleType,
+        "d2" -> DoubleType, "i1" -> IntegerType).map { case (n, t) =>
+          StructField(n, ArrayType(t)) })
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    def vec(r: Row, c: String): Seq[Double] = r.getAs[Seq[Any]](schema.fieldIndex(c)) match {
+      case null => null
+      case s => s.map {
+        case f: Float => f.toDouble
+        case d: Double => d
+        case i: Int => i.toDouble
+      }
+    }
+    for ((a, b) <- Seq("f1" -> "f2", "f1" -> "d2", "d1" -> "f2", "d1" -> "d2",
+        "i1" -> "d2", "i1" -> "f2")) {
+      val want = rows.map { r =>
+        val (x, y) = (vec(r, a), vec(r, b))
+        r.getLong(0) -> CodegenModes.bits(
+          if (x == null || y == null || x.length != y.length) null
+          else x.zip(y).foldLeft(0.0) { case (s, (p, q)) => s + p * q })
+      }.toMap
+      assert(want(30L) == null && want(31L) == null)
+      for ((mode, got) <- CodegenModes.collectBoth(df, DotProduct.dot(col(a), col(b))))
+        assert(got == want, s"$mode, $a x $b")
+    }
+  }
+
+  test("graft_dot from SQL takes array<float>, array<double> and array<int>") {
+    GraftFunctions.register(spark)
+    val r = spark.sql("SELECT " +
+      "graft_dot(array(1.5f, 2.0f), array(3.0f, 4.0f)) AS ff, " +
+      "graft_dot(array(1.5f, 2.0f), array(3.0d, 4.0d)) AS fd, " +
+      "graft_dot(array(1, 2), array(3.0d, 4.0d)) AS id").collect()(0)
+    assert(r.getDouble(0) == 12.5 && r.getDouble(1) == 12.5 && r.getDouble(2) == 11.0)
   }
 
   test("mismatched dimensions yield null, never a partial score") {

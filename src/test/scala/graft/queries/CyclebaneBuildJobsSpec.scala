@@ -21,11 +21,12 @@ class CyclebaneBuildJobsSpec extends AnyFunSuite {
     // TaskGraph: positional labels (DimGroup.sliceByPosition)
     "cb_slice_pos" -> 3,
     // writes read back inside the query: the write itself, plus schema
-    // inference of the written (non-testdata) files where read back
+    // inference of the written files where a query still infers it
+    // (a Tables.readWritten read-back declares it and starts none)
     "q_csv_roundtrip" -> 1, // Sources.writeCsv
     "q_json_roundtrip" -> 1, // Sources.writeJson
     "q_orc_roundtrip" -> 1, // Sources.writeOrc
-    "q_time_layout" -> 5, // ScaleOps.writeTimePartitioned, parquet read-back
+    "q_time_layout" -> 4, // ScaleOps.writeTimePartitioned, partition discovery of the read-back
     "q_zorder_layout" -> 9, // ScaleOps.writeZOrdered, minMaxManifest, readSkipping
     "q_schema_evolution" -> 3, // two parquet writes, mergeSchema read-back
     "q_tar_roundtrip" -> 3, // TarShards.writeShards
@@ -36,9 +37,9 @@ class CyclebaneBuildJobsSpec extends AnyFunSuite {
     "q_warc_curation" -> 2, // FileSink.writeParts count (WarcFiles.write)
     "q_jsonl_zstd" -> 2, // FileSink.writeParts count (JsonlZstd.write)
     "q_jsonl_curation" -> 2, // FileSink.writeParts count (JsonlZstd.write)
-    "q_embed_quantize" -> 2, // Similarity.writeQuantized, store read-back
-    "q_embed_rerank" -> 2, // Similarity.writeQuantized, store read-back
-    "q_embed_quantize_ivf" -> 4, // boundedSample, cell-partitioned write, read-back
+    "q_embed_quantize" -> 1, // Similarity.writeQuantized
+    "q_embed_rerank" -> 1, // Similarity.writeQuantized
+    "q_embed_quantize_ivf" -> 3, // boundedSample, cell-partitioned write
     // training and sampling passes that collect a result
     "q_cluster_balance" -> 1, // Similarity.boundedSample in trainCentroids
     "q_knn_ivf" -> 1, // Similarity.boundedSample in trainCentroids

@@ -36,6 +36,30 @@ class SchemaCanarySpec extends AnyFunSuite {
     assert(e.getMessage.contains("no_such_table"))
   }
 
+  test("the write-then-read queries declare the schema parquet infers " +
+      "for their own output") {
+    // each build writes to a scratch path and reads it back through
+    // Tables.readWritten; every such scan must have the schema a plain
+    // (inferring) read of the same files gives
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val dir = new java.io.File(root, "sf0.001").getPath
+    for (name <- Seq("q_embed_quantize", "q_embed_rerank",
+        "q_embed_quantize_ivf", "q_time_layout")) {
+      val q = graft.SparkEntry.defs.find(_.name == name).get
+      val df = try q.fn(spark, dir) finally graft.GraftSession.clearCaches(spark)
+      val reads = df.queryExecution.analyzed.collect {
+        case l: LogicalRelation => l.relation
+      }.collect { case h: HadoopFsRelation
+        if h.location.rootPaths.exists(_.toString.contains("graft-scratch")) => h }
+      assert(reads.nonEmpty, s"$name reads back no output of its own")
+      for (h <- reads; root <- h.location.rootPaths) {
+        val inferred = spark.read.parquet(root.toString).schema
+        assert(h.schema == inferred,
+          s"$name: declared ${h.schema.toDDL}, inferred ${inferred.toDDL}")
+      }
+    }
+  }
+
   private def typeOf(df: org.apache.spark.sql.DataFrame, col: String): DataType =
     df.schema(col).dataType
 
