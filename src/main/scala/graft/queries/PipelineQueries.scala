@@ -114,8 +114,8 @@ object PipelineQueries {
     // StreamingSpec still proves == driver reference, the n/(k+1)
     // guarantee, and 2-batch streaming == batch (the raw multi-batch
     // STREAMING summary stays merge-order-dependent and un-oracled —
-    // that surface is covered by the guarantee specs and the
-    // StreamStateScale evidence).
+    // that surface is covered by the guarantee specs and StreamingSpec's
+    // horizon-eviction tests).
     QueryDef("q_stream_topterms",
       (s, dir) => {
         graft.streaming.StreamTopK.topTerms(

@@ -60,18 +60,42 @@ object Tables {
     s.read.schema(StructType(written.filterNot(f => partCols.contains(f.name))))
       .parquet(path)
 
-  /** Scratch directory for queries exercising a write-then-read path:
-    * rooted at java.io.tmpdir (SPARK_GRAFT_TMP overrides), never a
-    * hardcoded checkout location, and keyed by (query, SF dir, pid) —
-    * different SFs and concurrent processes can't clobber each other,
-    * while repeated reps inside one JVM overwrite the same directory
-    * instead of leaking a new one per rep.
+  /** Scratch directory for queries exercising a write-then-read path,
+    * keyed by (query, SF dir) under this JVM's [[scratchRoot]]: different
+    * SFs can't clobber each other, and repeated reps inside one JVM
+    * overwrite the same directory instead of leaking a new one per rep.
     */
-  def scratchPath(name: String, dir: String): String = {
-    val base = sys.env.getOrElse("SPARK_GRAFT_TMP",
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"))
-    val sf = dir.replaceAll("[^A-Za-z0-9]", "_")
-    s"${base.stripSuffix("/")}/graft-scratch/${name}_${sf}_pid${ProcessHandle.current().pid()}"
+  def scratchPath(name: String, dir: String): String =
+    s"$scratchRoot/${name}_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+
+  /** This JVM's scratch root, `graft-scratch/pid<pid>` under
+    * java.io.tmpdir (SPARK_GRAFT_TMP overrides), never a hardcoded
+    * checkout location: a concurrent JVM cannot clobber its files. */
+  lazy val scratchRoot: String = scratchRootIn(sys.env.getOrElse(
+    "SPARK_GRAFT_TMP", sys.props.getOrElse("java.io.tmpdir", "/tmp")))
+
+  /** The scratch root of this JVM under `base`. It is deleted at JVM
+    * exit; roots left by dead pids (crashed or killed runs, which never
+    * reach their own hook) are swept here, so repeated runs do not
+    * accumulate scratch output. */
+  private[graft] def scratchRootIn(base: String): String = {
+    val parent = new java.io.File(base, "graft-scratch")
+    def rmTree(f: java.io.File): Unit = {
+      Option(f.listFiles).foreach(_.foreach(rmTree))
+      f.delete()
+    }
+    // also matches the `<query>_<sf>_pid<pid>` directories of older runs
+    val PidKeyed = ".*pid(\\d+)".r
+    Option(parent.listFiles).getOrElse(Array.empty).foreach { d =>
+      d.getName match {
+        case PidKeyed(p) if !ProcessHandle.of(p.toLong).map[Boolean](_.isAlive)
+            .orElse(false) => rmTree(d)
+        case _ =>
+      }
+    }
+    val mine = new java.io.File(parent, s"pid${ProcessHandle.current().pid()}")
+    Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(mine)))
+    mine.getPath
   }
 
   def lineitem(s: SparkSession, dir: String): DataFrame = read(s, dir, "lineitem")

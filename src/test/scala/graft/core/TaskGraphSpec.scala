@@ -1000,8 +1000,8 @@ class TaskGraphSpec extends AnyFunSuite {
     val g = TaskGraph(Dag.fromEdges("a" -> "c", "b" -> "c").addNode("c", Map("expr" -> "a + b")))
       .mapFrame(spark.read.parquet(dir))
     assert(g.dimsOf("c") == Vector("dim_0"))
-    val (f, jobs) = SparkTestSession.jobsStartedBy(g.result("c"))
-    assert(jobs.isEmpty, jobs.mkString(" | "))
+    val (f, work) = SparkTestSession.jobsStartedBy(g.result("c"))
+    assert(work.jobs.isEmpty, work.jobs.mkString(" | "))
     assert(f.select("c").as[Int].collect().sorted.toSeq == Seq(11, 22, 33, 44))
   }
 
@@ -1140,13 +1140,13 @@ class TaskGraphSpec extends AnyFunSuite {
     (0 until n).map(i => (from + i, i.toLong)).toDF("k", "v")
 
   test("a second in-memory table on a shared labeled dim starts no job") {
-    val (g, jobs) = SparkTestSession.jobsStartedBy(sharedDim(ids(1000, 100), ids(1000, 100)))
-    assert(jobs.isEmpty, jobs.mkString(" | "))
+    val (g, work) = SparkTestSession.jobsStartedBy(sharedDim(ids(1000, 100), ids(1000, 100)))
+    assert(work.jobs.isEmpty, work.jobs.mkString(" | "))
     assert(g.result("c").count() == 100)
-    val (raised, conflictJobs) = SparkTestSession.jobsStartedBy(
+    val (raised, conflictWork) = SparkTestSession.jobsStartedBy(
       scala.util.Try(sharedDim(ids(1000, 100), ids(1001, 100))))
     assert(raised.failed.get.getMessage.contains("Conflicting index values"))
-    assert(conflictJobs.isEmpty, conflictJobs.mkString(" | "))
+    assert(conflictWork.jobs.isEmpty, conflictWork.jobs.mkString(" | "))
   }
 
   test("setItem onto a groupby dim over in-memory tables starts no job") {
@@ -1157,8 +1157,8 @@ class TaskGraphSpec extends AnyFunSuite {
       .groupby("g").reduce(key = "x", name = "s", attrs = Map("func" -> "sum"))
     val base = TaskGraph(Dag.fromEdges("a" -> "b").addNode("b", Map("expr" -> "a * 2")))
       .mapFrame(pk, Map("a" -> "a0"), Some("g"), "g")
-    val (g, jobs) = SparkTestSession.jobsStartedBy(base.setItem("a", grouped.getItem("s")))
-    assert(jobs.isEmpty, jobs.mkString(" | "))
+    val (g, work) = SparkTestSession.jobsStartedBy(base.setItem("a", grouped.getItem("s")))
+    assert(work.jobs.isEmpty, work.jobs.mkString(" | "))
     val got = g.result("b").select($"g", $"b").as[(Long, Long)].collect().toMap
     // group k sums x = k, k + 10, ..., k + 90: 10k + 450
     assert(got == (0L until 10L).map(k => k -> 2 * (10 * k + 450)).toMap)
@@ -1227,8 +1227,8 @@ class TaskGraphSpec extends AnyFunSuite {
       .groupby("k").reduce(key = "x", name = "s", attrs = Map("func" -> "sum"))
     def mapK(labels: String*) =
       g.mapFrame(labels.map(l => (l, 1)).toDF("k", "u"), Map("u" -> "u"), Some("k"), "k")
-    val (_, jobs) = SparkTestSession.jobsStartedBy(mapK("x", "y"))
-    assert(jobs.nonEmpty, "the joined key frame folded to an in-memory table")
+    val (_, work) = SparkTestSession.jobsStartedBy(mapK("x", "y"))
+    assert(work.jobs.nonEmpty, "the joined key frame folded to an in-memory table")
     val e = intercept[GraftException](mapK("x", "z"))
     assert(e.getMessage.contains("Conflicting index values"))
   }
@@ -1293,10 +1293,10 @@ class TaskGraphSpec extends AnyFunSuite {
     } yield {
       val g = base.mapFrame(table(same), Map("a" -> "v"), idx, "s")
       val df = table(ks)
-      val (r, jobs) = SparkTestSession.jobsStartedBy(
+      val (r, work) = SparkTestSession.jobsStartedBy(
         scala.util.Try(g.mapFrame(df, Map(node -> "v"), idx, "s")))
       r.failed.foreach(e => assert(e.isInstanceOf[GraftException], e.toString))
-      (kind, s"$check $labels") -> ((r.isFailure, jobs.size))
+      (kind, s"$check $labels") -> ((r.isFailure, work.jobs.size))
     }
     val diff = got.filter { case (k, v) => want(k) != v }
     assert(diff.isEmpty, diff.map { case (k, v) => s"$k got $v want ${want(k)}" }.mkString("\n"))

@@ -220,16 +220,16 @@ class DedupLifecycleSpec extends AnyFunSuite {
     val (d, e) = (docs, emb)
     d.schema; e.schema
     val scope = new Staging.Scope
-    val ((cosine, minhash), jobs) = SparkTestSession.jobsStartedBy {
+    val ((cosine, minhash), work) = SparkTestSession.jobsStartedBy {
       (Dedup.cosineNearDupsPlan(scope, e, "vec_id", "embedding",
         dim = 64, threshold = 0.4, planesPerTable = 4, tables = 8,
         maxBucket = 256, seed = 42L),
        Dedup.minhashNearDupsPlan(scope, d, "doc_id", "text",
         threshold = 0.5, bands = 8, rows = 4, k = 3, maxBucket = 64))
     }
-    assert(jobs.isEmpty,
-      s"plan construction ran ${jobs.size} job(s) — must be fully lazy: " +
-        jobs.mkString(" | "))
+    assert(work.jobs.isEmpty,
+      s"plan construction ran ${work.jobs.size} job(s) — must be fully lazy: " +
+        work.jobs.mkString(" | "))
     // the plans do execute when acted on
     assert(cosine.count() >= 0 && minhash.count() >= 0)
     scope.release()

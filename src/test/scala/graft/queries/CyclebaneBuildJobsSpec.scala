@@ -109,8 +109,8 @@ class CyclebaneBuildJobsSpec extends AnyFunSuite {
 
   graft.SparkEntry.defs.foreach { q =>
     test(s"${q.name}: construction starts no more jobs than pinned") {
-      val (_, jobs) =
-        try SparkTestSession.jobsStartedBy(q.fn(spark, dir))
+      val jobs =
+        try SparkTestSession.jobsStartedBy(q.fn(spark, dir))._2.jobs
         finally graft.GraftSession.clearCaches(spark)
       val pin = allowance.getOrElse(q.name, 0)
       assert(jobs.size <= pin,

@@ -568,6 +568,70 @@ class StreamingSpec extends AnyFunSuite {
       s"bucket state exceeded maxBucket=$maxB: ${bucketSizes.toSeq}")
   }
 
+  test("bounded state: near-dup, CDC and repeat state keep only the keys " +
+      "seen inside the horizon (statestore-verified)") {
+    // State tracks arrival rate x horizon, not corpus size, only if a key
+    // idle past the horizon is removed. Per operator: a batch of old docs,
+    // then a batch past the horizon plus a trigger batch (the watermark
+    // the first advances runs the timeouts in the second); every state
+    // row left must have been touched by those two batches.
+    import java.nio.file.{Files, Paths}
+    import org.apache.spark.sql.DataFrame
+    import spark.implicits._
+    val horizonMs = 600L * 1000
+    val ops: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "StreamDedup.nearDupHits" -> (s =>
+        StreamDedup.nearDupHits(s, "doc_id", "ts", "text", horizonMs = horizonMs)),
+      "StreamCdc.dupChunkHits" -> (s =>
+        StreamCdc.dupChunkHits(s, "doc_id", "ts", "text", horizonMs = horizonMs)),
+      "StreamRepeats.repeatCandidates" -> (s =>
+        StreamRepeats.repeatCandidates(s, "doc_id", "ts", "text", horizonMs = horizonMs)))
+    val t0 = 1700000000L * 1000 // ms
+    val tNew = t0 + 5 * horizonMs
+    def docs(ids: Range, tsMs: Long, word: String) = ids.map(i =>
+      (i.toLong, new java.sql.Timestamp(tsMs + i),
+        (0 until 60).map(j => s"$word${(i * 7 + j) % 23}x$j").mkString(" ")))
+    val failures = ops.zipWithIndex.flatMap { case ((name, op), n) =>
+      val srcDir = SparkTestSession.tmpPath(s"state_horizon_src$n")
+      val ckpt = SparkTestSession.tmpPath(s"state_horizon_ckpt$n")
+      Seq(srcDir, ckpt).foreach(d =>
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
+      Files.createDirectories(Paths.get(srcDir))
+      var batch = 0
+      def write(rows: Seq[(Long, java.sql.Timestamp, String)]): Unit = {
+        val out = s"$srcDir/b$batch"
+        rows.toDF("doc_id", "ts", "text").repartition(1).write.parquet(out)
+        // distinct mod-times => deterministic batch order
+        new java.io.File(out).listFiles().foreach(
+          _.setLastModified(System.currentTimeMillis() + batch * 1000L))
+        batch += 1
+      }
+      def lastTouched(): Seq[Long] = spark.read.format("statestore").load(ckpt)
+        .selectExpr("value.groupState.lastMs").as[Long].collect().toSeq
+      write(docs(0 until 20, t0, "old"))
+      val schema = spark.read.parquet(s"$srcDir/b0").schema
+      val q = op(spark.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*"))
+        .writeStream.format("noop").outputMode("append")
+        .option("checkpointLocation", ckpt).start()
+      try {
+        q.processAllAvailable()
+        val before = lastTouched()
+        write(docs(100 until 120, tNew, "new"))
+        write(docs(200 until 201, tNew + 60 * 1000, "new"))
+        q.processAllAvailable()
+        val after = lastTouched()
+        if (before.isEmpty || before.exists(_ >= tNew))
+          Some(s"$name: no state from the first batch (${before.size} rows)")
+        else if (after.isEmpty || after.exists(_ < tNew))
+          Some(s"$name: ${after.count(_ < tNew)} of ${after.size} state rows " +
+            s"outlived the horizon")
+        else None
+      } finally q.stop()
+    }
+    assert(failures.isEmpty, failures.mkString("; "))
+  }
+
   test("streaming CDC upsert: batch boundaries irrelevant, tombstones stick") {
     import java.nio.file.{Files, Paths}
     import spark.implicits._
