@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+
+import Multimodal.{mapFamilies, mapPayloads, putLe16, putLe32, putRiff, putStr,
+  wav8Mono, wavChunks}
 
 /** LOSSY audio codecs with exact-arithmetic contracts: G.711 mu-law
   * (WAV format tag 7) and IMA/DVI ADPCM (WAV format tag 0x11) — the
@@ -207,33 +209,10 @@ object LossyAudio {
   // WAV containers (tags 7 and 0x11) + canonical-WAV bridge
   // =================================================================
 
-  private def putLe32(b: Array[Byte], off: Int, v: Int): Unit = {
-    b(off) = v.toByte; b(off + 1) = (v >> 8).toByte
-    b(off + 2) = (v >> 16).toByte; b(off + 3) = (v >> 24).toByte
-  }
-  private def putLe16(b: Array[Byte], off: Int, v: Int): Unit = {
-    b(off) = v.toByte; b(off + 1) = (v >> 8).toByte
-  }
-  private def putStr(b: Array[Byte], off: Int, s: String): Unit = {
-    var i = 0
-    while (i < s.length) { b(off + i) = s.charAt(i).toByte; i += 1 }
-  }
-  private def le32(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-  private def le16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-
   /** mono mu-law WAV (format tag 7, 8 bits/sample) */
   def muLawWav(samples: Array[Int], sampleRate: Int = 8000): Array[Byte] = {
     val n = samples.length
-    val b = new Array[Byte](44 + n)
-    putStr(b, 0, "RIFF"); putLe32(b, 4, 36 + n); putStr(b, 8, "WAVE")
-    putStr(b, 12, "fmt "); putLe32(b, 16, 16)
-    putLe16(b, 20, 7); putLe16(b, 22, 1)
-    putLe32(b, 24, sampleRate); putLe32(b, 28, sampleRate)
-    putLe16(b, 32, 1); putLe16(b, 34, 8)
-    putStr(b, 36, "data"); putLe32(b, 40, n)
+    val b = wav8Mono(7, sampleRate, n)
     var i = 0
     while (i < n) { b(44 + i) = muLawEncode(samples(i)).toByte; i += 1 }
     b
@@ -246,7 +225,7 @@ object LossyAudio {
     val data = imaEncode(samples)
     val n = data.length
     val b = new Array[Byte](12 + 8 + 20 + 8 + 4 + 8 + n)
-    putStr(b, 0, "RIFF"); putLe32(b, 4, b.length - 8); putStr(b, 8, "WAVE")
+    putRiff(b, "WAVE", b.length - 8)
     putStr(b, 12, "fmt "); putLe32(b, 16, 20)
     putLe16(b, 20, 0x11); putLe16(b, 22, 1)
     putLe32(b, 24, sampleRate)
@@ -260,59 +239,11 @@ object LossyAudio {
     b
   }
 
-  /** RIFF walk shared by both decoders: returns (formatTag, channels,
-    * bitsPerSample, samplesPerBlock or -1, factSamples or -1, dataOff,
-    * dataLen) or None when the container is malformed. */
-  private def wavChunks(b: Array[Byte])
-      : Option[(Int, Int, Int, Int, Int, Int, Int)] = {
-    if (b == null || b.length < 44) return None
-    if (!(b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F' &&
-        b(8) == 'W' && b(9) == 'A' && b(10) == 'V' && b(11) == 'E'))
-      return None
-    var i = 12
-    var tag = -1; var ch = -1; var bits = -1; var spb = -1; var fact = -1
-    var dOff = -1; var dLen = -1
-    while (i + 8 <= b.length) {
-      val id = new String(b.slice(i, i + 4), "US-ASCII")
-      val size = le32(b, i + 4)
-      if (id == "fmt " && size >= 16 && i + 8 + 16 <= b.length) {
-        tag = le16(b, i + 8); ch = le16(b, i + 10); bits = le16(b, i + 22)
-        if (size >= 20 && i + 8 + 20 <= b.length) spb = le16(b, i + 26)
-      } else if (id == "fact") {
-        // -1 = fact ABSENT (optional for many tag-0x11 writers; callers
-        // derive the count from the block structure); -2 = fact PRESENT
-        // but insane — a declared-count bomb (negative / past the
-        // decoder cap) OR a structurally malformed chunk (declared size
-        // < 4, or a value field truncated at EOF). Either must
-        // quarantine, never fall back to derivation: "present but
-        // unreadable" is a malformation signal, not an absence.
-        fact =
-          if (size >= 4 && i + 12 <= b.length) {
-            val f = le32(b, i + 8)
-            if (f >= 0 && f <= (1 << 24)) f.toInt else -2
-          } else -2
-      } else if (id == "data" && dOff < 0) {
-        dOff = i + 8
-        dLen = math.min(size, (b.length - i - 8).toLong).toInt
-      }
-      val next = i.toLong + 8L + size + (size & 1L)
-      i = if (next > b.length || next <= i) b.length else next.toInt
-    }
-    if (tag < 0 || dOff < 0) None
-    else Some((tag, ch, bits, spb, fact, dOff, dLen))
-  }
-
   /** canonical 8-bit mono WAV from 16-bit samples — the
     * [[Multimodal.flacToWav]] requantization `(s16 >> 8) + 128` */
   private def canonicalWav(s16: Array[Int]): Array[Byte] = {
     val n = s16.length
-    val b = new Array[Byte](44 + n)
-    putStr(b, 0, "RIFF"); putLe32(b, 4, 36 + n); putStr(b, 8, "WAVE")
-    putStr(b, 12, "fmt "); putLe32(b, 16, 16)
-    putLe16(b, 20, 1); putLe16(b, 22, 1)
-    putLe32(b, 24, 8000); putLe32(b, 28, 8000)
-    putLe16(b, 32, 1); putLe16(b, 34, 8)
-    putStr(b, 36, "data"); putLe32(b, 40, n)
+    val b = wav8Mono(1, 8000, n)
     var i = 0
     while (i < n) { b(44 + i) = ((s16(i) >> 8) + 128).toByte; i += 1 }
     b
@@ -325,23 +256,21 @@ object LossyAudio {
       payloadCol: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(idCol).cast("long").as("__id"), col(payloadCol))
-      .filter(col("__id").isNotNull)
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (id, payload) =>
-          wavChunks(payload) match {
-            case Some((7, 1, 8, _, _, off, len)) if len > 0 =>
-              val s16 = new Array[Int](len)
-              var i = 0
-              while (i < len) {
-                s16(i) = muLawDecode(payload(off + i) & 0xff); i += 1
-              }
-              (id, canonicalWav(s16), true)
-            case _ => (id, null: Array[Byte], false)
-          }
+    mapPayloads(df, idCol, payloadCol) { rows =>
+      rows.map { case (id, payload) =>
+        wavChunks(payload) match {
+          case Some(w) if w.tag == 7 && w.channels == 1 && w.bits == 8 &&
+              w.dataLen > 0 =>
+            val s16 = new Array[Int](w.dataLen)
+            var i = 0
+            while (i < w.dataLen) {
+              s16(i) = muLawDecode(payload(w.dataOff + i) & 0xff); i += 1
+            }
+            (id, canonicalWav(s16), true)
+          case _ => (id, null: Array[Byte], false)
         }
       }
+    }
       .toDF("id", "payload", "decoded")
   }
 
@@ -353,39 +282,38 @@ object LossyAudio {
       payloadCol: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(idCol).cast("long").as("__id"), col(payloadCol))
-      .filter(col("__id").isNotNull)
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (id, payload) =>
-          wavChunks(payload) match {
-            case Some((0x11, 1, 4, spb, fact, off, len))
-                if len > 4 && spb == SamplesPerBlock && fact >= -1 =>
-              // fact is OPTIONAL in practice for tag-0x11 writers: when
-              // absent (-1) derive the count from the block structure —
-              // full blocks carry SamplesPerBlock; a final partial block
-              // of rem >= 4 bytes carries 1 + (rem-4)*2 nibble samples; a
-              // sub-header tail is padding. A PRESENT-but-insane fact
-              // (-2, a declared-count bomb) still quarantines above.
-              val blocks = (len + BlockAlign - 1) / BlockAlign
-              val carry = blocks * SamplesPerBlock
-              val total =
-                if (fact >= 0) math.min(fact, carry)
-                else {
-                  val rem = len % BlockAlign
-                  (len / BlockAlign) * SamplesPerBlock +
-                    (if (rem >= 4) 1 + (rem - 4) * 2 else 0)
-                }
-              val data = java.util.Arrays.copyOfRange(
-                payload, off, off + len)
-              imaDecode(data, total) match {
-                case Some(s16) => (id, canonicalWav(s16), true)
-                case None => (id, null: Array[Byte], false)
+    mapPayloads(df, idCol, payloadCol) { rows =>
+      rows.map { case (id, payload) =>
+        wavChunks(payload) match {
+          case Some(w) if w.tag == 0x11 && w.channels == 1 && w.bits == 4 &&
+              w.dataLen > 4 && w.samplesPerBlock == SamplesPerBlock &&
+              w.fact >= -1 =>
+            // fact is OPTIONAL in practice for tag-0x11 writers: when
+            // absent (-1) derive the count from the block structure —
+            // full blocks carry SamplesPerBlock; a final partial block
+            // of rem >= 4 bytes carries 1 + (rem-4)*2 nibble samples; a
+            // sub-header tail is padding. A PRESENT-but-insane fact
+            // (-2, a declared-count bomb) still quarantines above.
+            val len = w.dataLen
+            val blocks = (len + BlockAlign - 1) / BlockAlign
+            val carry = blocks * SamplesPerBlock
+            val total =
+              if (w.fact >= 0) math.min(w.fact, carry)
+              else {
+                val rem = len % BlockAlign
+                (len / BlockAlign) * SamplesPerBlock +
+                  (if (rem >= 4) 1 + (rem - 4) * 2 else 0)
               }
-            case _ => (id, null: Array[Byte], false)
-          }
+            val data = java.util.Arrays.copyOfRange(
+              payload, w.dataOff, w.dataOff + len)
+            imaDecode(data, total) match {
+              case Some(s16) => (id, canonicalWav(s16), true)
+              case None => (id, null: Array[Byte], false)
+            }
+          case _ => (id, null: Array[Byte], false)
         }
       }
+    }
       .toDF("id", "payload", "decoded")
   }
 
@@ -405,18 +333,11 @@ object LossyAudio {
       familyCol: String)(enc: Array[Int] => Array[Byte]): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    // spread the per-row codec encode (see Multimodal.spreadEncode)
-    Multimodal.spreadEncode(df.select(col(idCol).cast("long").as("__id"),
-        col(familyCol).cast("string"))
-      .filter(col("__id").isNotNull))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, family0) =>
-          val family = if (family0 == null) "" else family0
-          val s16 = Multimodal.synthPcm16(family, id)
-          (id, enc(s16))
-        }
+    mapFamilies(df, idCol, familyCol) { rows =>
+      rows.map { case (id, family) =>
+        (id, enc(Multimodal.synthPcm16(family, id)))
       }
+    }
       .toDF("id", "payload")
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -40,30 +40,6 @@ object Multimodal {
     h
   }
 
-  /** Per-partition JPEG-first frame decoder shared by the AVI and MP4
-    * walks (one instance per partition: ImageIO.read's registry scan per
-    * 9x8 frame dominated the walk; MJPEG frames all hit the hoisted
-    * reader, anything else falls back to the generic ImageIO path).
-    * Extracted with [[stubHash]] in r17's review — the AVI/MP4
-    * bit-identity Mp4Spec pins rides on the decode paths staying ONE
-    * implementation. */
-  private final class FrameJpegDecoder {
-    javax.imageio.ImageIO.setUseCache(false)
-    private val jpegReader = javax.imageio.ImageIO
-      .getImageReadersByFormatName("jpeg").next()
-    def decode(fb: Array[Byte]): java.awt.image.BufferedImage =
-      if (fb.length >= 2 && (fb(0) & 0xff) == 0xff &&
-          (fb(1) & 0xff) == 0xd8) {
-        val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
-          new java.io.ByteArrayInputStream(fb))
-        try {
-          jpegReader.setInput(iis, true, true)
-          jpegReader.read(0)
-        } finally iis.close()
-      } else javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(fb))
-  }
-
   /** The ONE quarantine stub hash every perceptual pipeline emits for an
     * undecodable payload (`byteFold` remixed by one LCG step) — it
     * existed as six identical closure-local copies before r17's review;
@@ -90,12 +66,50 @@ object Multimodal {
       payload.length.toLong)
   }
 
+  // ---- byte readers and writers of the media containers (one copy,
+  // shared with LossyAudio) ----
+
   private def be32(b: Array[Byte], i: Int): Long =
     ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) |
       ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
 
   private def be16(b: Array[Byte], i: Int): Int =
     ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
+
+  private def le16(b: Array[Byte], i: Int): Int =
+    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
+
+  private def le32(b: Array[Byte], i: Int): Long =
+    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
+      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
+
+  /** The four-character chunk/box id at `i`. */
+  private def fourcc(b: Array[Byte], i: Int): String =
+    new String(b, i, 4, "ISO-8859-1")
+
+  private[operators] def putLe16(b: Array[Byte], off: Int, v: Int): Unit = {
+    b(off) = v.toByte; b(off + 1) = (v >> 8).toByte
+  }
+
+  private[operators] def putLe32(b: Array[Byte], off: Int, v: Int): Unit = {
+    b(off) = v.toByte; b(off + 1) = (v >> 8).toByte
+    b(off + 2) = (v >> 16).toByte; b(off + 3) = (v >> 24).toByte
+  }
+
+  private[operators] def putStr(b: Array[Byte], off: Int, s: String): Unit = {
+    var i = 0
+    while (i < s.length) { b(off + i) = s.charAt(i).toByte; i += 1 }
+  }
+
+  /** Whether `b` opens a RIFF container of form `form` ("WAVE", "AVI "). */
+  private def isRiff(b: Array[Byte], form: String): Boolean =
+    b.length >= 12 && fourcc(b, 0) == "RIFF" && fourcc(b, 8) == form
+
+  /** The 12-byte RIFF header: form `form`, `size` bytes after the size
+    * field. */
+  private[operators] def putRiff(b: Array[Byte], form: String, size: Int): Unit = {
+    putStr(b, 0, "RIFF"); putLe32(b, 4, size); putStr(b, 8, form)
+  }
 
   private val pngSignature: Array[Byte] =
     Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
@@ -158,13 +172,6 @@ object Multimodal {
     None
   }
 
-  private def le16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-
-  private def le32(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-
   /** GIF header decode: "GIF87a"/"GIF89a" signature, then the logical
     * screen width/height as little-endian u16 at offsets 6/8. GIF pixels
     * are ALWAYS palette-indexed (the format has no other mode), so the
@@ -225,37 +232,252 @@ object Multimodal {
     StructField("n_samples", LongType, nullable = false),
     StructField("byte_len", LongType, nullable = false)))
 
-  /** WAV (RIFF) header decode: "RIFF....WAVE", then a chunk walk — the
-    * "fmt " chunk carries channels (u16 LE at +2 of its data), sample
-    * rate (u32 at +4) and bits per sample (u16 at +14); the "data" chunk
-    * size divided by the frame stride (channels x bits/8) is the sample
-    * count. Real pure-JVM parsing; any malformed stream returns None.
-    */
-  private[operators] def decodeWav(b: Array[Byte]): Option[Row] = {
-    if (b.length < 44) return None
-    if (!(b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F' &&
-        b(8) == 'W' && b(9) == 'A' && b(10) == 'V' && b(11) == 'E')) return None
+  /** What the one RIFF/WAVE chunk walk finds: the first `fmt ` chunk
+    * that carries the 16-byte PCM fields (format tag, channels, sample
+    * rate, bits per sample, and `samplesPerBlock` from the 20-byte
+    * extended form or -1), the first `fact` chunk (its sample count; -1
+    * when absent, -2 when present but unreadable or past the decoder
+    * cap), and the first `data` chunk (offset, and its declared size
+    * clipped to the bytes actually there). */
+  private[operators] final case class WavChunks(tag: Int, channels: Int,
+      rate: Int, bits: Int, samplesPerBlock: Int, fact: Int, dataOff: Int,
+      dataLen: Int)
+
+  /** The one RIFF/WAVE chunk walk every audio decoder reads through:
+    * "RIFF....WAVE", then fourcc + little-endian size chunks, advanced
+    * word-aligned in Long space (a junk declared size near 4 GB would
+    * overflow an Int index negative) and stopped at the end of the
+    * payload. The first chunk of each kind wins, whatever the order.
+    * None for a null, short (< 44 bytes) or non-WAVE payload, or one
+    * without a usable `fmt ` and a `data` chunk. */
+  private[operators] def wavChunks(b: Array[Byte]): Option[WavChunks] = {
+    if (b == null || b.length < 44 || !isRiff(b, "WAVE")) return None
+    var fmt = -1; var fmtSize = 0L; var fact = -1
+    var dataOff = -1; var dataLen = -1
     var i = 12
-    var channels = 0; var rate = 0; var bits = 0; var dataLen = -1L
-    while (i + 8 <= b.length && (channels == 0 || dataLen < 0)) {
-      val id = new String(b.slice(i, i + 4), "US-ASCII")
+    while (i + 8 <= b.length) {
+      val id = fourcc(b, i)
       val size = le32(b, i + 4)
-      if (id == "fmt " && size >= 16 && i + 8 + 16 <= b.length) {
-        channels = le16(b, i + 10)
-        rate = le32(b, i + 12).toInt
-        bits = le16(b, i + 22)
-      } else if (id == "data") {
-        dataLen = math.min(size, (b.length - i - 8).toLong)
+      if (id == "fmt " && fmt < 0 && size >= 16 && i + 8 + 16 <= b.length) {
+        fmt = i + 8; fmtSize = size
+      } else if (id == "fact" && fact == -1) {
+        // "present but unreadable" (declared size < 4, a value truncated
+        // at EOF) or a declared-count bomb is a malformation signal, not
+        // an absence: callers quarantine on -2, never derive the count
+        fact =
+          if (size >= 4 && i + 12 <= b.length) {
+            val f = le32(b, i + 8)
+            if (f >= 0 && f <= (1 << 24)) f.toInt else -2
+          } else -2
+      } else if (id == "data" && dataOff < 0) {
+        dataOff = i + 8
+        dataLen = math.min(size, (b.length - i - 8).toLong).toInt
       }
-      // advance in Long space: a junk declared size near Int.MaxValue
-      // would overflow an Int index negative and crash the bounds check
       val next = i.toLong + 8L + size + (size & 1L)
       i = if (next > b.length) b.length else next.toInt
     }
-    if (channels <= 0 || rate <= 0 || bits <= 0 || dataLen < 0) return None
-    val stride = channels.toLong * (bits / 8).max(1)
-    Some(Row(channels, rate, bits, dataLen / stride, b.length.toLong))
+    if (fmt < 0 || dataOff < 0) None
+    else Some(WavChunks(le16(b, fmt), le16(b, fmt + 2), le32(b, fmt + 4).toInt,
+      le16(b, fmt + 14),
+      if (fmtSize >= 20 && fmt + 20 <= b.length) le16(b, fmt + 18) else -1,
+      fact, dataOff, dataLen))
   }
+
+  /** WAV metadata: channels, sample rate and bits from the first `fmt `
+    * chunk; the sample count is the first `data` chunk's size divided by
+    * the frame stride (channels x bits/8). Real pure-JVM parsing through
+    * [[wavChunks]]; any malformed stream returns None. */
+  private[operators] def decodeWav(b: Array[Byte]): Option[Row] =
+    wavChunks(b).filter(w => w.channels > 0 && w.rate > 0 && w.bits > 0)
+      .map { w =>
+        val stride = w.channels.toLong * (w.bits / 8).max(1)
+        Row(w.channels, w.rate, w.bits, w.dataLen / stride, b.length.toLong)
+      }
+
+  /** A canonical mono 8-bit WAV with a 44-byte header (`fmt ` then
+    * `data`), format `tag` at `rate` Hz, and `n` zeroed data bytes for the
+    * caller to fill from offset 44: the one WAV header writer, PCM (tag
+    * 1) for the corpora and the decoders' output, mu-law (tag 7) for
+    * [[LossyAudio.muLawWav]]. */
+  private[operators] def wav8Mono(tag: Int, rate: Int, n: Int): Array[Byte] = {
+    val b = new Array[Byte](44 + n)
+    putRiff(b, "WAVE", 36 + n)
+    putStr(b, 12, "fmt "); putLe32(b, 16, 16)
+    putLe16(b, 20, tag); putLe16(b, 22, 1) // format, mono
+    putLe32(b, 24, rate); putLe32(b, 28, rate) // rate, byte rate
+    putLe16(b, 32, 1); putLe16(b, 34, 8) // block align, bits
+    putStr(b, 36, "data"); putLe32(b, 40, n)
+    b
+  }
+
+  /** The payload shell every decode operator runs in: `(id, payload)`
+    * rows, the id cast to long, mapped one partition at a time — a
+    * Dataset-level `mapPartitions` keeps the operator inside one query
+    * plan (no RDD round-trip, no plan break), so upstream column pruning
+    * still reaches the scan. A null id (or a non-numeric one the cast
+    * nulls out) would throw in the non-nullable Long decoder and fail
+    * the TASK, so its row is dropped instead, per the module's
+    * quarantine posture. ImageIO's temp-file cache is switched off per
+    * partition: a disk write per image is pure overhead at corpus scale.
+    * (java.awt.headless is NOT set: the property is read once at AWT
+    * class load, so a per-partition set is too late and a racy
+    * JVM-global mutation; the ImageIO + BufferedImage path is
+    * headless-safe regardless.) */
+  private[operators] def mapPayloads[T: Encoder](df: DataFrame, idCol: String,
+      payloadCol: String)(
+      f: Iterator[(Long, Array[Byte])] => Iterator[T]): Dataset[T] = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    df.select(col(idCol).cast("long").as("__id"), col(payloadCol))
+      .filter(col("__id").isNotNull)
+      .as[(Long, Array[Byte])]
+      .mapPartitions { rows =>
+        javax.imageio.ImageIO.setUseCache(false)
+        f(rows)
+      }
+  }
+
+  /** The synthetic-corpus shell: `(id, family)` rows (a null family reads
+    * as ""), the [[mapPayloads]] posture for the codec-synthesis stages.
+    * Their parallelism is floored at the cluster default
+    * ([[ScaleOps.spreadCpu]]) when the input plan carries fewer
+    * partitions: a small parquet input is ONE scan task (one row group),
+    * and the per-row encode is the cost — measured 1.4 s of serialized
+    * FLAC encode on a 2.1 s query (StageProfile). Payloads are pure
+    * per-row functions, so placement cannot change results; an input
+    * that already carries ample partitions is never coalesced down to
+    * the core count. */
+  private[operators] def mapFamilies[T: Encoder](df: DataFrame, idCol: String,
+      familyCol: String)(f: Iterator[(Long, String)] => Iterator[T]): Dataset[T] = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    ScaleOps.spreadCpu(df.select(col(idCol).cast("long").as("__id"),
+        col(familyCol).cast("string"))
+      .filter(col("__id").isNotNull))
+      .as[(Long, String)]
+      .mapPartitions { rows =>
+        javax.imageio.ImageIO.setUseCache(false)
+        f(rows.map { case (id, family) =>
+          (id, if (family == null) "" else family)
+        })
+      }
+  }
+
+  /** Pixel ceiling of the one decompression-bomb screen,
+    * [[withinDecodeBudget]] (~64 MP ≈ 256 MB ARGB raster — generous for
+    * real corpus assets, small enough that one hostile header cannot OOM
+    * an executor). */
+  private val MaxDecodePixels = 64L * 1000 * 1000
+
+  /** The decompression-bomb screen: a declared pixel count a decode may
+    * allocate. A few-hundred-byte payload can declare absurd dimensions
+    * that make the pixel decode allocate gigabytes, so every decode
+    * checks its header here first — [[PixelDecoder.read]] the payload's
+    * ([[headerPixels]]), [[imageIoFrames]] each frame's. A count of 0
+    * (no reader claims the header) fails too: nothing could decode it. */
+  private def withinDecodeBudget(pixels: Long): Boolean =
+    pixels > 0 && pixels <= MaxDecodePixels
+
+  /** Declared pixel count of an image payload, from headers only. PNG,
+    * JPEG and BMP through the hand parsers, whose header dimensions are
+    * the ones a decode allocates; every other format through ImageIO's
+    * own reader (`getWidth/getHeight(0)` parse headers only): TIFF, WBMP,
+    * and GIF, whose logical screen says nothing of the frame size the
+    * decode allocates. 0 when no installed reader claims the payload or
+    * its header is malformed. */
+  private[operators] def headerPixels(b: Array[Byte]): Long =
+    decodePng(b).orElse(decodeJpeg(b)).orElse(decodeBmp(b))
+      .map(r => r.getInt(0).toLong * r.getInt(1))
+      .getOrElse {
+        // the whole ImageIO read sits under NonFatal -> 0: even opening
+        // the stream can throw, and an escape would fail the TASK
+        try {
+          val in = javax.imageio.ImageIO.createImageInputStream(
+            new java.io.ByteArrayInputStream(b))
+          if (in == null) 0L
+          else try {
+            val readers = javax.imageio.ImageIO.getImageReaders(in)
+            if (!readers.hasNext) 0L
+            else {
+              val r = readers.next()
+              try {
+                r.setInput(in, true, true)
+                r.getWidth(0).toLong * r.getHeight(0)
+              } finally r.dispose()
+            }
+          } finally in.close()
+        } catch {
+          case scala.util.control.NonFatal(_) => 0L
+        }
+      }
+
+  /** The one pixel decode, one instance per partition: a payload passes
+    * the decompression-bomb screen before any pixel is decoded; JPEG
+    * bytes then decode through one hoisted reader (ImageIO.read's
+    * registry scan per 9x8 frame dominated the AVI/MP4 walks), anything
+    * else through `ImageIO.read`. None for a null, over-budget or
+    * undecodable payload; a decode that throws propagates to the
+    * caller's [[quarantined]] scope. The AVI/MP4 bit-identity Mp4Spec
+    * pins rides on the frame decodes staying ONE implementation. */
+  private final class PixelDecoder {
+    private val jpegReader = javax.imageio.ImageIO
+      .getImageReadersByFormatName("jpeg").next()
+    def read(b: Array[Byte]): Option[java.awt.image.BufferedImage] =
+      if (b == null || !withinDecodeBudget(headerPixels(b))) None
+      else if (b.length >= 2 && (b(0) & 0xff) == 0xff &&
+          (b(1) & 0xff) == 0xd8) {
+        val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
+          new java.io.ByteArrayInputStream(b))
+        try {
+          jpegReader.setInput(iis, true, true)
+          Option(jpegReader.read(0))
+        } finally iis.close()
+      } else Option(javax.imageio.ImageIO.read(
+        new java.io.ByteArrayInputStream(b)))
+  }
+
+  /** The one multi-frame ImageIO walk (animated GIF is the container the
+    * JDK decodes natively; reader selection and per-index decode are
+    * format-agnostic, so a TIFF stack walks identically): frame 0's
+    * header is screened before the container is counted, then up to
+    * `maxFrames` frames are read, every frame's header screened first —
+    * each image descriptor carries its own dimensions and
+    * `reader.read(f)` allocates at THAT size, so a 9x8 logical screen
+    * can hide a 40000x40000 frame. `f` maps each decoded frame. None
+    * when no reader claims the payload, it holds no frame, or any frame
+    * is over budget (the payload is hostile by construction); a read
+    * that throws propagates to the caller's [[quarantined]] scope. */
+  private def imageIoFrames[T](b: Array[Byte], maxFrames: Int)(
+      f: java.awt.image.BufferedImage => T): Option[IndexedSeq[T]] = {
+    if (b == null) return None
+    val in = javax.imageio.ImageIO.createImageInputStream(
+      new java.io.ByteArrayInputStream(b))
+    if (in == null) return None
+    try {
+      val readers = javax.imageio.ImageIO.getImageReaders(in)
+      if (!readers.hasNext) None
+      else {
+        val reader = readers.next()
+        try {
+          reader.setInput(in, false, false)
+          def fits(i: Int) = withinDecodeBudget(
+            reader.getWidth(i).toLong * reader.getHeight(i))
+          if (!fits(0)) None
+          else {
+            val n = math.min(reader.getNumImages(true), maxFrames)
+            if (n <= 0 || !(0 until n).forall(fits)) None
+            else Some((0 until n).map(i => f(reader.read(i))))
+          }
+        } finally reader.dispose()
+      }
+    } finally in.close()
+  }
+
+  /** The quarantine scope of every decode: `body`'s result, or None when
+    * it throws. NonFatal only: swallowing OutOfMemoryError would keep
+    * running on a poisoned heap. */
+  private def quarantined[T](body: => Option[T]): Option[T] =
+    try body catch { case scala.util.control.NonFatal(_) => None }
 
   /** Attach a binary payload column (here derived from text — in
     * production this is the raw image/audio bytes from parquet).
@@ -263,62 +485,44 @@ object Multimodal {
   def withPayload(df: DataFrame, srcCol: String, payloadCol: String): DataFrame =
     df.withColumn(payloadCol, encode(col(srcCol), "UTF-8"))
 
-  /** Batch decode: one decoder instantiation per partition, metadata
-    * struct per row. A Dataset-level mapPartitions keeps the operator
-    * inside one query plan (no RDD round-trip, no plan break): upstream
-    * column pruning still reaches the scan and downstream operators
-    * compose on the same DataFrame.
-    */
+  /** Batch decode: metadata struct per row through [[decodeImage]] in
+    * the [[mapPayloads]] shell; a missing asset (null binary cell) is
+    * routine in production corpora and gets zeroed metadata instead of
+    * an NPE in the task. */
   def decodeImages(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(idCol).cast("long").as("__id"), col(payloadCol))
-      // a null id (or a non-numeric one the cast nulls out) would throw
-      // in the non-nullable Long decoder and fail the TASK — dropped
-      // instead, per the module's quarantine posture
-      .filter(col("__id").isNotNull)
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        // per-partition decoder setup would go here (amortized)
-        rows.map { case (id, payload) =>
-          // a missing asset (null binary cell) is routine in production
-          // corpora: emit zeroed metadata instead of NPE-ing the task
-          if (payload == null) (id, (0, 0, 0, 0L))
-          else {
-            val m = decodeImage(payload)
-            (id, (m.getInt(0), m.getInt(1), m.getInt(2), m.getLong(3)))
-          }
+    mapPayloads(df, idCol, payloadCol) { rows =>
+      rows.map { case (id, payload) =>
+        if (payload == null) (id, (0, 0, 0, 0L))
+        else {
+          val m = decodeImage(payload)
+          (id, (m.getInt(0), m.getInt(1), m.getInt(2), m.getLong(3)))
         }
       }
+    }
       .toDF("id", "meta")
       .withColumn("meta", col("meta").cast(imageMetaSchema))
   }
 
   /** Batch audio-metadata decode (the audio mirror of [[decodeImages]]):
-    * real WAV chunk-walk parsing per row in a Dataset-level
-    * `mapPartitions`; non-WAV or missing payloads yield zeroed metadata
-    * (`sample_rate = 0` is the quarantine filter), never a task failure.
+    * real WAV chunk-walk parsing per row ([[decodeWav]]); non-WAV or
+    * missing payloads yield zeroed metadata (`sample_rate = 0` is the
+    * quarantine filter), never a task failure.
     */
   def decodeAudio(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(idCol).cast("long").as("__id"), col(payloadCol))
-      // a null id (or a non-numeric one the cast nulls out) would throw
-      // in the non-nullable Long decoder and fail the TASK — dropped
-      // instead, per the module's quarantine posture
-      .filter(col("__id").isNotNull)
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (id, payload) =>
-          val m = if (payload == null) None else decodeWav(payload)
-          m match {
-            case Some(r) => (id, (r.getInt(0), r.getInt(1), r.getInt(2),
-              r.getLong(3), r.getLong(4)))
-            case None => (id, (0, 0, 0, 0L,
-              if (payload == null) 0L else payload.length.toLong))
-          }
+    mapPayloads(df, idCol, payloadCol) { rows =>
+      rows.map { case (id, payload) =>
+        decodeWav(payload) match {
+          case Some(r) => (id, (r.getInt(0), r.getInt(1), r.getInt(2),
+            r.getLong(3), r.getLong(4)))
+          case None => (id, (0, 0, 0, 0L,
+            if (payload == null) 0L else payload.length.toLong))
         }
       }
+    }
       .toDF("id", "meta")
       .withColumn("meta", col("meta").cast(audioMetaSchema))
   }
@@ -340,25 +544,27 @@ object Multimodal {
     require(maxW > 0 && maxH > 0, "target box must be positive")
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(idCol).cast("long").as("__id"), col(payloadCol))
-      // a null id (or a non-numeric one the cast nulls out) would throw
-      // in the non-nullable Long decoder and fail the TASK — dropped
-      // instead, per the module's quarantine posture
-      .filter(col("__id").isNotNull)
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        // per-partition resampler init would go here (amortized)
-        rows.map { case (id, payload) =>
-          val m = if (payload == null) null else decodeImage(payload)
-          val (w, h) = if (m == null) (0, 0) else (m.getInt(0), m.getInt(1))
-          if (w <= 0 || h <= 0) (id, 0, 0, 0, 0, 0.0d)
-          else {
-            val (ow, oh, scale) = fitBox(w, h, maxW, maxH)
-            (id, w, h, ow, oh, scale)
-          }
-        }
+    mapPayloads(df, idCol, payloadCol) { rows =>
+      rows.map { case (id, payload) =>
+        val (w, h, ow, oh, scale) = headerGeometry(payload, maxW, maxH)
+        (id, w, h, ow, oh, scale)
       }
+    }
       .toDF("id", "src_w", "src_h", "out_w", "out_h", "scale")
+  }
+
+  /** `(src_w, src_h, out_w, out_h, scale)` of a payload's header
+    * dimensions ([[decodeImage]]) fit in the box; all zero for a null
+    * payload. */
+  private def headerGeometry(payload: Array[Byte], maxW: Int,
+      maxH: Int): (Int, Int, Int, Int, Double) = {
+    val m = if (payload == null) null else decodeImage(payload)
+    val (w, h) = if (m == null) (0, 0) else (m.getInt(0), m.getInt(1))
+    if (w <= 0 || h <= 0) (0, 0, 0, 0, 0.0d)
+    else {
+      val (ow, oh, scale) = fitBox(w, h, maxW, maxH)
+      (w, h, ow, oh, scale)
+    }
   }
 
   /** Fit-in-box geometry shared by the header-only and pixel resizers:
@@ -375,139 +581,49 @@ object Multimodal {
     * (`javax.imageio.ImageIO` decodes PNG/JPEG/GIF/BMP/WBMP with no
     * native codecs; `Graphics2D` over a `BufferedImage` resamples with
     * bilinear interpolation): decode → fit-in-box scale → PNG re-encode.
-    * Payloads ImageIO cannot decode fall back to the header parse /
-    * deterministic stub for GEOMETRY (same numbers [[resizeImages]]
-    * reports) with a NULL `out_bytes` and `resampled = false` — in
-    * production that branch is the quarantine signal for undecodable
-    * assets, never a task failure.
+    * Payloads the [[PixelDecoder]] screens out or cannot decode fall back
+    * to the header parse / deterministic stub for GEOMETRY (same numbers
+    * [[resizeImages]] reports) with a NULL `out_bytes` and
+    * `resampled = false` — in production that branch is the quarantine
+    * signal for undecodable assets, never a task failure. The WHOLE
+    * per-row resample is the quarantine scope: a payload that decodes but
+    * blows up in the raster alloc / draw / re-encode is still a
+    * quarantined row.
     *
     * Output: `(id, src_w, src_h, out_w, out_h, scale, resampled,
-    * out_bytes)`. ImageIO's SPI registry is JVM-global (amortized across
-    * rows); the per-partition block disables its temp-file cache — a
-    * disk write per image is pure overhead at corpus scale.
+    * out_bytes)`.
     */
-  /** pixel-decode ceiling for the bomb pre-screens ([[resampleImages]],
-    * [[imageDHash]]) (~64 MP ≈ 256 MB ARGB raster — generous for real
-    * corpus assets, small enough that one hostile header cannot OOM an
-    * executor) */
-  private val MaxDecodePixels = 64L * 1000 * 1000
-
-  /** Declared header pixel count via ImageIO's own reader WITHOUT any
-    * pixel decode (`reader.getWidth/getHeight(0)` parse headers only) —
-    * format-agnostic: covers EVERY format the subsequent `ImageIO.read`
-    * could decode (TIFF on JDK 9+, WBMP, …), where the four hand-written
-    * header parsers cover only PNG/JPEG/GIF/BMP and would let other
-    * formats bypass the [[MaxDecodePixels]] screen. Returns 0 when no
-    * installed reader claims the payload (then `ImageIO.read` returns
-    * null too) or the header itself is malformed (the read will fail the
-    * same way and quarantine).
-    */
-  private[operators] def imageIoHeaderPixels(payload: Array[Byte]): Long =
-    // the WHOLE body sits under NonFatal -> 0L — createImageInputStream
-    // itself can throw IOException (it may spill to the ImageIO disk
-    // cache), and the pre-screen runs before the per-row quarantine try
-    // at its call sites: any escape here would fail the TASK, the one
-    // thing the module's quarantine posture forbids a hostile payload
-    // to do. 0L routes the row to the normal decode-and-quarantine path.
-    try {
-      val in = javax.imageio.ImageIO.createImageInputStream(
-        new java.io.ByteArrayInputStream(payload))
-      if (in == null) 0L
-      else {
-        try {
-          val readers = javax.imageio.ImageIO.getImageReaders(in)
-          if (!readers.hasNext) 0L
-          else {
-            val r = readers.next()
-            try {
-              r.setInput(in, true, true)
-              r.getWidth(0).toLong * r.getHeight(0)
-            } finally r.dispose()
-          }
-        } finally in.close()
-      }
-    } catch {
-      case scala.util.control.NonFatal(_) => 0L
-    }
-
   def resampleImages(df: DataFrame, idCol: String, payloadCol: String,
       maxW: Int, maxH: Int): DataFrame = {
     require(maxW > 0 && maxH > 0, "target box must be positive")
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(idCol).cast("long").as("__id"), col(payloadCol))
-      // a null id (or a non-numeric one the cast nulls out) would throw
-      // in the non-nullable Long decoder and fail the TASK — dropped
-      // instead, per the module's quarantine posture
-      .filter(col("__id").isNotNull)
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        // (java.awt.headless is NOT set here: the property is read once
-        // at AWT class load, so a per-partition set is both too late to
-        // matter and a racy JVM-global mutation — if headless mode is
-        // needed it belongs in spark.executor.extraJavaOptions; the
-        // ImageIO + BufferedImage path is headless-safe regardless)
-        javax.imageio.ImageIO.setUseCache(false)
-        rows.map { case (id, payload) =>
-          // geometry-only fallback shared with the undecodable branch
-          def geometryOnly: (Long, Int, Int, Int, Int, Double, Boolean, Array[Byte]) = {
-            val m = if (payload == null) null else decodeImage(payload)
-            val (w, h) = if (m == null) (0, 0) else (m.getInt(0), m.getInt(1))
-            if (w <= 0 || h <= 0) (id, 0, 0, 0, 0, 0.0d, false, null)
-            else {
-              val (ow, oh, scale) = fitBox(w, h, maxW, maxH)
-              (id, w, h, ow, oh, scale, false, null)
-            }
-          }
-          // decompression-bomb pre-screen: a few-hundred-byte payload can
-          // declare absurd header dimensions that make the pixel decode
-          // allocate gigabytes — reject via header-only parses BEFORE the
-          // pixel decode. Two screens: the hand-written PNG/JPEG/GIF/BMP
-          // parsers, plus ImageIO's own header read (format-agnostic —
-          // covers TIFF/WBMP/any other installed reader the hand parsers
-          // don't, so no decodable format bypasses the ceiling)
-          val headerPixels: Long = if (payload == null) 0L else
-            decodePng(payload).orElse(decodeJpeg(payload))
-              .orElse(decodeGif(payload)).orElse(decodeBmp(payload))
-              .map(r => r.getInt(0).toLong * r.getInt(1))
-              .getOrElse(imageIoHeaderPixels(payload))
-          if (headerPixels > MaxDecodePixels) geometryOnly
-          else {
-            // the WHOLE per-row resample is the quarantine scope — a
-            // payload that decodes but blows up in the raster alloc /
-            // draw / re-encode must still be a quarantined row, never a
-            // task failure. NonFatal only: swallowing OutOfMemoryError
-            // would keep running on a poisoned heap.
-            try {
-              val img =
-                if (payload == null) null
-                else javax.imageio.ImageIO.read(
-                  new java.io.ByteArrayInputStream(payload))
-              if (img == null) geometryOnly
-              else {
-                val (w, h) = (img.getWidth, img.getHeight)
-                val (ow, oh, scale) = fitBox(w, h, maxW, maxH)
-                val outType =
-                  if (img.getColorModel.hasAlpha)
-                    java.awt.image.BufferedImage.TYPE_INT_ARGB
-                  else java.awt.image.BufferedImage.TYPE_INT_RGB
-                val out = new java.awt.image.BufferedImage(ow, oh, outType)
-                val g = out.createGraphics()
-                try {
-                  g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-                    java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-                  g.drawImage(img, 0, 0, ow, oh, null)
-                } finally g.dispose()
-                val buf = new java.io.ByteArrayOutputStream()
-                javax.imageio.ImageIO.write(out, "png", buf)
-                (id, w, h, ow, oh, scale, true, buf.toByteArray)
-              }
-            } catch {
-              case scala.util.control.NonFatal(_) => geometryOnly
-            }
-          }
+    mapPayloads(df, idCol, payloadCol) { rows =>
+      val decoder = new PixelDecoder
+      rows.map { case (id, payload) =>
+        quarantined(decoder.read(payload).map { img =>
+          val (w, h) = (img.getWidth, img.getHeight)
+          val (ow, oh, scale) = fitBox(w, h, maxW, maxH)
+          val outType =
+            if (img.getColorModel.hasAlpha)
+              java.awt.image.BufferedImage.TYPE_INT_ARGB
+            else java.awt.image.BufferedImage.TYPE_INT_RGB
+          val out = new java.awt.image.BufferedImage(ow, oh, outType)
+          val g = out.createGraphics()
+          try {
+            g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
+              java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
+            g.drawImage(img, 0, 0, ow, oh, null)
+          } finally g.dispose()
+          val buf = new java.io.ByteArrayOutputStream()
+          javax.imageio.ImageIO.write(out, "png", buf)
+          (id, w, h, ow, oh, scale, true, buf.toByteArray)
+        }).getOrElse {
+          val (w, h, ow, oh, scale) = headerGeometry(payload, maxW, maxH)
+          (id, w, h, ow, oh, scale, false, null: Array[Byte])
         }
       }
+    }
       .toDF("id", "src_w", "src_h", "out_w", "out_h", "scale", "resampled",
         "out_bytes")
   }
@@ -528,32 +644,25 @@ object Multimodal {
     require(dim > 0 && batchSize > 0, "dim and batchSize must be positive")
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(idCol).cast("long").as("__id"), col(payloadCol))
-      // a null id (or a non-numeric one the cast nulls out) would throw
-      // in the non-nullable Long decoder and fail the TASK — dropped
-      // instead, per the module's quarantine posture
-      .filter(col("__id").isNotNull)
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        // per-partition encoder init would go here (amortized)
-        rows.grouped(batchSize).flatMap { batch =>
-          // a real encoder runs ONE forward pass over `batch` here
-          batch.map { case (id, payload) =>
-            val f = new Array[Float](dim)
-            if (payload != null) {
-              val h = byteFold(payload)
-              var d = 0
-              while (d < dim) {
-                // per-component remix so all dims differ even for tiny inputs
-                val hd = h * (2862933555777941757L + 2 * d) + 3037000493L
-                f(d) = ((hd >>> 40) & 0xffffL).toFloat / 65536.0f
-                d += 1
-              }
+    mapPayloads(df, idCol, payloadCol) { rows =>
+      rows.grouped(batchSize).flatMap { batch =>
+        // a real encoder runs ONE forward pass over `batch` here
+        batch.map { case (id, payload) =>
+          val f = new Array[Float](dim)
+          if (payload != null) {
+            val h = byteFold(payload)
+            var d = 0
+            while (d < dim) {
+              // per-component remix so all dims differ even for tiny inputs
+              val hd = h * (2862933555777941757L + 2 * d) + 3037000493L
+              f(d) = ((hd >>> 40) & 0xffffL).toFloat / 65536.0f
+              d += 1
             }
-            (id, f.toSeq)
           }
+          (id, f.toSeq)
         }
       }
+    }
       .toDF("id", "feature")
   }
 
@@ -588,52 +697,34 @@ object Multimodal {
     * per-partition digest/encoder amortization real asset generation
     * would use.
     */
-  /** Floor a codec-synthesis stage's parallelism at the cluster default
-    * when the input plan carries fewer partitions: a small parquet
-    * input is ONE scan task (one row group), and the per-row encode is
-    * the cost — measured 1.4 s of serialized FLAC encode on a 2.1 s
-    * query (r20 optimization round, StageProfile). Payloads are pure
-    * per-row functions, so placement cannot change results (the
-    * syntheticMjpegAvis posture) — but GUARDED, so a production-scale
-    * input that already carries ample partitions is never coalesced
-    * down to the core count. */
-  private[operators] def spreadEncode(df: DataFrame): DataFrame =
-    ScaleOps.spreadCpu(df)
-
   def syntheticGrayPngs(df: DataFrame, idCol: String,
       familyCol: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    spreadEncode(df.select(col(idCol).cast("long").as("__id"),
-        col(familyCol).cast("string"))
-      .filter(col("__id").isNotNull))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        javax.imageio.ImageIO.setUseCache(false)
-        rows.map { case (id, family0) =>
-          val family = if (family0 == null) "" else family0
-          val img = new java.awt.image.BufferedImage(DHashW, DHashH,
-            java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-          val raster = img.getRaster
-          var pos = 0
-          var y = 0
-          while (y < DHashH) {
-            var x = 0
-            while (x < DHashW) {
-              val base = md5FirstByte(md, family + ":" + pos) % 200
-              val e = md5FirstByte(md, id.toString + "#" + pos) % 2
-              raster.setSample(x, y, 0, base + e)
-              pos += 1
-              x += 1
-            }
-            y += 1
+    mapFamilies(df, idCol, familyCol) { rows =>
+      val md = java.security.MessageDigest.getInstance("MD5")
+      rows.map { case (id, family) =>
+        val img = new java.awt.image.BufferedImage(DHashW, DHashH,
+          java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
+        val raster = img.getRaster
+        var pos = 0
+        var y = 0
+        while (y < DHashH) {
+          var x = 0
+          while (x < DHashW) {
+            val base = md5FirstByte(md, family + ":" + pos) % 200
+            val e = md5FirstByte(md, id.toString + "#" + pos) % 2
+            raster.setSample(x, y, 0, base + e)
+            pos += 1
+            x += 1
           }
-          val buf = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(img, "png", buf)
-          (id, buf.toByteArray)
+          y += 1
         }
+        val buf = new java.io.ByteArrayOutputStream()
+        javax.imageio.ImageIO.write(img, "png", buf)
+        (id, buf.toByteArray)
       }
+    }
       .toDF("id", "payload")
   }
 
@@ -656,48 +747,15 @@ object Multimodal {
   def imageDHash(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(idCol).cast("long").as("__id"), col(payloadCol))
-      .filter(col("__id").isNotNull)
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        javax.imageio.ImageIO.setUseCache(false)
-        rows.map { case (id, payload) =>
-          // same two-tier bomb pre-screen as resampleImages: hand parsers
-          // first, ImageIO header read for every other decodable format
-          val headerPixels: Long = if (payload == null) 0L else
-            decodePng(payload).orElse(decodeJpeg(payload))
-              .orElse(decodeGif(payload)).orElse(decodeBmp(payload))
-              .map(r => r.getInt(0).toLong * r.getInt(1))
-              .getOrElse(imageIoHeaderPixels(payload))
-          if (payload == null || headerPixels > MaxDecodePixels)
-            (id, stubHash(payload), false)
-          else {
-            try {
-              val img = javax.imageio.ImageIO.read(
-                new java.io.ByteArrayInputStream(payload))
-              if (img == null) (id, stubHash(payload), false)
-              else if (img.getWidth == DHashW && img.getHeight == DHashH &&
-                  img.getRaster.getNumBands == 1) {
-                val r = img.getRaster
-                (id, dhashBitsOf((x, y) => r.getSample(x, y, 0)), true)
-              } else {
-                val out = new java.awt.image.BufferedImage(DHashW, DHashH,
-                  java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-                val g = out.createGraphics()
-                try {
-                  g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-                    java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-                  g.drawImage(img, 0, 0, DHashW, DHashH, null)
-                } finally g.dispose()
-                val r = out.getRaster
-                (id, dhashBitsOf((x, y) => r.getSample(x, y, 0)), true)
-              }
-            } catch {
-              case scala.util.control.NonFatal(_) => (id, stubHash(payload), false)
-            }
-          }
+    mapPayloads(df, idCol, payloadCol) { rows =>
+      val decoder = new PixelDecoder
+      rows.map { case (id, payload) =>
+        quarantined(decoder.read(payload).map(frameDHash)) match {
+          case Some(h) => (id, h, true)
+          case None => (id, stubHash(payload), false)
         }
       }
+    }
       .toDF("id", "phash", "decoded")
   }
 
@@ -728,83 +786,65 @@ object Multimodal {
       payloadCol: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(idCol).cast("long").as("__id"), col(payloadCol))
-      .filter(col("__id").isNotNull)
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        javax.imageio.ImageIO.setUseCache(false)
-        def quarantine(id: Long) =
-          (id, 0L, 0.0, 0, 0L, 0.0, false)
-        rows.map { case (id, payload) =>
-          val headerPixels: Long = if (payload == null) 0L else
-            decodePng(payload).orElse(decodeJpeg(payload))
-              .orElse(decodeGif(payload)).orElse(decodeBmp(payload))
-              .map(r => r.getInt(0).toLong * r.getInt(1))
-              .getOrElse(imageIoHeaderPixels(payload))
-          if (payload == null || headerPixels > MaxDecodePixels)
-            quarantine(id)
-          else {
-            try {
-              val img0 = javax.imageio.ImageIO.read(
-                new java.io.ByteArrayInputStream(payload))
-              if (img0 == null) quarantine(id)
-              else {
-                val img =
-                  if (img0.getRaster.getNumBands == 1) img0
-                  else {
-                    val g8 = new java.awt.image.BufferedImage(
-                      img0.getWidth, img0.getHeight,
-                      java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-                    val g = g8.createGraphics()
-                    try g.drawImage(img0, 0, 0, null) finally g.dispose()
-                    g8
-                  }
-                val r = img.getRaster
-                val w = img.getWidth
-                val h = img.getHeight
-                var lum = 0L
-                var mn = 255
-                var mx = 0
-                var clipped = 0L
-                var y = 0
-                while (y < h) {
-                  var x = 0
-                  while (x < w) {
-                    val p = r.getSample(x, y, 0)
-                    lum += p
-                    if (p < mn) mn = p
-                    if (p > mx) mx = p
-                    if (p <= 2 || p >= 253) clipped += 1
-                    x += 1
-                  }
-                  y += 1
-                }
-                var lap = 0L
-                y = 1
-                while (y < h - 1) {
-                  var x = 1
-                  while (x < w - 1) {
-                    val l = 4L * r.getSample(x, y, 0) -
-                      r.getSample(x - 1, y, 0) - r.getSample(x + 1, y, 0) -
-                      r.getSample(x, y - 1, 0) - r.getSample(x, y + 1, 0)
-                    lap += l * l
-                    x += 1
-                  }
-                  y += 1
-                }
-                val nPx = w.toLong * h
-                (id, nPx, lum.toDouble / nPx, mx - mn, lap,
-                  clipped.toDouble / nPx, true)
-              }
-            } catch {
-              case scala.util.control.NonFatal(_) => quarantine(id)
+    mapPayloads(df, idCol, payloadCol) { rows =>
+      val decoder = new PixelDecoder
+      rows.map { case (id, payload) =>
+        quarantined(decoder.read(payload).map { img =>
+          val r = grayRaster(img)
+          val w = r.getWidth
+          val h = r.getHeight
+          var lum = 0L
+          var mn = 255
+          var mx = 0
+          var clipped = 0L
+          var y = 0
+          while (y < h) {
+            var x = 0
+            while (x < w) {
+              val p = r.getSample(x, y, 0)
+              lum += p
+              if (p < mn) mn = p
+              if (p > mx) mx = p
+              if (p <= 2 || p >= 253) clipped += 1
+              x += 1
             }
+            y += 1
           }
-        }
+          var lap = 0L
+          y = 1
+          while (y < h - 1) {
+            var x = 1
+            while (x < w - 1) {
+              val l = 4L * r.getSample(x, y, 0) -
+                r.getSample(x - 1, y, 0) - r.getSample(x + 1, y, 0) -
+                r.getSample(x, y - 1, 0) - r.getSample(x, y + 1, 0)
+              lap += l * l
+              x += 1
+            }
+            y += 1
+          }
+          val nPx = w.toLong * h
+          (id, nPx, lum.toDouble / nPx, mx - mn, lap,
+            clipped.toDouble / nPx, true)
+        }).getOrElse((id, 0L, 0.0, 0, 0L, 0.0, false))
       }
+    }
       .toDF("id", "n_px", "mean_lum", "contrast", "lap_sq_sum",
         "clip_frac", "decoded")
   }
+
+  /** The gray plane of a decoded image: a single-band raster as stored
+    * (the lossless gray corpora read back exactly), anything else drawn
+    * into an 8-bit gray image first. */
+  private def grayRaster(img: java.awt.image.BufferedImage): java.awt.image.Raster =
+    if (img.getRaster.getNumBands == 1) img.getRaster
+    else {
+      val g8 = new java.awt.image.BufferedImage(img.getWidth, img.getHeight,
+        java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
+      val g = g8.createGraphics()
+      try g.drawImage(img, 0, 0, null) finally g.dispose()
+      g8.getRaster
+    }
 
   /** Audio quality signals — the curation pre-filter over REAL decoded
     * 8-bit mono PCM samples (the [[audioFingerprint]] decode contract):
@@ -825,53 +865,49 @@ object Multimodal {
       payloadCol: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(idCol).cast("long").as("__id"), col(payloadCol))
-      .filter(col("__id").isNotNull)
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        def quarantine(id: Long) = (id, 0L, 0, 0, 0L, 0.0, 0.0, false)
-        rows.map { case (id, payload) =>
-          val d = if (payload == null) None else wavData8Mono(payload)
-          d match {
-            case Some((off, len)) if len > 0 =>
-              var mn = 255
-              var mx = 0
-              var rms = 0L
-              var clipped = 0L
-              var i = 0
-              while (i < len) {
-                val s = payload(off + i) & 0xff
-                if (s < mn) mn = s
-                if (s > mx) mx = s
-                val dev = s - 128L
-                rms += dev * dev
-                if (s <= 1 || s >= 254) clipped += 1
-                i += 1
+    mapPayloads(df, idCol, payloadCol) { rows =>
+      def quarantine(id: Long) = (id, 0L, 0, 0, 0L, 0.0, 0.0, false)
+      rows.map { case (id, payload) =>
+        wavData8Mono(payload) match {
+          case Some((off, len)) if len > 0 =>
+            var mn = 255
+            var mx = 0
+            var rms = 0L
+            var clipped = 0L
+            var i = 0
+            while (i < len) {
+              val s = payload(off + i) & 0xff
+              if (s < mn) mn = s
+              if (s > mx) mx = s
+              val dev = s - 128L
+              rms += dev * dev
+              if (s <= 1 || s >= 254) clipped += 1
+              i += 1
+            }
+            val nFrames = len / AudioFrameLen
+            var silent = 0L
+            var f = 0
+            while (f < nFrames) {
+              var fmn = 255
+              var fmx = 0
+              var j = 0
+              while (j < AudioFrameLen) {
+                val s = payload(off + f * AudioFrameLen + j) & 0xff
+                if (s < fmn) fmn = s
+                if (s > fmx) fmx = s
+                j += 1
               }
-              val nFrames = len / AudioFrameLen
-              var silent = 0L
-              var f = 0
-              while (f < nFrames) {
-                var fmn = 255
-                var fmx = 0
-                var j = 0
-                while (j < AudioFrameLen) {
-                  val s = payload(off + f * AudioFrameLen + j) & 0xff
-                  if (s < fmn) fmn = s
-                  if (s > fmx) fmx = s
-                  j += 1
-                }
-                if (fmx - fmn < 4) silent += 1
-                f += 1
-              }
-              (id, len.toLong, mn, mx, rms,
-                clipped.toDouble / len,
-                if (nFrames == 0) 0.0 else silent.toDouble / nFrames,
-                true)
-            case _ => quarantine(id)
-          }
+              if (fmx - fmn < 4) silent += 1
+              f += 1
+            }
+            (id, len.toLong, mn, mx, rms,
+              clipped.toDouble / len,
+              if (nFrames == 0) 0.0 else silent.toDouble / nFrames,
+              true)
+          case _ => quarantine(id)
         }
       }
+    }
       .toDF("id", "n_samples", "smin", "smax", "rms_sq_sum",
         "clip_frac", "silence_frac", "decoded")
   }
@@ -903,44 +939,17 @@ object Multimodal {
     val spark = df.sparkSession
     import spark.implicits._
     val n = AudioFrames * AudioFrameLen
-    spreadEncode(df.select(col(idCol).cast("long").as("__id"),
-        col(familyCol).cast("string"))
-      .filter(col("__id").isNotNull))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        rows.map { case (id, family0) =>
-          val family = if (family0 == null) "" else family0
-          val b = new Array[Byte](44 + n)
-          def putStr(s: String, off: Int): Unit = {
-            var i = 0
-            while (i < s.length) { b(off + i) = s.charAt(i).toByte; i += 1 }
-          }
-          def putLe32(v: Int, off: Int): Unit = {
-            b(off) = v.toByte; b(off + 1) = (v >> 8).toByte
-            b(off + 2) = (v >> 16).toByte; b(off + 3) = (v >> 24).toByte
-          }
-          def putLe16(v: Int, off: Int): Unit = {
-            b(off) = v.toByte; b(off + 1) = (v >> 8).toByte
-          }
-          putStr("RIFF", 0); putLe32(36 + n, 4); putStr("WAVE", 8)
-          putStr("fmt ", 12); putLe32(16, 16)
-          putLe16(1, 20); putLe16(1, 22) // PCM, mono
-          putLe32(8000, 24); putLe32(8000, 28) // rate, byte rate
-          putLe16(1, 32); putLe16(8, 34) // block align, bits
-          putStr("data", 36); putLe32(n, 40)
-          synthPcm8Into(md, family, id, b, 44, n)
-          (id, b)
-        }
+    mapFamilies(df, idCol, familyCol) { rows =>
+      val md = java.security.MessageDigest.getInstance("MD5")
+      rows.map { case (id, family) =>
+        val b = wav8Mono(1, 8000, n)
+        synthPcm8Into(md, family, id, b, 44, n)
+        (id, b)
       }
+    }
       .toDF("id", "payload")
   }
 
-  /** The shared analytic PCM formula of [[syntheticWavs]] AND
-    * [[syntheticFlacs]] (one definition so the two corpora cannot
-    * drift): sample at `pos` is `byte[pos%16] of md5("family:" +
-    * pos/16) % 200 + byte[pos%16] of md5("id#" + pos/16) % 2`, written
-    * into `b[off, off+n)`. */
   /** The shared 16-bit view of the analytic corpus — `(u8 - 128) << 8`
     * over [[synthPcm8Into]]; ONE definition feeding [[syntheticFlacs]]
     * and the [[LossyAudio]] mu-law/ADPCM corpora so the three codec
@@ -960,6 +969,11 @@ object Multimodal {
     s16
   }
 
+  /** The shared analytic PCM formula of [[syntheticWavs]] AND
+    * [[syntheticFlacs]] (one definition so the two corpora cannot
+    * drift): sample at `pos` is `byte[pos%16] of md5("family:" +
+    * pos/16) % 200 + byte[pos%16] of md5("id#" + pos/16) % 2`, written
+    * into `b[off, off+n)`. */
   private def synthPcm8Into(md: java.security.MessageDigest,
       family: String, id: Long, b: Array[Byte], off: Int, n: Int): Unit = {
     var blk = 0
@@ -991,29 +1005,23 @@ object Multimodal {
       familyCol: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val n = AudioFrames * AudioFrameLen
-    spreadEncode(df.select(col(idCol).cast("long").as("__id"),
-        col(familyCol).cast("string"))
-      .filter(col("__id").isNotNull))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        rows.map { case (id, family0) =>
-          val family = if (family0 == null) "" else family0
-          val s16 = synthPcm16With(md, family, id)
-          // lpcEvery = 5 (coprime to the 6-cycle VERBATIM/FIXED
-          // schedule) + a per-clip schedule phase of id % 30: each
-          // 5-frame clip covers 5 consecutive residues of the 30-cycle,
-          // so ACROSS any 30 consecutive ids the corpus carries every
-          // subset subframe type — VERBATIM, FIXED orders 0-4 AND LPC —
-          // and q_audio_flac's oracle certificate covers them all end
-          // to end (with lpcEvery = 3 the LPC branch shadowed VERBATIM
-          // and FIXED-2 entirely: frameNo % 6 == 0 or 3 implies % 3 == 0)
-          (id, Flac.encode(s16, bps = 16, sampleRate = 8000,
-            blockSize = 256, lpcEvery = 5,
-            schedulePhase = (math.floorMod(id, 30L)).toInt))
-        }
+    mapFamilies(df, idCol, familyCol) { rows =>
+      val md = java.security.MessageDigest.getInstance("MD5")
+      rows.map { case (id, family) =>
+        val s16 = synthPcm16With(md, family, id)
+        // lpcEvery = 5 (coprime to the 6-cycle VERBATIM/FIXED
+        // schedule) + a per-clip schedule phase of id % 30: each
+        // 5-frame clip covers 5 consecutive residues of the 30-cycle,
+        // so ACROSS any 30 consecutive ids the corpus carries every
+        // subset subframe type — VERBATIM, FIXED orders 0-4 AND LPC —
+        // and q_audio_flac's oracle certificate covers them all end
+        // to end (with lpcEvery = 3 the LPC branch shadowed VERBATIM
+        // and FIXED-2 entirely: frameNo % 6 == 0 or 3 implies % 3 == 0)
+        (id, Flac.encode(s16, bps = 16, sampleRate = 8000,
+          blockSize = 256, lpcEvery = 5,
+          schedulePhase = (math.floorMod(id, 30L)).toInt))
       }
+    }
       .toDF("id", "payload")
   }
 
@@ -1030,76 +1038,36 @@ object Multimodal {
       payloadCol: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(idCol).cast("long").as("__id"), col(payloadCol))
-      .filter(col("__id").isNotNull)
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (id, payload) =>
-          val d = if (payload == null) None else Flac.decode(payload)
-          d match {
-            case Some(dec) if dec.channels == 1 &&
-                (dec.bps == 8 || dec.bps == 16) =>
-              val n = dec.samples.length
-              val b = new Array[Byte](44 + n)
-              def putStr(s: String, off: Int): Unit = {
-                var i = 0
-                while (i < s.length) { b(off + i) = s.charAt(i).toByte; i += 1 }
-              }
-              def putLe32(v: Int, off: Int): Unit = {
-                b(off) = v.toByte; b(off + 1) = (v >> 8).toByte
-                b(off + 2) = (v >> 16).toByte; b(off + 3) = (v >> 24).toByte
-              }
-              def putLe16(v: Int, off: Int): Unit = {
-                b(off) = v.toByte; b(off + 1) = (v >> 8).toByte
-              }
-              putStr("RIFF", 0); putLe32(36 + n, 4); putStr("WAVE", 8)
-              putStr("fmt ", 12); putLe32(16, 16)
-              putLe16(1, 20); putLe16(1, 22)
-              putLe32(dec.sampleRate, 24); putLe32(dec.sampleRate, 28)
-              putLe16(1, 32); putLe16(8, 34)
-              putStr("data", 36); putLe32(n, 40)
-              var i = 0
-              while (i < n) {
-                val u8 =
-                  if (dec.bps == 8) dec.samples(i) + 128
-                  else (dec.samples(i) >> 8) + 128
-                b(44 + i) = u8.toByte
-                i += 1
-              }
-              (id, b, true)
-            case _ => (id, null: Array[Byte], false)
-          }
+    mapPayloads(df, idCol, payloadCol) { rows =>
+      rows.map { case (id, payload) =>
+        val d = if (payload == null) None else Flac.decode(payload)
+        d match {
+          case Some(dec) if dec.channels == 1 &&
+              (dec.bps == 8 || dec.bps == 16) =>
+            val n = dec.samples.length
+            val b = wav8Mono(1, dec.sampleRate, n)
+            var i = 0
+            while (i < n) {
+              val u8 =
+                if (dec.bps == 8) dec.samples(i) + 128
+                else (dec.samples(i) >> 8) + 128
+              b(44 + i) = u8.toByte
+              i += 1
+            }
+            (id, b, true)
+          case _ => (id, null: Array[Byte], false)
         }
       }
+    }
       .toDF("id", "payload", "decoded")
   }
 
-  /** `(data offset, data len)` of an 8-bit mono PCM WAV — the same
-    * chunk walk as [[decodeWav]], additionally requiring the format the
-    * fingerprint can read sample-exactly. */
-  private def wavData8Mono(b: Array[Byte]): Option[(Int, Int)] = {
-    if (b.length < 44) return None
-    if (!(b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F' &&
-        b(8) == 'W' && b(9) == 'A' && b(10) == 'V' && b(11) == 'E')) return None
-    var i = 12
-    var channels = 0; var bits = 0
-    var dataOff = -1; var dataLen = -1
-    while (i + 8 <= b.length && (channels == 0 || dataOff < 0)) {
-      val id = new String(b.slice(i, i + 4), "US-ASCII")
-      val size = le32(b, i + 4)
-      if (id == "fmt " && size >= 16 && i + 8 + 16 <= b.length) {
-        channels = le16(b, i + 10)
-        bits = le16(b, i + 22)
-      } else if (id == "data") {
-        dataOff = i + 8
-        dataLen = math.min(size, (b.length - i - 8).toLong).toInt
-      }
-      val next = i.toLong + 8L + size + (size & 1L)
-      i = if (next > b.length) b.length else next.toInt
-    }
-    if (channels == 1 && bits == 8 && dataOff >= 0) Some((dataOff, dataLen))
-    else None
-  }
+  /** `(data offset, data len)` of an 8-bit mono WAV — the
+    * [[wavChunks]] walk, restricted to the format the fingerprints and
+    * quality signals read sample-exactly. */
+  private def wavData8Mono(b: Array[Byte]): Option[(Int, Int)] =
+    wavChunks(b).filter(w => w.channels == 1 && w.bits == 8)
+      .map(w => (w.dataOff, w.dataLen))
 
   /** 64-bit audio fingerprint over REAL decoded WAV samples: walk the
     * RIFF chunks (the [[decodeWav]] parser), read the first
@@ -1115,37 +1083,33 @@ object Multimodal {
     val spark = df.sparkSession
     import spark.implicits._
     val need = AudioFrames * AudioFrameLen
-    df.select(col(idCol).cast("long").as("__id"), col(payloadCol))
-      .filter(col("__id").isNotNull)
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (id, payload) =>
-          val d = if (payload == null) None else wavData8Mono(payload)
-          d match {
-            case Some((off, len)) if len >= need =>
-              val e = new Array[Long](AudioFrames)
-              var f = 0
-              while (f < AudioFrames) {
-                var s = 0L
-                var j = 0
-                while (j < AudioFrameLen) {
-                  s += payload(off + f * AudioFrameLen + j) & 0xff
-                  j += 1
-                }
-                e(f) = s
-                f += 1
+    mapPayloads(df, idCol, payloadCol) { rows =>
+      rows.map { case (id, payload) =>
+        wavData8Mono(payload) match {
+          case Some((off, len)) if len >= need =>
+            val e = new Array[Long](AudioFrames)
+            var f = 0
+            while (f < AudioFrames) {
+              var s = 0L
+              var j = 0
+              while (j < AudioFrameLen) {
+                s += payload(off + f * AudioFrameLen + j) & 0xff
+                j += 1
               }
-              var sig = 0L
-              var i = 0
-              while (i < 64) {
-                if (e(i) > e(i + 1)) sig |= 1L << i
-                i += 1
-              }
-              (id, sig, true)
-            case _ => (id, stubHash(payload), false)
-          }
+              e(f) = s
+              f += 1
+            }
+            var sig = 0L
+            var i = 0
+            while (i < 64) {
+              if (e(i) > e(i + 1)) sig |= 1L << i
+              i += 1
+            }
+            (id, sig, true)
+          case _ => (id, stubHash(payload), false)
         }
       }
+    }
       .toDF("id", "afp", "decoded")
   }
 
@@ -1216,55 +1180,51 @@ object Multimodal {
     val spark = df.sparkSession
     import spark.implicits._
     val need = SpectralFrames * SpectralFrameLen
-    df.select(col(idCol).cast("long").as("__id"), col(payloadCol))
-      .filter(col("__id").isNotNull)
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (id, payload) =>
-          val d = if (payload == null) None else wavData8Mono(payload)
-          d match {
-            case Some((off, len)) if len >= need =>
-              val e = Array.ofDim[Long](SpectralFrames, SpectralBands)
-              var f = 0
-              while (f < SpectralFrames) {
-                var m = 0
-                while (m < SpectralBands) {
-                  var acc = 0L
-                  var c = 0
-                  while (c < SpectralBandWidth) {
-                    val nat = SeqToNat(1 + m * SpectralBandWidth + c)
-                    var w = 0L
-                    var j = 0
-                    while (j < SpectralFrameLen) {
-                      val s = payload(off + f * SpectralFrameLen + j) & 0xff
-                      w += (if (Integer.bitCount(nat & j) % 2 == 0) s else -s)
-                      j += 1
-                    }
-                    acc += w * w
-                    c += 1
+    mapPayloads(df, idCol, payloadCol) { rows =>
+      rows.map { case (id, payload) =>
+        wavData8Mono(payload) match {
+          case Some((off, len)) if len >= need =>
+            val e = Array.ofDim[Long](SpectralFrames, SpectralBands)
+            var f = 0
+            while (f < SpectralFrames) {
+              var m = 0
+              while (m < SpectralBands) {
+                var acc = 0L
+                var c = 0
+                while (c < SpectralBandWidth) {
+                  val nat = SeqToNat(1 + m * SpectralBandWidth + c)
+                  var w = 0L
+                  var j = 0
+                  while (j < SpectralFrameLen) {
+                    val s = payload(off + f * SpectralFrameLen + j) & 0xff
+                    w += (if (Integer.bitCount(nat & j) % 2 == 0) s else -s)
+                    j += 1
                   }
-                  e(f)(m) = acc
-                  m += 1
+                  acc += w * w
+                  c += 1
                 }
-                f += 1
+                e(f)(m) = acc
+                m += 1
               }
-              var sig = 0L
-              var n = 1
-              while (n < SpectralFrames) {
-                var m = 0
-                while (m < SpectralBands - 1) {
-                  val dNow = e(n)(m) - e(n)(m + 1)
-                  val dPrev = e(n - 1)(m) - e(n - 1)(m + 1)
-                  if (dNow - dPrev > 0) sig |= 1L << ((n - 1) * 8 + m)
-                  m += 1
-                }
-                n += 1
+              f += 1
+            }
+            var sig = 0L
+            var n = 1
+            while (n < SpectralFrames) {
+              var m = 0
+              while (m < SpectralBands - 1) {
+                val dNow = e(n)(m) - e(n)(m + 1)
+                val dPrev = e(n - 1)(m) - e(n - 1)(m + 1)
+                if (dNow - dPrev > 0) sig |= 1L << ((n - 1) * 8 + m)
+                m += 1
               }
-              (id, sig, true)
-            case _ => (id, stubHash(payload), false)
-          }
+              n += 1
+            }
+            (id, sig, true)
+          case _ => (id, stubHash(payload), false)
         }
       }
+    }
       .toDF("id", "asfp", "decoded")
   }
 
@@ -1311,59 +1271,54 @@ object Multimodal {
       s"nFrames must be in [1, $FrameKeyMult], got $nFrames")
     val spark = df.sparkSession
     import spark.implicits._
-    spreadEncode(df.select(col(idCol).cast("long").as("__id"),
-        col(familyCol).cast("string"))
-      .filter(col("__id").isNotNull))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        javax.imageio.ImageIO.setUseCache(false)
-        val grays = (0 until 256).map(_.toByte).toArray
-        val cm = new java.awt.image.IndexColorModel(8, 256, grays, grays, grays)
-        rows.map { case (id, family0) =>
-          val family = if (family0 == null) "" else family0
-          val buf = new java.io.ByteArrayOutputStream()
-          val writer = javax.imageio.ImageIO
-            .getImageWritersByFormatName("gif").next()
-          val ios = javax.imageio.ImageIO.createImageOutputStream(buf)
-          try {
-            writer.setOutput(ios)
-            writer.prepareWriteSequence(null)
-            var f = 0
-            while (f < nFrames) {
-              val img = new java.awt.image.BufferedImage(DHashW, DHashH,
-                java.awt.image.BufferedImage.TYPE_BYTE_INDEXED, cm)
-              val raster = img.getRaster
-              var pos = 0
-              var y = 0
-              while (y < DHashH) {
-                var x = 0
-                while (x < DHashW) {
-                  val base = md5FirstByte(md, family + ":" + f + ":" + pos) % 200
-                  val e = md5FirstByte(md, id.toString + "#" + f + ":" + pos) % 2
-                  raster.setSample(x, y, 0, base + e)
-                  pos += 1
-                  x += 1
-                }
-                y += 1
+    mapFamilies(df, idCol, familyCol) { rows =>
+      val md = java.security.MessageDigest.getInstance("MD5")
+      val grays = (0 until 256).map(_.toByte).toArray
+      val cm = new java.awt.image.IndexColorModel(8, 256, grays, grays, grays)
+      rows.map { case (id, family) =>
+        val buf = new java.io.ByteArrayOutputStream()
+        val writer = javax.imageio.ImageIO
+          .getImageWritersByFormatName("gif").next()
+        val ios = javax.imageio.ImageIO.createImageOutputStream(buf)
+        try {
+          writer.setOutput(ios)
+          writer.prepareWriteSequence(null)
+          var f = 0
+          while (f < nFrames) {
+            val img = new java.awt.image.BufferedImage(DHashW, DHashH,
+              java.awt.image.BufferedImage.TYPE_BYTE_INDEXED, cm)
+            val raster = img.getRaster
+            var pos = 0
+            var y = 0
+            while (y < DHashH) {
+              var x = 0
+              while (x < DHashW) {
+                val base = md5FirstByte(md, family + ":" + f + ":" + pos) % 200
+                val e = md5FirstByte(md, id.toString + "#" + f + ":" + pos) % 2
+                raster.setSample(x, y, 0, base + e)
+                pos += 1
+                x += 1
               }
-              writer.writeToSequence(
-                new javax.imageio.IIOImage(img, null, null), null)
-              f += 1
+              y += 1
             }
-            writer.endWriteSequence()
-          } finally {
-            try ios.close() finally writer.dispose()
+            writer.writeToSequence(
+              new javax.imageio.IIOImage(img, null, null), null)
+            f += 1
           }
-          (id, buf.toByteArray)
+          writer.endWriteSequence()
+        } finally {
+          try ios.close() finally writer.dispose()
         }
+        (id, buf.toByteArray)
       }
+    }
       .toDF("id", "payload")
   }
 
   /** dHash one decoded frame: direct-raster fast path for an exact
-    * 9x8 single-band image, bilinear downscale otherwise — the shared
-    * kernel of [[videoFrameDHash]] and [[aviFrameDHash]]. */
+    * 9x8 single-band image, bilinear downscale otherwise — the one dHash
+    * kernel of [[imageDHash]], [[videoFrameDHash]], [[aviFrameDHash]]
+    * and [[mp4FrameDHash]]. */
   private[operators] def frameDHash(
       img: java.awt.image.BufferedImage): Long =
     if (img.getWidth == DHashW && img.getHeight == DHashH &&
@@ -1391,20 +1346,6 @@ object Multimodal {
   private[operators] val MjpegLevels: Array[Int] =
     Array(10, 40, 70, 100, 130, 160, 190, 220, 250)
 
-  /** Deterministic 9x8 grayscale MJPEG-in-AVI payloads from an
-    * (id, family) frame — REAL RIFF AVI containers (hand-built 'hdrl'
-    * with MJPG stream headers + 'movi' LIST of '00dc' JPEG chunks, the
-    * JDK JPEG encoder at quality 1.0) whose per-frame pixel ORDERINGS
-    * are analytically known: row y of frame f holds the 9 levels of
-    * [[MjpegLevels]] permuted by ranking `md5("<family>:<f>:<y>:<x>")`
-    * (ties broken by x; family content ONLY — same-family videos carry
-    * byte-identical frame JPEGs, so their dHashes collide exactly, and
-    * the rank permutation is plain SQL, so the oracle replays the
-    * pipeline without replaying JPEG). Lossy-codec discipline: dHash
-    * only compares adjacent samples, adjacent samples always differ by
-    * >= 30 levels, and quality-1.0 JPEG error is a few counts — the
-    * decoded ordering equals the analytic ordering (pinned in AviSpec).
-    */
   /** Per-partition MJPEG family-frame encoder shared by
     * [[syntheticMjpegAvis]] and [[syntheticMjpegMp4s]]: the SAME frame
     * JPEG bytes land in both containers (one instance per partition —
@@ -1414,7 +1355,6 @@ object Multimodal {
     * payload content via a bounded per-family cache). */
   private final class MjpegFamilyFrames(nFrames: Int) {
     private val md = java.security.MessageDigest.getInstance("MD5")
-    javax.imageio.ImageIO.setUseCache(false)
     private val writer = javax.imageio.ImageIO
       .getImageWritersByFormatName("jpg").next()
     private val wparam = writer.getDefaultWriteParam
@@ -1461,8 +1401,7 @@ object Multimodal {
       buf.toByteArray
     }
     private val famCache = new java.util.HashMap[String, Array[Array[Byte]]]()
-    def framesOf(family0: String): Array[Array[Byte]] = {
-      val family = if (family0 == null) "" else family0
+    def framesOf(family: String): Array[Array[Byte]] = {
       val hit = famCache.get(family)
       if (hit != null) hit
       else {
@@ -1474,86 +1413,89 @@ object Multimodal {
     }
   }
 
+  /** Deterministic 9x8 grayscale MJPEG-in-AVI payloads from an
+    * (id, family) frame — REAL RIFF AVI containers (hand-built 'hdrl'
+    * with MJPG stream headers + 'movi' LIST of '00dc' JPEG chunks, the
+    * JDK JPEG encoder at quality 1.0) whose per-frame pixel ORDERINGS
+    * are analytically known: row y of frame f holds the 9 levels of
+    * [[MjpegLevels]] permuted by ranking `md5("<family>:<f>:<y>:<x>")`
+    * (ties broken by x; family content ONLY — same-family videos carry
+    * byte-identical frame JPEGs, so their dHashes collide exactly, and
+    * the rank permutation is plain SQL, so the oracle replays the
+    * pipeline without replaying JPEG). Lossy-codec discipline: dHash
+    * only compares adjacent samples, adjacent samples always differ by
+    * >= 30 levels, and quality-1.0 JPEG error is a few counts — the
+    * decoded ordering equals the analytic ordering (pinned in AviSpec).
+    */
   def syntheticMjpegAvis(df: DataFrame, idCol: String,
       familyCol: String, nFrames: Int): DataFrame = {
     require(nFrames > 0 && nFrames <= FrameKeyMult,
       s"nFrames must be in [1, $FrameKeyMult], got $nFrames")
     val spark = df.sparkSession
     import spark.implicits._
-    // the encode below is the cost; spread it across the cluster
-    // (payloads are a pure per-row function, so placement cannot change
-    // results) — guarded since r20 so a production-scale input is
-    // never coalesced DOWN to the core count
-    spreadEncode(df.select(col(idCol).cast("long").as("__id"),
-        col(familyCol).cast("string"))
-      .filter(col("__id").isNotNull))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        val enc = new MjpegFamilyFrames(nFrames)
-        def framesOf(family: String): Array[Array[Byte]] =
-          enc.framesOf(family)
-        def le32(v: Int): Array[Byte] = Array(
-          (v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-          ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-        def le16(v: Int): Array[Byte] =
-          Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-        def fourcc(s: String): Array[Byte] = s.getBytes("ISO-8859-1")
-        rows.map { case (id, family0) =>
-          val family = if (family0 == null) "" else family0
-          val frames = framesOf(family)
-          val out = new java.io.ByteArrayOutputStream()
-          def chunk(id4: String, body: Array[Byte]): Array[Byte] = {
-            val b = new java.io.ByteArrayOutputStream()
-            b.write(fourcc(id4)); b.write(le32(body.length)); b.write(body)
-            if ((body.length & 1) == 1) b.write(0) // RIFF word padding
-            b.toByteArray
-          }
-          def list(tpe: String, body: Array[Byte]): Array[Byte] = {
-            val b = new java.io.ByteArrayOutputStream()
-            b.write(fourcc("LIST")); b.write(le32(body.length + 4))
-            b.write(fourcc(tpe)); b.write(body)
-            b.toByteArray
-          }
-          // avih: 56-byte main header (micros/frame at 10 fps, 1 stream)
-          val avih = {
-            val b = new java.io.ByteArrayOutputStream()
-            Seq(100000, 0, 0, 0, nFrames, 0, 1, 0, DHashW, DHashH,
-              0, 0, 0, 0).foreach(v => b.write(le32(v)))
-            chunk("avih", b.toByteArray)
-          }
-          // strh: 56-byte video stream header, MJPG handler, 10 fps
-          val strh = {
-            val b = new java.io.ByteArrayOutputStream()
-            b.write(fourcc("vids")); b.write(fourcc("MJPG"))
-            Seq(0, 0, 0, 1, 10, 0, nFrames, 0, -1, 0).foreach(v =>
-              b.write(le32(v)))
-            Seq(0, 0, DHashW, DHashH).foreach(v => b.write(le16(v)))
-            chunk("strh", b.toByteArray)
-          }
-          // strf: BITMAPINFOHEADER with 'MJPG' compression
-          val strf = {
-            val b = new java.io.ByteArrayOutputStream()
-            b.write(le32(40)); b.write(le32(DHashW)); b.write(le32(DHashH))
-            b.write(le16(1)); b.write(le16(24)); b.write(fourcc("MJPG"))
-            Seq(DHashW * DHashH * 3, 0, 0, 0, 0).foreach(v =>
-              b.write(le32(v)))
-            chunk("strf", b.toByteArray)
-          }
-          val hdrl = list("hdrl", avih ++ list("strl", strh ++ strf))
-          val movi = list("movi",
-            frames.iterator.map(j => chunk("00dc", j))
-              .foldLeft(Array.emptyByteArray)(_ ++ _))
-          val body = fourcc("AVI ") ++ hdrl ++ movi
-          out.write(fourcc("RIFF")); out.write(le32(body.length))
-          out.write(body)
-          (id, out.toByteArray)
+    mapFamilies(df, idCol, familyCol) { rows =>
+      val enc = new MjpegFamilyFrames(nFrames)
+      def le32(v: Int): Array[Byte] = Array(
+        (v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
+        ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
+      def le16(v: Int): Array[Byte] =
+        Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
+      def cc4(s: String): Array[Byte] = s.getBytes("ISO-8859-1")
+      rows.map { case (id, family) =>
+        val frames = enc.framesOf(family)
+        def chunk(id4: String, body: Array[Byte]): Array[Byte] = {
+          val b = new java.io.ByteArrayOutputStream()
+          b.write(cc4(id4)); b.write(le32(body.length)); b.write(body)
+          if ((body.length & 1) == 1) b.write(0) // RIFF word padding
+          b.toByteArray
         }
+        def list(tpe: String, body: Array[Byte]): Array[Byte] = {
+          val b = new java.io.ByteArrayOutputStream()
+          b.write(cc4("LIST")); b.write(le32(body.length + 4))
+          b.write(cc4(tpe)); b.write(body)
+          b.toByteArray
+        }
+        // avih: 56-byte main header (micros/frame at 10 fps, 1 stream)
+        val avih = {
+          val b = new java.io.ByteArrayOutputStream()
+          Seq(100000, 0, 0, 0, nFrames, 0, 1, 0, DHashW, DHashH,
+            0, 0, 0, 0).foreach(v => b.write(le32(v)))
+          chunk("avih", b.toByteArray)
+        }
+        // strh: 56-byte video stream header, MJPG handler, 10 fps
+        val strh = {
+          val b = new java.io.ByteArrayOutputStream()
+          b.write(cc4("vids")); b.write(cc4("MJPG"))
+          Seq(0, 0, 0, 1, 10, 0, nFrames, 0, -1, 0).foreach(v =>
+            b.write(le32(v)))
+          Seq(0, 0, DHashW, DHashH).foreach(v => b.write(le16(v)))
+          chunk("strh", b.toByteArray)
+        }
+        // strf: BITMAPINFOHEADER with 'MJPG' compression
+        val strf = {
+          val b = new java.io.ByteArrayOutputStream()
+          b.write(le32(40)); b.write(le32(DHashW)); b.write(le32(DHashH))
+          b.write(le16(1)); b.write(le16(24)); b.write(cc4("MJPG"))
+          Seq(DHashW * DHashH * 3, 0, 0, 0, 0).foreach(v =>
+            b.write(le32(v)))
+          chunk("strf", b.toByteArray)
+        }
+        val hdrl = list("hdrl", avih ++ list("strl", strh ++ strf))
+        val movi = list("movi",
+          frames.iterator.map(j => chunk("00dc", j))
+            .foldLeft(Array.emptyByteArray)(_ ++ _))
+        val body = hdrl ++ movi
+        val out = new Array[Byte](12 + body.length)
+        putRiff(out, "AVI ", 4 + body.length)
+        System.arraycopy(body, 0, out, 12, body.length)
+        (id, out)
       }
+    }
       .toDF("id", "payload")
   }
 
   /** MJPEG-in-AVI frame walk + per-frame perceptual hash: parse the
-    * RIFF container (the [[decodeWav]] chunk-walk discipline — fourcc +
+    * RIFF container (the [[wavChunks]] chunk-walk discipline — fourcc +
     * little-endian size, word-aligned advance, every size bounds-checked
     * against the payload), locate the 'movi' LIST (recursing into the
     * 'rec ' groups interleaved AVIs wrap frames in), decode each video
@@ -1565,10 +1507,9 @@ object Multimodal {
     * the declared MJPEG profile carries JPEG bytes.
     *
     * Quarantine parity with [[videoFrameDHash]]: a null, non-AVI,
-    * structurally malformed, frameless, over-budget (per-frame
-    * decompression-bomb screen via the [[decodeJpeg]] header parse /
-    * [[imageIoHeaderPixels]]) or undecodable-frame payload emits ONE
-    * stub row `(id, frame_idx = -1, stub hash, decoded = false)` —
+    * structurally malformed, frameless, over-budget (the per-frame
+    * decompression-bomb screen of the one [[PixelDecoder]]) or
+    * undecodable-frame payload emits ONE stub row `(id, frame_idx = -1, stub hash, decoded = false)` —
     * never a task failure. The walk STOPS at `maxFrames` (bounded work
     * per payload regardless of container length — a million-frame AVI
     * costs `maxFrames` decodes plus a header scan).
@@ -1582,87 +1523,76 @@ object Multimodal {
       s"maxFrames must be in [1, $FrameKeyMult], got $maxFrames")
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(idCol).cast("long").as("__id"), col(payloadCol))
-      .filter(col("__id").isNotNull)
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        val frameDecoder = new FrameJpegDecoder
-        def decodeFrame(fb: Array[Byte]): java.awt.image.BufferedImage =
-          frameDecoder.decode(fb)
-        def stubRow(id: Long, payload: Array[Byte]) =
-          Iterator.single((id, -1, stubHash(payload), false))
-        def cc(b: Array[Byte], i: Int): String =
-          new String(b, i, 4, "ISO-8859-1")
-        // collect up to maxFrames video-frame chunk (offset, len) pairs,
-        // or None for a structurally malformed container
-        def frameChunks(b: Array[Byte]): Option[Vector[(Int, Int)]] = {
-          if (b.length < 12 || cc(b, 0) != "RIFF" || cc(b, 8) != "AVI ")
-            return None
-          val frames = Vector.newBuilder[(Int, Int)]
-          var n = 0
-          def isFrameId(id4: String): Boolean =
-            id4.length == 4 && id4(0).isDigit && id4(1).isDigit &&
-              (id4.endsWith("dc") || id4.endsWith("db"))
-          def walkMovi(from: Int, until: Int): Boolean = {
-            var off = from
-            while (off + 8 <= until && n < maxFrames) {
-              val size = le32(b, off + 4)
-              if (size < 0 || off + 8 + size > until) return false
-              val id4 = cc(b, off)
-              if (isFrameId(id4)) {
-                frames += ((off + 8, size.toInt)); n += 1
-              } else if (id4 == "LIST" && size >= 4 &&
-                  cc(b, off + 8) == "rec ") {
-                // interleaved AVIs group frame+audio chunks inside
-                // 'LIST rec ' children of 'movi' (the VfW read-together
-                // unit) — recurse or a spec-conforming file walks empty
-                if (!walkMovi(off + 12, off + 8 + size.toInt)) return false
-              }
-              off += 8 + size.toInt + (size.toInt & 1)
-            }
-            true
-          }
-          var off = 12
-          while (off + 8 <= b.length) {
-            val size = le32(b, off + 4)
-            if (size < 0 || off + 8 + size > b.length) return None
-            if (cc(b, off) == "LIST" && size >= 4 &&
-                cc(b, off + 8) == "movi") {
-              if (!walkMovi(off + 12, off + 8 + size.toInt)) return None
-            }
-            off += 8 + size.toInt + (size.toInt & 1)
-          }
-          Some(frames.result())
-        }
-        rows.flatMap { case (id, payload) =>
-          if (payload == null) stubRow(id, payload)
-          else frameChunks(payload) match {
-            case None => stubRow(id, payload)
-            case Some(chunks) if chunks.isEmpty => stubRow(id, payload)
-            case Some(chunks) =>
-              try {
-                val hashes = chunks.map { case (o, l) =>
-                  val fb = java.util.Arrays.copyOfRange(payload, o, o + l)
-                  // per-frame bomb screen BEFORE the pixel decode
-                  val px = decodeJpeg(fb).orElse(decodeBmp(fb))
-                    .map(r => r.getInt(0).toLong * r.getInt(1))
-                    .getOrElse(imageIoHeaderPixels(fb))
-                  if (px <= 0 || px > MaxDecodePixels)
-                    throw new IllegalArgumentException("frame bomb/undecodable")
-                  val img = decodeFrame(fb)
-                  if (img == null)
-                    throw new IllegalArgumentException("frame undecodable")
-                  frameDHash(img)
-                }
-                hashes.iterator.zipWithIndex
-                  .map { case (h, f) => (id, f, h, true) }
-              } catch {
-                case scala.util.control.NonFatal(_) => stubRow(id, payload)
-              }
-          }
-        }
-      }
+    mapPayloads(df, idCol, payloadCol)(frameRows(_)(aviFrames(_, maxFrames)))
       .toDF("id", "frame_idx", "phash", "decoded")
+  }
+
+  /** Up to `maxFrames` video-frame chunks `(frame_idx, offset, length)`
+    * of an AVI, or None for a structurally malformed container. */
+  private def aviFrames(b: Array[Byte],
+      maxFrames: Int): Option[Vector[(Int, Int, Int)]] = {
+    if (!isRiff(b, "AVI ")) return None
+    val frames = Vector.newBuilder[(Int, Int, Int)]
+    var n = 0
+    def isFrameId(id4: String): Boolean =
+      id4.length == 4 && id4(0).isDigit && id4(1).isDigit &&
+        (id4.endsWith("dc") || id4.endsWith("db"))
+    def walkMovi(from: Int, until: Int): Boolean = {
+      var off = from
+      while (off + 8 <= until && n < maxFrames) {
+        val size = le32(b, off + 4)
+        if (size < 0 || off + 8 + size > until) return false
+        val id4 = fourcc(b, off)
+        if (isFrameId(id4)) {
+          frames += ((n, off + 8, size.toInt)); n += 1
+        } else if (id4 == "LIST" && size >= 4 &&
+            fourcc(b, off + 8) == "rec ") {
+          // interleaved AVIs group frame+audio chunks inside
+          // 'LIST rec ' children of 'movi' (the VfW read-together
+          // unit) — recurse or a spec-conforming file walks empty
+          if (!walkMovi(off + 12, off + 8 + size.toInt)) return false
+        }
+        off += 8 + size.toInt + (size.toInt & 1)
+      }
+      true
+    }
+    var off = 12
+    while (off + 8 <= b.length) {
+      val size = le32(b, off + 4)
+      if (size < 0 || off + 8 + size > b.length) return None
+      if (fourcc(b, off) == "LIST" && size >= 4 &&
+          fourcc(b, off + 8) == "movi") {
+        if (!walkMovi(off + 12, off + 8 + size.toInt)) return None
+      }
+      off += 8 + size.toInt + (size.toInt & 1)
+    }
+    Some(frames.result())
+  }
+
+  /** The per-frame half of the AVI and MP4 walks: `walk` lists a
+    * payload's frames as `(frame_idx, offset, length)`; each frame's
+    * bytes go through the one [[PixelDecoder]] (bomb screen, then
+    * decode) and [[frameDHash]]. A null payload, a walk that finds no
+    * frame (None: structural damage) or any frame screened out or
+    * undecodable quarantines the whole payload as ONE stub row
+    * `(id, -1, stub hash, false)` — never a task failure. */
+  private def frameRows(rows: Iterator[(Long, Array[Byte])])(
+      walk: Array[Byte] => Option[Vector[(Int, Int, Int)]])
+      : Iterator[(Long, Int, Long, Boolean)] = {
+    val decoder = new PixelDecoder
+    rows.flatMap { case (id, payload) =>
+      val hashes = Option(payload).flatMap(walk).filter(_.nonEmpty)
+        .flatMap { frames =>
+          quarantined {
+            val hs = frames.iterator.map { case (f, o, l) =>
+              decoder.read(java.util.Arrays.copyOfRange(payload, o, o + l))
+                .map(img => (id, f, frameDHash(img), true))
+            }.takeWhile(_.isDefined).flatten.toVector
+            if (hs.length == frames.length) Some(hs) else None
+          }
+        }
+      hashes.getOrElse(Vector((id, -1, stubHash(payload), false))).iterator
+    }
   }
 
   /** Deterministic MJPEG-in-MP4 payloads from an (id, family) frame —
@@ -1687,119 +1617,111 @@ object Multimodal {
     require(syncEvery >= 0, s"syncEvery must be >= 0, got $syncEvery")
     val spark = df.sparkSession
     import spark.implicits._
-    spreadEncode(df.select(col(idCol).cast("long").as("__id"),
-        col(familyCol).cast("string"))
-      .filter(col("__id").isNotNull))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        val enc = new MjpegFamilyFrames(nFrames)
-        def be32(v: Int): Array[Byte] = Array(
-          ((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-          ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-        def be16(v: Int): Array[Byte] =
-          Array(((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-        def cc4(s: String): Array[Byte] = s.getBytes("ISO-8859-1")
-        def box(tpe: String, body: Array[Byte]*): Array[Byte] = {
-          val len = 8 + body.map(_.length).sum
-          val out = new java.io.ByteArrayOutputStream(len)
-          out.write(be32(len)); out.write(cc4(tpe))
-          body.foreach(out.write)
-          out.toByteArray
-        }
-        def full(tpe: String, version: Int, flags: Int,
-            body: Array[Byte]*): Array[Byte] =
-          box(tpe, (Array((version & 0xff).toByte) ++
-            Array(((flags >> 16) & 0xff).toByte, ((flags >> 8) & 0xff).toByte,
-              (flags & 0xff).toByte)) +: body: _*)
-        val identityMatrix = Array(0x10000, 0, 0, 0, 0x10000, 0, 0, 0,
-          0x40000000).flatMap(be32)
-        rows.map { case (id, family) =>
-          val frames = enc.framesOf(family)
-          val ftyp = box("ftyp", cc4("isom"), be32(0x200), cc4("isom"),
-            cc4("iso2"))
-          // two chunks: first 3 samples, then the rest (one chunk when
-          // nFrames <= 3) — the split that makes stsc non-degenerate
-          val split = math.min(3, nFrames)
-          val mdatBody = frames.foldLeft(Array.emptyByteArray)(_ ++ _)
-          val mdatOff = ftyp.length.toLong
-          val chunk1Off = (mdatOff + 8).toInt
-          val chunk2Off = chunk1Off + frames.take(split).map(_.length).sum
-          val mdat = box("mdat", mdatBody)
-          val dur = nFrames * 100
-          val mvhd = full("mvhd", 0, 0, be32(0), be32(0), be32(1000),
-            be32(dur), be32(0x10000), be16(0x0100), be16(0),
-            be32(0), be32(0), identityMatrix,
-            Array.fill(6 * 4)(0.toByte), be32(2))
-          val tkhd = full("tkhd", 0, 7, be32(0), be32(0), be32(1),
-            be32(0), be32(dur), be32(0), be32(0), be16(0), be16(0),
-            be16(0), be16(0), identityMatrix,
-            be32(DHashW << 16), be32(DHashH << 16))
-          val mdhd = full("mdhd", 0, 0, be32(0), be32(0), be32(1000),
-            be32(dur), be16(0x55c4), be16(0))
-          val hdlr = full("hdlr", 0, 0, be32(0), cc4("vide"),
-            be32(0), be32(0), be32(0), "graft video\u0000".getBytes("US-ASCII"))
-          val vmhd = full("vmhd", 0, 1, be16(0), be16(0), be16(0), be16(0))
-          val dref = full("dref", 0, 0, be32(1), full("url ", 0, 1))
-          val dinf = box("dinf", dref)
-          // VisualSampleEntry 'jpeg': 6 reserved + data_ref_index, then
-          // the 70-byte visual fields (the sample bytes stay
-          // self-describing JPEG — the AVI posture)
-          val sampleEntry = box("jpeg",
-            Array.fill(6)(0.toByte), be16(1),
-            be16(0), be16(0), be32(0), be32(0), be32(0),
-            be16(DHashW), be16(DHashH), be32(0x480000), be32(0x480000),
-            be32(0), be16(1), Array.fill(32)(0.toByte),
-            be16(24), be16(0xffff))
-          val stsd = full("stsd", 0, 0, be32(1), sampleEntry)
-          val stts = full("stts", 0, 0, be32(1), be32(nFrames), be32(100))
-          val stscEntries =
-            if (nFrames > split)
-              be32(2) ++ be32(1) ++ be32(split) ++ be32(1) ++
-                be32(2) ++ be32(nFrames - split) ++ be32(1)
-            else be32(1) ++ be32(1) ++ be32(nFrames) ++ be32(1)
-          val stsc = full("stsc", 0, 0, stscEntries)
-          val stsz = full("stsz", 0, 0, be32(0), be32(nFrames),
-            frames.flatMap(f => be32(f.length)))
-          // chunk-offset table: stco (32-bit) by default, co64 (64-bit
-          // — the past-4 GB layout real muxers emit) on request; the
-          // walk accepts either
-          def be64(v: Long): Array[Byte] =
-            be32((v >>> 32).toInt) ++ be32((v & 0xffffffffL).toInt)
-          val offs =
-            if (nFrames > split) Seq(chunk1Off.toLong, chunk2Off.toLong)
-            else Seq(chunk1Off.toLong)
-          val stco =
-            if (co64)
-              full("co64", 0, 0,
-                be32(offs.length) ++ offs.flatMap(be64).toArray)
-            else
-              full("stco", 0, 0,
-                be32(offs.length) ++ offs.flatMap(o => be32(o.toInt)).toArray)
-          // stss (sync sample table): present only when syncEvery > 0 —
-          // sample numbers are 1-BASED per spec; an ABSENT stss means
-          // every sample is sync (ISO 14496-12 §8.6.2), which the walk
-          // honors, so syncEvery = 0 keeps the container byte-identical
-          // to the pre-keyframe writer
-          val stbl =
-            if (syncEvery > 0) {
-              val syncs = (1 to nFrames by syncEvery).toArray
-              val stss = full("stss", 0, 0,
-                be32(syncs.length) ++ syncs.flatMap(be32))
-              box("stbl", stsd, stts, stss, stsc, stsz, stco)
-            } else box("stbl", stsd, stts, stsc, stsz, stco)
-          val minf = box("minf", vmhd, dinf, stbl)
-          val mdia = box("mdia", mdhd, hdlr, minf)
-          val trak = box("trak", tkhd, mdia)
-          val moov = box("moov", mvhd, trak)
-          (id, ftyp ++ mdat ++ moov)
-        }
+    mapFamilies(df, idCol, familyCol) { rows =>
+      val enc = new MjpegFamilyFrames(nFrames)
+      def be32(v: Int): Array[Byte] = Array(
+        ((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
+        ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
+      def be16(v: Int): Array[Byte] =
+        Array(((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
+      def cc4(s: String): Array[Byte] = s.getBytes("ISO-8859-1")
+      def box(tpe: String, body: Array[Byte]*): Array[Byte] = {
+        val len = 8 + body.map(_.length).sum
+        val out = new java.io.ByteArrayOutputStream(len)
+        out.write(be32(len)); out.write(cc4(tpe))
+        body.foreach(out.write)
+        out.toByteArray
       }
+      def full(tpe: String, version: Int, flags: Int,
+          body: Array[Byte]*): Array[Byte] =
+        box(tpe, (Array((version & 0xff).toByte) ++
+          Array(((flags >> 16) & 0xff).toByte, ((flags >> 8) & 0xff).toByte,
+            (flags & 0xff).toByte)) +: body: _*)
+      val identityMatrix = Array(0x10000, 0, 0, 0, 0x10000, 0, 0, 0,
+        0x40000000).flatMap(be32)
+      rows.map { case (id, family) =>
+        val frames = enc.framesOf(family)
+        val ftyp = box("ftyp", cc4("isom"), be32(0x200), cc4("isom"),
+          cc4("iso2"))
+        // two chunks: first 3 samples, then the rest (one chunk when
+        // nFrames <= 3) — the split that makes stsc non-degenerate
+        val split = math.min(3, nFrames)
+        val mdatBody = frames.foldLeft(Array.emptyByteArray)(_ ++ _)
+        val mdatOff = ftyp.length.toLong
+        val chunk1Off = (mdatOff + 8).toInt
+        val chunk2Off = chunk1Off + frames.take(split).map(_.length).sum
+        val mdat = box("mdat", mdatBody)
+        val dur = nFrames * 100
+        val mvhd = full("mvhd", 0, 0, be32(0), be32(0), be32(1000),
+          be32(dur), be32(0x10000), be16(0x0100), be16(0),
+          be32(0), be32(0), identityMatrix,
+          Array.fill(6 * 4)(0.toByte), be32(2))
+        val tkhd = full("tkhd", 0, 7, be32(0), be32(0), be32(1),
+          be32(0), be32(dur), be32(0), be32(0), be16(0), be16(0),
+          be16(0), be16(0), identityMatrix,
+          be32(DHashW << 16), be32(DHashH << 16))
+        val mdhd = full("mdhd", 0, 0, be32(0), be32(0), be32(1000),
+          be32(dur), be16(0x55c4), be16(0))
+        val hdlr = full("hdlr", 0, 0, be32(0), cc4("vide"),
+          be32(0), be32(0), be32(0), "graft video\u0000".getBytes("US-ASCII"))
+        val vmhd = full("vmhd", 0, 1, be16(0), be16(0), be16(0), be16(0))
+        val dref = full("dref", 0, 0, be32(1), full("url ", 0, 1))
+        val dinf = box("dinf", dref)
+        // VisualSampleEntry 'jpeg': 6 reserved + data_ref_index, then
+        // the 70-byte visual fields (the sample bytes stay
+        // self-describing JPEG — the AVI posture)
+        val sampleEntry = box("jpeg",
+          Array.fill(6)(0.toByte), be16(1),
+          be16(0), be16(0), be32(0), be32(0), be32(0),
+          be16(DHashW), be16(DHashH), be32(0x480000), be32(0x480000),
+          be32(0), be16(1), Array.fill(32)(0.toByte),
+          be16(24), be16(0xffff))
+        val stsd = full("stsd", 0, 0, be32(1), sampleEntry)
+        val stts = full("stts", 0, 0, be32(1), be32(nFrames), be32(100))
+        val stscEntries =
+          if (nFrames > split)
+            be32(2) ++ be32(1) ++ be32(split) ++ be32(1) ++
+              be32(2) ++ be32(nFrames - split) ++ be32(1)
+          else be32(1) ++ be32(1) ++ be32(nFrames) ++ be32(1)
+        val stsc = full("stsc", 0, 0, stscEntries)
+        val stsz = full("stsz", 0, 0, be32(0), be32(nFrames),
+          frames.flatMap(f => be32(f.length)))
+        // chunk-offset table: stco (32-bit) by default, co64 (64-bit
+        // — the past-4 GB layout real muxers emit) on request; the
+        // walk accepts either
+        def be64(v: Long): Array[Byte] =
+          be32((v >>> 32).toInt) ++ be32((v & 0xffffffffL).toInt)
+        val offs =
+          if (nFrames > split) Seq(chunk1Off.toLong, chunk2Off.toLong)
+          else Seq(chunk1Off.toLong)
+        val stco =
+          if (co64)
+            full("co64", 0, 0,
+              be32(offs.length) ++ offs.flatMap(be64).toArray)
+          else
+            full("stco", 0, 0,
+              be32(offs.length) ++ offs.flatMap(o => be32(o.toInt)).toArray)
+        // stss (sync sample table): present only when syncEvery > 0 —
+        // sample numbers are 1-BASED per spec; an ABSENT stss means
+        // every sample is sync (ISO 14496-12 §8.6.2), which the walk
+        // honors, so syncEvery = 0 keeps the container byte-identical
+        // to the pre-keyframe writer
+        val stbl =
+          if (syncEvery > 0) {
+            val syncs = (1 to nFrames by syncEvery).toArray
+            val stss = full("stss", 0, 0,
+              be32(syncs.length) ++ syncs.flatMap(be32))
+            box("stbl", stsd, stts, stss, stsc, stsz, stco)
+          } else box("stbl", stsd, stts, stsc, stsz, stco)
+        val minf = box("minf", vmhd, dinf, stbl)
+        val mdia = box("mdia", mdhd, hdlr, minf)
+        val trak = box("trak", tkhd, mdia)
+        val moov = box("moov", mvhd, trak)
+        (id, ftyp ++ mdat ++ moov)
+      }
+    }
       .toDF("id", "payload")
   }
-
-  private def be32At(b: Array[Byte], i: Int): Long =
-    ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) |
-      ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
 
   /** MP4/ISO-BMFF frame walk + per-frame perceptual hash — the
     * [[aviFrameDHash]] contract over the container users actually have.
@@ -1836,200 +1758,167 @@ object Multimodal {
       s"maxFrames must be in [1, $FrameKeyMult], got $maxFrames")
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(idCol).cast("long").as("__id"), col(payloadCol))
-      .filter(col("__id").isNotNull)
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        val frameDecoder = new FrameJpegDecoder
-        def decodeFrame(fb: Array[Byte]): java.awt.image.BufferedImage =
-          frameDecoder.decode(fb)
-        def stubRow(id: Long, payload: Array[Byte]) =
-          Iterator.single((id, -1, stubHash(payload), false))
-        def cc(b: Array[Byte], i: Int): String =
-          new String(b, i, 4, "ISO-8859-1")
-        // (bodyOff, bodyEnd) of each child box of [from, until); None on
-        // structural damage. size==1 reads the 64-bit largesize,
-        // size==0 extends to `until`.
-        def children(b: Array[Byte], from: Int,
-            until: Int): Option[Vector[(String, Int, Int)]] = {
-          val out = Vector.newBuilder[(String, Int, Int)]
-          var off = from
-          while (off < until) {
-            if (off + 8 > until) return None
-            val size32 = be32At(b, off)
-            val tpe = cc(b, off + 4)
-            var bodyOff = off + 8
-            var boxEnd = 0L
-            if (size32 == 1L) {
-              if (off + 16 > until) return None
-              val large = (be32At(b, off + 8) << 32) | be32At(b, off + 12)
-              bodyOff = off + 16
-              boxEnd = off + large
-            } else if (size32 == 0L) boxEnd = until.toLong
-            else boxEnd = off + size32
-            if (boxEnd < bodyOff || boxEnd > until) return None
-            out += ((tpe, bodyOff, boxEnd.toInt))
-            off = boxEnd.toInt
-          }
-          Some(out.result())
-        }
-        def child(kids: Vector[(String, Int, Int)],
-            tpe: String): Option[(Int, Int)] =
-          kids.find(_._1 == tpe).map(k => (k._2, k._3))
-        // sample (sampleIdx, offset, size) list from one video trak's
-        // stbl. With syncOnly, only sync samples are EMITTED (stss,
-        // 1-based; an ABSENT stss means every sample is sync — ISO
-        // 14496-12 §8.6.2) — but every sample is still ENUMERATED,
-        // because offsets within a chunk are cumulative. maxFrames caps
-        // emitted frames (== enumerated when syncOnly is off).
-        def samplesOf(b: Array[Byte],
-            stbl: (Int, Int)): Option[Vector[(Int, Int, Int)]] = {
-          val kids = children(b, stbl._1, stbl._2).getOrElse(return None)
-          val (szOff, szEnd) = child(kids, "stsz").getOrElse(return None)
-          val (scOff, scEnd) = child(kids, "stsc").getOrElse(return None)
-          // chunk offsets: stco (32-bit) or co64 (64-bit — what real
-          // muxers emit past 4 GB); stco wins when both present
-          val (coOff, coEnd, coW) =
-            child(kids, "stco").map { case (o, e) => (o, e, 4) }
-              .orElse(child(kids, "co64").map { case (o, e) => (o, e, 8) })
-              .getOrElse(return None)
-          if (szEnd - szOff < 12 || scEnd - scOff < 8 || coEnd - coOff < 8)
-            return None
-          val fixedSize = be32At(b, szOff + 4)
-          val nSamples = be32At(b, szOff + 8).toInt
-          if (nSamples < 0) return None
-          // stss: optional sync-sample table (bounds-checked; an entry
-          // outside [1, nSamples] is structural damage -> quarantine)
-          // a HashSet, NOT a BitSet sized by nSamples: stsz DECLARES the
-          // sample count, and a hostile header claiming 2^31 samples
-          // would otherwise demand a ~256 MB allocation before any entry
-          // is validated (the stsz-bomb class the fuzz suite pins); the
-          // set's size is bounded by nSync, which is bounds-checked
-          // against the actual file bytes
-          val syncSet: Option[scala.collection.mutable.HashSet[Int]] =
-            if (!syncOnly) None
-            else child(kids, "stss") match {
-              case None => None // absent: every sample is sync
-              case Some((ssOff, ssEnd)) =>
-                if (ssEnd - ssOff < 8) return None
-                val nSync = be32At(b, ssOff + 4).toInt
-                if (nSync < 0 || ssOff + 8 + 4L * nSync > ssEnd) return None
-                val set = scala.collection.mutable.HashSet.empty[Int]
-                var i = 0
-                while (i < nSync) {
-                  val sn = be32At(b, ssOff + 8 + 4 * i)
-                  if (sn < 1 || sn > nSamples) return None
-                  set += sn.toInt
-                  i += 1
-                }
-                Some(set)
-            }
-          def isSync(s0: Int): Boolean =
-            syncSet.forall(_.contains(s0 + 1))
-          def sizeOf(s: Int): Long =
-            if (fixedSize != 0L) fixedSize
-            else if (szOff + 12 + 4 * s + 4 <= szEnd)
-              be32At(b, szOff + 12 + 4 * s)
-            else -1L
-          val nChunks = be32At(b, coOff + 4).toInt
-          if (nChunks < 0 || coOff + 8 + coW.toLong * nChunks > coEnd)
-            return None
-          val nRuns = be32At(b, scOff + 4).toInt
-          if (nRuns < 0 || scOff + 8 + 12L * nRuns > scEnd) return None
-          val runs = (0 until nRuns).map { r =>
-            (be32At(b, scOff + 8 + 12 * r).toInt, // first_chunk (1-based)
-              be32At(b, scOff + 8 + 12 * r + 4).toInt) // samples_per_chunk
-          }
-          if (runs.isEmpty || runs.head._1 != 1) return None
-          val frames = Vector.newBuilder[(Int, Int, Int)]
-          var emitted = 0
-          var s = 0
-          var run = 0
-          var c = 1
-          while (c <= nChunks && s < nSamples && emitted < maxFrames) {
-            while (run + 1 < runs.length && runs(run + 1)._1 <= c) run += 1
-            val spc = runs(run)._2
-            if (spc <= 0) return None
-            var off =
-              if (coW == 4) be32At(b, coOff + 8 + 4 * (c - 1))
-              else (be32At(b, coOff + 8 + 8 * (c - 1)) << 32) |
-                be32At(b, coOff + 8 + 8 * (c - 1) + 4)
-            var k = 0
-            while (k < spc && s < nSamples && emitted < maxFrames) {
-              val len = sizeOf(s)
-              if (len < 0 || off < 0 || off + len > b.length) return None
-              if (isSync(s)) {
-                frames += ((s, off.toInt, len.toInt))
-                emitted += 1
-              }
-              off += len
-              s += 1
-              k += 1
-            }
-            c += 1
-          }
-          Some(frames.result())
-        }
-        // the first trak whose mdia/hdlr declares a 'vide' handler
-        def videoSamples(b: Array[Byte]): Option[Vector[(Int, Int, Int)]] = {
-          if (b.length < 8) return None
-          val top = children(b, 0, b.length).getOrElse(return None)
-          if (!top.headOption.exists(_._1 == "ftyp")) return None
-          val moov = child(top, "moov").getOrElse(return None)
-          val moovKids = children(b, moov._1, moov._2).getOrElse(return None)
-          moovKids.filter(_._1 == "trak").foreach { trak =>
-            val r = for {
-              tk <- children(b, trak._2, trak._3)
-              mdia <- child(tk, "mdia")
-              mk <- children(b, mdia._1, mdia._2)
-              hdlr <- child(mk, "hdlr")
-              // body: version/flags + pre_defined + handler_type — the
-              // handler fourcc sits at bodyOff + 8
-              if hdlr._1 + 12 <= hdlr._2 && cc(b, hdlr._1 + 8) == "vide"
-              minf <- child(mk, "minf")
-              ik <- children(b, minf._1, minf._2)
-              stbl <- child(ik, "stbl")
-            } yield stbl
-            r match {
-              case Some(stbl) => return samplesOf(b, stbl)
-              case None => // not a video trak / damaged — try the next
-            }
-          }
-          None
-        }
-        rows.flatMap { case (id, payload) =>
-          if (payload == null) stubRow(id, payload)
-          else videoSamples(payload) match {
-            case None => stubRow(id, payload)
-            case Some(chunks) if chunks.isEmpty => stubRow(id, payload)
-            case Some(chunks) =>
-              try {
-                val hashes = chunks.map { case (s, o, l) =>
-                  val fb = java.util.Arrays.copyOfRange(payload, o, o + l)
-                  // per-frame bomb screen BEFORE the pixel decode
-                  val px = decodeJpeg(fb).orElse(decodeBmp(fb))
-                    .map(r => r.getInt(0).toLong * r.getInt(1))
-                    .getOrElse(imageIoHeaderPixels(fb))
-                  if (px <= 0 || px > MaxDecodePixels)
-                    throw new IllegalArgumentException("frame bomb/undecodable")
-                  val img = decodeFrame(fb)
-                  if (img == null)
-                    throw new IllegalArgumentException("frame undecodable")
-                  (s, frameDHash(img))
-                }
-                // frame_idx is the sample's ORIGINAL index (== emission
-                // order when every sample is emitted, so the non-sync
-                // path is unchanged); keyframe rows therefore band on
-                // the true temporal position
-                hashes.iterator
-                  .map { case (s, h) => (id, s, h, true) }
-              } catch {
-                case scala.util.control.NonFatal(_) => stubRow(id, payload)
-              }
-          }
-        }
-      }
+    // frame_idx is the sample's ORIGINAL index (== emission order when
+    // every sample is emitted); keyframe rows therefore band on the true
+    // temporal position
+    mapPayloads(df, idCol, payloadCol)(
+      frameRows(_)(mp4Frames(_, maxFrames, syncOnly)))
       .toDF("id", "frame_idx", "phash", "decoded")
+  }
+
+  /** Up to `maxFrames` emitted video samples `(sample_idx, offset,
+    * length)` of the first video trak of an MP4, or None for structural
+    * damage. */
+  private def mp4Frames(b: Array[Byte], maxFrames: Int,
+      syncOnly: Boolean): Option[Vector[(Int, Int, Int)]] = {
+    // (bodyOff, bodyEnd) of each child box of [from, until); None on
+    // structural damage. size==1 reads the 64-bit largesize,
+    // size==0 extends to `until`.
+    def children(b: Array[Byte], from: Int,
+        until: Int): Option[Vector[(String, Int, Int)]] = {
+      val out = Vector.newBuilder[(String, Int, Int)]
+      var off = from
+      while (off < until) {
+        if (off + 8 > until) return None
+        val size32 = be32(b, off)
+        val tpe = fourcc(b, off + 4)
+        var bodyOff = off + 8
+        var boxEnd = 0L
+        if (size32 == 1L) {
+          if (off + 16 > until) return None
+          val large = (be32(b, off + 8) << 32) | be32(b, off + 12)
+          bodyOff = off + 16
+          boxEnd = off + large
+        } else if (size32 == 0L) boxEnd = until.toLong
+        else boxEnd = off + size32
+        if (boxEnd < bodyOff || boxEnd > until) return None
+        out += ((tpe, bodyOff, boxEnd.toInt))
+        off = boxEnd.toInt
+      }
+      Some(out.result())
+    }
+    def child(kids: Vector[(String, Int, Int)],
+        tpe: String): Option[(Int, Int)] =
+      kids.find(_._1 == tpe).map(k => (k._2, k._3))
+    // sample (sampleIdx, offset, size) list from one video trak's
+    // stbl. With syncOnly, only sync samples are EMITTED (stss,
+    // 1-based; an ABSENT stss means every sample is sync — ISO
+    // 14496-12 §8.6.2) — but every sample is still ENUMERATED,
+    // because offsets within a chunk are cumulative. maxFrames caps
+    // emitted frames (== enumerated when syncOnly is off).
+    def samplesOf(b: Array[Byte],
+        stbl: (Int, Int)): Option[Vector[(Int, Int, Int)]] = {
+      val kids = children(b, stbl._1, stbl._2).getOrElse(return None)
+      val (szOff, szEnd) = child(kids, "stsz").getOrElse(return None)
+      val (scOff, scEnd) = child(kids, "stsc").getOrElse(return None)
+      // chunk offsets: stco (32-bit) or co64 (64-bit — what real
+      // muxers emit past 4 GB); stco wins when both present
+      val (coOff, coEnd, coW) =
+        child(kids, "stco").map { case (o, e) => (o, e, 4) }
+          .orElse(child(kids, "co64").map { case (o, e) => (o, e, 8) })
+          .getOrElse(return None)
+      if (szEnd - szOff < 12 || scEnd - scOff < 8 || coEnd - coOff < 8)
+        return None
+      val fixedSize = be32(b, szOff + 4)
+      val nSamples = be32(b, szOff + 8).toInt
+      if (nSamples < 0) return None
+      // stss: optional sync-sample table (bounds-checked; an entry
+      // outside [1, nSamples] is structural damage -> quarantine)
+      // a HashSet, NOT a BitSet sized by nSamples: stsz DECLARES the
+      // sample count, and a hostile header claiming 2^31 samples
+      // would otherwise demand a ~256 MB allocation before any entry
+      // is validated (the stsz-bomb class the fuzz suite pins); the
+      // set's size is bounded by nSync, which is bounds-checked
+      // against the actual file bytes
+      val syncSet: Option[scala.collection.mutable.HashSet[Int]] =
+        if (!syncOnly) None
+        else child(kids, "stss") match {
+          case None => None // absent: every sample is sync
+          case Some((ssOff, ssEnd)) =>
+            if (ssEnd - ssOff < 8) return None
+            val nSync = be32(b, ssOff + 4).toInt
+            if (nSync < 0 || ssOff + 8 + 4L * nSync > ssEnd) return None
+            val set = scala.collection.mutable.HashSet.empty[Int]
+            var i = 0
+            while (i < nSync) {
+              val sn = be32(b, ssOff + 8 + 4 * i)
+              if (sn < 1 || sn > nSamples) return None
+              set += sn.toInt
+              i += 1
+            }
+            Some(set)
+        }
+      def isSync(s0: Int): Boolean =
+        syncSet.forall(_.contains(s0 + 1))
+      def sizeOf(s: Int): Long =
+        if (fixedSize != 0L) fixedSize
+        else if (szOff + 12 + 4 * s + 4 <= szEnd)
+          be32(b, szOff + 12 + 4 * s)
+        else -1L
+      val nChunks = be32(b, coOff + 4).toInt
+      if (nChunks < 0 || coOff + 8 + coW.toLong * nChunks > coEnd)
+        return None
+      val nRuns = be32(b, scOff + 4).toInt
+      if (nRuns < 0 || scOff + 8 + 12L * nRuns > scEnd) return None
+      val runs = (0 until nRuns).map { r =>
+        (be32(b, scOff + 8 + 12 * r).toInt, // first_chunk (1-based)
+          be32(b, scOff + 8 + 12 * r + 4).toInt) // samples_per_chunk
+      }
+      if (runs.isEmpty || runs.head._1 != 1) return None
+      val frames = Vector.newBuilder[(Int, Int, Int)]
+      var emitted = 0
+      var s = 0
+      var run = 0
+      var c = 1
+      while (c <= nChunks && s < nSamples && emitted < maxFrames) {
+        while (run + 1 < runs.length && runs(run + 1)._1 <= c) run += 1
+        val spc = runs(run)._2
+        if (spc <= 0) return None
+        var off =
+          if (coW == 4) be32(b, coOff + 8 + 4 * (c - 1))
+          else (be32(b, coOff + 8 + 8 * (c - 1)) << 32) |
+            be32(b, coOff + 8 + 8 * (c - 1) + 4)
+        var k = 0
+        while (k < spc && s < nSamples && emitted < maxFrames) {
+          val len = sizeOf(s)
+          if (len < 0 || off < 0 || off + len > b.length) return None
+          if (isSync(s)) {
+            frames += ((s, off.toInt, len.toInt))
+            emitted += 1
+          }
+          off += len
+          s += 1
+          k += 1
+        }
+        c += 1
+      }
+      Some(frames.result())
+    }
+    // the samples of the first trak whose mdia/hdlr declares a 'vide' handler
+    if (b.length < 8) return None
+    val top = children(b, 0, b.length).getOrElse(return None)
+    if (!top.headOption.exists(_._1 == "ftyp")) return None
+    val moov = child(top, "moov").getOrElse(return None)
+    val moovKids = children(b, moov._1, moov._2).getOrElse(return None)
+    moovKids.filter(_._1 == "trak").foreach { trak =>
+      val r = for {
+        tk <- children(b, trak._2, trak._3)
+        mdia <- child(tk, "mdia")
+        mk <- children(b, mdia._1, mdia._2)
+        hdlr <- child(mk, "hdlr")
+        // body: version/flags + pre_defined + handler_type — the
+        // handler fourcc sits at bodyOff + 8
+        if hdlr._1 + 12 <= hdlr._2 && fourcc(b, hdlr._1 + 8) == "vide"
+        minf <- child(mk, "minf")
+        ik <- children(b, minf._1, minf._2)
+        stbl <- child(ik, "stbl")
+      } yield stbl
+      r match {
+        case Some(stbl) => return samplesOf(b, stbl)
+        case None => // not a video trak / damaged — try the next
+      }
+    }
+    None
   }
 
   /** REAL video-container frame walk + per-frame perceptual hash: open
@@ -2040,9 +1929,8 @@ object Multimodal {
     * `maxFrames` frames, dHash each through the same direct-raster /
     * bilinear-downscale branches as [[imageDHash]].
     *
-    * Quarantine parity with the image path: the same two-tier
-    * decompression-bomb pre-screen (hand parsers, then
-    * [[imageIoHeaderPixels]]) gates the decode; an undecodable, null,
+    * Quarantine parity with the image path: [[imageIoFrames]] screens
+    * every frame's header before its decode; an undecodable, null,
     * over-budget or frameless payload emits ONE stub row
     * `(id, frame_idx = -1, stub hash, decoded = false)` — never a task
     * failure, and the id stays observable downstream. Frames are read
@@ -2058,64 +1946,15 @@ object Multimodal {
       s"maxFrames must be in [1, $FrameKeyMult], got $maxFrames")
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(idCol).cast("long").as("__id"), col(payloadCol))
-      .filter(col("__id").isNotNull)
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        javax.imageio.ImageIO.setUseCache(false)
-        def stubRow(id: Long, payload: Array[Byte]) =
-          Iterator.single((id, -1, stubHash(payload), false))
-        def hashFrame(img: java.awt.image.BufferedImage): Long =
-          frameDHash(img) // shared kernel (also the AVI walk's)
-        rows.flatMap { case (id, payload) =>
-          val headerPixels: Long = if (payload == null) 0L else
-            decodePng(payload).orElse(decodeJpeg(payload))
-              .orElse(decodeGif(payload)).orElse(decodeBmp(payload))
-              .map(r => r.getInt(0).toLong * r.getInt(1))
-              .getOrElse(imageIoHeaderPixels(payload))
-          if (payload == null || headerPixels > MaxDecodePixels)
-            stubRow(id, payload)
-          else {
-            try {
-              val in = javax.imageio.ImageIO.createImageInputStream(
-                new java.io.ByteArrayInputStream(payload))
-              if (in == null) stubRow(id, payload)
-              else {
-                try {
-                  val readers = javax.imageio.ImageIO.getImageReaders(in)
-                  if (!readers.hasNext) stubRow(id, payload)
-                  else {
-                    val reader = readers.next()
-                    try {
-                      reader.setInput(in, false, false)
-                      val n = math.min(reader.getNumImages(true), maxFrames)
-                      // per-FRAME bomb screen: the container-level header
-                      // screen sees only the logical-screen / first-frame
-                      // size, but each frame's image descriptor carries
-                      // its own dimensions and reader.read(f) allocates
-                      // at THAT size — a 9x8 screen with a 40000x40000
-                      // frame descriptor would blow the decode budget n
-                      // times over. getWidth/getHeight(f) parse headers
-                      // only; any over-budget frame quarantines the
-                      // whole payload (it is hostile by construction).
-                      val framesBombed = (0 until n).exists { f =>
-                        reader.getWidth(f).toLong * reader.getHeight(f) >
-                          MaxDecodePixels
-                      }
-                      if (n <= 0 || framesBombed) stubRow(id, payload)
-                      else (0 until n).iterator.map { f =>
-                        (id, f, hashFrame(reader.read(f)), true)
-                      }.toVector.iterator
-                    } finally reader.dispose()
-                  }
-                } finally in.close()
-              }
-            } catch {
-              case scala.util.control.NonFatal(_) => stubRow(id, payload)
-            }
-          }
+    mapPayloads(df, idCol, payloadCol) { rows =>
+      rows.flatMap { case (id, payload) =>
+        quarantined(imageIoFrames(payload, maxFrames)(frameDHash)) match {
+          case Some(hs) => hs.iterator.zipWithIndex
+            .map { case (h, f) => (id, f, h, true) }
+          case None => Iterator.single((id, -1, stubHash(payload), false))
         }
       }
+    }
       .toDF("id", "frame_idx", "phash", "decoded")
   }
 
@@ -2147,102 +1986,42 @@ object Multimodal {
       s"maxFrames must be in [1, $FrameKeyMult], got $maxFrames")
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(idCol).cast("long").as("__id"), col(payloadCol))
-      .filter(col("__id").isNotNull)
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        javax.imageio.ImageIO.setUseCache(false)
-        def quarantine(id: Long) = (id, 0L, 0.0, 0.0, 0.0, false)
-        def grayOf(img: java.awt.image.BufferedImage): Array[Int] = {
-          val g8 =
-            if (img.getRaster.getNumBands == 1) img
-            else {
-              val o = new java.awt.image.BufferedImage(img.getWidth,
-                img.getHeight, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-              val g = o.createGraphics()
-              try g.drawImage(img, 0, 0, null) finally g.dispose()
-              o
-            }
-          val r = g8.getRaster
-          val out = new Array[Int](g8.getWidth * g8.getHeight)
-          var i = 0
-          var y = 0
-          while (y < g8.getHeight) {
-            var x = 0
-            while (x < g8.getWidth) { out(i) = r.getSample(x, y, 0); i += 1; x += 1 }
-            y += 1
-          }
-          out
-        }
-        rows.map { case (id, payload) =>
-          val headerPixels: Long = if (payload == null) 0L else
-            decodePng(payload).orElse(decodeJpeg(payload))
-              .orElse(decodeGif(payload)).orElse(decodeBmp(payload))
-              .map(r => r.getInt(0).toLong * r.getInt(1))
-              .getOrElse(imageIoHeaderPixels(payload))
-          if (payload == null || headerPixels > MaxDecodePixels)
-            quarantine(id)
-          else {
-            try {
-              val in = javax.imageio.ImageIO.createImageInputStream(
-                new java.io.ByteArrayInputStream(payload))
-              if (in == null) quarantine(id)
-              else {
-                try {
-                  val readers = javax.imageio.ImageIO.getImageReaders(in)
-                  if (!readers.hasNext) quarantine(id)
-                  else {
-                    val reader = readers.next()
-                    try {
-                      reader.setInput(in, false, false)
-                      val n = math.min(reader.getNumImages(true), maxFrames)
-                      val framesBombed = (0 until n).exists { f =>
-                        reader.getWidth(f).toLong * reader.getHeight(f) >
-                          MaxDecodePixels
-                      }
-                      if (n <= 0 || framesBombed) quarantine(id)
-                      else {
-                        val frames = (0 until n).map(f => grayOf(reader.read(f)))
-                        if (frames.exists(_.length != frames.head.length))
-                          quarantine(id)
-                        else {
-                          val px = frames.head.length
-                          var lum = 0L
-                          frames.foreach(fr => fr.foreach(lum += _))
-                          var diff = 0L
-                          var staticPairs = 0L
-                          var f = 1
-                          while (f < n) {
-                            var d = 0L
-                            var i = 0
-                            while (i < px) {
-                              d += math.abs(frames(f)(i) - frames(f - 1)(i))
-                              i += 1
-                            }
-                            diff += d
-                            if (d < px) staticPairs += 1
-                            f += 1
-                          }
-                          val meanLum = lum.toDouble / (n.toLong * px)
-                          val act =
-                            if (n < 2) 0.0
-                            else diff.toDouble / ((n - 1).toLong * px)
-                          val staticFrac =
-                            if (n < 2) 1.0
-                            else staticPairs.toDouble / (n - 1)
-                          (id, n.toLong, meanLum, act, staticFrac, true)
-                        }
-                      }
-                    } finally reader.dispose()
-                  }
-                } finally in.close()
+    mapPayloads(df, idCol, payloadCol) { rows =>
+      rows.map { case (id, payload) =>
+        quarantined(imageIoFrames(payload, maxFrames) { img =>
+          val r = grayRaster(img)
+          r.getSamples(0, 0, r.getWidth, r.getHeight, 0, null: Array[Int])
+        }).filter(frames => frames.forall(_.length == frames.head.length))
+          .map { frames =>
+            val n = frames.length
+            val px = frames.head.length
+            var lum = 0L
+            frames.foreach(fr => fr.foreach(lum += _))
+            var diff = 0L
+            var staticPairs = 0L
+            var f = 1
+            while (f < n) {
+              var d = 0L
+              var i = 0
+              while (i < px) {
+                d += math.abs(frames(f)(i) - frames(f - 1)(i))
+                i += 1
               }
-            } catch {
-              case scala.util.control.NonFatal(_) => quarantine(id)
+              diff += d
+              if (d < px) staticPairs += 1
+              f += 1
             }
-          }
-        }
+            val meanLum = lum.toDouble / (n.toLong * px)
+            val act =
+              if (n < 2) 0.0
+              else diff.toDouble / ((n - 1).toLong * px)
+            val staticFrac =
+              if (n < 2) 1.0
+              else staticPairs.toDouble / (n - 1)
+            (id, n.toLong, meanLum, act, staticFrac, true)
+          }.getOrElse((id, 0L, 0.0, 0.0, 0.0, false))
       }
+    }
       .toDF("id", "n_frames", "mean_lum", "interframe_mean_abs",
         "static_frac", "decoded")
   }

@@ -13,9 +13,11 @@ import graft.core.SparkTestSession
   * source file may build a session of its own. Likewise one commit
   * protocol: only [[graft.sources.FileSink]] renames task output or ships
   * the Hadoop configuration to tasks; one staging module: only
-  * [[graft.operators.Staging]] persists, caches or checkpoints; and one
+  * [[graft.operators.Staging]] persists, caches or checkpoints; one
   * implementation per graft kernel: generated code calls the compiled
-  * method interpreted eval uses, and inlines no loop of its own. */
+  * method interpreted eval uses, and inlines no loop of its own; and one
+  * media decode path: the decompression-bomb screen, the ImageIO reads
+  * and the RIFF container are written once in graft.operators. */
 class GraftSessionSpec extends AnyFunSuite {
 
   test("GraftSession carries the bench settings") {
@@ -88,6 +90,44 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       "stage through graft.operators.Staging, not a persist or checkpoint " +
         s"of your own: ${offenders.mkString(", ")}")
+  }
+
+  test("the media operators shell, screen and walk payloads only in their shared functions") {
+    // each needle may appear only inside the named definitions (a `def`,
+    // `val` or `class` line and the lines indented under it); comments
+    // are not code and are dropped first
+    val shared = Map(
+      "MaxDecodePixels" -> Seq("MaxDecodePixels", "withinDecodeBudget"),
+      "ImageIO.read(" -> Seq("PixelDecoder"),
+      "getImageReaders(" -> Seq("headerPixels", "imageIoFrames"),
+      "\"RIFF\"" -> Seq("isRiff", "putRiff"),
+      ".as[(Long, Array[Byte])]" -> Seq("mapPayloads"))
+    val walk = Files.walk(Paths.get("src/main/scala/graft/operators"))
+    val files = try walk.iterator.asScala.toList.filter(_.toString.endsWith(".scala"))
+      finally walk.close()
+    def indent(l: String) = l.takeWhile(_ == ' ').length
+    val offenders = for {
+      p <- files
+      text = new String(Files.readAllBytes(p), "UTF-8")
+        .replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
+      lines = text.split("\n", -1).toIndexedSeq
+      (needle, owners) <- shared.toSeq
+      owned = owners.flatMap { o =>
+        val head = s"\\b(def|val|class)\\s+$o\\b".r
+        lines.indices.filter(i => head.findFirstIn(lines(i)).isDefined)
+          .flatMap { i =>
+            i +: (i + 1 until lines.length).takeWhile(j =>
+              lines(j).trim.isEmpty || indent(lines(j)) > indent(lines(i)))
+          }
+      }.toSet
+      i <- lines.indices
+      if lines(i).contains(needle) && !owned(i)
+    } yield s"${p.getFileName}: $needle outside ${owners.mkString("/")}: " +
+      lines(i).trim
+    assert(files.exists(_.getFileName.toString == "Multimodal.scala"))
+    assert(offenders.isEmpty,
+      "decode media payloads through the shared shell, screen, frame walk " +
+        s"and RIFF functions of graft.operators.Multimodal:\n${offenders.mkString("\n")}")
   }
 
   test("no doGenCode in graft.functions inlines a loop") {
